@@ -518,17 +518,6 @@ def _bench_grouped(spark, n, n_parts, timings, throughput) -> None:
     timings["grouped_k"] = float(pt.k)
     timings["grouped_iterations"] = float(res.n_iterations)
     timings["grouped_per_iter"] = round(wall / max(res.n_iterations, 1), 4)
-    # gram-reuse telemetry (r11 lagged-Jacobian path — OPT-IN, measured
-    # net loss at this regime so the headline runs the default
-    # fresh-gram path; frozen==0 here PINS that the headline really did
-    # run the default): fresh vs skipped gram scans per solve
-    hist = res.diagnostics.get("history", [])
-    timings["grouped_fresh_gram_scans"] = float(
-        sum(1 for h in hist if h.get("gram_fresh", True))
-    )
-    timings["grouped_frozen_gram_scans"] = float(
-        sum(1 for h in hist if not h.get("gram_fresh", True))
-    )
     # rows/s in both keys (like the other solvers' n/stage_time), with the
     # denominator explicit in the name — a bare n·iters/wall reads inflated
     # next to the per-pass numbers of its siblings

@@ -7,6 +7,18 @@ from typing import Protocol
 
 import numpy as np
 
+TAU = 0.995  # fraction-to-boundary (ref: shared.py:76-91 call sites)
+
+
+def ftb_batch(point: np.ndarray, step: np.ndarray) -> float:
+    """Fraction-to-boundary over one block: min(−τ·point/step over
+    step<0); +inf when unblocked (the reference's masked-min with
+    ``initial=np.inf``, ref: shared.py:76-91)."""
+    blocked = step < 0
+    if not blocked.any():
+        return float("inf")
+    return float(np.min(-TAU * point[blocked] / step[blocked]))
+
 
 @dataclass
 class IterStats:

@@ -12,8 +12,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from entropy_balance_weighting_spark.kernels.base import EStats, EStepStats
-from entropy_balance_weighting_spark.kernels.penalty_local import _ftb_raw
+from entropy_balance_weighting_spark.kernels.base import (
+    EStats,
+    EStepStats,
+    ftb_batch,
+)
 
 
 class ElasticLocalKernel:
@@ -166,11 +169,11 @@ class ElasticLocalKernel:
         r_step, li_lo, li_hi, ss_lo, ss_hi = self._steps(lam, dlam, eta, mu_s)
         bad = ~np.isfinite(r_step)
         rsf = np.where(bad, 0.0, r_step)
-        ftb_s = _ftb_raw(self.s_lo, ss_lo)
-        ftb_l = _ftb_raw(self.lm_lo, li_lo)
+        ftb_s = ftb_batch(self.s_lo, ss_lo)
+        ftb_l = ftb_batch(self.lm_lo, li_lo)
         if self.has_ub:
-            ftb_s = min(ftb_s, _ftb_raw(self.s_hi, ss_hi))
-            ftb_l = min(ftb_l, _ftb_raw(self.lm_hi, li_hi))
+            ftb_s = min(ftb_s, ftb_batch(self.s_hi, ss_hi))
+            ftb_l = min(ftb_l, ftb_batch(self.lm_hi, li_hi))
         return EStepStats(
             rstep_sq=float(rsf @ rsf),
             xt_rstep=self.x.T @ rsf,

@@ -1,6 +1,5 @@
 """Distributed kernel for the elastic interior-point solver — split-state
-Arrow batches over an RDD ``zip`` (round-7 design, adjudicated by
-``spikes/zip_state_spike.py``).
+Arrow batches over an RDD ``zip`` (round-7 design).
 
 The elastic loop is the only kernel that mutates per-row state every
 iteration.  The previous packed-DataFrame design committed by rewriting the
@@ -11,7 +10,7 @@ co-partitioned caches (that align is a join = a shuffle per iteration), but
 ``RDD.zip`` is exactly that narrow pairing, legal here by construction
 because the state RDD is derived element-for-element from the base RDD.
 
-Data plane:
+Data plane (``kernels/blob_plane.py``):
   - **base RDD** — one element per Arrow batch: the IPC-serialized
     immutable columns ``(row_id, w0, idx, val)``.  Cached ONCE, never
     rewritten.
@@ -45,30 +44,29 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
-from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from entropy_balance_weighting_spark.kernels.base import EStats, EStepStats
-from entropy_balance_weighting_spark.kernels.penalty_spark import _ftb_batch
+from entropy_balance_weighting_spark.kernels import blob_plane
+from entropy_balance_weighting_spark.kernels.base import (
+    EStats,
+    EStepStats,
+    ftb_batch,
+)
+from entropy_balance_weighting_spark.kernels.blob_plane import pack_payload
 from entropy_balance_weighting_spark.kernels.spark import (
-    _post_cleanup_gc,
     _flatten_rb,
-    _pack_rb,
     _rb_col,
     _x_dot,
     _xt_v,
     blocks_tuple,
-    gram_bytes,
-    reduce_big,
+    count_bad_entries,
     gram_from_sums,
     make_gram_accum,
-    maybe_elide_idx,
     pack_rows,
+    raise_if_bad,
+    reduce_big,
 )
 
-BASE_NAMES = ["row_id", "w0", "idx", "val"]
 # r9 narrow state: the bound slacks are NOT stored — the IP's own step
 # algebra maintains s_lo ≡ r − lb and s_hi ≡ ub − r exactly (ss_lo =
 # r_step + Ci_lo with Ci_lo ≡ 0 from a feasible start — the identity
@@ -76,14 +74,6 @@ BASE_NAMES = ["row_id", "w0", "idx", "val"]
 # _newton_system), so ``_cols`` derives them per pass and every state
 # commit writes 24 B/row instead of 40.
 STATE_NAMES = ["ratio", "lm_lo", "lm_hi"]
-
-# Both zip sides must carry the IDENTICAL batched serializer: ``RDD.zip``
-# falls back to an extra re-serialization pass over BOTH rdds whenever the
-# batch sizes differ (pyspark/core/rdd.py, ``zip``), silently turning every
-# cached read into cache-read + re-pickle (measured 3.6× slower passes in
-# the spike).  Batch size 1 is right regardless: each element is already a
-# multi-MB Arrow IPC blob.
-_ZIP_SER = BatchedSerializer(CPickleSerializer(), 1)
 
 
 def _cols(rb: pa.RecordBatch, lb: float, ub: float, has_ub: bool):
@@ -140,16 +130,12 @@ def _steps_arrays(pieces, flat_idx, flat_val, lens, dlam, mu_s, has_ub):
     return r_step, li_lo, li_hi, ss_lo, ss_hi
 
 
-def _gram_noop(flat_idx, flat_val, lens, d) -> None:
-    """Gram accumulation stub for lagged-Jacobian stats scans."""
-
-
 class _EStatsAcc:
     """Per-partition stats accumulator shared by the plain stats pass and
     the fused commit+stats pass (``_ecommit_stats_pass``) — one body, no
     math divergence between the two shapes."""
 
-    def __init__(self, k: int, blocks, skip_gram: bool = False) -> None:
+    def __init__(self, k: int, blocks) -> None:
         self.k = k
         self.f_val = self.cd_sq = self.ci_sq = self.cs_sq = 0.0
         self.alt_sq = self.nan_ct = 0.0
@@ -159,15 +145,7 @@ class _EStatsAcc:
         self.g1 = np.zeros(k)
         self.rhs_leg = np.zeros(k)
         self.rhs_mu_leg = np.zeros(k)
-        if skip_gram:
-            # Lagged-Jacobian iteration (gram frozen driver-side): the
-            # pass accumulates NO gram — deletes both the bincount/BLAS
-            # accumulate CPU and the Σk_b²/K² payload bytes, the two
-            # measured per-iteration walls at grouped huge K (PLANS §16)
-            self.gram = np.zeros(0)
-            self.gram_add = _gram_noop
-        else:
-            self.gram, self.gram_add = make_gram_accum(k, blocks)
+        self.gram, self.gram_add = make_gram_accum(k, blocks)
 
     def add(self, rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub):
         if not rb.num_rows:
@@ -224,44 +202,18 @@ class _EStatsAcc:
         self.rhs_mu_leg += _xt_v(flat_idx, flat_val, lens, w0 * inv_ht * z1, k)
         self.gram_add(flat_idx, flat_val, lens, w0**2 * inv_ht)
 
-    def payload(self, wire32: bool = False) -> pa.RecordBatch:
-        head = [self.f_val, self.cd_sq, self.ci_sq, self.cs_sq, self.alt_sq,
-                self.nan_ct, self.sl_sum, self.sl_sq, self.sl_cnt]
-        tail = [self.g1, self.rhs_leg, self.rhs_mu_leg, self.gram]
-        if not wire32:
-            return _pack_rb(head + tail, [self.sl_min, self.neg_lm_max])
-        # float32 WIRE for the K-sized tail (g1 + 2 RHS legs + gram flat)
-        # — the r10 payload-bandwidth cut: per-partition accumulation
-        # stays float64 (above); only the treeReduce bytes halve.  The
-        # 9 convergence-critical scalars keep full precision in the head
-        # so predicates (cd_sq, f_val, nan_ct, slack stats) never feel
-        # the wire.  The driver solve upcasts the tail to float64; Newton
-        # self-corrects the ~1e-7 relative direction error (iteration
-        # counts pinned unchanged at the 20M×100k config, PLANS §16).
-        hbuf = np.asarray(head, dtype=np.float64).tobytes()
-        tbuf = (
-            np.concatenate([np.asarray(t, dtype=np.float64).ravel() for t in tail])
-            .astype(np.float32)
-            .tobytes()
-        )
-        mbuf = np.asarray(
-            [self.sl_min, self.neg_lm_max], dtype=np.float64
-        ).tobytes()
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array([hbuf + tbuf], type=pa.binary()),
-                pa.array([mbuf], type=pa.binary()),
-            ],
-            ["sums", "mins"],
+    def payload(self) -> tuple[bytes, bytes]:
+        return pack_payload(
+            [self.f_val, self.cd_sq, self.ci_sq, self.cs_sq, self.alt_sq,
+             self.nan_ct, self.sl_sum, self.sl_sq, self.sl_cnt,
+             self.g1, self.rhs_leg, self.rhs_mu_leg, self.gram],
+            [self.sl_min, self.neg_lm_max],
         )
 
 
-def _estats_pass(
-    k, lam, eta, mu_s, lb, ub, has_ub, blocks, wire32: bool = False,
-    skip_gram: bool = False,
-) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = _EStatsAcc(k, blocks, skip_gram)
+def _estats_pass(k, lam, eta, mu_s, lb, ub, has_ub, blocks) -> Callable:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
+        acc = _EStatsAcc(k, blocks)
         for rb in batches:
             if not rb.num_rows:
                 continue
@@ -269,13 +221,13 @@ def _estats_pass(
             acc.add(
                 rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
             )
-        yield acc.payload(wire32)
+        yield acc.payload()
 
     return fn
 
 
 def _estep_pass(k, lam, dlam, eta, mu_s, lb, ub, has_ub) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         rstep_sq = nan_ct = 0.0
         xt_rstep = np.zeros(k)
         ftb_s = np.inf
@@ -296,25 +248,14 @@ def _estep_pass(k, lam, dlam, eta, mu_s, lb, ub, has_ub) -> Callable:
             rsf = np.where(bad, 0.0, r_step)
             rstep_sq += float(rsf @ rsf)
             xt_rstep += _xt_v(flat_idx, flat_val, lens, rsf, k)
-            ftb_s = min(ftb_s, _ftb_batch(s_lo, ss_lo))
-            ftb_l = min(ftb_l, _ftb_batch(lm_lo, li_lo))
+            ftb_s = min(ftb_s, ftb_batch(s_lo, ss_lo))
+            ftb_l = min(ftb_l, ftb_batch(lm_lo, li_lo))
             if has_ub:
-                ftb_s = min(ftb_s, _ftb_batch(s_hi, ss_hi))
-                ftb_l = min(ftb_l, _ftb_batch(lm_hi, li_hi))
-        yield _pack_rb([rstep_sq, nan_ct, xt_rstep], [ftb_s, ftb_l])
+                ftb_s = min(ftb_s, ftb_batch(s_hi, ss_hi))
+                ftb_l = min(ftb_l, ftb_batch(lm_hi, li_hi))
+        yield pack_payload([rstep_sq, nan_ct, xt_rstep], [ftb_s, ftb_l])
 
     return fn
-
-
-def _ipc_ser(rb: pa.RecordBatch) -> bytes:
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, rb.schema) as w:
-        w.write_batch(rb)
-    return sink.getvalue().to_pybytes()
-
-
-def _ipc_deser(b: bytes) -> pa.RecordBatch:
-    return pa.ipc.open_stream(pa.BufferReader(b)).read_next_batch()
 
 
 def _state_rb(arrays) -> pa.RecordBatch:
@@ -322,54 +263,6 @@ def _state_rb(arrays) -> pa.RecordBatch:
         [pa.array(np.ascontiguousarray(a, dtype=np.float64)) for a in arrays],
         STATE_NAMES,
     )
-
-
-def _combined_iter(pair_iter) -> Iterator[pa.RecordBatch]:
-    """zip pairs → one combined RecordBatch, zero-copy (same buffers).
-    The combined schema inherits the BASE blob's schema (column names AND
-    metadata — a dense-elided base has no idx column, and the stamp that
-    lets ``_flatten_rb`` resynthesize it must survive the zip).  State
-    elements are either plain IPC bytes or the fused commit+stats cache's
-    ``(state_ipc, sums, mins)`` tuples (payload piggybacked on the last
-    batch — see ``_ecommit_stats_pass``); unwrap the latter."""
-    for bb, sb in pair_iter:
-        if isinstance(sb, tuple):
-            sb = sb[0]
-        base_rb = _ipc_deser(bytes(bb))
-        st_rb = _ipc_deser(bytes(sb))
-        fields = [
-            *(base_rb.schema.field(i) for i in range(base_rb.num_columns)),
-            *(st_rb.schema.field(i) for i in range(st_rb.num_columns)),
-        ]
-        yield pa.RecordBatch.from_arrays(
-            list(base_rb.columns) + list(st_rb.columns),
-            schema=pa.schema(fields, metadata=base_rb.schema.metadata),
-        )
-
-
-def _payload_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a combined-batch kernel pass into a zip-pair ``mapPartitions``
-    function yielding one ``(sums_bytes, mins_bytes)`` pair per partition."""
-
-    def fn(pair_iter):
-        for rb in pass_fn(_combined_iter(pair_iter)):
-            yield (
-                rb.column(0).to_pylist()[0],
-                rb.column(1).to_pylist()[0],
-            )
-
-    return fn
-
-
-def _merge_payload(a, b):
-    sums = np.frombuffer(a[0], dtype=np.float64) + np.frombuffer(
-        b[0], dtype=np.float64
-    )
-    mins = np.minimum(
-        np.frombuffer(a[1], dtype=np.float64),
-        np.frombuffer(b[1], dtype=np.float64),
-    )
-    return (sums.tobytes(), mins.tobytes())
 
 
 # Fused commit+stats pays off only when the state cache is big enough
@@ -382,51 +275,17 @@ def _merge_payload(a, b):
 # chained lazy swap and stats runs the plain pass.
 _FUSED_MIN_ROWS = 2_000_000
 
-# The stats payload's mixed-precision wire layout: 9 float64 scalars
-# (convergence predicates — full precision always), then the K-sized
-# tail as float32 (see _EStatsAcc.payload wire32).
-_STATS_HEAD_BYTES = 9 * 8
-
-# Use the float32 wire only when the tail is big enough to matter: at
-# this threshold the f64→f32 halving saves ≥ 1 MB per partition per
-# pass (≥ 0.4 GB/iteration at 400 partitions).  Small-K paths — every
-# registered correctness query (K ≤ ~2000: tail ≤ ~100 KB) — keep the
-# bit-stable float64 wire.
-_WIRE32_MIN_TAIL_BYTES = 2 * 1024 * 1024
-
-
-def _merge_payload_mixed(a, b):
-    h = np.frombuffer(a[0][:_STATS_HEAD_BYTES], dtype=np.float64) + (
-        np.frombuffer(b[0][:_STATS_HEAD_BYTES], dtype=np.float64)
-    )
-    t = np.frombuffer(a[0][_STATS_HEAD_BYTES:], dtype=np.float32) + (
-        np.frombuffer(b[0][_STATS_HEAD_BYTES:], dtype=np.float32)
-    )
-    mins = np.minimum(
-        np.frombuffer(a[1], dtype=np.float64),
-        np.frombuffer(b[1], dtype=np.float64),
-    )
-    return (h.tobytes() + t.tobytes(), mins.tobytes())
-
-
-def _decode_sums(buf: bytes, wire32: bool) -> np.ndarray:
-    if not wire32:
-        return np.frombuffer(buf, dtype=np.float64).copy()
-    head = np.frombuffer(buf[:_STATS_HEAD_BYTES], dtype=np.float64)
-    tail = np.frombuffer(buf[_STATS_HEAD_BYTES:], dtype=np.float32)
-    return np.concatenate([head, tail.astype(np.float64)])
-
 
 def _ecommit_state_pass(
     lam, dlam, eta, mu_s, alpha_p, alpha_d, lb, ub, has_ub
 ) -> Callable:
-    """Per-pair commit, RECOMPUTE form (the fallback when no matching
-    step cache exists — see ``elastic_commit``): recompute the step on
-    the CURRENT state and emit only the next state blob — the immutable
-    base columns are never rewritten."""
+    """Per-pair commit, RECOMPUTE form (the flush path — see
+    ``_flush_pending_lazy``): recompute the step on the CURRENT state and
+    emit only the next state batch — the immutable base columns are never
+    rewritten."""
 
-    def fn(pair_iter):
-        for rb in _combined_iter(pair_iter):
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             flat_idx, flat_val, lens = _flatten_rb(rb)
             pieces = _pieces(
                 rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
@@ -435,14 +294,12 @@ def _ecommit_state_pass(
                 pieces, flat_idx, flat_val, lens, dlam, mu_s, has_ub
             )
             _, r, _s_lo, _s_hi, lm_lo, lm_hi = _cols(rb, lb, ub, has_ub)
-            yield _ipc_ser(
-                _state_rb(
-                    [
-                        r + alpha_p * r_step,
-                        lm_lo + alpha_d * li_lo,
-                        lm_hi + alpha_d * li_hi if has_ub else lm_hi,
-                    ]
-                )
+            yield _state_rb(
+                [
+                    r + alpha_p * r_step,
+                    lm_lo + alpha_d * li_lo,
+                    lm_hi + alpha_d * li_hi if has_ub else lm_hi,
+                ]
             )
 
     return fn
@@ -450,8 +307,7 @@ def _ecommit_state_pass(
 
 def _ecommit_stats_pass(
     k, clam, cdlam, ceta, cmu_s, alpha_p, alpha_d,
-    lam, eta, mu_s, lb, ub, has_ub, blocks, wire32: bool = False,
-    skip_gram: bool = False,
+    lam, eta, mu_s, lb, ub, has_ub, blocks,
 ) -> Callable:
     """FUSED commit+stats — the r9 commit-bandwidth cut.  One pass over
     ``base.zip(old_state)`` per batch: replay the pending commit (step
@@ -476,10 +332,10 @@ def _ecommit_stats_pass(
     K=100k × 400 partitions, transient)."""
 
     def fn(pair_iter):
-        acc = _EStatsAcc(k, blocks, skip_gram)
+        acc = _EStatsAcc(k, blocks)
         n_state = len(STATE_NAMES)
         held = None
-        for rb in _combined_iter(pair_iter):
+        for rb in blob_plane.batches(pair_iter):
             flat_idx, flat_val, lens = _flatten_rb(rb)
             pieces = _pieces(
                 rb, flat_idx, flat_val, lens, clam, ceta, cmu_s, lb, ub,
@@ -498,7 +354,7 @@ def _ecommit_stats_pass(
             )
             if held is not None:
                 yield (held, b"", b"")
-            held = _ipc_ser(st_rb)
+            held = blob_plane.ipc_ser(st_rb)
             nb = rb.num_columns - n_state
             fields = [rb.schema.field(i) for i in range(nb)] + [
                 st_rb.schema.field(j) for j in range(st_rb.num_columns)
@@ -512,12 +368,7 @@ def _ecommit_stats_pass(
             )
         if held is None:
             return  # empty partition: no batches, no payload
-        pay = acc.payload(wire32)
-        yield (
-            held,
-            pay.column(0).to_pylist()[0],
-            pay.column(1).to_pylist()[0],
-        )
+        yield (held, *acc.payload())
 
     return fn
 
@@ -526,9 +377,8 @@ def _g1_pass(k, validate: bool = False) -> Callable:
     """``validate``: append the V1 bad-entry counts to the payload — the
     deferred validation rides this first pass (which also materializes
     both blob caches) instead of running its own aggregate."""
-    from entropy_balance_weighting_spark.kernels.spark import count_bad_entries
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         g1 = np.zeros(k)
         bad_x = bad_w = 0.0
         for rb in batches:
@@ -543,17 +393,12 @@ def _g1_pass(k, validate: bool = False) -> Callable:
             r = _rb_col(rb, "ratio")
             g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
         sums = [g1, bad_x, bad_w] if validate else [g1]
-        yield _pack_rb(sums, [np.inf])
+        yield pack_payload(sums, [np.inf])
 
     return fn
 
 
 class ElasticSparkKernel:
-    _CKPT_EVERY = 8
-    # the solver's gram-reuse policy may call elastic_stats(need_gram=
-    # False) — lagged-Jacobian iterations (solvers/elastic.py)
-    supports_gram_skip = True
-
     def __init__(
         self, base_rdd, state_rdd, spark, k: int, sum_w0: float, n: int,
         lb: float, ub: float, has_ub: bool, block_structure=None,
@@ -581,17 +426,6 @@ class ElasticSparkKernel:
         # deferred V1 validation flag — armed by the API layer, consumed
         # by the first elastic_g1 pass (see defer_validation)
         self._validate_first_pass = False
-        # mixed-precision wire (r10): when True (the DEFAULT), the
-        # stats payload tail is always float64.  The elastic solver
-        # flips it per-iteration only under options={"payload_wire32":
-        # True} — an opt-in for network-bound clusters, because the
-        # measured local trade is negative: the f32 wire halves payload
-        # bytes but the f32 step trajectory costs +1-2 IP iterations
-        # (20M×100k: f64 5 iters / hybrid-1e3 7 / hybrid-1e4 6, steady
-        # per-iteration within noise at 80 partitions — PLANS §16), and
-        # an always-f32 wire stalls above tolerance and hits the
-        # iteration cap.
-        self._wire_full = True
 
     @classmethod
     def from_problem(
@@ -606,81 +440,30 @@ class ElasticSparkKernel:
         known_sums: tuple[float, int] | None = None,
         prepacked: DataFrame | None = None,
     ) -> "ElasticSparkKernel":
+        """Split-state build (``blob_plane.split_state``).  Cold start: no
+        job here — the solve's first pass (elastic_g1's base.zip(state)
+        reduce) materializes BOTH caches in one source scan.  Warm start:
+        both caches are counted here so the bounds error surfaces at
+        construction."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
         lb = max(float(bounds[0]), 0.0)
         has_ub = bounds[1] is not None
         ub = float(bounds[1]) if has_ub else 0.0
 
-        if ratio_guess is None:
-            # Fast path (the common case): the start ratio is the constant
-            # 1.0, so bounds validation is a driver-side scalar check and
-            # the state derives from the cached base with no extra source
-            # scan — one generator pass total.
-            if not (lb < 1.0 and (not has_ub or 1.0 < ub)):
-                raise ValueError(
-                    "bounds must strictly contain the initial ratio guess"
-                )
-
-            def to_base(batches: Iterator[pa.RecordBatch]):
-                for rb in batches:
-                    if rb.num_rows:
-                        out = maybe_elide_idx(rb, k)
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array([_ipc_ser(out)], type=pa.binary())],
-                            ["payload"],
-                        )
-
-            base_rdd = (
-                df.select(*BASE_NAMES)
-                .mapInArrow(to_base, "payload binary")
-                .rdd.map(lambda r: bytes(r[0]))
-            )
-            from entropy_balance_weighting_spark.kernels.spark import (
-                adaptive_blob_partitions,
+        def state_of(ratio: np.ndarray) -> pa.RecordBatch:
+            return _state_rb(
+                [
+                    ratio,
+                    np.full(len(ratio), 0.05),
+                    np.full(len(ratio), 0.05 if has_ub else 0.0),
+                ]
             )
 
-            p = adaptive_blob_partitions(
-                df.sparkSession, n, base_rdd.getNumPartitions()
-            )
-            if p is not None:
-                # small problem: encode at full parallelism, move the
-                # finished blobs once; every pass then runs p tasks
-                # (guide §2.2 — see adaptive_blob_partitions)
-                base_rdd = base_rdd.coalesce(p, shuffle=True)
-            base_rdd = base_rdd._reserialize(_ZIP_SER).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            # no base_rdd.count(): the state-init job below computes base
-            # partitions through the persist, materializing BOTH caches in
-            # ONE source scan (r8 pack-cost work, PLANS.md sec. 13)
-
-            def init_state(payloads):
-                for b in payloads:
-                    nr = _ipc_deser(bytes(b)).num_rows
-                    yield _ipc_ser(
-                        _state_rb(
-                            [
-                                np.ones(nr),
-                                np.full(nr, 0.05),
-                                np.full(nr, 0.05 if has_ub else 0.0),
-                            ]
-                        )
-                    )
-
-            state_rdd = (
-                base_rdd.mapPartitions(init_state, preservesPartitioning=True)
-                ._reserialize(_ZIP_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # no eager count: the solve's first pass (elastic_g1's
-            # base.zip(state) reduce) materializes BOTH caches in one job
-            # — one fewer job per solve (r13 optimization; the
-            # warm-start path below keeps its eager count because the
-            # bounds-validation raise must surface at construction)
-        else:
-            base_rdd, state_rdd = cls._build_with_guess(
-                df, ratio_guess, k, lb, ub, has_ub, n
-            )
+        base_rdd, state_rdd = blob_plane.split_state(
+            df, k, n, state_of,
+            bounds=(lb, ub if has_ub else None),
+            ratio_guess=ratio_guess,
+        )
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
         bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
@@ -689,134 +472,15 @@ class ElasticSparkKernel:
             has_ub, block_structure=bs,
         )
 
-    @staticmethod
-    def _build_with_guess(df, ratio_guess, k, lb, ub, has_ub, n):
-        """Warm-start path: the per-row start ratio comes from a DataFrame,
-        so one Arrow pass renders each batch into aligned (base, state) IPC
-        blobs and the per-row bounds validation rides that same scan."""
-        df = df.join(
-            ratio_guess.select("row_id", "ratio"), "row_id", "left"
-        ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
-
-        def to_pair(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                ratio = _rb_col(rb, "ratio")
-                s_lo = ratio - lb
-                s_hi = (ub - ratio) if has_ub else np.ones(len(ratio))
-                if (s_lo <= 0).any() or (has_ub and (s_hi <= 0).any()):
-                    raise ValueError(
-                        "bounds must strictly contain the initial ratio guess"
-                    )
-                base_rb = maybe_elide_idx(
-                    pa.RecordBatch.from_arrays(
-                        [
-                            rb.column(rb.schema.get_field_index(c))
-                            for c in BASE_NAMES
-                        ],
-                        BASE_NAMES,
-                    ),
-                    k,
-                )
-                st_rb = _state_rb(
-                    [
-                        ratio,
-                        np.full(len(ratio), 0.05),
-                        np.full(len(ratio), 0.05 if has_ub else 0.0),
-                    ]
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([_ipc_ser(base_rb)], type=pa.binary()),
-                        pa.array([_ipc_ser(st_rb)], type=pa.binary()),
-                    ],
-                    ["base", "state"],
-                )
-
-        pair_rdd = (
-            df.select("row_id", "w0", "idx", "val", "ratio")
-            .mapInArrow(to_pair, "base binary, state binary")
-            .rdd.map(lambda r: (bytes(r[0]), bytes(r[1])))
-        )
-        from entropy_balance_weighting_spark.kernels.spark import (
-            adaptive_blob_partitions,
-        )
-
-        p = adaptive_blob_partitions(
-            df.sparkSession, n, pair_rdd.getNumPartitions()
-        )
-        if p is not None:
-            pair_rdd = pair_rdd.coalesce(p, shuffle=True)
-        pair_rdd = pair_rdd._reserialize(_ZIP_SER).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        base_rdd = (
-            pair_rdd.map(lambda t: t[0], preservesPartitioning=True)
-            ._reserialize(_ZIP_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        state_rdd = (
-            pair_rdd.map(lambda t: t[1], preservesPartitioning=True)
-            ._reserialize(_ZIP_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            base_rdd.count()
-        except Exception as exc:
-            if "bounds must strictly contain" in str(exc):
-                raise ValueError(
-                    "bounds must strictly contain the initial ratio guess"
-                ) from None
-            raise
-        state_rdd.count()  # reads the pair cache, not the source scan
-        pair_rdd.unpersist(blocking=True)
-        return base_rdd, state_rdd
-
-    def _reduce(self, fn, big: bool = False, pairs=None, wire32: bool = False):
+    def _reduce(self, fn, big: bool = False, pairs=None):
         if pairs is None:
-            pairs = self._base.zip(self._state).mapPartitions(
-                _payload_adapter(fn), preservesPartitioning=True
-            )
-        if big:
-            # dense K² Gram payloads: merge executor-side so the driver
-            # receives O(tree-fanout) blobs, same gate as collect_payload
-            sums_b, mins_b = pairs.treeReduce(
-                _merge_payload_mixed if wire32 else _merge_payload
-            )
-            sums = _decode_sums(sums_b, wire32)
-            mins = np.frombuffer(mins_b, dtype=np.float64).copy()
-        else:
-            rows = pairs.collect()
-            if not rows:
-                raise ValueError(
-                    "elastic kernel reduce returned no partition payloads "
-                    "(empty problem?)"
-                )
-            sums = np.sum([_decode_sums(s, wire32) for s, _ in rows], axis=0)
-            mins = np.min(
-                [np.frombuffer(m, dtype=np.float64) for _, m in rows], axis=0
-            )
+            pairs = blob_plane.payloads(self._base.zip(self._state), fn)
+        sums, mins = blob_plane.reduce_payload(pairs, big)
         # the reduce materialized any flushed lazy commit into its cache
         if self._prev is not None:
             self._prev.unpersist()
             self._prev = None
         return sums, mins
-
-    @property
-    def gram_payload_bytes(self) -> int:
-        """Per-partition gram payload size — the solver's gram-reuse
-        auto-gate reads this (Σk_b²·8 blocked, K²·8 dense)."""
-        return gram_bytes(self.k, self.block_structure)
-
-    def set_wire_full(self, full: bool) -> None:
-        """Precision hint from the solver loop: ``True`` forces the
-        float64 payload wire for subsequent stats scans (the refinement
-        endgame — a float32 step direction cannot push the residual the
-        last decades to tolerance); ``False`` re-allows the float32 wire
-        for large tails.  No-op for small-K problems (the size gate in
-        :meth:`elastic_stats` already keeps those float64)."""
-        self._wire_full = bool(full)
 
     def defer_validation(self) -> None:
         """Arm the fused V1 check: the next ``elastic_g1`` pass (the
@@ -826,10 +490,8 @@ class ElasticSparkKernel:
         self._validate_first_pass = True
 
     def elastic_g1(self) -> np.ndarray:
-        from entropy_balance_weighting_spark.kernels.spark import raise_if_bad
-
         self._flush_pending_lazy()
-        validate = getattr(self, "_validate_first_pass", False)
+        validate = self._validate_first_pass
         sums, _ = self._reduce(_g1_pass(self.k, validate=validate))
         if validate:
             self._validate_first_pass = False
@@ -837,30 +499,11 @@ class ElasticSparkKernel:
             sums = sums[:-2]
         return sums
 
-    def elastic_stats(self, lam, eta, mu_s, *, need_gram: bool = True) -> EStats:
-        """One stats scan.  ``need_gram=False`` is the lagged-Jacobian
-        iteration (solvers/elastic.py gram-reuse policy): the pass skips
-        the gram accumulate entirely — no Σk_b²/K² bincount CPU, no gram
-        payload bytes — and the returned ``EStats.gram`` is ``None`` (the
-        driver reuses its frozen copy).  Every residual/leg the
-        convergence predicates and the RHS need is still computed
-        exactly, so a skipped scan can never mis-report convergence."""
+    def elastic_stats(self, lam, eta, mu_s) -> EStats:
         k = self.k
-        g_bytes = gram_bytes(k, self.block_structure) if need_gram else 0
         big = reduce_big(
-            k,
-            self.block_structure,
-            self._base.getNumPartitions(),
-            gram_nbytes=g_bytes,
+            k, self.block_structure, self._base.getNumPartitions()
         )
-        # float32 wire for the K-sized payload tail, gated on size so
-        # every small-K (oracle-hashed) path stays bit-stable float64,
-        # and on the solver's precision hint (f64 endgame — see
-        # set_wire_full / solvers/elastic.py).
-        wire32 = not self._wire_full and (
-            3 * k * 8 + g_bytes
-        ) >= _WIRE32_MIN_TAIL_BYTES
-        skip_gram = not need_gram
         if self._pending is not None and self.n < _FUSED_MIN_ROWS:
             # Small-N: the fused pass's fixed costs exceed its bandwidth
             # savings (see _FUSED_MIN_ROWS) — flush the commit as a
@@ -874,55 +517,41 @@ class ElasticSparkKernel:
             # payloads — the base cache crosses once, not twice (r9).
             clam, cdlam, ceta, cmu_s, ap, ad = self._pending
             self._pending = None
-            fused = (
-                self._base.zip(self._state)
-                .mapPartitions(
+            fused, self._commits_since_ckpt = blob_plane.commit(
+                self._base.zip(self._state).mapPartitions(
                     _ecommit_stats_pass(
                         k, clam, cdlam, ceta, cmu_s, ap, ad,
                         lam, eta, mu_s, self.lb, self.ub, self.has_ub,
-                        blocks_tuple(self.block_structure), wire32,
-                        skip_gram,
+                        blocks_tuple(self.block_structure),
                     ),
                     preservesPartitioning=True,
-                )
-                ._reserialize(_ZIP_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
+                ),
+                self._commits_since_ckpt,
             )
-            self._commits_since_ckpt += 1
-            if self._commits_since_ckpt >= self._CKPT_EVERY:
-                fused.localCheckpoint()
-                self._commits_since_ckpt = 0
             payloads = fused.map(lambda t: (t[1], t[2])).filter(
                 lambda t: len(t[0]) > 0
             )
             prev_store = self._store
-            sums, mins = self._reduce(
-                None, big=big, pairs=payloads, wire32=wire32
-            )
+            sums, mins = self._reduce(None, big=big, pairs=payloads)
             prev_store.unpersist()
             self._store = fused
             # consumers zip this cache with the base at the JVM level and
-            # unwrap the (state, sums, mins) tuples in _combined_iter
+            # blob_plane.batches unwraps the (state, sums, mins) tuples
             self._state = fused
         else:
             sums, mins = self._reduce(
                 _estats_pass(
                     k, lam, eta, mu_s, self.lb, self.ub, self.has_ub,
-                    blocks_tuple(self.block_structure), wire32, skip_gram,
+                    blocks_tuple(self.block_structure),
                 ),
                 big=big,
-                wire32=wire32,
             )
         (f_val, cd_sq, ci_sq, cs_sq, alt_sq, nan_ct,
          sl_sum, sl_sq, sl_cnt) = sums[:9]
         g1 = sums[9 : 9 + k]
         rhs_leg = sums[9 + k : 9 + 2 * k]
         rhs_mu_leg = sums[9 + 2 * k : 9 + 3 * k]
-        gram = (
-            gram_from_sums(sums[9 + 3 * k :], k, self.block_structure)
-            if need_gram
-            else None
-        )
+        gram = gram_from_sums(sums[9 + 3 * k :], k, self.block_structure)
         return EStats(
             f_val=float(f_val),
             cd_sq=float(cd_sq),
@@ -965,22 +594,16 @@ class ElasticSparkKernel:
             return
         clam, cdlam, ceta, cmu_s, ap, ad = self._pending
         self._pending = None
-        new_state = (
-            self._base.zip(self._state)
-            .mapPartitions(
+        new_state, self._commits_since_ckpt = blob_plane.commit(
+            blob_plane.transform(
+                self._base.zip(self._state),
                 _ecommit_state_pass(
                     clam, cdlam, ceta, cmu_s, ap, ad, self.lb, self.ub,
                     self.has_ub,
                 ),
-                preservesPartitioning=True,
-            )
-            ._reserialize(_ZIP_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            ),
+            self._commits_since_ckpt,
         )
-        self._commits_since_ckpt += 1
-        if self._commits_since_ckpt >= self._CKPT_EVERY:
-            new_state.localCheckpoint()
-            self._commits_since_ckpt = 0
         self._prev = self._store
         self._store = new_state
         self._state = new_state
@@ -1010,40 +633,17 @@ class ElasticSparkKernel:
         )
 
     def new_weights(self) -> DataFrame:
-        """(row_id, new_weight = ratio·w0) as a DataFrame — Arrow blobs end
-        to end; the per-batch IPC payloads cross the RDD→DataFrame seam as
-        single binary rows, then ``mapInArrow`` explodes them JVM-side."""
+        """(row_id, new_weight = ratio·w0) as a DataFrame."""
         self._flush_pending_lazy()
-
-        def to_weights(pair_iter):
-            for rb in _combined_iter(pair_iter):
-                out = pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(rb.schema.get_field_index("row_id")),
-                        pa.array(_rb_col(rb, "ratio") * _rb_col(rb, "w0")),
-                    ],
-                    ["row_id", "new_weight"],
-                )
-                yield (_ipc_ser(out),)
-
-        payload = self._base.zip(self._state).mapPartitions(
-            to_weights, preservesPartitioning=True
+        return blob_plane.weights_df(
+            self._spark,
+            self._base.zip(self._state),
+            lambda rb: _rb_col(rb, "ratio") * _rb_col(rb, "w0"),
         )
 
-        def unpack(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                for blob in rb.column(0).to_pylist():
-                    yield _ipc_deser(blob)
-
-        return self._spark.createDataFrame(
-            payload, "payload binary"
-        ).mapInArrow(unpack, "row_id bigint, new_weight double")
-
     def cleanup(self) -> None:
-        self._base.unpersist(blocking=True)
-        self._store.unpersist(blocking=True)
-        if self._prev is not None:
-            self._prev.unpersist(blocking=True)
-            self._prev = None
+        blob_plane.release(
+            self._spark.sparkContext, self._base, self._store, self._prev
+        )
+        self._prev = None
         self._pending = None
-        _post_cleanup_gc(self._spark.sparkContext)

@@ -15,18 +15,8 @@ from entropy_balance_weighting_spark.kernels.base import (
     PBStats,
     PBStepStats,
     PenaltyStats,
+    ftb_batch,
 )
-
-TAU = 0.995
-
-
-def _ftb_raw(point: np.ndarray, step: np.ndarray, tau: float = TAU) -> float:
-    """min(−τ·point/step over step<0); +inf when unblocked (the reference's
-    masked-min with ``initial=np.inf``, ref: shared.py:76-91)."""
-    blocked = step < 0
-    if not blocked.any():
-        return float("inf")
-    return float(np.min(-tau * point[blocked] / step[blocked]))
 
 
 class PenaltyLocalKernel:
@@ -169,11 +159,11 @@ class PenaltyLocalKernel:
         p, dl_lo, dl_hi = self._pb_steps(z, mu)
         bad = ~np.isfinite(p)
         pf = np.where(bad, 0.0, p)
-        ftb_s = _ftb_raw(self.s_lo, pf)
-        ftb_l = _ftb_raw(self.lm_lo, dl_lo)
+        ftb_s = ftb_batch(self.s_lo, pf)
+        ftb_l = ftb_batch(self.lm_lo, dl_lo)
         if self.has_ub:
-            ftb_s = min(ftb_s, _ftb_raw(self.s_hi, -pf))
-            ftb_l = min(ftb_l, _ftb_raw(self.lm_hi, dl_hi))
+            ftb_s = min(ftb_s, ftb_batch(self.s_hi, -pf))
+            ftb_l = min(ftb_l, ftb_batch(self.lm_hi, dl_hi))
         return PBStepStats(
             p_sq=float(pf @ pf),
             ftb_slack=ftb_s,

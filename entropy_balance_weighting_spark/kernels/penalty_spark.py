@@ -1,9 +1,9 @@
 """Distributed kernel for the penalty solver — split-state Arrow blobs
 over an RDD ``zip``, same execution design as the elastic kernel (one
 fused scan per stage, zero per-iteration shuffles, only K/K²-sized
-partials cross the driver boundary; lineage truncated per commit; the
-immutable CSR base is cached ONCE as pre-encoded IPC blobs and never
-rewritten — commits re-cache only the mutable state columns).
+partials cross the driver boundary; the immutable CSR base is cached ONCE
+as pre-encoded IPC blobs and never rewritten — commits re-cache only the
+mutable state columns; see ``kernels/blob_plane.py``).
 
 State columns: ``ratio`` always (8 B/row); bounded mode adds ``s_lo,
 lm_lo, s_hi, lm_hi`` (slacks and inequality multipliers per bound side —
@@ -17,68 +17,61 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from entropy_balance_weighting_spark.kernels import blob_plane
 from entropy_balance_weighting_spark.kernels.base import (
     PBStats,
     PBStepStats,
     PenaltyStats,
+    ftb_batch,
 )
-from entropy_balance_weighting_spark.kernels.penalty_local import TAU
+from entropy_balance_weighting_spark.kernels.blob_plane import pack_payload
 from entropy_balance_weighting_spark.kernels.spark import (
-    _post_cleanup_gc,
     _flatten_rb,
-    _pack_rb,
     _rb_col,
     _rb_with,
     _x_dot,
     _xt_v,
-    BLOB_SER,
     blocks_tuple,
-    gram_bytes,
-    reduce_big,
+    count_bad_entries,
     gram_from_sums,
-    ipc_deser,
-    ipc_ser,
     make_gram_accum,
-    maybe_elide_idx,
     pack_rows,
-    reduce_blob_payload,
-    zip_payload_adapter,
-    zip_state_commit_adapter,
-    zip_weights_df,
+    raise_if_bad,
+    reduce_big,
 )
 
-BASE_NAMES = ["row_id", "w0", "idx", "val"]
 UNBOUNDED_STATE = ["ratio"]
 BOUNDED_STATE = ["ratio", "s_lo", "lm_lo", "s_hi", "lm_hi"]
 
 
-def _ftb_batch(point: np.ndarray, step: np.ndarray) -> float:
-    blocked = step < 0
-    if not blocked.any():
-        return np.inf
-    return float(np.min(-TAU * point[blocked] / step[blocked]))
+def _gram_init_pass(k: int, blocks, validate: bool = False) -> Callable:
+    """``validate``: append the V1 bad-entry counts to the payload — the
+    deferred validation rides this first pass (which also materializes
+    both blob caches) instead of running its own aggregate."""
 
-
-def _gram_init_pass(k: int, blocks) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         g2, g2_add = make_gram_accum(k, blocks)
+        bad_x = bad_w = 0.0
         for rb in batches:
             if not rb.num_rows:
                 continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
             w0 = _rb_col(rb, "w0")
+            if validate:
+                bx, bw = count_bad_entries(flat_val, lens, w0)
+                bad_x += bx
+                bad_w += bw
             g2_add(flat_idx, flat_val, lens, w0**2)
-        yield _pack_rb([g2], [np.inf])
+        sums = [g2, bad_x, bad_w] if validate else [g2]
+        yield pack_payload(sums, [np.inf])
 
     return fn
 
 
 def _moment_totals_pass(k: int) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         g1 = np.zeros(k)
         for rb in batches:
             if not rb.num_rows:
@@ -87,14 +80,14 @@ def _moment_totals_pass(k: int) -> Callable:
             w0 = _rb_col(rb, "w0")
             r = _rb_col(rb, "ratio")
             g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
-        yield _pack_rb([g1], [np.inf])
+        yield pack_payload([g1], [np.inf])
 
     return fn
 
 
 # -- unbounded -------------------------------------------------------------
 def _pstats_pass(k: int, blocks) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         f_val = 0.0
         s_ll = 0.0
         nan_ct = 0.0
@@ -119,7 +112,7 @@ def _pstats_pass(k: int, blocks) -> Callable:
             g2v += _xt_v(flat_idx, flat_val, lens, w0 * r * lrf, k)
             h += _xt_v(flat_idx, flat_val, lens, w0**2 * lrf, k)
             gram_add(flat_idx, flat_val, lens, w0 * r)
-        yield _pack_rb([f_val, s_ll, nan_ct, g1, g2v, h, gram], [np.inf])
+        yield pack_payload([f_val, s_ll, nan_ct, g1, g2v, h, gram], [np.inf])
 
     return fn
 
@@ -142,7 +135,7 @@ def _pcommit_pass(z: np.ndarray) -> Callable:
 def _pstep_sq_pass(z: np.ndarray) -> Callable:
     """Σp² + NaN count for the step just about to be committed."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         p_sq = 0.0
         nan_ct = 0.0
         for rb in batches:
@@ -156,7 +149,7 @@ def _pstep_sq_pass(z: np.ndarray) -> Callable:
             nan_ct += float(bad.sum())
             pf = np.where(bad, 0.0, p)
             p_sq += float(pf @ pf)
-        yield _pack_rb([p_sq, nan_ct], [np.inf])
+        yield pack_payload([p_sq, nan_ct], [np.inf])
 
     return fn
 
@@ -177,7 +170,7 @@ def _bounded_pieces(rb: pa.RecordBatch, has_ub: bool):
 
 
 def _pbstats_pass(k: int, has_ub: bool, blocks) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         f_val = 0.0
         sd0_sq = 0.0
         s_sum = 0.0
@@ -217,7 +210,7 @@ def _pbstats_pass(k: int, has_ub: bool, blocks) -> Callable:
             s_sq += float(sl @ sl)
             if len(sl):
                 s_min = min(s_min, float(sl.min()))
-        yield _pack_rb(
+        yield pack_payload(
             [f_val, sd0_sq, s_sum, s_sq, nan_ct, g1, hd, u1a, u1b, gb], [s_min]
         )
 
@@ -236,7 +229,7 @@ def _pb_step_arrays(rb, flat_idx, flat_val, lens, z, mu, has_ub):
 
 
 def _pbstep_pass(z: np.ndarray, mu: float, has_ub: bool) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         p_sq = 0.0
         nan_ct = 0.0
         ftb_s = np.inf
@@ -252,12 +245,12 @@ def _pbstep_pass(z: np.ndarray, mu: float, has_ub: bool) -> Callable:
             nan_ct += float(bad.sum())
             pf = np.where(bad, 0.0, p)
             p_sq += float(pf @ pf)
-            ftb_s = min(ftb_s, _ftb_batch(s_lo, pf))
-            ftb_l = min(ftb_l, _ftb_batch(lm_lo, dl_lo))
+            ftb_s = min(ftb_s, ftb_batch(s_lo, pf))
+            ftb_l = min(ftb_l, ftb_batch(lm_lo, dl_lo))
             if has_ub:
-                ftb_s = min(ftb_s, _ftb_batch(s_hi, -pf))
-                ftb_l = min(ftb_l, _ftb_batch(lm_hi, dl_hi))
-        yield _pack_rb([p_sq, nan_ct], [ftb_s, ftb_l])
+                ftb_s = min(ftb_s, ftb_batch(s_hi, -pf))
+                ftb_l = min(ftb_l, ftb_batch(lm_hi, dl_hi))
+        yield pack_payload([p_sq, nan_ct], [ftb_s, ftb_l])
 
     return fn
 
@@ -290,8 +283,6 @@ def _pbcommit_pass(
 class PenaltySparkKernel:
     """Distributed penalty kernel over split-state Arrow blobs."""
 
-    _CKPT_EVERY = 8
-
     def __init__(
         self, base_rdd, state_rdd, spark, k: int, sum_w0: float, n: int,
         has_ub: bool, bounded: bool, block_structure=None,
@@ -308,6 +299,9 @@ class PenaltySparkKernel:
         self._state_names = BOUNDED_STATE if bounded else UNBOUNDED_STATE
         self._prev = None
         self._commits_since_ckpt = 0
+        # deferred V1 validation flag — armed by the API layer, consumed
+        # by the first penalty_init pass (see defer_validation)
+        self._validate_first_pass = False
 
     @classmethod
     def from_problem(
@@ -322,138 +316,38 @@ class PenaltySparkKernel:
         known_sums: tuple[float, int] | None = None,
         prepacked: DataFrame | None = None,
     ) -> "PenaltySparkKernel":
+        """Split-state build (``blob_plane.split_state``): no job on a cold
+        start — the solve's first pass (``penalty_init``) materializes both
+        caches; a warm start counts them here so the bounds error surfaces
+        at construction."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
         bounded = bounds is not None
         has_ub = bounded and bounds[1] is not None
         lb = max(float(bounds[0]), 0.0) if bounded else 0.0
         ub = float(bounds[1]) if has_ub else 0.0
+        names = BOUNDED_STATE if bounded else UNBOUNDED_STATE
 
-        def state_arrays(ratio: np.ndarray) -> list[np.ndarray]:
-            """Initial state from a start ratio (validated by caller)."""
-            if not bounded:
-                return [ratio]
-            s_lo = ratio - lb
-            s_hi = (ub - ratio) if has_ub else np.ones(len(ratio))
-            lm_hi = 1.0 / s_hi if has_ub else np.zeros(len(ratio))
-            return [ratio, s_lo, 1.0 / s_lo, s_hi, lm_hi]
-
-        def state_rb(ratio: np.ndarray) -> pa.RecordBatch:
-            names = BOUNDED_STATE if bounded else UNBOUNDED_STATE
+        def state_of(ratio: np.ndarray) -> pa.RecordBatch:
+            if bounded:
+                s_lo = ratio - lb
+                s_hi = (ub - ratio) if has_ub else np.ones(len(ratio))
+                lm_hi = 1.0 / s_hi if has_ub else np.zeros(len(ratio))
+                arrays = [ratio, s_lo, 1.0 / s_lo, s_hi, lm_hi]
+            else:
+                arrays = [ratio]
             return pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.ascontiguousarray(a, dtype=np.float64))
-                    for a in state_arrays(ratio)
+                    for a in arrays
                 ],
                 names,
             )
 
-        if ratio_guess is None:
-            # Constant start ratio 1.0: bounds validation is a driver-side
-            # scalar check; the state derives from the cached base with no
-            # extra source scan.
-            if bounded and not (lb < 1.0 and (not has_ub or 1.0 < ub)):
-                raise ValueError(
-                    "bounds must strictly contain the initial ratio guess"
-                )
-
-            def to_base(batches: Iterator[pa.RecordBatch]):
-                for rb in batches:
-                    if rb.num_rows:
-                        out = maybe_elide_idx(rb, k)
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array([ipc_ser(out)], type=pa.binary())],
-                            ["payload"],
-                        )
-
-            base_rdd = (
-                df.select(*BASE_NAMES)
-                .mapInArrow(to_base, "payload binary")
-                .rdd.map(lambda r: bytes(r[0]))
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # no base_rdd.count(): the state-init job below computes base
-            # partitions through the persist, materializing BOTH caches in
-            # ONE source scan (r8 pack-cost work, PLANS.md sec. 13)
-
-            def init_state(payloads):
-                for b in payloads:
-                    nr = ipc_deser(bytes(b)).num_rows
-                    yield ipc_ser(state_rb(np.ones(nr)))
-
-            state_rdd = (
-                base_rdd.mapPartitions(init_state, preservesPartitioning=True)
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            state_rdd.count()  # reads the base cache, not the source scan
-        else:
-            # Warm-start path: per-row ratio → one Arrow pass renders
-            # aligned (base, state) blobs; per-row bounds validation rides
-            # that same scan.
-            df_g = df.join(
-                ratio_guess.select("row_id", "ratio"), "row_id", "left"
-            ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
-
-            def to_pair(batches: Iterator[pa.RecordBatch]):
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    ratio = _rb_col(rb, "ratio")
-                    if bounded and (
-                        (ratio - lb <= 0).any()
-                        or (has_ub and (ub - ratio <= 0).any())
-                    ):
-                        raise ValueError(
-                            "bounds must strictly contain the initial "
-                            "ratio guess"
-                        )
-                    base_rb = maybe_elide_idx(
-                        pa.RecordBatch.from_arrays(
-                            [
-                                rb.column(rb.schema.get_field_index(c))
-                                for c in BASE_NAMES
-                            ],
-                            BASE_NAMES,
-                        ),
-                        k,
-                    )
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([ipc_ser(base_rb)], type=pa.binary()),
-                            pa.array([ipc_ser(state_rb(ratio))], type=pa.binary()),
-                        ],
-                        ["base", "state"],
-                    )
-
-            pair_rdd = (
-                df_g.select(*BASE_NAMES, "ratio")
-                .mapInArrow(to_pair, "base binary, state binary")
-                .rdd.map(lambda r: (bytes(r[0]), bytes(r[1])))
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            base_rdd = (
-                pair_rdd.map(lambda t: t[0], preservesPartitioning=True)
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            state_rdd = (
-                pair_rdd.map(lambda t: t[1], preservesPartitioning=True)
-                ._reserialize(BLOB_SER)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                base_rdd.count()
-            except Exception as exc:
-                if "bounds must strictly contain" in str(exc):
-                    raise ValueError(
-                        "bounds must strictly contain the initial ratio guess"
-                    ) from None
-                raise
-            state_rdd.count()  # reads the pair cache, not the source scan
-            pair_rdd.unpersist(blocking=True)
-
+        base_rdd, state_rdd = blob_plane.split_state(
+            df, k, n, state_of,
+            bounds=(lb, ub if has_ub else None) if bounded else None,
+            ratio_guess=ratio_guess,
+        )
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
         bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
@@ -464,10 +358,9 @@ class PenaltySparkKernel:
 
     # -- plumbing ----------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        pairs = self._base.zip(self._state).mapPartitions(
-            zip_payload_adapter(fn), preservesPartitioning=True
+        sums, mins = blob_plane.reduce_payload(
+            blob_plane.payloads(self._base.zip(self._state), fn), big
         )
-        sums, mins = reduce_blob_payload(pairs, big)
         # a reduce materializes any pending lazy commit into its cache
         if self._prev is not None:
             self._prev.unpersist()
@@ -483,30 +376,36 @@ class PenaltySparkKernel:
     def _commit(self, fn) -> None:
         """Lazy state transition: persisted, materialized by the next
         reduce in the same scan (no standalone commit job); only the
-        mutable state columns are re-cached.  Lineage truncated every
-        ``_CKPT_EVERY`` commits."""
-        new_state = (
-            self._base.zip(self._state)
-            .mapPartitions(
-                zip_state_commit_adapter(fn, self._state_names),
-                preservesPartitioning=True,
-            )
-            ._reserialize(BLOB_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        mutable state columns are re-cached."""
+        new_state, self._commits_since_ckpt = blob_plane.commit(
+            blob_plane.transform(
+                self._base.zip(self._state), fn, self._state_names
+            ),
+            self._commits_since_ckpt,
         )
-        self._commits_since_ckpt += 1
-        if self._commits_since_ckpt >= self._CKPT_EVERY:
-            new_state.localCheckpoint()
-            self._commits_since_ckpt = 0
         self._prev = self._state
         self._state = new_state
 
+    def defer_validation(self) -> None:
+        """Arm the fused V1 check: the next ``penalty_init`` pass (the
+        solve's first job, which also materializes both blob caches)
+        counts bad X rows / bad weights in its payload and raises the V1
+        ValueError."""
+        self._validate_first_pass = True
+
     # -- shared ------------------------------------------------------------
     def penalty_init(self):
+        validate = self._validate_first_pass
         sums, _ = self._reduce(
-            _gram_init_pass(self.k, blocks_tuple(self.block_structure)),
+            _gram_init_pass(
+                self.k, blocks_tuple(self.block_structure), validate=validate
+            ),
             big=self._gram_big,
         )
+        if validate:
+            self._validate_first_pass = False
+            raise_if_bad(sums[-2], sums[-1])
+            sums = sums[:-2]
         return gram_from_sums(sums, self.k, self.block_structure)
 
     def moment_totals(self) -> np.ndarray:
@@ -514,29 +413,17 @@ class PenaltySparkKernel:
         return sums
 
     def new_weights(self) -> DataFrame:
-        def render(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(rb.schema.get_field_index("row_id")),
-                        pa.array(
-                            _rb_col(rb, "ratio") * _rb_col(rb, "w0"),
-                            type=pa.float64(),
-                        ),
-                    ],
-                    ["row_id", "new_weight"],
-                )
-
-        return zip_weights_df(self._spark, self._base, self._state, render)
+        return blob_plane.weights_df(
+            self._spark,
+            self._base.zip(self._state),
+            lambda rb: _rb_col(rb, "ratio") * _rb_col(rb, "w0"),
+        )
 
     def cleanup(self) -> None:
-        self._base.unpersist(blocking=True)
-        self._state.unpersist(blocking=True)
-        if self._prev is not None:
-            self._prev.unpersist(blocking=True)
-            self._prev = None
-        _post_cleanup_gc(self._spark.sparkContext)
-
+        blob_plane.release(
+            self._spark.sparkContext, self._base, self._state, self._prev
+        )
+        self._prev = None
     # -- unbounded ---------------------------------------------------------
     def penalty_stats(self) -> PenaltyStats:
         k = self.k

@@ -6,22 +6,21 @@ per-row CSR (the Spark rendering of the reference's package-wide CSR
 canonicalization, ref: shared.py:11-12); q = w0/Σw0 and the analytic start
 wstar are recomputed per pass, a materialized wstar column appears only
 after a warm start or a materialized commit, and a dense ``[0..k)`` idx
-pattern is elided per batch (``maybe_elide_idx``).  Packing happens
-once; every solver iteration then runs whole-pass batch jobs that compute
-ALL of the iteration's N→{scalar,K,K×K} reductions in a single scan (the
-same fusion the reference gets from numexpr + MKL, ref:
+pattern is elided per batch (``blob_plane.maybe_elide_idx``).  Packing
+happens once; every solver iteration then runs whole-pass batch jobs that
+compute ALL of the iteration's N→{scalar,K,K×K} reductions in a single
+scan (the same fusion the reference gets from numexpr + MKL, ref:
 ebw_routines.py:210-233), shipping only K- and K²-sized partials to the
 driver.  The Arrow list arrays' offset buffers ARE the CSR encoding, read
 zero-copy by ``_flatten_rb``; pandas conversion would materialize one
 Python ndarray PER ROW per list column.
 
-Cache representation (round 7): the packed rows are cached as an RDD of
-**Arrow IPC byte blobs** (one element per record batch), not as a
-DataFrame.  A `mapInArrow` scan over a cached DataFrame re-encodes the
-Tungsten columnar cache into Arrow on EVERY pass — measured 10.2 s/pass at
-N=20M K=8 — while a cached pre-encoded blob ships straight into the Python
-worker and opens zero-copy: 1.6 s for the identical math
-(PLANS.md §11; the elastic kernel found this first).
+The packed rows are cached as an RDD of Arrow IPC byte blobs (one element
+per record batch), not as a DataFrame — see ``kernels/blob_plane.py``,
+which holds the encode, cache, reduce and render plumbing all three
+distributed kernels share.  This module holds the batch math they share
+(CSR decode, X·λ / Xᵀv products, Gram accumulators, the reduce-topology
+gate) and the unbounded Newton kernel.
 
 Why whole-pass batch jobs and not joins/explodes: the per-iteration
 primitives (segment dot products, Gram accumulation) are BLAS-shaped;
@@ -46,284 +45,18 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import StorageLevel
-from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from entropy_balance_weighting_spark.kernels import blob_plane
 from entropy_balance_weighting_spark.kernels.base import IterStats, StepStats
-
-# NOTE: mapInArrow matches yielded batches to this schema BY POSITION (unlike
-# mapInPandas' by-name matching) — the order below must equal the working
-# DataFrame's column order exactly.
-# Blob width is pack/crossing/cache COST (r8): q (= w0/Σw0) and the start
-# wstar (analytic, see _w_state) are recomputed per pass for one divide —
-# 16 B/row cheaper to ship and store; wstar appears in the blob only when
-# a warm-start guess or a materialized commit actually needs it.
-PACKED_NAMES = ["row_id", "w0", "idx", "val"]
-_PAYLOAD_SCHEMA = "sums binary, mins binary"
-
-# Dense-idx elision: when every row of a batch has idx == [0..k), the idx
-# list column is pure redundancy — k·4 B/row (a quarter of a k=8 blob)
-# paid on every crossing and in the cache.  The encode drops the column
-# and stamps k in the schema metadata; _flatten_rb resynthesizes the flat
-# index vector (np.tile) for the cost of one allocation per pass.
-DENSE_IDX_META = b"ebw_dense_k"
-
-
-def maybe_elide_idx(rb: pa.RecordBatch, k: int) -> pa.RecordBatch:
-    """Drop the ``idx`` column from a packed batch when it is exactly the
-    dense ``[0..k)`` pattern on every row (stamped in schema metadata for
-    :func:`_flatten_rb` to resynthesize); returns ``rb`` unchanged for any
-    other sparsity pattern."""
-    i = rb.schema.get_field_index("idx")
-    if i < 0 or k <= 0:
-        return rb
-    idx = rb.column(i)
-    lens = pc.list_value_length(idx).to_numpy().astype(np.int64, copy=False)
-    if lens.size == 0 or not (lens == k).all():
-        return rb
-    flat = idx.flatten().to_numpy(zero_copy_only=False)
-    if not np.array_equal(
-        flat, np.tile(np.arange(k, dtype=flat.dtype), lens.size)
-    ):
-        return rb
-    arrays = [rb.column(j) for j in range(rb.num_columns) if j != i]
-    fields = [rb.schema.field(j) for j in range(rb.num_columns) if j != i]
-    meta = dict(rb.schema.metadata or {})
-    meta[DENSE_IDX_META] = str(k).encode()
-    return pa.RecordBatch.from_arrays(
-        arrays, schema=pa.schema(fields, metadata=meta)
-    )
-
-# Identical batched serializer on every cached blob RDD: RDD.zip (the
-# elastic kernel's base↔state align) silently re-pickles BOTH sides per job
-# when batch sizes differ, and a uniform serializer keeps every kernel's
-# cache zip-compatible.  Batch size 1 is right regardless — each element is
-# already a multi-MB Arrow IPC blob.
-BLOB_SER = BatchedSerializer(CPickleSerializer(), 1)
-
-# Scale-adaptive blob partitioning (r13 optimization, guide §2.2 "fewer,
-# larger partitions"): an iteration pass's per-task numpy work on a
-# ~19k-row blob is sub-millisecond, so at small N the per-task fixed cost
-# (scheduling + Python-worker round trip) dominates every pass — measured
-# 276 ms/job at 32 partitions vs 162 ms at 4 for identical work on this
-# box.  Packing therefore coalesces the encoded blobs down to
-# ceil(N / rows-per-partition) partitions (shuffle=True so the ENCODE
-# still runs at full input parallelism and only the finished blobs move,
-# once, at setup).  At real scale N/rows_target >> defaultParallelism, the
-# target clamps to the core count, the condition p < current is false and
-# the coalesce never fires — cluster plans are unchanged.
-_BLOB_ROWS_PER_PARTITION_CONF = "spark.ebw.blobRowsPerPartition"
-_BLOB_ROWS_PER_PARTITION_DEFAULT = 150_000
-
-
-def adaptive_blob_partitions(spark, n: int, current: int) -> int | None:
-    """Target blob-partition count for an N-row packed problem, or None
-    when the current partitioning should stand (large problems, or the
-    knob disabled with a non-positive value)."""
-    try:
-        rows_target = int(
-            spark.conf.get(
-                _BLOB_ROWS_PER_PARTITION_CONF,
-                str(_BLOB_ROWS_PER_PARTITION_DEFAULT),
-            )
-        )
-    except Exception:  # pragma: no cover - conf unavailable
-        rows_target = _BLOB_ROWS_PER_PARTITION_DEFAULT
-    if rows_target <= 0 or n <= 0:
-        return None
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    p = max(1, -(-n // rows_target))
-    if p > par:
-        # not a small problem: N already exceeds rows_target per core —
-        # moving blobs around would shuffle real data for no pass savings
-        return None
-    return p if p < current else None
-
-def _post_cleanup_gc(sc) -> None:
-    """Nudge the JVM after dropping a multi-GB blob cache.  A solve's
-    caches die at cleanup; without a collection hint the dead byte[]
-    blocks linger in the old generation and the NEXT kernel's encode job
-    pays for them in GC pauses (measured: 2nd pack in a session 12 s →
-    90+ s without this).  Once per solve teardown — never in the
-    per-iteration path."""
-    try:
-        sc._jvm.System.gc()
-    except Exception:  # pragma: no cover - JVM gateway already closed
-        pass
-
-
-def ipc_ser(rb: pa.RecordBatch) -> bytes:
-    sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, rb.schema) as w:
-        w.write_batch(rb)
-    return sink.getvalue().to_pybytes()
-
-
-def ipc_deser(b: bytes) -> pa.RecordBatch:
-    return pa.ipc.open_stream(pa.BufferReader(b)).read_next_batch()
-
-
-def blob_iter(blobs) -> Iterator[pa.RecordBatch]:
-    for b in blobs:
-        yield ipc_deser(bytes(b))
-
-
-def blob_payload_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a record-batch kernel pass into a blob-RDD ``mapPartitions``
-    function yielding one ``(sums_bytes, mins_bytes)`` pair per partition."""
-
-    def fn(blobs):
-        for rb in pass_fn(blob_iter(blobs)):
-            yield (
-                rb.column(0).to_pylist()[0],
-                rb.column(1).to_pylist()[0],
-            )
-
-    return fn
-
-
-def blob_transform_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a batch→batch kernel pass (commit/render) into a blob→blob
-    ``mapPartitions`` function."""
-
-    def fn(blobs):
-        for rb in pass_fn(blob_iter(blobs)):
-            yield ipc_ser(rb)
-
-    return fn
-
-
-def merge_payload(a, b):
-    sums = np.frombuffer(a[0], dtype=np.float64) + np.frombuffer(
-        b[0], dtype=np.float64
-    )
-    mins = np.minimum(
-        np.frombuffer(a[1], dtype=np.float64),
-        np.frombuffer(b[1], dtype=np.float64),
-    )
-    return (sums.tobytes(), mins.tobytes())
-
-
-def reduce_blob_payload(pairs_rdd, big: bool) -> tuple[np.ndarray, np.ndarray]:
-    """Reduce a kernel pass's per-partition ``(sums, mins)`` payload
-    elements — the RDD counterpart of :func:`collect_payload`, same
-    ``big`` gate: large payloads (dense K² Gram) merge executor-side via
-    ``treeReduce`` so the driver receives O(tree-fanout) blobs."""
-    if big:
-        sums_b, mins_b = pairs_rdd.treeReduce(merge_payload)
-        return (
-            np.frombuffer(sums_b, dtype=np.float64).copy(),
-            np.frombuffer(mins_b, dtype=np.float64).copy(),
-        )
-    rows = pairs_rdd.collect()
-    sums = np.sum([np.frombuffer(s, dtype=np.float64) for s, _ in rows], axis=0)
-    mins = np.min([np.frombuffer(m, dtype=np.float64) for _, m in rows], axis=0)
-    return sums, mins
-
-
-def _payload_unpack(batches: Iterator[pa.RecordBatch]):
-    for rb in batches:
-        for blob in rb.column(0).to_pylist():
-            yield ipc_deser(blob)
-
-
-def blobs_to_weights_df(spark, blob_rdd, render_fn) -> DataFrame:
-    """(row_id, new_weight) DataFrame from a blob RDD — Arrow end to end:
-    ``render_fn`` maps each packed batch to a (row_id, new_weight) batch;
-    the per-batch IPC payloads cross the RDD→DataFrame seam as single
-    binary rows, then ``mapInArrow`` explodes them JVM-side."""
-
-    def to_payload(blobs):
-        for rb in render_fn(blob_iter(blobs)):
-            yield (ipc_ser(rb),)
-
-    payload = blob_rdd.mapPartitions(to_payload, preservesPartitioning=True)
-    return spark.createDataFrame(payload, "payload binary").mapInArrow(
-        _payload_unpack, "row_id bigint, new_weight double"
-    )
-
-
-# -- split-state zip helpers (stateful kernels: elastic, penalty) ----------
-def zip_combined_iter(pair_iter) -> Iterator[pa.RecordBatch]:
-    """(base_blob, state_blob) zip pairs → one combined RecordBatch,
-    zero-copy (same buffers); column names come from the blob schemas."""
-    for bb, sb in pair_iter:
-        b = ipc_deser(bytes(bb))
-        s = ipc_deser(bytes(sb))
-        fields = [
-            *(b.schema.field(i) for i in range(b.num_columns)),
-            *(s.schema.field(i) for i in range(s.num_columns)),
-        ]
-        # base metadata must survive: it carries the dense-idx elision
-        # stamp _flatten_rb needs to resynthesize the idx column
-        yield pa.RecordBatch.from_arrays(
-            list(b.columns) + list(s.columns),
-            schema=pa.schema(fields, metadata=b.schema.metadata),
-        )
-
-
-def zip_payload_adapter(pass_fn: Callable) -> Callable:
-    """Wrap a combined-batch kernel pass into a zip-pair ``mapPartitions``
-    function yielding one ``(sums_bytes, mins_bytes)`` pair per partition."""
-
-    def fn(pair_iter):
-        for rb in pass_fn(zip_combined_iter(pair_iter)):
-            yield (
-                rb.column(0).to_pylist()[0],
-                rb.column(1).to_pylist()[0],
-            )
-
-    return fn
-
-
-def zip_state_commit_adapter(pass_fn: Callable, state_names) -> Callable:
-    """Run a batch→batch commit pass on zipped pairs and serialize ONLY the
-    mutable state columns of its output — the immutable base columns are
-    never rewritten."""
-    names = list(state_names)
-
-    def fn(pair_iter):
-        for rb in pass_fn(zip_combined_iter(pair_iter)):
-            yield ipc_ser(
-                pa.RecordBatch.from_arrays(
-                    [rb.column(rb.schema.get_field_index(c)) for c in names],
-                    names,
-                )
-            )
-
-    return fn
-
-
-def zip_weights_df(spark, base_rdd, state_rdd, render_fn) -> DataFrame:
-    """(row_id, new_weight) DataFrame from a split-state zip — the pair
-    counterpart of :func:`blobs_to_weights_df`."""
-
-    def to_payload(pair_iter):
-        for rb in render_fn(zip_combined_iter(pair_iter)):
-            yield (ipc_ser(rb),)
-
-    payload = base_rdd.zip(state_rdd).mapPartitions(
-        to_payload, preservesPartitioning=True
-    )
-    return spark.createDataFrame(payload, "payload binary").mapInArrow(
-        _payload_unpack, "row_id bigint, new_weight double"
-    )
-
-
-def _flatten(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-batch CSR pieces: flat indices, flat values, row lengths."""
-    idx_list = pdf["idx"].to_list()
-    lens = np.fromiter((len(a) for a in idx_list), dtype=np.int64, count=len(idx_list))
-    if lens.sum() == 0:
-        return np.empty(0, np.int64), np.empty(0, np.float64), lens
-    flat_idx = np.concatenate(idx_list).astype(np.int64, copy=False)
-    flat_val = np.concatenate(pdf["val"].to_list()).astype(np.float64, copy=False)
-    return flat_idx, flat_val, lens
+from entropy_balance_weighting_spark.kernels.blob_plane import (
+    BASE_NAMES,
+    DENSE_IDX_META,
+    pack_payload,
+)
 
 
 def _flatten_rb(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -479,65 +212,17 @@ def gram_bytes(k: int, block_structure) -> int:
     return k * k * 8
 
 
-def reduce_big(
-    k: int, block_structure, n_parts: int, *, gram_nbytes: int | None = None
-) -> bool:
-    """Whether a kernel reduce must merge executor-side (treeReduce):
-    either one payload is large, or n_partitions × payload would overrun
-    the driver's collect budget.  Payload bound: a handful of scalars +
-    up to 8 K-vectors + the gram buffer (generous for every pass shape
-    across the three kernels).  ``gram_nbytes`` overrides the gram term
-    (0 for a gram-skipped stats scan — see the elastic kernel's lagged-
-    Jacobian path)."""
-    if gram_nbytes is None:
-        gram_nbytes = gram_bytes(k, block_structure)
-    per_part = (32 + 8 * k) * 8 + gram_nbytes
+def reduce_big(k: int, block_structure, n_parts: int) -> bool:
+    """Whether a kernel reduce must merge executor-side (treeReduce,
+    ``blob_plane.reduce_payload``): either one payload is large, or
+    n_partitions × payload would overrun the driver's collect budget.
+    Payload bound: a handful of scalars + up to 8 K-vectors + the gram
+    buffer (generous for every pass shape across the three kernels)."""
+    per_part = (32 + 8 * k) * 8 + gram_bytes(k, block_structure)
     return (
         per_part > _TREE_REDUCE_BYTES
         or per_part * max(n_parts, 1) > _COLLECT_BUDGET_BYTES
     )
-
-
-def collect_payload(out: DataFrame, big: bool) -> tuple[np.ndarray, np.ndarray]:
-    """Reduce a kernel pass's per-partition ``(sums, mins)`` payload rows.
-
-    Small payloads (step passes, modest K): plain ``collect`` — one job,
-    no extra stage, driver sums ~#partitions tiny blobs.  Large payloads
-    (the dense K² Gram at K ≳ 1000): the driver would receive
-    ``#partitions × payload`` bytes — 50 partitions × 32 MB at K=2000
-    already exceeds ``spark.driver.maxResultSize``, and 1000 executors
-    would ship 32 GB — so the merge happens executor-side with
-    ``treeReduce`` and the driver receives O(tree-fanout) blobs.  This
-    wall was FOUND, not hypothesized: reproducing the reference's largest
-    in-repo workload (dense N=100k × K=2000 collinear,
-    examples/simple_examples.py:13-31) killed the plain collect.
-
-    The tree path costs one extra shuffle level per reduce, so it is
-    gated on payload size: exactly the regime where each pass already
-    costs seconds and the extra stage is noise.
-    """
-    if not big:
-        rows = out.collect()
-        sums = np.sum(
-            [np.frombuffer(r.sums, dtype=np.float64) for r in rows], axis=0
-        )
-        mins = np.min(
-            [np.frombuffer(r.mins, dtype=np.float64) for r in rows], axis=0
-        )
-        return sums, mins
-
-    def dec(r):
-        return (
-            np.frombuffer(r.sums, dtype=np.float64),
-            np.frombuffer(r.mins, dtype=np.float64),
-        )
-
-    def merge(a, b):
-        return a[0] + b[0], np.minimum(a[1], b[1])
-
-    depth = 2 if out.rdd.getNumPartitions() <= 64 else 3
-    sums, mins = out.rdd.map(dec).treeReduce(merge, depth)
-    return sums, mins
 
 
 def gram_from_sums(flat: np.ndarray, k: int, block_structure):
@@ -637,26 +322,6 @@ def pack_rows(
     return df, sum_w0, n
 
 
-def _pack(sums: list[float | np.ndarray], mins: list[float]) -> pd.DataFrame:
-    sbuf = np.concatenate([np.atleast_1d(np.asarray(x, dtype=np.float64)).ravel() for x in sums])
-    mbuf = np.asarray(mins, dtype=np.float64)
-    return pd.DataFrame({"sums": [sbuf.tobytes()], "mins": [mbuf.tobytes()]})
-
-
-def _pack_rb(sums: list[float | np.ndarray], mins: list[float]) -> pa.RecordBatch:
-    sbuf = np.concatenate(
-        [np.atleast_1d(np.asarray(x, dtype=np.float64)).ravel() for x in sums]
-    )
-    mbuf = np.asarray(mins, dtype=np.float64)
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([sbuf.tobytes()], type=pa.binary()),
-            pa.array([mbuf.tobytes()], type=pa.binary()),
-        ],
-        ["sums", "mins"],
-    )
-
-
 def _w_state(rb, q, flat_idx, flat_val, lens, wprog):
     """Current weight-state vector for a batch.
 
@@ -687,8 +352,8 @@ def count_bad_entries(
     """V1 validation counts for one packed batch: rows with any
     non-finite X value, and weights that are non-finite or ≤ 0 (nulls
     arrive as NaN through the Arrow conversion, so one finiteness check
-    covers null/NaN/±Inf — the same predicate set as the eager
-    DataFrame validation in solvers/api.py)."""
+    covers null/NaN/±Inf — the reference's V1 predicate set, ref:
+    shared.py:105-133)."""
     bad_x = 0.0
     if flat_val.size:
         bad_x = float(
@@ -702,7 +367,7 @@ def count_bad_entries(
 
 
 def raise_if_bad(bad_x: float, bad_w: float) -> None:
-    """Same error contract as the eager V1 aggregate (solvers/api.py)."""
+    """The V1 error every distributed kernel's first pass raises."""
     if bad_x or bad_w:
         raise ValueError(
             f"Inputs include invalid values ({int(bad_x)} bad X "
@@ -725,7 +390,7 @@ def _stats_pass(
     deferred-validation pass that rides the cache-materializing first
     stats scan instead of running its own aggregate (r13 optimization)."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         f_val = 0.0
         cd_sq = 0.0
         nan_ct = 0.0
@@ -762,7 +427,7 @@ def _stats_pass(
         sums = [f_val, cd_sq, nan_ct, xt_w, xt_wcd, gram]
         if validate:
             sums += [bad_x, bad_w]
-        yield _pack_rb(sums, [min_w])
+        yield pack_payload(sums, [min_w])
 
     return fn
 
@@ -792,7 +457,7 @@ def _step_pass(
     bits the real pass would — iteration counts and weights cannot drift.
     """
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         dw_sq = 0.0
         nan_ct = 0.0
         xt_dw = np.zeros(k)
@@ -855,7 +520,7 @@ def _step_pass(
         if spec:
             sums += [s_f_val, s_cd_sq, s_nan_ct, s_xt_w, s_xt_wcd, s_gram]
             mins += [s_min_w]
-        yield _pack_rb(sums, mins)
+        yield pack_payload(sums, mins)
 
     return fn
 
@@ -922,8 +587,6 @@ class SparkKernel:
     truncated with an RDD ``localCheckpoint`` every few commits so a cache
     eviction can never cascade a long recompute chain."""
 
-    _CKPT_EVERY = 8  # commits between lineage truncations
-
     def __init__(
         self, rdd, spark, k: int, sum_w0: float, n: int, block_structure=None
     ) -> None:
@@ -985,7 +648,7 @@ class SparkKernel:
         r8 pack-cost work (PLANS.md §13): the blob carries only
         ``(row_id, w0, idx?, val)`` — q and the analytic start wstar are
         recomputed per pass (one divide), a dense ``[0..k)`` idx pattern
-        is elided per batch (:func:`maybe_elide_idx`), and the persist is
+        is elided per batch (``blob_plane.maybe_elide_idx``), and the persist is
         LAZY: the first stats reduce materializes encode+cache+reductions
         in one job instead of a separate pack scan."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
@@ -995,44 +658,20 @@ class SparkKernel:
                 ratio_guess.select("row_id", "ratio"), "row_id", "left"
             ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
 
-        def to_blob(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                if not rb.num_rows:
-                    continue
-                arrays = [
-                    rb.column(rb.schema.get_field_index(c))
-                    for c in ("row_id", "w0", "idx", "val")
-                ]
-                names = list(PACKED_NAMES)
-                if has_guess:
-                    q = _rb_col(rb, "w0") / sum_w0
-                    arrays.append(
-                        pa.array(
-                            np.ascontiguousarray(q * _rb_col(rb, "ratio")),
-                            type=pa.float64(),
-                        )
-                    )
-                    names.append("wstar")
-                out = maybe_elide_idx(
-                    pa.RecordBatch.from_arrays(arrays, names), k
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([ipc_ser(out)], type=pa.binary())], ["payload"]
-                )
+        def with_wstar(rb: pa.RecordBatch) -> pa.RecordBatch:
+            # warm start: the blob carries the materialized start wstar
+            q = _rb_col(rb, "w0") / sum_w0
+            wstar = np.ascontiguousarray(q * _rb_col(rb, "ratio"))
+            return pa.RecordBatch.from_arrays(
+                [rb.column(rb.schema.get_field_index(c)) for c in BASE_NAMES]
+                + [pa.array(wstar, type=pa.float64())],
+                [*BASE_NAMES, "wstar"],
+            )
 
-        cols = ["row_id", "w0", "idx", "val", *(["ratio"] if has_guess else [])]
-        rdd = (
-            df.select(*cols)
-            .mapInArrow(to_blob, "payload binary")
-            .rdd.map(lambda r: bytes(r[0]))
+        cols = [*BASE_NAMES, *(["ratio"] if has_guess else [])]
+        rdd = blob_plane.encode(
+            df.select(*cols), k, n, with_wstar if has_guess else None
         )
-        p = adaptive_blob_partitions(df.sparkSession, n, rdd.getNumPartitions())
-        if p is not None:
-            # small problem: encode at full parallelism, then move the
-            # finished blobs once so every iteration pass runs p tasks
-            # instead of one per input split (see adaptive_blob_partitions)
-            rdd = rdd.coalesce(p, shuffle=True)
-        rdd = rdd._reserialize(BLOB_SER).persist(StorageLevel.MEMORY_AND_DISK)
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
         bs = (
@@ -1059,10 +698,7 @@ class SparkKernel:
 
     # -- passes ------------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        pairs = self._rdd.mapPartitions(
-            blob_payload_adapter(fn), preservesPartitioning=True
-        )
-        return reduce_blob_payload(pairs, big)
+        return blob_plane.reduce_payload(blob_plane.payloads(self._rdd, fn), big)
 
     @property
     def _gram_big(self) -> bool:
@@ -1110,7 +746,8 @@ class SparkKernel:
         # the reduce materialized any pending lazy commit into its cache —
         # the superseded state's CACHE can go; the RDD handle is kept so a
         # zero-weight guard can roll back via lineage recompute (bounded by
-        # _CKPT_EVERY passes since the last checkpoint, failure path only)
+        # blob_plane.CKPT_EVERY passes since the last checkpoint; failure
+        # path only)
         if self._prev is not None:
             self._prev.unpersist()
             self._rollback_src = self._prev
@@ -1251,22 +888,13 @@ class SparkKernel:
         # penalty (the prediction itself was not wrong)
         self._spec = None
         self._last_commit = "materialized"
-        new_rdd = (
-            self._rdd.mapPartitions(
-                blob_transform_adapter(
-                    _commit_pass(
-                        choice, lam, dlam, alpha, self._wprog, self.sum_w0
-                    )
-                ),
-                preservesPartitioning=True,
-            )
-            ._reserialize(BLOB_SER)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        new_rdd, self._commits_since_ckpt = blob_plane.commit(
+            blob_plane.transform(
+                self._rdd,
+                _commit_pass(choice, lam, dlam, alpha, self._wprog, self.sum_w0),
+            ),
+            self._commits_since_ckpt,
         )
-        self._commits_since_ckpt += 1
-        if self._commits_since_ckpt >= self._CKPT_EVERY:
-            new_rdd.localCheckpoint()
-            self._commits_since_ckpt = 0
         self._prev = self._rdd
         self._rdd = new_rdd
         self._wprog = None
@@ -1289,7 +917,7 @@ class SparkKernel:
         if src is None:
             raise RuntimeError("no committed step to roll back")
         self._rdd.unpersist()
-        self._rdd = src.persist(StorageLevel.MEMORY_AND_DISK)
+        self._rdd = blob_plane.persist(src)
         self._prev = None
         self._rollback_src = None
         self._wprog = self._prev_wprog
@@ -1300,24 +928,13 @@ class SparkKernel:
         sum_w0 = self.sum_w0
         wprog = self._wprog
 
-        def render(batches: Iterator[pa.RecordBatch]):
-            for rb in batches:
-                flat_idx, flat_val, lens = _flatten_rb(rb)
-                q = _rb_q(rb, sum_w0)
-                w = _w_state(rb, q, flat_idx, flat_val, lens, wprog)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(rb.schema.get_field_index("row_id")),
-                        pa.array(w * sum_w0, type=pa.float64()),
-                    ],
-                    ["row_id", "new_weight"],
-                )
+        def weight_of(rb: pa.RecordBatch) -> np.ndarray:
+            flat_idx, flat_val, lens = _flatten_rb(rb)
+            q = _rb_q(rb, sum_w0)
+            return _w_state(rb, q, flat_idx, flat_val, lens, wprog) * sum_w0
 
-        return blobs_to_weights_df(self._spark, self._rdd, render)
+        return blob_plane.weights_df(self._spark, self._rdd, weight_of)
 
     def cleanup(self) -> None:
-        self._rdd.unpersist(blocking=True)
-        if self._prev is not None:
-            self._prev.unpersist(blocking=True)
-            self._prev = None
-        _post_cleanup_gc(self._spark.sparkContext)
+        blob_plane.release(self._spark.sparkContext, self._rdd, self._prev)
+        self._prev = None

@@ -48,25 +48,10 @@ from typing import Any
 
 import numpy as np
 
+from entropy_balance_weighting_spark.kernels.base import ftb_batch
 from entropy_balance_weighting_spark.results import EntropyBalanceResults
 
 logger = logging.getLogger("entropy_balance_weighting_spark")
-
-TAU = 0.995
-
-# gram-reuse auto-gate: freeze/skip only pays when the gram accumulate +
-# payload is a real per-iteration cost.  1 MiB of gram payload ≈ K=128k
-# flat doubles — the grouped huge-K regime (K=100k at k_b=2 is 1.6 MiB);
-# the sf0.1 bench entries (K≈2000 grouped → 32 KiB) stay below it.
-_GRAM_REUSE_MIN_BYTES = 1 << 20
-
-
-def _ftb_k(point: np.ndarray, step: np.ndarray) -> float:
-    """Fraction-to-boundary for a driver-side K block (ref: shared.py:76-91)."""
-    blocked = step < 0
-    if not blocked.any():
-        return 1.0
-    return min(1.0, float(np.min(-TAU * point[blocked] / step[blocked])))
 
 
 def _mu_update(products: np.ndarray) -> float:
@@ -109,50 +94,6 @@ def solve_elastic(
     max_steps = int(opts.get("max_steps", 100))
     opt_tol = float(opts.get("optimality_violation", 1e-5))
     step_tol = float(opts.get("step_tol", 1e-8))
-    # Opt-in mixed-precision payload wire (see the in-loop toggle and
-    # kernels/elastic_spark.py set_wire_full for the measured trade).
-    wire32_opt = bool(opts.get("payload_wire32", False))
-
-    # Gram reuse across IP iterations (lagged Jacobian / quasi-Newton IP
-    # steps): on frozen iterations the stats scan SKIPS the gram
-    # accumulate — no Σk_b² bincount CPU, no gram payload bytes — and
-    # the Schur system is assembled from the last fresh gram.  Residuals
-    # are exact every scan regardless (the gram only shapes the step),
-    # so the convergence test never sees a stale quantity.  OPT-IN
-    # (default False): measured at 20M×100k grouped, skipping cuts
-    # ~24% off a frozen iteration's wall but the lagged trajectory costs
-    # +2–3 IP iterations (5 → 7/8) — a NET LOSS for the short
-    # superlinear solves this engine runs (PLANS §18, the wire32 lesson
-    # again: the IP path is where the iterations are).  r12 TESTED the
-    # "wider blocks flip the trade" hypothesis at 20M×100k with k_b=8
-    # and k_b=16 (bench_gram_reuse_ab_r12.json): REFUTED — the frozen-
-    # scan saving grows with k_b (−28%/iter at 8, −32% at 16) but the
-    # lagged-Hessian iteration penalty grows with it (+3 → +4 iters),
-    # so k_b=8 is a wash and k_b=16 a 6% net loss.  The remaining
-    # opt-in regime is LONG solves (20+ iterations), where per-iter
-    # savings amortize a bounded trajectory cost.  "auto" applies the
-    # block-structured ≥ _GRAM_REUSE_MIN_BYTES heuristic.
-    gram_reuse_opt = opts.get("gram_reuse", False)
-    gram_refresh_every = int(opts.get("gram_refresh_every", 3))
-    # refresh when a frozen-gram iteration fails to cut the violation to
-    # ≤ this fraction of the previous one (stalled contraction)
-    gram_stall_ratio = float(opts.get("gram_stall_ratio", 0.5))
-    # freeze only while the violation is ≥ this many decades above
-    # tolerance: the endgame's superlinear contraction needs the true
-    # Jacobian (a lagged one measurably costs iterations exactly there —
-    # the same lesson as the wire32 f64 endgame, PLANS §16)
-    gram_endgame_factor = float(opts.get("gram_endgame_factor", 1e4))
-    if gram_reuse_opt == "auto":
-        gram_reuse = (
-            getattr(kernel, "supports_gram_skip", False)
-            and getattr(kernel, "block_structure", None) is not None
-            and getattr(kernel, "gram_payload_bytes", 0)
-            >= _GRAM_REUSE_MIN_BYTES
-        )
-    else:
-        gram_reuse = bool(gram_reuse_opt) and getattr(
-            kernel, "supports_gram_skip", False
-        )
 
     k = kernel.k
     sum_w0 = kernel.sum_w0
@@ -176,37 +117,12 @@ def solve_elastic(
     commit_pending = False
     history: list[dict] = []  # per-iteration trace (reference logging parity)
 
-    # gram-reuse state: the last fresh gram, its age in iterations, and
-    # the refresh triggers (age cap / stalled contraction / η growth)
-    frozen_gram = None
-    iters_since_fresh = 0
-    force_refresh = False
-    last_viol: float | None = None
-
     while True:
         # ONE scan per iteration start: materializes any pending lazy commit
         # AND returns the post-commit slack/multiplier aggregates plus the
         # μ_s-decomposition legs (EStats), so the barrier update needs no
         # separate pass.
-        if gram_reuse:
-            need_gram = (
-                frozen_gram is None
-                or force_refresh
-                or iters_since_fresh >= gram_refresh_every
-                or (
-                    last_viol is not None
-                    and last_viol < gram_endgame_factor * opt_tol
-                )
-            )
-            st = kernel.elastic_stats(lam, eta, mu_s, need_gram=need_gram)
-        else:
-            st = kernel.elastic_stats(lam, eta, mu_s)
-        if st.gram is not None:
-            frozen_gram = st.gram
-            iters_since_fresh = 0
-            force_refresh = False
-        else:
-            iters_since_fresh += 1
+        st = kernel.elastic_stats(lam, eta, mu_s)
         rhs_leg = st.rhs_leg
         cs_sq = st.cs_sq
         if commit_pending:
@@ -239,11 +155,6 @@ def solve_elastic(
                 # by the same scan — uses the pre-growth η consistently);
                 # the reference applies it one pass earlier.
                 eta_next = 2.0 * max_lm
-                # η rescales the (1/η)·w0/r leg of h̃, i.e. the gram's
-                # diagonal weights — a frozen gram computed under the old
-                # η is materially stale: refresh at the next scan (the
-                # first one that runs at the grown η).
-                force_refresh = True
             else:
                 eta_next = eta
         else:
@@ -263,15 +174,6 @@ def solve_elastic(
         )
         opt_viol = math.sqrt(st.cd_sq + st.ci_sq + cs_sq + k_sq)
         alt_viol = math.sqrt(st.alt_sq + st.ci_sq + cs_sq + k_sq)
-        # stalled contraction under a frozen gram → refresh next scan
-        cur_viol = min(opt_viol, alt_viol)
-        if (
-            st.gram is None
-            and last_viol is not None
-            and cur_viol > gram_stall_ratio * last_viol
-        ):
-            force_refresh = True
-        last_viol = cur_viol
         logger.info(
             "elastic iter=%d f=%.6e |Ce|=%.3e viol=%.3e alt=%.3e eta=%.3e",
             n_steps,
@@ -290,24 +192,11 @@ def solve_elastic(
                 "alt_violation": alt_viol,
                 "eta": eta,
                 "mu_s": mu_s,
-                "gram_fresh": st.gram is not None,
             }
         )
         if st.has_nan or not math.isfinite(opt_viol):
             error_message = "NaN in elastic optimality conditions"
             break
-        # Mixed-precision refinement (OPT-IN, options["payload_wire32"]):
-        # large-K kernels wire the payload tail as float32 while the
-        # residual is far from tolerance (the bandwidth phase) and
-        # switch to float64 for the endgame — a float32 step direction
-        # floors the achievable residual ~3-4 decades above f64
-        # (kernels/elastic_spark.py set_wire_full).  The 1e4× switch
-        # sits a full decade above the measured f32 floor; even so the
-        # f32 phase costs ~+1 IP iteration (PLANS §16), which is why
-        # the default stays f64 — the trade only pays when the wire is
-        # genuinely the bottleneck (many-executor network reduces).
-        if wire32_opt and hasattr(kernel, "set_wire_full"):
-            kernel.set_wire_full(min(opt_viol, alt_viol) < 1e4 * opt_tol)
         if eta_next <= eta and min(opt_viol, alt_viol) < opt_tol:
             # When η grew this iteration the residuals above were evaluated
             # at the pre-growth η, so declaring convergence here could stop
@@ -343,13 +232,12 @@ def solve_elastic(
             - (u / lu) * (cu + clu / u)
             - rhs_leg
         )
-        gram_cur = st.gram if st.gram is not None else frozen_gram
         try:
-            if isinstance(gram_cur, BlockGram):
-                lhs = gram_cur.with_added_diag(u / lu + v / lv)
+            if isinstance(st.gram, BlockGram):
+                lhs = st.gram.with_added_diag(u / lu + v / lv)
                 dlam = -solve_regularized(lhs, rhs, delta)
             else:
-                lhs = gram_cur + np.diag(u / lu + v / lv)
+                lhs = st.gram + np.diag(u / lu + v / lv)
                 eye = np.eye(k)
                 while True:
                     try:
@@ -375,10 +263,10 @@ def solve_elastic(
         lv_step = (1.0 / v) * (-clv - lv * v_step)
 
         alpha_p = min(
-            min(1.0, sp.ftb_slack), _ftb_k(u, u_step), _ftb_k(v, v_step)
+            1.0, sp.ftb_slack, ftb_batch(u, u_step), ftb_batch(v, v_step)
         )
         alpha_d = min(
-            min(1.0, sp.ftb_dual), _ftb_k(lu, lu_step), _ftb_k(lv, lv_step)
+            1.0, sp.ftb_dual, ftb_batch(lu, lu_step), ftb_batch(lv, lv_step)
         )
 
         kernel.elastic_commit(lam, dlam, eta, mu_s, alpha_p, alpha_d)

@@ -33,7 +33,7 @@ import math
 
 import numpy as np
 
-from entropy_balance_weighting_spark.kernels.base import Kernel
+from entropy_balance_weighting_spark.kernels.base import TAU, Kernel
 from entropy_balance_weighting_spark.results import EntropyBalanceResults
 from entropy_balance_weighting_spark.solvers.linalg import (
     solve_regularized,
@@ -41,8 +41,6 @@ from entropy_balance_weighting_spark.solvers.linalg import (
 )
 
 logger = logging.getLogger("entropy_balance_weighting_spark")
-
-TAU = 0.995  # fraction-to-boundary (ref: shared.py:76-91 call sites)
 
 
 def solve_unbounded(

@@ -1,4 +1,4 @@
-"""Dense-idx elision + narrow-blob contracts (kernels/spark.py, r8).
+"""Dense-idx elision + narrow-blob contracts (kernels/blob_plane.py, r8).
 
 Pure-pyarrow unit tests (no Spark session): the elision must be exactly
 invertible through _flatten_rb, must refuse non-dense patterns, and must
@@ -10,15 +10,17 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from entropy_balance_weighting_spark.kernels.spark import (
+from entropy_balance_weighting_spark.kernels.blob_plane import (
     DENSE_IDX_META,
-    _commit_pass,
-    _flatten_rb,
-    _rb_q,
+    batches,
     ipc_deser,
     ipc_ser,
     maybe_elide_idx,
-    zip_combined_iter,
+)
+from entropy_balance_weighting_spark.kernels.spark import (
+    _commit_pass,
+    _flatten_rb,
+    _rb_q,
 )
 
 
@@ -83,7 +85,7 @@ def test_zip_combined_preserves_elision_metadata():
         [pa.array(np.ones(n), type=pa.float64())], ["ratio"]
     )
     (combined,) = list(
-        zip_combined_iter([(ipc_ser(base), ipc_ser(state))])
+        batches([(ipc_ser(base), ipc_ser(state))])
     )
     assert combined.schema.metadata[DENSE_IDX_META] == str(k).encode()
     fi, fv, lens = _flatten_rb(combined)
@@ -126,7 +128,7 @@ def test_adaptive_blob_partitions(spark):
     """Scale-adaptive blob partitioning (r13): small problems coalesce to
     ceil(N / rows-per-partition) clamped to the core count; large problems
     (and a disabled knob) leave the encode partitioning alone."""
-    from entropy_balance_weighting_spark.kernels.spark import (
+    from entropy_balance_weighting_spark.kernels.blob_plane import (
         adaptive_blob_partitions,
     )
 

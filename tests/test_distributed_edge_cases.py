@@ -137,9 +137,19 @@ def test_distributed_validation_rejects_bad_inputs(spark):
 
 def test_deferred_validation_same_error_all_distributed_kernels(spark):
     """V1 validation is fused into the kernels' first pass (r13
-    optimization): the unbounded and elastic distributed kernels must
-    still raise the SAME bad-entry ValueError — with the counts — that
-    the eager aggregate produced, for bad X values and bad weights."""
+    optimization): the unbounded, elastic and penalty distributed kernels
+    must all raise the SAME bad-entry ValueError — with the counts — for
+    bad X values and bad weights.  The penalty kernel builds its blobs
+    through the same split-state path as the elastic one, so on the same
+    input both bases have the same partition count."""
+    from entropy_balance_weighting_spark import entropy_balance_penalty
+    from entropy_balance_weighting_spark.kernels.elastic_spark import (
+        ElasticSparkKernel,
+    )
+    from entropy_balance_weighting_spark.kernels.penalty_spark import (
+        PenaltySparkKernel,
+    )
+
     pdf = pd.DataFrame(
         {
             "rid": np.arange(12),
@@ -166,6 +176,27 @@ def test_deferred_validation_same_error_all_distributed_kernels(spark):
                 x_sample=pt,
                 options=opts,
             )
+    for opts in (
+        {"force_distributed": True},
+        {"force_distributed": True, "bounds": (0.2, 5.0)},
+    ):
+        with pytest.raises(
+            ValueError, match=r"1 bad X rows, 1 bad weights"
+        ):
+            entropy_balance_penalty(
+                np.array([0.5]), pt, penalty_parameter=10.0, options=opts
+            )
+
+    kernels = [
+        cls.from_problem(pt.x_long, pt.w0, pt.k, bounds=(0.2, 5.0))
+        for cls in (ElasticSparkKernel, PenaltySparkKernel)
+    ]
+    try:
+        parts = [kern._base.getNumPartitions() for kern in kernels]
+        assert parts[0] == parts[1], parts
+    finally:
+        for kern in kernels:
+            kern.cleanup()
 
 
 def test_estimator_raises_on_nonconvergence(spark):

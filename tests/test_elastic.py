@@ -367,111 +367,6 @@ def test_eta_growth_cannot_declare_convergence_below_max_multiplier():
     assert res.eta >= mult_max - 1e-9
 
 
-def test_wire32_payload_roundtrip_and_merge():
-    """The float32 payload wire (r10): head scalars stay exact float64,
-    the K-sized tail round-trips at float32 precision, and the mixed
-    merge matches the float64 merge to float32 tolerance."""
-    import numpy as np
-
-    from entropy_balance_weighting_spark.kernels import elastic_spark as es
-
-    rng = np.random.default_rng(11)
-    k = 37
-
-    def fake_acc():
-        acc = es._EStatsAcc(k, None)
-        acc.f_val = float(rng.normal()) * 1e6
-        acc.cd_sq, acc.ci_sq, acc.cs_sq = 1.25e-9, 3.5, 0.125
-        acc.alt_sq, acc.nan_ct = 7.0, 0.0
-        acc.sl_sum, acc.sl_sq, acc.sl_cnt = 12.5, 8.25, 250.0
-        acc.sl_min, acc.neg_lm_max = 1e-7, -4.5
-        acc.g1 = rng.normal(size=k) * 1e5
-        acc.rhs_leg = rng.normal(size=k)
-        acc.rhs_mu_leg = rng.normal(size=k) * 1e-3
-        acc.gram = rng.normal(size=k * k)
-        return acc
-
-    a, b = fake_acc(), fake_acc()
-
-    def pair(acc, wire32):
-        rb = acc.payload(wire32)
-        return (
-            rb.column(0).to_pylist()[0],
-            rb.column(1).to_pylist()[0],
-        )
-
-    s64, m64 = es._merge_payload(pair(a, False), pair(b, False))
-    s32, m32 = es._merge_payload_mixed(pair(a, True), pair(b, True))
-    full64 = np.frombuffer(s64, dtype=np.float64)
-    full32 = es._decode_sums(s32, True)
-    assert full32.dtype == np.float64 and len(full32) == len(full64)
-    # head: bit-exact (scalars never touch the float32 wire)
-    np.testing.assert_array_equal(full32[:9], full64[:9])
-    # tail: float32 error model — each addend rounds to f32 (½ulp of its
-    # own magnitude) plus the f32 add, so the bound is ABSOLUTE in the
-    # input magnitudes, not relative to the (possibly cancelled) sum
-    def tail(acc):
-        return np.concatenate(
-            [acc.g1, acc.rhs_leg, acc.rhs_mu_leg, np.asarray(acc.gram).ravel()]
-        )
-
-    bound = 5e-7 * (np.abs(tail(a)) + np.abs(tail(b))) + 1e-30
-    assert np.all(np.abs(full32[9:] - full64[9:]) <= bound)
-    assert m32 == m64
-
-
-def test_wire32_solve_matches_float64_wire(spark, monkeypatch):
-    """Force the float32 wire at tiny K (threshold → 0) and re-run the
-    distributed bounded solve: mixed-precision refinement (f32 early,
-    f64 endgame once the residual nears tolerance — see
-    solvers/elastic.py set_wire_full) must converge within one
-    iteration of the float64-wire solve with matching weights."""
-    import pandas as pd
-
-    from entropy_balance_weighting_spark.kernels import elastic_spark as es
-    from entropy_balance_weighting_spark.plans import (
-        MomentSpec,
-        build_problem_tables,
-    )
-
-    x, w0, m = _problem(n=250, seed=37)
-    pdf = pd.DataFrame(
-        {"rid": np.arange(250), "w": w0, "x0": x[:, 0], "x1": x[:, 1], "x2": x[:, 2]}
-    )
-    df = spark.createDataFrame(pdf)
-    spec = MomentSpec(weight_col="w", numeric=("x0", "x1", "x2"), row_key=("rid",))
-    opts = {
-        "bounds": (0.5, 1.8),
-        "force_distributed": True,
-        "payload_wire32": True,  # the opt-in (default wire is pure f64)
-    }
-
-    res64 = entropy_balance(
-        mean_population_moments=m,
-        x_sample=build_problem_tables(df, spec),
-        options=opts,
-    )
-    w64 = {r["row_id"]: r["new_weight"] for r in res64.new_weights.collect()}
-
-    # force BOTH the f32 wire and the fused commit+stats pass — the
-    # combination the 100M×100k grouped configuration actually runs
-    monkeypatch.setattr(es, "_WIRE32_MIN_TAIL_BYTES", 0)
-    monkeypatch.setattr(es, "_FUSED_MIN_ROWS", 0)
-    res32 = entropy_balance(
-        mean_population_moments=m,
-        x_sample=build_problem_tables(df, spec),
-        options=opts,
-    )
-    w32 = {r["row_id"]: r["new_weight"] for r in res32.new_weights.collect()}
-
-    assert res32.converged and res64.converged
-    # the f32 early trajectory may cost at most one extra iteration
-    assert abs(res32.n_iterations - res64.n_iterations) <= 1
-    a = np.array([w64[i] for i in sorted(w64)])
-    b = np.array([w32[i] for i in sorted(w64)])
-    np.testing.assert_allclose(b, a, rtol=5e-5)
-
-
 def test_fused_gate_small_n_takes_plain_path_same_answer(spark, monkeypatch):
     """The r10 fused-pass N gate: below _FUSED_MIN_ROWS the commit
     flushes as a chained lazy swap and stats runs the plain pass
@@ -530,139 +425,3 @@ def test_fused_gate_small_n_takes_plain_path_same_answer(spark, monkeypatch):
     a = np.array([w_plain[i] for i in sorted(w_plain)])
     b = np.array([w_fused[i] for i in sorted(w_plain)])
     np.testing.assert_allclose(b, a, rtol=1e-12, atol=1e-15)
-
-
-def test_gram_reuse_skips_gram_and_converges_to_same_solution(spark):
-    """Lagged-Jacobian gram reuse (r11): with gram_reuse forced on, some
-    stats scans skip the gram accumulate (history records gram_fresh=
-    False), the 2-jobs-per-iteration pin still holds, the solve still
-    converges under the UNCHANGED exact-residual test, and the weights
-    agree with the fresh-gram-every-iteration solve (unique optimum of
-    a strictly convex problem)."""
-    import pandas as pd
-
-    from entropy_balance_weighting_spark.kernels.elastic_spark import (
-        ElasticSparkKernel,
-    )
-    from entropy_balance_weighting_spark.plans import (
-        MomentSpec,
-        build_problem_tables,
-    )
-
-    x, w0, m = _problem(n=250, seed=37)
-    pdf = pd.DataFrame(
-        {"rid": np.arange(250), "w": w0, "x0": x[:, 0], "x1": x[:, 1], "x2": x[:, 2]}
-    )
-    df = spark.createDataFrame(pdf)
-    spec = MomentSpec(weight_col="w", numeric=("x0", "x1", "x2"), row_key=("rid",))
-
-    def solve(opts):
-        n_reduces = 0
-        orig_reduce = ElasticSparkKernel._reduce
-
-        def counting(self, fn, **kw):
-            nonlocal n_reduces
-            n_reduces += 1
-            return orig_reduce(self, fn, **kw)
-
-        ElasticSparkKernel._reduce = counting
-        try:
-            res = entropy_balance(
-                mean_population_moments=m,
-                x_sample=build_problem_tables(df, spec),
-                options={
-                    "bounds": (0.5, 1.8),
-                    "force_distributed": True,
-                    **opts,
-                },
-            )
-        finally:
-            ElasticSparkKernel._reduce = orig_reduce
-        assert res.converged
-        assert n_reduces == 2 * res.n_iterations + 2
-        w = {r["row_id"]: r["new_weight"] for r in res.new_weights.collect()}
-        return res, w
-
-    res_fresh, w_fresh = solve({"gram_reuse": False})
-    res_reuse, w_reuse = solve({"gram_reuse": True, "gram_refresh_every": 3})
-
-    hist = res_reuse.diagnostics["history"]
-    frozen_iters = [h for h in hist if not h["gram_fresh"]]
-    assert frozen_iters, "gram reuse never skipped a scan"
-    assert hist[0]["gram_fresh"]  # first scan always fresh
-    # lagged steps may cost a few extra iterations, never runaway
-    assert res_reuse.n_iterations <= res_fresh.n_iterations + 3
-    a = np.array([w_fresh[i] for i in sorted(w_fresh)])
-    b = np.array([w_reuse[i] for i in sorted(w_fresh)])
-    np.testing.assert_allclose(b, a, rtol=2e-3, atol=1e-8)
-    # both land inside the same moment-match tolerance
-    assert float(np.abs(res_reuse.constraint_violations).max()) < 1e-4
-
-
-def test_gram_reuse_grouped_block_path(spark):
-    """Gram reuse over the BLOCK-structured (grouped huge-K shape) path:
-    frozen BlockGram steps still converge and the per-group moments
-    match (the regime the r11 freeze actually targets, scaled down)."""
-    import pandas as pd
-
-    from entropy_balance_weighting_spark.plans import (
-        MomentSpec,
-        build_problem_tables,
-        targets_from_problem,
-    )
-
-    rng = np.random.default_rng(11)
-    n = 600
-    pdf = pd.DataFrame(
-        {
-            "rid": np.arange(n),
-            "w": rng.uniform(0.5, 2.0, size=n),
-            "g": rng.integers(0, 20, size=n),
-            "x0": rng.uniform(size=n),
-            "x1": rng.uniform(size=n),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    spec = MomentSpec(
-        weight_col="w", numeric=("x0", "x1"), group=("g",), row_key=("rid",)
-    )
-    pt = build_problem_tables(df, spec)
-    res = entropy_balance(
-        mean_population_moments=targets_from_problem(pt, perturb=0.01),
-        x_sample=pt,
-        options={
-            "bounds": (0.2, 5.0),
-            "force_distributed": True,
-            "gram_reuse": True,
-            "gram_refresh_every": 3,
-        },
-    )
-    assert res.converged
-    hist = res.diagnostics["history"]
-    assert any(not h["gram_fresh"] for h in hist)
-    assert float(np.abs(res.constraint_violations).max()) < 1e-4
-
-
-def test_gram_reuse_auto_off_at_small_k(spark):
-    """The auto gate: at small K (every bench/oracle config) gram_reuse
-    stays OFF — every scan is fresh, r10 behavior bit-for-bit."""
-    import pandas as pd
-
-    from entropy_balance_weighting_spark.plans import (
-        MomentSpec,
-        build_problem_tables,
-    )
-
-    x, w0, m = _problem(n=200, seed=5)
-    pdf = pd.DataFrame(
-        {"rid": np.arange(200), "w": w0, "x0": x[:, 0], "x1": x[:, 1], "x2": x[:, 2]}
-    )
-    df = spark.createDataFrame(pdf)
-    spec = MomentSpec(weight_col="w", numeric=("x0", "x1", "x2"), row_key=("rid",))
-    res = entropy_balance(
-        mean_population_moments=m,
-        x_sample=build_problem_tables(df, spec),
-        options={"bounds": (0.5, 1.8), "force_distributed": True},
-    )
-    assert res.converged
-    assert all(h["gram_fresh"] for h in res.diagnostics["history"])

@@ -140,19 +140,16 @@ def test_solver_iteration_pass_has_no_shuffle(spark):
         spark.createDataFrame(pdf),
         MomentSpec(weight_col="w", numeric=("x0",), row_key=("rid",)),
     )
-    from entropy_balance_weighting_spark.kernels.spark import (
-        blob_payload_adapter,
-    )
+    from entropy_balance_weighting_spark.kernels.blob_plane import payloads
 
     kern = SparkKernel.from_problem(pt.x_long, pt.w0, pt.k)
     # iteration passes are narrow mapPartitions over the cached blob RDD:
     # the lineage must contain no shuffle stage
-    pass_rdd = kern._rdd.mapPartitions(
-        blob_payload_adapter(
-            _stats_pass(
-                kern.k, np.zeros(kern.k), wprog=kern._wprog, sum_w0=kern.sum_w0
-            )
-        )
+    pass_rdd = payloads(
+        kern._rdd,
+        _stats_pass(
+            kern.k, np.zeros(kern.k), wprog=kern._wprog, sum_w0=kern.sum_w0
+        ),
     )
     assert "ShuffledRDD" not in pass_rdd.toDebugString().decode()
     # the collected payload must also be executable (schema/order contract)
