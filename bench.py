@@ -120,17 +120,14 @@ def main() -> None:
         for _rep in range(2):
             t0 = time.perf_counter()
             df = q.fn(spark, sf_dir)
-            if df.isStreaming:
-                pass  # streaming plans can be neither persisted nor collected
-            else:
-                # persist so the row-count guard and the collect share one
-                # execution of the plan instead of running it twice
-                df.persist()
-                try:
-                    n_rows = df.count()
-                    _ = df.collect() if n_rows < 1_000_000 else None
-                finally:
-                    df.unpersist()
+            # persist so the row-count guard and the collect share one
+            # execution of the plan instead of running it twice
+            df.persist()
+            try:
+                n_rows = df.count()
+                _ = df.collect() if n_rows < 1_000_000 else None
+            finally:
+                df.unpersist()
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
 

@@ -247,16 +247,16 @@ def _bench_dense_collinear(spark, timings, throughput) -> None:
 
 
 def _bench_pipeline(spark, n, n_parts, timings, throughput) -> None:
-    """Extension-surface throughput at N: synthetic documents/events are
-    generated inside Spark (hash-derived words/timestamps — no parquet,
-    no driver data), then each operator family is timed as rows/sec so
-    the 100×-scale claim for the pipeline surface is measured, not
-    asserted.  Timed scans end in a K-sized aggregate — the collect cost
-    is constant, the scan dominates."""
+    """Sampling throughput at N: synthetic documents are generated inside
+    Spark (hash-derived words — no parquet, no driver data), then the
+    fixed-k-per-stratum sampler is timed as rows/sec.  The timed scan ends
+    in a 1-row aggregate — the collect cost is constant, the scan
+    dominates."""
     from pyspark.sql import functions as F
 
-    from entropy_balance_weighting_spark.functions import dedup, packing, text
-    from entropy_balance_weighting_spark.functions.events import asof_join
+    from entropy_balance_weighting_spark.functions.sampling import (
+        sample_fixed_per_stratum,
+    )
 
     # documents-shaped: ~40 hash-derived words/doc from a 64-word vocab
     words = F.transform(
@@ -267,110 +267,7 @@ def _bench_pipeline(spark, n, n_parts, timings, throughput) -> None:
         F.col("id").alias("doc_id"), F.concat_ws(" ", words).alias("text")
     )
 
-    def t_quality():
-        text.annotate_token_stats(docs).agg(
-            F.sum("n_tok"), F.avg("q"), F.sum("is_en")
-        ).collect()
-
-    def t_pack():
-        packing.pack_sequences(docs, budget=512, n_shards=max(8, n_parts)).groupBy(
-            "shard"
-        ).agg(F.count(F.lit(1)), F.max("cum_tokens")).collect()
-
-    def t_minhash():
-        sh = dedup.shingle_table(docs, "doc_id", "text")
-        dedup.minhash_signatures(sh).agg(F.count(F.lit(1))).collect()
-
-    # events-shaped: n/64 users, hash-jittered timestamps over ~n seconds
-    ev = spark.range(0, n, 1, n_parts).select(
-        F.col("id").alias("event_id"),
-        F.pmod(F.hash("id"), F.lit(max(n // 64, 1))).alias("user_id"),
-        F.timestamp_seconds(
-            F.lit(1_700_000_000) + F.col("id") % n + F.pmod(F.hash("id", F.lit(7)), F.lit(60))
-        ).alias("ts"),
-        (F.pmod(F.hash("id", F.lit(3)), F.lit(1000)) / 10.0).alias("value"),
-    )
-
-    def t_asof():
-        left = ev.filter(F.col("event_id") % 2 == 0)
-        right = (
-            ev.filter(F.col("event_id") % 2 == 1)
-            .groupBy("user_id", "ts")
-            .agg(F.max("value").alias("value"))
-        )
-        asof_join(left, right).agg(
-            F.count(F.lit(1)), F.sum("asof_value")
-        ).collect()
-
-    def t_range():
-        # every 64th event opens a ~5-minute window; ~n/64 intervals over
-        # ~n seconds of points -> ~300 pair candidates per interval
-        from entropy_balance_weighting_spark.functions.events import range_join
-
-        iv = ev.filter(F.col("event_id") % 64 == 0).select(
-            F.col("event_id").alias("iid"),
-            F.col("ts").alias("s"),
-            (F.col("ts") + F.expr("INTERVAL 300 SECONDS")).alias("e"),
-        )
-        range_join(
-            ev.select("ts", "value"), iv, ts_col="ts", start_col="s",
-            end_col="e", bucket_seconds=300,
-        ).agg(F.count(F.lit(1)), F.sum("value")).collect()
-
-    def t_winnow():
-        text.winnow_fingerprints(F.col("text"))
-        docs.select(
-            F.size(text.winnow_fingerprints(F.col("text"))).alias("nf")
-        ).agg(F.sum("nf"), F.max("nf")).collect()
-
-    # sliding windows at a 30x overlap factor (width=30min, slide=1min):
-    # the native form shuffles events x overlap rows; the two-level form
-    # shuffles events once into minute panes + panes x overlap partials
-    def t_slide_native():
-        from entropy_balance_weighting_spark.functions.events import (
-            sliding_window_agg,
-        )
-
-        ev2 = ev.withColumn("event_type", F.pmod(F.hash("event_id"), F.lit(5)))
-        sliding_window_agg(ev2, width="30 minutes", slide="1 minute").agg(
-            F.count(F.lit(1)), F.sum("n_events")
-        ).collect()
-
-    def t_slide_two_level():
-        from entropy_balance_weighting_spark.functions.events import (
-            sliding_window_agg_two_level,
-        )
-
-        ev2 = ev.withColumn("event_type", F.pmod(F.hash("event_id"), F.lit(5)))
-        sliding_window_agg_two_level(
-            ev2, width="30 minutes", slide="1 minute"
-        ).agg(F.count(F.lit(1)), F.sum("n_events")).collect()
-
-    # incremental dedup: first half of the corpus is "existing", second
-    # half "arrives" with a 25% replay rate (text re-derived from an id in
-    # the corpus range) — the anti-join must reject exactly the replays
-    def t_incremental():
-        replayed = F.pmod(F.hash("doc_id", F.lit(13)), F.lit(4)) == 0
-        src_id = F.when(replayed, F.pmod(F.hash("doc_id"), F.lit(n // 2))).otherwise(
-            F.col("doc_id")
-        )
-        arr_words = F.transform(
-            F.sequence(F.lit(1), F.lit(40)),
-            lambda j: F.concat(F.lit("w"), F.pmod(F.hash(src_id, j), F.lit(64))),
-        )
-        arrivals = spark.range(n // 2, n, 1, n_parts).select(
-            F.col("id").alias("doc_id")
-        ).select("doc_id", F.concat_ws(" ", arr_words).alias("text"))
-        corpus = docs.filter(F.col("doc_id") < n // 2)
-        dedup.incremental_dedup(arrivals, corpus).agg(
-            F.count(F.lit(1))
-        ).collect()
-
     def t_fixed_k():
-        from entropy_balance_weighting_spark.functions.sampling import (
-            sample_fixed_per_stratum,
-        )
-
         strat = docs.withColumn(
             "src", F.pmod(F.hash("doc_id", F.lit(5)), F.lit(256))
         )
@@ -378,21 +275,9 @@ def _bench_pipeline(spark, n, n_parts, timings, throughput) -> None:
             F.count(F.lit(1))
         ).collect()
 
-    for name, fn in [
-        ("pipe_quality_scan", t_quality),
-        ("pipe_pack", t_pack),
-        ("pipe_minhash_sigs", t_minhash),
-        ("pipe_winnow", t_winnow),
-        ("pipe_asof_join", t_asof),
-        ("pipe_range_join", t_range),
-        ("pipe_slide_native_30x", t_slide_native),
-        ("pipe_slide_two_level_30x", t_slide_two_level),
-        ("pipe_incremental_dedup", t_incremental),
-        ("pipe_fixed_k_sample", t_fixed_k),
-    ]:
-        t = _min3(fn)
-        timings[name] = round(t, 4)
-        throughput[name.removeprefix("pipe_")] = round(n / t, 1)
+    t = _min3(t_fixed_k)
+    timings["pipe_fixed_k_sample"] = round(t, 4)
+    throughput["fixed_k_sample"] = round(n / t, 1)
 
 
 def _bench_newton(base, k, n, timings, throughput) -> None:

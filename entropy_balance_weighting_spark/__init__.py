@@ -1,12 +1,12 @@
 """entropy_balance_weighting_spark — a PySpark-native entropy-balance-weighting engine.
 
-A from-scratch, Spark-first implementation of the query and data-processing
-capabilities of ``uscensusbureau/entropy-balance-weighting`` (the reference;
-see docstring citations of the form ``ref: file:line``), plus large-scale
-training-data-pipeline operators (dedup, similarity search, text analysis,
-multimodal plumbing).
+A from-scratch, Spark-first implementation of
+``uscensusbureau/entropy-balance-weighting`` (the reference; see docstring
+citations of the form ``ref: file:line``): reweight a sample so that K
+weighted moments hit their targets with the smallest KL change from the
+initial weights.
 
-Architecture (three layers):
+Architecture:
 
 1. **data layer** (``plans/``, ``operators/``) — relational builders that turn
    any DataFrame plus a moment spec into the canonical long-format problem
@@ -16,8 +16,12 @@ Architecture (three layers):
    (unbounded Newton, elastic interior-point, quadratic penalty) as driver
    loops over Spark aggregates with driver-local K×K solves.  N-dimensional
    state lives in DataFrames; K-dimensional state lives on the driver.
-3. **extension layer** (``functions/``, ``streaming/``) — dedup, similarity
-   search, text analysis, multimodal column plumbing, streaming rollups.
+3. **around the pipeline** — ``ml.py`` (MLlib Estimator/Model wrapper),
+   ``sources/`` (problem bundles, storage layout), ``functions/sampling``
+   (deterministic hash sampling of the frame to reweight) and ``queries/``
+   (the oracle-checked registry: solver proofs, survey-prep scans,
+   data-quality audits).  The remaining ``functions/`` modules (media
+   codecs, dedup, CDC compaction) are unregistered library code.
 
 Public API mirrors the reference's surface (ref: ebw_routines.py:18-24,
 ebw_penalty.py:17-23, shared.py:15-38):

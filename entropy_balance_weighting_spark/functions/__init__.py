@@ -1,83 +1,17 @@
-"""Large-scale training-data-pipeline operators (extension layer, SURVEY
-§7.5 — NOT reference parity; these are the operations a 100 TB LLM-data
-pipeline needs, built Spark-first as first-class engine components):
+"""Column-level operators that feed a reweighting.
 
-- :mod:`functions.text` — tokenization, shingling, engine-portable hashing,
-  quality scoring, language-ID heuristics (incl. a multilingual
-  function-word router, ``langid_best``), fingerprinting.
-- :mod:`functions.dedup` — exact dedup, MinHash+LSH banded near-dup
-  detection (never all-pairs), SimHash clustering, n-gram Jaccard verify,
-  connected-components dup clustering (iterative min-label propagation),
-  and cross-table fuzzy joins for record linkage (token-blocked exact
-  Jaccard with a document-frequency skew cap).
-- :mod:`functions.sampling` — deterministic hash-based Bernoulli and
-  stratified sampling (reproducible at 100 TB; zero-shuffle map-side
-  filters; disjoint salts → independent train/val/test splits).
-- :mod:`functions.similarity` — brute-force cosine top-k baseline and the
-  LSH-bucketed approximate variant (the scale path).
-- :mod:`functions.events` — event-time tumbling windows, gap-based
-  sessionization, JSON property extraction, and CDC changelog →
-  snapshot compaction (latest-per-key MERGE semantics as a map-side-
-  partial ``max_by`` aggregate; streaming sibling in
-  :mod:`streaming.stateful`).
-- :mod:`functions.multimodal` — opaque-binary column plumbing (schema,
-  batching, Arrow UDF signatures) with REAL pure-numpy/stdlib codecs for
-  uncompressed BMP, PNG (all 5 filters, palette, Adam7 interlace, 16-bit), PCM +
-  G.711 WAV audio, FLAC (fixed predictors + Rice,
-  :mod:`functions.flac_codec`), baseline AND progressive JPEG
-  (:mod:`functions.jpeg_codec`), GIF87a/89a incl. animation with full
-  variable-width LZW (:mod:`functions.gif_codec`), strip AND tiled TIFF
-  (TIFF-LZW, Adobe Deflate, PackBits, horizontal predictor, II/MM,
-  :mod:`functions.tiff_codec`), uncompressed-DIB + Motion-JPEG AVI demux
-  (:mod:`functions.avi_codec`), and EXIF metadata extract/GPS-scrub
-  (:mod:`functions.exif_codec`); only formats that genuinely need a
-  media library (H.264/H.265 video, MP3/AAC/Vorbis audio entropy
-  decode) remain stubbed — though container-level metadata works without
-  decoding them: ID3v2 + MP4-atom extract/strip, MPEG frame-header
-  probing (duration/bitrate/VBR), Ogg-page Vorbis-comment and Opus
-  (RFC 7845 OpusHead/OpusTags) extract/scrub, ADTS/Matroska probes,
-  and bit-reader stream-parameter
-  probes for the three dominant video codecs — H.264 SPS (Annex-B +
-  avcC), HEVC SPS (hvcC), AV1 sequence header (av1C) — giving
-  profile/level/true-dimensions/fps triage with zero frame decode
-  (:mod:`functions.container_meta`).
-- :mod:`functions.bpe` — a REAL byte-pair-encoding tokenizer in both
-  alphabets (Sennrich word-level with ``</w>``; GPT-2 byte-level with
-  the published byte↔unicode table, closed vocab, expression-level
-  exact detokenize): the word-frequency table is built distributed and
-  capped, the inherently-sequential merge loop runs driver-side on
-  that model-sized table (incremental pair-count index), and encoding
-  is one Arrow map stage with per-batch word memoization.
-- :mod:`functions.unigram` — the OTHER tokenizer family (Kudo 2018 /
-  SentencePiece): hard-EM unigram-LM fit over the same capped
-  distributed frequency table, Viterbi segmentation as a memoized
-  Arrow stage, ``▁`` word-boundary convention so detokenize stays a
-  JVM expression.
-- :mod:`functions.langid_nb` — FITTED language ID: multinomial Naive
-  Bayes over char n-grams (Cavnar-Trenkle features, McCallum-Nigam
-  model) with quantized integer log-probs (``round(ln p·10⁶)``) so
-  scoring is exact integer arithmetic — engine-replayable, order-
-  independent argmax; capped distributed fit → JSON-persistable driver
-  model → broadcast-join relational apply (or a pure-expression map-
-  literal apply for map-only pipelines).
-- :mod:`functions.markdown` — Markdown → text extraction as the same
-  RE2-safe JVM regexp-chain discipline as the HTML path (code fences,
-  links/images, emphasis, lists, tables), with an SQL renderer of the
-  identical chain for the oracle; license detection
-  (``text.detect_license``: SPDX tag first, then canonical header
-  phrases) gates corpus compliance.
-- :mod:`functions.pdf_codec` — PDF text extraction (pure stdlib):
-  tolerant object walk, FlateDecode content streams, the full
-  literal/hex string escape set, show/positioning operators, Info
-  metadata; CID/Type0 (multi-byte) fonts are flagged, not garbled.
-- :mod:`functions.web` — crawl-corpus HTML → text extraction as pure
-  JVM regexp chains (no UDF): strip/entity-decode, title/link
-  recovery, link-density and text-ratio boilerplate signals.
-- :mod:`functions.subtitles` — SRT/WebVTT caption parsing as JVM
-  array expressions (cue recovery, transcript text, on-screen span):
-  the text-bearing sidecar of a video corpus, extracted with zero
-  frame decode.
+- :mod:`functions.sampling` — deterministic hash-based Bernoulli,
+  stratified, fixed-k-per-stratum, score-weighted and mix-matching
+  samples of the frame to be reweighted.  Membership is a pure function
+  of (key, salt) through the engine-portable md5-prefix hash
+  (:func:`functions.sampling.portable_hash32`), so it is reproducible
+  under repartitioning and replayable bit-for-bit in DuckDB; every
+  filter is a zero-shuffle map-side projection.
 
-Everything is DataFrame/Column-expression first; Python reaches the hot
-path only through Arrow-batched ``mapInPandas`` where semantics require it.
+The other modules here are library code that no registered query uses:
+the media codecs and probes (:mod:`functions.multimodal`,
+:mod:`functions.container_meta` and the ``*_codec`` modules), dedup
+building blocks (:mod:`functions.dedup`, :mod:`functions.similarity`) and
+CDC compaction (:mod:`functions.events`).  Their own tests pin them; they
+stay until later changes retire them a few tests at a time.
 """

@@ -1,366 +1,20 @@
-"""Deduplication operators: exact, MinHash+LSH near-dup, SimHash.
+"""Dedup building blocks kept as a library: connected components over a
+pair graph, boilerplate-line and duplicated-span removal, a Bloom filter,
+and the cross-table fuzzy Jaccard join.  No registered query uses them.
 
-Scale design (the 100 TB lens):
-
-- **Exact** dedup is a hash-groupBy on the normalized text — one shuffle,
-  map-side partial aggregation, no row ever compared to another row
-  directly.
-- **MinHash+LSH** never goes all-pairs: signatures are banded, docs
-  bucket-join on (band, band-signature), and only same-bucket pairs are
-  candidates (expected candidate count scales with the true duplicate
-  count, not N²).  The Jaccard verify step runs only on candidates.
-- **SimHash** clusters by exact signature equality (default 16-bit,
-  width scalable to corpus size) — a groupBy.
-
-Cache lifetime (r14, verdict item 8): persists whose consumers are all
-internal are released before return (see the ``unpersist`` calls after
-each ``localCheckpoint``); the rest (sig / grams / hits / covered /
-token-set caches) feed the RETURNED plan and are SESSION-LIFETIME by
-design — bounded relations (signature- / gram-key- / candidate-sized),
-MEMORY_AND_DISK, LRU-evictable under storage pressure, so accumulation
-across a long driver session degrades to recompute, never to OOM.
-``spark.catalog.clearCache()`` between queries gives deterministic
-release when a caller needs it.
-
-All hashing uses the engine-portable md5-prefix primitive
-(:func:`functions.text.portable_hash32`) so every stage is DuckDB-checkable.
+Cache lifetime: persists whose consumers are all internal are released
+before return (see the ``unpersist`` calls after each
+``localCheckpoint``); the rest (gram-key / candidate / token-set caches)
+feed the RETURNED plan and are SESSION-LIFETIME by design — bounded
+relations, MEMORY_AND_DISK, LRU-evictable under storage pressure, so
+accumulation across a long driver session degrades to recompute, never
+to OOM.  ``spark.catalog.clearCache()`` between calls gives
+deterministic release when a caller needs it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from entropy_balance_weighting_spark.functions.text import (
-    portable_hash32,
-    tokens,
-)
-
-# MinHash parameters — fixed, deterministic, engine-portable (mirrored
-# literally in the DuckDB oracles).
-MINHASH_P = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
-N_HASHES = 8
-BAND_ROWS = 2  # 4 bands of 2 rows
-
-
-def _minhash_params() -> list[tuple[int, int]]:
-    return [
-        (
-            (123456789 * i + 987654321) % MINHASH_P,
-            (362436069 * i + 521288629) % MINHASH_P,
-        )
-        for i in range(1, N_HASHES + 1)
-    ]
-
-
-def exact_dup_stats(df: DataFrame, text_col: str, by: str) -> DataFrame:
-    """Exact-duplicate statistics per ``by`` group: rows, distinct
-    normalized texts, and rows that are duplicates of an earlier row."""
-    norm = F.lower(F.trim(F.col(text_col)))
-    return (
-        df.withColumn("__norm", norm)
-        .groupBy(by)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("__norm").alias("n_distinct"),
-            (F.count(F.lit(1)) - F.countDistinct("__norm")).alias("n_dup_rows"),
-        )
-    )
-
-
-def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, shingle) — exploded distinct word n-grams.
-
-    The token array is materialized as its own projection first, so the
-    per-gram ``element_at`` calls index a bound array column instead of
-    re-evaluating ``split()`` inside every lambda invocation (without this
-    the shingle build is O(tokens²) string splitting)."""
-    toks = df.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("t")
-    ).filter(F.size("t") >= n)
-    t = F.col("t")
-    idx = F.sequence(F.lit(0), F.size(t) - n)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return toks.select("id", F.explode(F.array_distinct(grams)).alias("sh"))
-
-
-def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """(id, n_sh, mh_1..mh_H) from a shingle table — ONE groupBy computing
-    all H min-hashes as parallel aggregates (no per-hash shuffle).  The md5
-    hash is projected ONCE per shingle; the H permutations are cheap integer
-    affine maps over that bound column.  ``n_sh`` (the per-doc shingle
-    count — exact because the shingle table is distinct by construction)
-    rides the same aggregate so the Jaccard denominator needs no second
-    shingle-table scan + shuffle (guide §2.4: two aggregations keyed the
-    same way share one exchange)."""
-    hashed = sh.select("id", (portable_hash32(F.col("sh")) % MINHASH_P).alias("h"))
-    aggs = [F.count(F.lit(1)).alias("n_sh")] + [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_minhash_params(), start=1)
-    ]
-    return hashed.groupBy("id").agg(*aggs)
-
-
-def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
-    """(id_a, id_b) distinct candidate pairs sharing ≥1 LSH band bucket.
-
-    Bands of BAND_ROWS signature rows; the join key is (band, signature
-    string) so only same-bucket docs ever meet — the banded bucket-join
-    that replaces the N² comparison.
-    """
-    n_bands = N_HASHES // BAND_ROWS
-    bands = []
-    for bidx in range(n_bands):
-        cols = [f"mh_{bidx * BAND_ROWS + j + 1}" for j in range(BAND_ROWS)]
-        bands.append(
-            sig.select(
-                "id",
-                F.lit(bidx).alias("band"),
-                F.concat_ws(",", *[F.col(c).cast("string") for c in cols]).alias(
-                    "bsig"
-                ),
-            )
-        )
-    banded = bands[0]
-    for bdf in bands[1:]:
-        banded = banded.unionByName(bdf)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
-def verified_near_dups(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    threshold: float = 0.8,
-    n: int = 3,
-) -> DataFrame:
-    """Full near-dup pipeline: shingle → MinHash → LSH buckets → exact
-    n-gram Jaccard on candidates only → pairs with jaccard ≥ threshold.
-
-    Returns ``(id_a, id_b, jaccard)``.
-    """
-    # The shingle table feeds the signature build AND both sides of the
-    # Jaccard intersection join; the banded signatures feed both sides of
-    # the bucket self-join.  Materialize each once — without this the whole
-    # split/explode/hash upstream re-executes per consumer (3-5×).
-    sh = shingle_table(df, id_col, text_col, n).cache()
-    sig = minhash_signatures(sh).cache()
-    pairs = lsh_candidate_pairs(sig)
-    # per-doc shingle counts ride the signature aggregate (same id key,
-    # same exchange) — the cached sig IS the counts table; the previous
-    # separate sh.groupBy("id") re-scanned the postings-sized shingle
-    # cache and paid its own shuffle + AQE stage per run
-    counts = sig.select("id", "n_sh")
-    # |A ∩ B| per candidate pair: equi-join the two shingle sets on (id, sh)
-    inter = (
-        pairs.join(sh.select(F.col("id").alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        inter.join(counts.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(counts.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    # the result is duplicate-pair-sized (tiny); materialize it eagerly so
-    # the intermediate caches can be dropped instead of lingering in
-    # executor memory after the query returns
-    out = out.localCheckpoint(eager=True)
-    sh.unpersist()
-    sig.unpersist()
-    return out
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    threshold: float = 0.8,
-    n: int = 3,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs via the inverted-index bucket
-    join: candidates are pairs sharing ≥1 shingle (complete for any
-    threshold > 0 — a pair with zero shared shingles has Jaccard 0), then
-    exact Jaccard on candidates only.  Returns ``(id_a, id_b, jaccard)``.
-
-    The candidate self-join keys on the shingle value, so its volume is
-    Σ_shingle df² — driven by real textual overlap, not N².  Contrast with
-    :func:`verified_near_dups` (MinHash banding): that prunes harder at
-    corpus scale but is probabilistic-recall; this one is exact, the right
-    tool when the threshold is low or recall must be 1.
-
-    ``max_shingle_df``: skew defense for corpus scale — shingles occurring
-    in more than this many documents are excluded from CANDIDATE
-    GENERATION only (Jaccard is still computed over the full shingle
-    sets).  A boilerplate shingle shared by 10⁶ docs would otherwise
-    produce a 10¹²-row hot key.  This trades exactness for bounded join
-    volume: a pair whose shared shingles are ALL ubiquitous is missed;
-    leave ``None`` (default, used by the registered query) for the exact
-    guarantee.
-    """
-    sh = shingle_table(df, id_col, text_col, n).cache()
-    counts = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_shingle_df is None:
-        # exact mode: |A ∩ B| directly from the inverted-index self-join
-        inter = (
-            sh.select(F.col("id").alias("id_a"), "sh")
-            .join(sh.select(F.col("id").alias("id_b"), "sh"), "sh")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    else:
-        # skewed mode: candidates from rare shingles only; the
-        # intersection count joins the FULL shingle table back so the
-        # Jaccard value itself stays exact for every surviving pair
-        rare = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_shingle_df)
-            .select("sh")
-        )
-        cand_src = sh.join(rare, "sh")
-        pairs = (
-            cand_src.select(F.col("id").alias("id_a"), "sh")
-            .join(cand_src.select(F.col("id").alias("id_b"), "sh"), "sh")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        inter = (
-            pairs.join(sh.select(F.col("id").alias("id_a"), "sh"), "id_a")
-            .join(sh.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    out = (
-        inter.join(
-            counts.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")),
-            "id_a",
-        )
-        .join(
-            counts.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    out = out.localCheckpoint(eager=True)
-    sh.unpersist()
-    return out
-
-
-def winnow_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    k: int = 4,
-    window: int = 5,
-    min_shared: int = 3,
-    max_fp_df: int | None = None,
-) -> DataFrame:
-    """Partial-overlap near-dup pairs via winnowing (MOSS) fingerprints:
-    documents sharing ``>= min_shared`` fingerprints.  Catches documents
-    that EMBED a common passage (any shared token run of length
-    ``>= k + window - 1`` guarantees a shared fingerprint) even when the
-    rest of the text is unrelated — which whole-document hashing and
-    whole-doc MinHash both miss.  Returns ``(id_a, id_b, n_shared)``.
-
-    Plan shape: fingerprint inverted-index self-join, candidate volume
-    Σ_fp df² (governed by the winnowing density 2/(window+1)), same
-    skew profile as :func:`ngram_jaccard_pairs`.
-
-    ``max_fp_df``: skew defense for corpus scale — fingerprints present
-    in more than this many documents are excluded from CANDIDATE
-    GENERATION only; ``n_shared`` is then recounted against the FULL
-    fingerprint table so surviving pairs keep their exact count.
-    Winnowing fingerprints are exactly what boilerplate makes hot (one
-    ubiquitous template passage ⇒ a df≈N fingerprint ⇒ a df²-row join
-    key), so at corpus scale the cap is not optional.  The trade: a pair
-    whose shared fingerprints are ALL ubiquitous is missed; leave
-    ``None`` (default, used by the registered query) for the exact
-    guarantee.
-    """
-    from entropy_balance_weighting_spark.functions.text import winnow_fingerprints
-
-    ex = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(
-                winnow_fingerprints(F.col(text_col), k=k, window=window)
-            ).alias("fp"),
-        )
-        .distinct()
-        .cache()
-    )
-    if max_fp_df is None:
-        inter = (
-            ex.select(F.col("id").alias("id_a"), "fp")
-            .join(ex.select(F.col("id").alias("id_b"), "fp"), "fp")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
-    else:
-        rare = (
-            ex.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_fp_df)
-            .select("fp")
-        )
-        cand_src = ex.join(rare, "fp")
-        pairs = (
-            cand_src.select(F.col("id").alias("id_a"), "fp")
-            .join(cand_src.select(F.col("id").alias("id_b"), "fp"), "fp")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        inter = (
-            pairs.join(ex.select(F.col("id").alias("id_a"), "fp"), "id_a")
-            .join(ex.select(F.col("id").alias("id_b"), "fp"), ["id_b", "fp"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
-    out = inter.filter(F.col("n_shared") >= min_shared)
-    out = out.localCheckpoint(eager=True)
-    ex.unpersist()
-    return out
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -525,252 +179,6 @@ def label_propagation_components(
         prev_sum = new_sum
     edges.unpersist()
     return labels.select("id", F.col("lbl").alias("cluster_id"))
-
-
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Benchmark decontamination — the standard train-set hygiene pass
-    (n-gram overlap against an eval corpus, GPT-3/The-Pile style): flag
-    every training document sharing ANY word n-gram with the benchmark.
-    Returns ``(id, n_hits)`` where n_hits counts the doc's DISTINCT
-    contaminated shingles (n_hits ≥ 1 ⇒ quarantine the doc).
-
-    Scale shape: both sides reduce to distinct shingle sets; the
-    benchmark side is small by nature (eval suites are fixed, ~MBs), so
-    its gram set BROADCASTS and the corpus is touched exactly once — an
-    inner join against the broadcast set plus one groupBy, no N×M text
-    comparison anywhere.
-    """
-    doc_sh = shingle_table(docs, id_col, text_col, n)
-    bench_sh = (
-        shingle_table(
-            benchmark.select(
-                F.monotonically_increasing_id().alias("__bid"),
-                F.col(bench_text_col).alias("__btext"),
-            ),
-            "__bid",
-            "__btext",
-            n,
-        )
-        .select("sh")
-        .distinct()
-    )
-    return (
-        doc_sh.join(F.broadcast(bench_sh), "sh")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n_bits: int = 16,
-    n_bands: int = 4,
-    max_hamming: int = 2,
-) -> DataFrame:
-    """SimHash near-duplicate PAIRS within hamming distance
-    ``max_hamming`` — tolerance the exact-signature clustering
-    (:func:`simhash16` + groupBy) cannot express.
-
-    Candidates come from banding: the ``n_bits`` signature splits into
-    ``n_bands`` equal bands and a pair is a candidate iff some band is
-    bit-identical.  Pigeonhole guarantees completeness for
-    ``max_hamming <= n_bands - 1``: fewer differing bits than bands
-    means at least one band untouched.  Candidates verify by exact
-    ``bit_count(xor)`` — so the result is EXACT for the allowed radius,
-    never all-pairs (the DuckDB oracle of the registered query IS the
-    all-pairs hamming join, which independently re-proves completeness).
-
-    Scale shape: same banded bucket-join as MinHash-LSH — signature
-    table is N rows, band table n_bands·N, the join hits only bucket
-    collisions.  A pathological corpus where everything shares a band
-    degrades toward all-pairs; band width (``n_bits/n_bands``) is the
-    selectivity knob, and :func:`simhash16`'s width guidance applies.
-    """
-    if not 1 <= max_hamming <= n_bands - 1:
-        raise ValueError(
-            f"banding is complete only for max_hamming in [1, {n_bands - 1}]"
-        )
-    if n_bits % n_bands != 0:
-        raise ValueError("n_bits must divide evenly into n_bands")
-    bits_per = n_bits // n_bands
-    mask = (1 << bits_per) - 1
-
-    # the signature table feeds BOTH sides of the banded self-join;
-    # persisted (N rows of id + n_bits hash) so the corpus tokenize +
-    # per-bit weighted sums run once, not twice (r13 optimization,
-    # guide §2.4 — same discipline as the MinHash sig cache)
-    sig = simhash16(df, id_col, text_col, n_bits=n_bits).persist()
-    band = F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band")
-    banded = sig.select("id", "simhash", band).withColumn(
-        "bval",
-        F.expr(f"shiftright(simhash, band * {bits_per})").bitwiseAND(F.lit(mask)),
-    )
-    a = banded.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sig_a"), "band", "bval"
-    )
-    b = banded.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sig_b"), "band", "bval"
-    )
-    cands = (
-        a.join(b, ["band", "bval"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    return cands.select(
-        "id_a",
-        "id_b",
-        F.expr("bit_count(sig_a ^ sig_b)").alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-def simhash16(
-    df: DataFrame, id_col: str, text_col: str, *, n_bits: int = 16
-) -> DataFrame:
-    """SimHash per document from token-frequency-weighted bit votes
-    (default 16-bit — the registered query and its DuckDB oracle mirror
-    that width literally; pass ``n_bits`` up to 32 to widen).
-
-    Bit b of the signature is 1 iff Σ_tokens cnt·(±1 by bit b of the token
-    hash) > 0.  Near-identical documents collide exactly; clusters are a
-    groupBy on the signature.  Returns ``(id, simhash)``.
-
-    Width at corpus scale: expected docs per signature bucket is
-    N / 2^n_bits, so pick ``n_bits ≈ log2(N) − log2(target bucket size)``
-    — 16 bits ≈ 65k buckets suits ~10⁶-doc corpora; a 10⁹-doc corpus
-    wants ~30 bits (the token hash is 32-bit, the natural ceiling).
-    """
-    if not 1 <= n_bits <= 32:
-        raise ValueError(f"n_bits must be in [1, 32], got {n_bits}")
-    th = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(tokens(F.col(text_col))).alias("tok"),
-        )
-        .groupBy("id", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("h", portable_hash32(F.col("tok")))
-    )
-    bit = F.explode(F.sequence(F.lit(0), F.lit(n_bits - 1))).alias("bit")
-    votes = (
-        th.select("id", "h", "cnt", bit)
-        .withColumn(
-            "vote",
-            F.when(
-                F.expr("shiftright(h, bit) & 1") == 1, F.col("cnt")
-            ).otherwise(-F.col("cnt")),
-        )
-        .groupBy("id", "bit")
-        .agg(F.sum("vote").alias("s"))
-    )
-    return votes.groupBy("id").agg(
-        F.sum(
-            F.when(F.col("s") > 0, F.expr("shiftleft(1L, bit)")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash")
-    )
-
-
-def incremental_dedup(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    *,
-    text_col: str = "text",
-) -> DataFrame:
-    """Ingest-time dedup of a NEW batch against the EXISTING corpus: keep
-    only new rows whose normalized text (lower/trim — the
-    ``exact_dup_stats`` convention) does not already occur in the corpus.
-    The production shape for continuously-arriving data, where re-running
-    full-corpus dedup per batch is off the table.
-
-    Plan: the corpus side reduces to DISTINCT md5 keys (16 bytes/doc —
-    at 10⁹ docs a ~16 GB key set, shuffle-joined on the key hash, never
-    the text), then one LEFT ANTI equi-join.  AQE's runtime bloom filter
-    prunes most new-batch rows before the exchange when the corpus key
-    set is large; for a small corpus the anti-join broadcasts outright.
-    In production the corpus key set is a maintained table — appending
-    each admitted batch's keys — so each arrival pays one key-join, not
-    a corpus re-scan."""
-    norm_key = F.md5(F.lower(F.trim(F.col(text_col))))
-    corpus_keys = corpus_df.select(norm_key.alias("__h")).distinct()
-    return (
-        new_df.withColumn("__h", norm_key)
-        .join(corpus_keys, "__h", "left_anti")
-        .drop("__h")
-    )
-
-
-def cluster_representatives(
-    cc: DataFrame,
-    scores: DataFrame,
-    *,
-    score_col: str = "score",
-) -> DataFrame:
-    """Pick the representative of each near-dup cluster by POLICY instead
-    of by min-id: the member with the highest ``score_col`` survives
-    (ties → lowest id), the production choice when clusters mix a full
-    document with its truncated/mangled variants.  ``cc`` is
-    :func:`connected_components` output ``(id, cluster_id)``; ``scores``
-    is ``(id, score)``.  Returns ``(id, cluster_id, is_keep)``.
-
-    Plan: one equi-join + one ``max_by``-shaped groupBy (the argmax is a
-    ``max(struct(score, -id))`` — a single map-side-combinable aggregate,
-    no per-cluster window sort), then a broadcast-sized join back (one
-    row per cluster)."""
-    joined = cc.join(scores.select(F.col("id"), F.col(score_col)), "id")
-    reps = joined.groupBy("cluster_id").agg(
-        F.max(F.struct(F.col(score_col).alias("s"), (-F.col("id")).alias("nid")))
-        .alias("m")
-    ).select("cluster_id", (-F.col("m.nid")).alias("rep_id"))
-    return (
-        joined.join(reps, "cluster_id")
-        .select(
-            "id",
-            "cluster_id",
-            (F.col("id") == F.col("rep_id")).cast("int").alias("is_keep"),
-        )
-    )
-
-
-def snapshot_diff(
-    old_df: DataFrame,
-    new_df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus snapshot diff (the data-ops change audit between two
-    crawls/exports): classify every id as ``added`` (new only),
-    ``removed`` (old only), ``changed`` (both, content hash differs) or
-    ``unchanged``.  One FULL OUTER equi-join on the id comparing md5
-    content keys — 32 bytes per row cross the shuffle, never the texts.
-    Returns ``(id, status)``."""
-    o = old_df.select(
-        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("__ho")
-    )
-    n = new_df.select(
-        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("__hn")
-    )
-    j = o.join(n, "id", "full_outer")
-    status = (
-        F.when(F.col("__ho").isNull(), F.lit("added"))
-        .when(F.col("__hn").isNull(), F.lit("removed"))
-        .when(F.col("__ho") != F.col("__hn"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select("id", status.alias("status"))
 
 
 def doc_lines(
@@ -1007,8 +415,7 @@ def bloom_build(
     corpus scale.  A 100 TB historical corpus reduces to ``<= m_bits``
     rows ONCE; every later batch screens against the sketch with a
     broadcast join (:func:`bloom_check`) instead of an anti-join that
-    rescans the archive (contrast :func:`incremental_dedup`, the exact
-    path for when the corpus is cheap to scan).
+    rescans the archive.
 
     Hashing is engine-portable by construction: bit position ``i`` of a
     document is ``xxhash64(norm_text, seed=i) mod m_bits`` — all JVM

@@ -1,462 +1,9 @@
-"""Event-time operators over the ``events`` stream-shaped table.
-
-Batch renderings here; the same expressions run under Structured Streaming
-(``readStream`` + watermark) unchanged — ``F.window`` and
-``F.session_window`` are the streaming-native operators, and
-:mod:`streaming.incremental` drives micro-batch reweighting.
-"""
+"""CDC changelog compaction: latest record per key under a version order."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def tumbling_window_agg(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    width: str = "1 hour",
-    by: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Tumbling event-time windows: count + value sum per (window, keys)."""
-    win = F.window(F.col(ts_col), width)
-    return (
-        events.groupBy(win.alias("w"), *by)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("value_sum"),
-        )
-        .select(F.col("w.start").alias("window_start"), *by, "n_events", "value_sum")
-    )
-
-
-def sliding_window_agg(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    width: str = "1 hour",
-    slide: str = "30 minutes",
-    by: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Sliding (hopping) event-time windows: each event lands in
-    ``width/slide`` overlapping windows.  ``F.window(ts, width, slide)``
-    is the streaming-native operator — the fan-out happens inside the
-    JVM generator, not as a Python explode.
-
-    ``window_start`` is surfaced as epoch SECONDS (BIGINT): the slide
-    grid is epoch-aligned on both engines, and an integer key sidesteps
-    timestamp-zone stringification drift in cross-engine comparisons.
-    The intermediate cast to TIMESTAMP handles TIMESTAMP_NTZ inputs
-    (naive parquet timestamps) — NTZ has no direct cast to BIGINT, and
-    the session timezone is pinned UTC so the epoch matches DuckDB's
-    ``epoch()`` of the same naive value.
-    """
-    win = F.window(F.col(ts_col), width, slide)
-    return (
-        events.groupBy(win.alias("w"), *by)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("value_sum"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp").cast("long").alias("window_start"),
-            *by,
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
-_UNIT_SECONDS = {
-    "second": 1, "seconds": 1,
-    "minute": 60, "minutes": 60,
-    "hour": 3600, "hours": 3600,
-    "day": 86400, "days": 86400,
-}
-
-
-def _interval_seconds(s: str) -> int:
-    """Parse '30 minutes' / '1 hour' style window widths to seconds."""
-    n, unit = s.strip().split()
-    try:
-        return int(n) * _UNIT_SECONDS[unit.lower()]
-    except KeyError:
-        raise ValueError(f"unsupported interval unit in {s!r}") from None
-
-
-def sliding_window_agg_two_level(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    width: str = "1 hour",
-    slide: str = "30 minutes",
-    by: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Sliding windows composed from tumbling partials — the scale path
-    for ``slide ≪ width``.  ``F.window(ts, width, slide)`` replicates
-    EVERY EVENT ``width/slide`` times before the shuffle; here each event
-    lands in exactly ONE slide-grain pane (map-side combinable), and only
-    the PANE PARTIALS — at most one row per (pane, keys) — fan out into
-    the ``width/slide`` windows they belong to.  Shuffled volume drops
-    from ``events × overlap`` to ``events + panes × overlap``: at a 10×
-    overlap factor on 20M events with minute panes, that is 200M shuffled
-    rows → ~20M, and the overlap factor leaves the per-event cost
-    entirely.
-
-    Exact for decomposable aggregates (count/sum here; min/max/avg-via-
-    sum-count compose the same way).  Requires ``width`` divisible by
-    ``slide`` (same epoch-aligned grid as ``F.window``); equivalence to
-    the native form is pytest-pinned.  BATCH-ONLY: the two chained
-    stateful aggregations are rejected by Structured Streaming's
-    correctness check — under ``readStream`` use the native
-    :func:`sliding_window_agg` (single stateful op, watermark-evictable),
-    or run the pane aggregation streaming and the window rollup as a
-    batch query over its sink."""
-    w_sec = _interval_seconds(width)
-    s_sec = _interval_seconds(slide)
-    if w_sec % s_sec != 0:
-        raise ValueError(f"width {width!r} must be a multiple of slide {slide!r}")
-    overlap = w_sec // s_sec
-    pane = F.window(F.col(ts_col), slide)
-    panes = events.groupBy(pane.alias("p"), *by).agg(
-        F.count(F.lit(1)).alias("pn"),
-        F.sum("value").alias("pv"),
-    )
-    pane_start = F.col("p.start").cast("timestamp").cast("long")
-    fanned = panes.select(
-        F.explode(
-            F.sequence(
-                pane_start - F.lit((overlap - 1) * s_sec),
-                pane_start,
-                F.lit(s_sec),
-            )
-        ).alias("window_start"),
-        *by,
-        "pn",
-        "pv",
-    )
-    return fanned.groupBy("window_start", *by).agg(
-        F.sum("pn").alias("n_events"),
-        F.sum("pv").alias("value_sum"),
-    )
-
-
-def session_windows(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    by: str = "user_id",
-) -> DataFrame:
-    """Per-(key, session) frame: one row per gap-delimited session with
-    its event count.  ``F.session_window`` is the streaming-native
-    stateful operator — THIS stage is the one to run under
-    ``readStream`` (a single stateful aggregation; watermark-evictable
-    state).  Chaining the per-key rollup on top inside the same stream
-    would stack two stateful operators, which Spark's correctness check
-    rejects — roll up downstream (batch, or a second query over the
-    sink) instead."""
-    return events.groupBy(
-        F.session_window(F.col(ts_col), gap).alias("sw"), F.col(by)
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def session_window_agg(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    by: str = "user_id",
-) -> DataFrame:
-    """Gap-based sessionization per key: session count + event count.
-
-    Batch rendering: :func:`session_windows` plus the per-key rollup —
-    the same gaps-and-islands result the SQL oracle derives with
-    lag/cumsum.
-    """
-    sess = session_windows(events, ts_col=ts_col, gap=gap, by=by)
-    return sess.groupBy(by).agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("n").alias("n_events"),
-    )
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str = "user_id",
-    ts_col: str = "ts",
-    right_cols: tuple[str, ...] = ("value",),
-    prefix: str = "asof_",
-) -> DataFrame:
-    """Backward as-of join: attach to each left row the ``right_cols`` of
-    the latest right row with the same ``on`` key and ``right.ts <= left.ts``
-    (ties match).  Left rows with no prior right row get nulls.
-
-    Implemented as the distributed piecewise merge, not an inequality
-    join: tag both sides, union, and carry the right columns forward with
-    ``last(..., ignorenulls=True)`` over ``(key, ts, side)`` order.  One
-    shuffle on the key and a within-partition sort — the same cost as a
-    groupBy, versus the broadcast-nested-loop plan Spark would pick for a
-    raw ``l.ts >= r.ts`` join predicate.  At 100 TB this partitions by key
-    like any keyed agg; a single hot key is the same skew story as
-    sessionization (salt by coarse time range, merge boundaries).
-
-    Right rows must be unique per ``(on, ts_col)`` — pre-aggregate ties
-    (e.g. ``max(value)``) so the carried value is deterministic.
-    """
-    # null right timestamps can never be "the latest prior row" (they'd
-    # sort first and shadow nothing) — drop them, matching ASOF JOIN
-    r_tagged = right.filter(F.col(ts_col).isNotNull()).select(
-        F.col(on),
-        F.col(ts_col),
-        *[F.col(c).alias(f"{prefix}{c}") for c in right_cols],
-        F.lit(0).alias("_side"),
-    )
-    l_tagged = left.withColumn("_side", F.lit(1))
-    u = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(on)
-        .orderBy(ts_col, "_side")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = [
-        F.last(F.col(f"{prefix}{c}"), ignorenulls=True).over(w).alias(f"{prefix}{c}")
-        for c in right_cols
-    ]
-    carried_ts = (
-        F.last(F.when(F.col("_side") == 0, F.col(ts_col)), ignorenulls=True)
-        .over(w)
-        .alias(f"{prefix}{ts_col}")
-    )
-    out_cols = [c for c in l_tagged.columns if c != "_side" and not c.startswith(prefix)]
-    return (
-        u.select(*out_cols, F.col("_side"), *carried, carried_ts)
-        .filter(F.col("_side") == 1)
-        .drop("_side")
-    )
-
-
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str = "user_id",
-    ts_col: str = "ts",
-    right_cols: tuple[str, ...] = ("value",),
-    prefix: str = "asof_",
-    bucket_seconds: int = 3600,
-) -> DataFrame:
-    """Skew-hardened :func:`asof_join`: identical semantics, but the keyed
-    window is salted by coarse time bucket so a single hot key never
-    serializes into one task's sort.
-
-    Two passes over the same union:
-
-    1. **local carry** — the window partitions by ``(key, bucket)`` where
-       ``bucket = floor(epoch(ts)/bucket_seconds)``; per-task work is
-       bounded by the bucket width regardless of key skew;
-    2. **boundary fix** — a per-``(key, bucket)`` summary (one row per
-       bucket the key touches, conditional ``max_by`` over right rows)
-       gets the state *entering* each bucket via a tiny second window
-       over buckets, and joins back on ``(key, bucket)``; a row whose
-       bucket has no prior right row coalesces to the entering state.
-
-    Cost: the same union scan, one extra small-aggregate shuffle (rows =
-    keys × touched buckets, ≪ N), and one co-keyed join.  Equal
-    timestamps always share a bucket, so tie semantics are unchanged —
-    pinned by an equivalence test against the unsalted operator.
-    """
-    r_tagged = right.filter(F.col(ts_col).isNotNull()).select(
-        F.col(on),
-        F.col(ts_col),
-        *[F.col(c).alias(f"{prefix}{c}") for c in right_cols],
-        F.lit(0).alias("_side"),
-    )
-    from pyspark.storagelevel import StorageLevel
-
-    l_tagged = left.withColumn("_side", F.lit(1))
-    # "two passes over the same union" needs a persist to cost one build:
-    # the local-carry window and the boundary summary both shuffle on
-    # (key, bucket) but Spark does NOT reuse the exchange across them
-    # (verified: 0 ReusedExchange, both source scans duplicated at
-    # runtime), so unpersisted the union — and both input scans under it —
-    # ran twice per call (r13 optimization, guide §2.4/§5.3)
-    u = (
-        l_tagged.unionByName(r_tagged, allowMissingColumns=True)
-        .withColumn(
-            "_bkt",
-            F.floor(
-                F.col(ts_col).cast("timestamp").cast("double")
-                / F.lit(bucket_seconds)
-            ),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    pcols = [f"{prefix}{c}" for c in right_cols]
-    w_local = (
-        Window.partitionBy(on, "_bkt")
-        .orderBy(ts_col, "_side")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = [
-        F.last(F.col(pc), ignorenulls=True).over(w_local).alias(f"_loc_{pc}")
-        for pc in pcols
-    ]
-    local_ts = (
-        F.last(F.when(F.col("_side") == 0, F.col(ts_col)), ignorenulls=True)
-        .over(w_local)
-        .alias("_loc_ts")
-    )
-
-    is_r = F.col("_side") == 0
-    summary = u.groupBy(on, "_bkt").agg(
-        F.max_by(
-            F.when(is_r, F.struct(F.col(ts_col).alias("ts"), *pcols)),
-            F.when(is_r, F.col(ts_col)),
-        ).alias("_b_last")
-    )
-    w_enter = (
-        Window.partitionBy(on)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    entering = summary.select(
-        F.col(on),
-        "_bkt",
-        F.last("_b_last", ignorenulls=True).over(w_enter).alias("_enter"),
-    )
-
-    out_cols = [c for c in l_tagged.columns if c != "_side" and not c.startswith(prefix)]
-    carried = u.select(*out_cols, "_side", "_bkt", *local, local_ts).filter(
-        F.col("_side") == 1
-    )
-    joined = carried.join(entering, [on, "_bkt"], "left")
-    final = [
-        F.coalesce(F.col(f"_loc_{pc}"), F.col(f"_enter.{pc}")).alias(pc)
-        for pc in pcols
-    ]
-    final_ts = F.coalesce(F.col("_loc_ts"), F.col("_enter.ts")).alias(
-        f"{prefix}{ts_col}"
-    )
-    return joined.select(*out_cols, *final, final_ts)
-
-
-def range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    *,
-    ts_col: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
-    on: tuple[str, ...] = (),
-    bucket_seconds: int = 3600,
-    n_salts: int = 1,
-    how: str = "inner",
-    point_id: str | None = None,
-) -> DataFrame:
-    """Point-in-interval (range) join: pair each point row with every
-    interval row whose half-open window ``[start, end)`` contains the
-    point's timestamp, optionally also matching equi-keys ``on``.
-
-    A raw inequality predicate (``p.ts >= i.start AND p.ts < i.end``)
-    plans as BroadcastNestedLoopJoin — O(|points|·|intervals|) compares
-    and a broadcast of one whole side; this operator exists to avoid
-    that.  Implemented as the bucketed interval join (the same shape as
-    Databricks' range-join optimization): each interval EXPLODES to the
-    coarse time buckets it covers (``ceil(len/bucket_seconds)+1`` rows),
-    each point maps to exactly ONE bucket, and the pairing becomes a
-    plain hash equi-join on ``(bucket, *on)`` plus a residual range
-    filter.  Cost at 100 TB: two hash shuffles on the bucket key (both
-    sides partition like any keyed agg) and candidate volume bounded by
-    points-per-bucket × intervals-overlapping-that-bucket — pick
-    ``bucket_seconds`` near the typical interval length so duplication
-    stays ~2× and buckets stay balanced.  Equal timestamps always map to
-    the same bucket, so boundary semantics are exact, not approximate.
-
-    Each matching (point, interval) pair appears exactly once: a point
-    lives in one bucket, so cross-bucket interval duplication can never
-    duplicate a pair.  Intervals with ``end <= start`` (empty under the
-    half-open convention) are dropped.  Column names must not collide
-    across the two inputs (pre-select/rename on the caller side).
-
-    ``how="left"`` (requires ``point_id``, a unique point key) keeps
-    points matching NO interval as one row with null interval columns —
-    the inner pairs plus a broadcast-friendly anti-join of matched ids;
-    a naive left-join-then-range-filter would silently DROP points
-    whose bucket matched but whose range check failed.
-
-    ``n_salts > 1`` is the hot-bucket hardening: when events pile into
-    one time bucket (flash-sale minute, clock-skew heap at midnight),
-    that bucket's hash partition serializes into one task.  Salting
-    splits each point uniformly across ``n_salts`` sub-partitions and
-    replicates interval-bucket rows to every salt, so the hottest task
-    shrinks ``n_salts``× for an interval-side blow-up of the same factor
-    — the classic skew-join trade, worth it only when the interval side
-    is the small one.  Pair-once and boundary semantics are unchanged
-    (a point still has exactly one (bucket, salt) cell).
-    """
-    us = 1_000_000 * int(bucket_seconds)
-    p_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    s_us = F.unix_micros(F.col(start_col).cast("timestamp"))
-    e_us = F.unix_micros(F.col(end_col).cast("timestamp"))
-    iv = (
-        intervals.filter(F.col(end_col) > F.col(start_col))
-        .withColumn(
-            "_bkt",
-            F.explode(
-                F.sequence(
-                    F.floor(s_us / us),
-                    # half-open: the bucket of the last INCLUDED microsecond
-                    F.floor((e_us - F.lit(1)) / us),
-                )
-            ),
-        )
-    )
-    pts = points.withColumn("_bkt", F.floor(p_us / us))
-    keys = ["_bkt", *on]
-    if n_salts > 1:
-        # salt from a per-row id, NOT from the timestamp: identical
-        # timestamps (the skew being cured) must land on different salts
-        iv = iv.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        )
-        pts = pts.withColumn(
-            "_salt",
-            F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(n_salts)),
-        )
-        keys.append("_salt")
-    joined = (
-        pts.join(iv, keys, "inner")
-        .filter(
-            (F.col(ts_col) >= F.col(start_col))
-            & (F.col(ts_col) < F.col(end_col))
-        )
-        .drop("_bkt", "_salt")
-    )
-    if how == "inner":
-        return joined
-    if how != "left":
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    if point_id is None:
-        raise ValueError("how='left' requires point_id (a unique point key)")
-    matched = joined.select(point_id).distinct()
-    unmatched = points.join(matched, point_id, "left_anti")
-    return joined.unionByName(unmatched, allowMissingColumns=True)
-
-
-def json_prop_int(events: DataFrame, prop: str, *, props_col: str = "props") -> DataFrame:
-    """Extract an integer property from the JSON ``props`` column.
-
-    Uses ``get_json_object`` (JVM JSON path) — regexp-free and
-    streaming-safe."""
-    return events.withColumn(
-        f"prop_{prop}",
-        F.get_json_object(F.col(props_col), f"$.{prop}").cast("int"),
-    )
 
 
 def compact_changelog(

@@ -4,7 +4,7 @@
 per-partition RNG — repartition the input and membership changes), which
 is unacceptable for a 100 TB corpus where the sampled subset must be
 re-derivable months later.  These operators instead hash a stable row key
-(the engine-portable md5-prefix hash, :func:`functions.text.portable_hash32`)
+(the engine-portable md5-prefix hash, :func:`portable_hash32`)
 into [0, 1) and keep rows below the target rate:
 
 - membership depends ONLY on (key, salt) — stable under repartitioning,
@@ -23,11 +23,20 @@ from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from entropy_balance_weighting_spark.functions.text import portable_hash32
-
 # hash bucket count: rates are expressed as integer per-10^6 thresholds so
 # the oracle comparison is integer-exact (no float-boundary drift)
 _BUCKETS = 1_000_000
+
+
+def portable_hash32(s: Column | str) -> Column:
+    """md5-prefix hash → BIGINT in [0, 2^32) — identical in Spark & DuckDB.
+
+    The first 8 hex chars of md5 read as a big-endian integer: Spark's
+    ``conv(substr(md5(s),1,8),16,10)`` and DuckDB's
+    ``('0x'||substr(md5(s),1,8))::BIGINT`` compute the same value, so
+    every sample membership is oracle-checkable bit-for-bit (``xxhash64``
+    would be faster but is not portable)."""
+    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
 def sample_bucket(key: Column | str, salt: str = "") -> Column:

@@ -1,20 +1,6 @@
-"""Similarity search over an embedding column (``array<float>``).
-
-Two paths:
-
-- :func:`cosine_topk` — exact brute force: probes are broadcast, the
-  corpus is scanned once, per-row cosine is a JVM-side ``zip_with`` +
-  ``aggregate`` fold (no Python, no shuffle until the tiny top-k).  The
-  correctness baseline; O(P·N) dot products.
-- :func:`cosine_topk_lsh` — random-hyperplane LSH: each vector gets a
-  B-bit sign signature from deterministic pseudo-hyperplanes; candidates
-  share a signature band; only candidates are re-ranked exactly.  The 100 TB
-  path: the corpus scan emits (band, sig) keys, the join fans in, and the
-  exact re-rank touches a small candidate set per probe.
-
-Hyperplanes are derived from the engine-portable hash (plane, dim) → a
-value in [−0.5, 0.5), so signatures are reproducible across runs and
-engines with no stored model.
+"""Semantic dedup over an embedding column (``array<float>``): the IVF
+quantizer fit, rows-per-cell cell sizing, and SemDeDup assignments.
+No registered query uses them.
 """
 
 from __future__ import annotations
@@ -35,241 +21,6 @@ def _dot(a, b):
 
 def _norm(a):
     return F.sqrt(_dot(a, a))
-
-
-def cosine_topk(
-    emb: DataFrame,
-    probe_ids: list[int],
-    k: int = 3,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = None,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each probe id.
-
-    Returns ``(probe_id, neighbor_id, cos)``, k rows per probe, ordered by
-    (probe_id, cos desc, neighbor_id).  ``round_digits`` rounds the cosine
-    BEFORE ranking — set it when comparing against an oracle that ranks
-    rounded values, so boundary candidates cannot order differently.
-    """
-    # norms are per-vector, not per-pair: materialize them once on each
-    # side so the O(P·N) pair stage folds only the dot product
-    base = emb.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("v_norm", _norm(F.col("v")))
-    probes = base.filter(F.col("neighbor_id").isin(probe_ids)).select(
-        F.col("neighbor_id").alias("probe_id"),
-        F.col("v").alias("p"),
-        F.col("v_norm").alias("p_norm"),
-    )
-    joined = base.crossJoin(F.broadcast(probes)).filter(
-        F.col("neighbor_id") != F.col("probe_id")
-    )
-    cos = _dot(F.col("p"), F.col("v")) / (F.col("p_norm") * F.col("v_norm"))
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    scored = joined.select("probe_id", "neighbor_id", cos.alias("cos"))
-    # row_number ≤ k plans a PARTIAL WindowGroupLimit pre-shuffle: the
-    # rank exchange carries ≤ partitions·Q·k rows, not N·Q (see
-    # hamming_topk's note; pinned by test_topk_rank_shuffle_is_partial)
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "cos")
-    )
-
-
-BINARY_BITS_PER_WORD = 32  # packed sign bits per BIGINT word: 32 keeps
-# every per-bit value (1 << j) positive in BOTH engines, so the
-# disjoint-bit sum the DuckDB oracle uses equals the bitwise OR with no
-# two's-complement edge at bit 63
-
-
-def binary_quantize_bits(vec) -> "F.Column":
-    """Sign-bit binary quantization of an embedding — ``array<long>``
-    where bit ``j`` of word ``w`` is 1 iff ``vec[w·32 + j] > 0``.  The
-    32×-compression ANN path next to PQ (binary embeddings: a 100 TB
-    float32 store becomes ~3 TB of bits, and distance becomes XOR +
-    popcount — pure codegen'd integer ops, no UDF anywhere).  Unlike
-    :func:`signature_bits` (random-hyperplane LSH for banding), this
-    keeps one bit PER DIMENSION, the convention binary-embedding
-    models are trained for."""
-    B = BINARY_BITS_PER_WORD
-    n_words = ((F.size(vec) + (B - 1)) / B).cast("int")  # floor division
-    # guard the empty vector: sequence(0, -1) would count BACKWARDS in
-    # Spark (auto-negative step) and index word -1
-    words = F.sequence(F.lit(0), F.greatest(n_words, F.lit(1)) - 1)
-    packed = F.transform(
-        words,
-        lambda w: F.aggregate(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(B - 1)),
-                lambda j: F.when(
-                    F.coalesce(
-                        F.try_element_at(vec, (w * B + j + 1).cast("int"))
-                        > 0,
-                        F.lit(False),
-                    ),
-                    # 2^j exact in double for j ≤ 31 (shiftleft takes
-                    # only a literal shift, not a per-element Column)
-                    F.pow(F.lit(2.0), j).cast("long"),
-                ).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc.bitwiseOR(x),
-        ),
-    )
-    # NULL in → NULL out (filterable), never an empty bit row: size(NULL)
-    # is NULL, so without the isNotNull gate a NULL embedding would fall
-    # through to the empty-array branch and survive into hamming_topk as
-    # a zero-length bits row whose zip_with null-pads against real probes
-    return F.when(
-        vec.isNotNull(),
-        F.when(F.size(vec) > 0, packed).otherwise(
-            F.array().cast("array<long>")
-        ),
-    )
-
-
-def hamming_distance(a, b) -> "F.Column":
-    """Popcount distance between two packed-bits arrays (XOR +
-    ``bit_count`` per word, summed) — whole-stage-codegen integer
-    arithmetic end to end."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseXOR(y))),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-
-
-def hamming_topk(
-    emb: DataFrame,
-    probe_ids: list[int],
-    k: int = 3,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k nearest neighbors under sign-bit Hamming distance for each
-    probe id: quantize once (:func:`binary_quantize_bits`), broadcast
-    the probes' bit rows, score with XOR+popcount, rank (distance asc,
-    neighbor_id asc — integer distances, so ranking is hash-exact with
-    no float rounding discipline needed).  Returns ``(probe_id,
-    neighbor_id, hamming)``, k rows per probe.  At scale the bits
-    column is the SCAN (32× fewer bytes than the float store); the
-    probe side is model-sized and broadcast."""
-    base = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        binary_quantize_bits(_as_double(F.col(vec_col))).alias("bits"),
-    ).filter(F.col("bits").isNotNull())  # NULL embeddings never rank
-    probes = base.filter(F.col("neighbor_id").isin(probe_ids)).select(
-        F.col("neighbor_id").alias("probe_id"),
-        F.col("bits").alias("p_bits"),
-    )
-    joined = base.crossJoin(F.broadcast(probes)).filter(
-        F.col("neighbor_id") != F.col("probe_id")
-    )
-    scored = joined.select(
-        "probe_id",
-        "neighbor_id",
-        hamming_distance(F.col("p_bits"), F.col("bits")).alias("hamming"),
-    )
-    # Rank-shuffle note (r11 verdict "What's wrong" #3, resolved): this
-    # row_number-≤-k shape plans a PARTIAL WindowGroupLimit before the
-    # exchange (Spark ≥3.5's window-group-limit pushdown), so each map
-    # partition truncates to its local top-k per probe FIRST and the
-    # shuffle carries ≤ partitions·Q·k rows, never the N·Q scored set.
-    # Pinned by tests/test_plan_lint.py::test_topk_rank_shuffle_is_partial.
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "hamming")
-    )
-
-
-def _plane_coeff(plane: int, dim_idx):
-    """Deterministic pseudo-hyperplane coefficient in [−0.5, 0.5)."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit(plane).cast("string"), dim_idx.cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("double")
-    return h / F.lit(4294967296.0) - F.lit(0.5)
-
-
-def signature_bits(vec, n_planes: int = 16) -> "F.Column":
-    """B-bit sign signature: bit p = 1 iff ⟨vec, plane_p⟩ > 0."""
-    dims = F.sequence(F.lit(0), F.size(vec) - 1)
-    bits = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.transform(dims, lambda i: _plane_coeff(p, i)),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def cosine_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: ``(id_a, id_b, cos)`` with
-    cosine ≥ threshold, id_a < id_b.
-
-    This is the EXACT all-pairs baseline (norms precomputed per vector, the
-    pair stage folds only dot products) — correct at any threshold, O(N²)
-    compute.  At corpus scale, bucket first (``cosine_topk_lsh``'s
-    hyperplane bands or ``cosine_topk_ivf``'s inverted lists) and run this
-    verification only within buckets, exactly as MinHash-LSH verifies
-    Jaccard on candidates only.
-    """
-    base = emb.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
-    a = base.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    b = base.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cos"
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
 
 
 def adaptive_n_cells(
@@ -293,219 +44,6 @@ def adaptive_n_cells(
 
     return int(
         max(min_cells, min(max_cells, math.ceil(max(n_rows, 1) / rows_per_cell)))
-    )
-
-
-def _qualifying_cell_pairs(c_unit, radius: dict, threshold: float):
-    """Vectorized driver-side IVF cell-pair pruning: pairs (ca, cb) whose
-    centroid angle can possibly contain a vector pair with cosine ≥
-    threshold (angular triangle inequality).  O(C²) numpy, no Python loop."""
-    import math
-
-    import numpy as np
-
-    ncell = len(c_unit)
-    present = np.array([c in radius for c in range(ncell)])
-    r = np.array([radius.get(c, 0.0) for c in range(ncell)])
-    ang = np.arccos(np.clip(c_unit @ c_unit.T, -1.0, 1.0))
-    theta_t = math.acos(max(-1.0, min(1.0, threshold)))
-    ok = ang <= theta_t + r[:, None] + r[None, :] + 1e-9
-    ok &= present[:, None] & present[None, :]
-    ca, cb = np.nonzero(ok)
-    return [(int(a), int(b)) for a, b in zip(ca, cb)]
-
-
-def ivf_candidate_stats(
-    emb: DataFrame,
-    threshold: float,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int | None = None,
-    rows_per_cell: int = 1024,
-    seed: int = 42,
-) -> dict:
-    """Diagnostics for the bucketed near-dup plan: cell count, qualifying
-    cell-pair count, and the candidate join volume Σ|cell_a|·|cell_b| the
-    verify stage would scan.  Used by the scale tests to assert
-    sub-quadratic candidate growth under :func:`adaptive_n_cells`."""
-    base = emb.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
-    n = base.count()
-    if n_cells is None:
-        n_cells = adaptive_n_cells(n, rows_per_cell=rows_per_cell)
-    assigned, c_unit, radius = _assign_cells(base, n_cells, seed, n=n)
-    qual = _qualifying_cell_pairs(c_unit, radius, threshold)
-    sizes = {
-        r["cell"]: r["cnt"]
-        for r in assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    volume = sum(sizes.get(a, 0) * sizes.get(b, 0) for a, b in qual if a <= b)
-    return {
-        "n_rows": n,
-        "n_cells": n_cells,
-        "n_qual_pairs": len(qual),
-        "candidate_volume": volume,
-    }
-
-
-def _assign_cells(base: DataFrame, n_cells: int, seed: int, *, n: int | None = None):
-    """Shared IVF assignment stage: fit the bounded-sample quantizer,
-    assign every vector to a cell, and measure per-cell angular radii.
-    Returns (assigned(id, v, nrm, cell), unit centroids, {cell: radius})."""
-    import numpy as np
-
-    centers = _fit_quantizer(base, n_cells, seed, n=n)
-    c_unit = centers / np.linalg.norm(centers, axis=1, keepdims=True)
-
-    # the assignment feeds the radius aggregate AND both sides of the
-    # cell-pair join — persist so the corpus is assigned once, not 3×
-    # (the inverted-list build every IVF index pays; unpersisted by GC)
-    assigned = _assign_with_centers(base, centers).select(
-        "id", "v", "nrm", "cell"
-    ).persist()
-
-    # per-cell angular radius: broadcast the C unit centroids back and take
-    # one small max-angle aggregate (C rows to the driver)
-    spark = base.sparkSession
-    cent_df = spark.createDataFrame(
-        [(c, [float(x) for x in c_unit[c]]) for c in range(len(c_unit))],
-        "cell int, cvec array<double>",
-    )
-    cos_to_center = _dot(F.col("v"), F.col("cvec")) / F.col("nrm")
-    radii_rows = (
-        assigned.join(F.broadcast(cent_df), "cell")
-        .withColumn(
-            "ang",
-            F.acos(F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cos_to_center))),
-        )
-        .groupBy("cell")
-        .agg(F.max("ang").alias("r"))
-        .collect()
-    )
-    radius = {r["cell"]: float(r["r"]) for r in radii_rows}
-    return assigned, c_unit, radius
-
-
-def cosine_near_dup_pairs_bucketed(
-    emb: DataFrame,
-    threshold: float,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int | None = None,
-    rows_per_cell: int = 1024,
-    seed: int = 42,
-) -> DataFrame:
-    """EXACT embedding-cosine near-dup pairs via IVF cell-pair pruning —
-    same output as :func:`cosine_near_dup_pairs`, no corpus×corpus
-    theta-join in the plan.
-
-    Completeness is guaranteed by the angular triangle inequality: with
-    each vector assigned to a KMeans cell and ``r_c`` the cell's angular
-    radius (max angle member↔centroid),
-
-        θ(a, b) ≥ θ(c_a, c_b) − r_a − r_b
-
-    so a cell PAIR can contain a qualifying vector pair only when
-    ``θ(c_a, c_b) ≤ arccos(threshold) + r_a + r_b``.  The driver prunes the
-    C² cell pairs (vectorized numpy), and the corpus joins only through
-    the surviving ``(cell_a, cell_b)`` list — two equi-joins, candidate
-    volume shrinks with how clusterable the corpus is, worst case degrades
-    to the all-pairs volume but never loses a pair.  Exact cosine is then
-    verified within candidates, mirroring ``verified_near_dups``'s
-    bucket-then-verify shape.  The quantizer fits on a bounded sample —
-    the fit never becomes the job at corpus scale.
-
-    ``n_cells=None`` (default) derives the cell count from the corpus via
-    :func:`adaptive_n_cells` (a rows-per-cell target), so the candidate
-    volume grows ~linearly with N; a sub-quadratic-growth test pins this.
-    """
-    base = emb.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
-    n = None
-    if n_cells is None:
-        n = base.count()
-        n_cells = adaptive_n_cells(n, rows_per_cell=rows_per_cell)
-    assigned, c_unit, radius = _assign_cells(base, n_cells, seed, n=n)
-    # one orientation per unordered CELL pair: for ca < cb every (x∈ca,
-    # y∈cb) vector pair is already unique (cells partition the corpus);
-    # only same-cell blocks need the id-order mask
-    pairs = [
-        (ca, cb)
-        for ca, cb in _qualifying_cell_pairs(c_unit, radius, threshold)
-        if ca <= cb
-    ]
-    spark = emb.sparkSession
-    qual = spark.createDataFrame(pairs, "cell_a int, cell_b int")
-
-    # Block verify, cogrouped by CELL PAIR: a pair-expanded join would
-    # ship every vector once PER CANDIDATE PAIR (≈cell-size× duplicated
-    # Arrow traffic — measured 2 GB for a 2M-candidate corpus of 2000
-    # vectors); cogrouping ships each cell's vectors once per qualifying
-    # pair and verifies the whole block with ONE BLAS matmul.  Worst
-    # case (one giant cell pair) is one task's dgemm — the row-chunked
-    # loop bounds its memory; rows_per_cell targeting bounds the common
-    # case.
-    def _side(tag, join_col):
-        asg = assigned.alias(f"asg_{tag}")
-        q = qual.alias(f"q_{tag}")
-        return asg.join(
-            F.broadcast(q),
-            F.col(f"asg_{tag}.cell") == F.col(f"q_{tag}.{join_col}"),
-        ).select(
-            F.col(f"q_{tag}.cell_a").alias("cell_a"),
-            F.col(f"q_{tag}.cell_b").alias("cell_b"),
-            F.col(f"asg_{tag}.id").alias("id"),
-            F.col(f"asg_{tag}.v").alias("v"),
-            F.col(f"asg_{tag}.nrm").alias("nrm"),
-        )
-
-    side_a = _side("a", "cell_a")
-    side_b = _side("b", "cell_b")
-
-    import numpy as np
-    import pandas as pd
-
-    def block_verify(key, ga, gb):
-        if not len(ga) or not len(gb):
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cos": "float64"}
-            )
-        same = key[0] == key[1]
-        xa = np.stack(ga["v"].to_numpy())
-        xb = np.stack(gb["v"].to_numpy())
-        ia = ga["id"].to_numpy(np.int64)
-        ib = gb["id"].to_numpy(np.int64)
-        ua = xa / ga["nrm"].to_numpy(np.float64)[:, None]
-        ub = xb / gb["nrm"].to_numpy(np.float64)[:, None]
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, len(ua), 4096):
-            blk = ua[lo : lo + 4096] @ ub.T
-            if same:
-                blk = np.where(
-                    ia[lo : lo + 4096, None] < ib[None, :], blk, -np.inf
-                )
-            r, c = np.nonzero(blk >= threshold)
-            out_a.append(ia[lo + r])
-            out_b.append(ib[c])
-            out_c.append(blk[r, c])
-        ia_f = np.concatenate(out_a)
-        ib_f = np.concatenate(out_b)
-        return pd.DataFrame(
-            {
-                "id_a": np.minimum(ia_f, ib_f),
-                "id_b": np.maximum(ia_f, ib_f),
-                "cos": np.concatenate(out_c),
-            }
-        )
-
-    return (
-        side_a.groupBy("cell_a", "cell_b")
-        .cogroup(side_b.groupBy("cell_a", "cell_b"))
-        .applyInPandas(block_verify, "id_a long, id_b long, cos double")
     )
 
 
@@ -566,12 +104,11 @@ def fit_ivf_quantizer(
     method: str = "full",
 ):
     """Fit the IVF coarse quantizer ONCE and return the ``(C, D)``
-    centroid array — a model-sized artifact meant to be persisted
-    (:func:`save_quantizer`) and reused across queries/sessions.  At
-    corpus scale the quantizer fit (sample collect + driver Lloyd) is a
-    fixed per-invocation cost that has no business being re-paid per
-    query; prefit centers turn :func:`cosine_topk_ivf` into pure
-    assignment + bucket join.
+    centroid array — a model-sized artifact meant to be fitted once and
+    reused across calls.  At corpus scale the quantizer fit (sample
+    collect + driver Lloyd) is a fixed per-invocation cost that has no
+    business being re-paid per call; prefit centers turn
+    :func:`semantic_dedup_assignments` into pure assignment + bucket join.
 
     ``method``:
 
@@ -686,365 +223,6 @@ def _fit_quantizer_minibatch(
     return cent
 
 
-def save_quantizer(centers, path: str) -> None:
-    """Persist quantizer centroids as JSON (engine-portable, no pickle):
-    tiny model artifact, same discipline as the MLlib-style persistence
-    in :mod:`entropy_balance_weighting_spark.ml`."""
-    import json
-
-    import numpy as np
-
-    c = np.asarray(centers, dtype=np.float64)
-    with open(path, "w") as f:
-        json.dump({"shape": list(c.shape), "centers": c.ravel().tolist()}, f)
-
-
-def load_quantizer(path: str):
-    import json
-
-    import numpy as np
-
-    with open(path) as f:
-        d = json.load(f)
-    return np.asarray(d["centers"], dtype=np.float64).reshape(d["shape"])
-
-
-def _assign_with_centers(
-    df: DataFrame, centers, *, v_col: str = "v", nrm_col: str = "nrm"
-) -> DataFrame:
-    """Append the nearest-centroid ``cell`` column: for each row,
-    ``argmax(u·c − |c|²/2)`` over the C broadcast-literal centroids
-    (equivalent to nearest-Euclidean on unit vectors; first argmax wins
-    ties deterministically).
-
-    Tiny C (≤ 4) stays a pure JVM expression tree (C dot products per
-    row, whole-stage codegen, no Python worker).  Beyond that an
-    Arrow-batched pass — one ``(batch × D) @ (D × C)`` BLAS matmul per
-    batch — wins decisively: HOF ``zip_with``+``aggregate`` dot products
-    interpret per element, and at C=8, D=64 the measured steady-state is
-    ~3× (0.3 s vs 0.9 s on 60k rows); the old C ≤ 64 threshold left that
-    on the table."""
-    import numpy as np
-
-    cent = np.asarray(centers, dtype=np.float64)
-    if len(cent) <= 4:
-        scores = []
-        for c in cent:
-            dot = F.aggregate(
-                F.zip_with(
-                    F.col(v_col),
-                    F.array(*[F.lit(float(v)) for v in c]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-            scores.append(dot / F.col(nrm_col) - F.lit(float(0.5 * c @ c)))
-        arr = F.array(*scores)
-        return df.withColumn(
-            "cell", (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
-        )
-
-    import pyarrow as pa
-
-    schema = df.schema
-    out_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
-        + ", cell int"
-    )
-    v_idx = schema.names.index(v_col)
-    nrm_idx = schema.names.index(nrm_col)
-    half = 0.5 * (cent * cent).sum(axis=1)
-
-    def assign(batches):
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            v = rb.column(v_idx)
-            flat = np.asarray(
-                v.flatten().to_numpy(zero_copy_only=False), dtype=np.float64
-            ).reshape(rb.num_rows, -1)
-            nrm = rb.column(nrm_idx).to_numpy(zero_copy_only=False)
-            u = flat / np.asarray(nrm, dtype=np.float64)[:, None]
-            cells = (u @ cent.T - half[None, :]).argmax(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(i) for i in range(rb.num_columns)]
-                + [pa.array(cells.astype(np.int32), type=pa.int32())],
-                names=list(schema.names) + ["cell"],
-            )
-
-    return df.mapInArrow(assign, out_schema)
-
-
-def cosine_topk_ivf(
-    emb: DataFrame,
-    probe_ids: list[int],
-    k: int = 3,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int | None = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    round_digits: int | None = None,
-    quantizer=None,
-) -> DataFrame:
-    """IVF-style approximate top-k: an MLlib KMeans coarse quantizer
-    partitions the corpus into ``n_cells`` inverted lists; each probe
-    searches only its ``n_probe`` nearest cells and re-ranks those
-    candidates exactly.  ``n_cells=None`` derives the cell count from the
-    corpus size (:func:`adaptive_n_cells`).
-
-    The 100 TB shape: the corpus is scanned once to assign cells (a
-    narrow transform once the tiny centroid model is fit on a sample),
-    candidate volume per probe is ~``n_probe/n_cells`` of the corpus, and
-    everything after assignment is plain joins/aggregations.  Recall is
-    tunable via ``n_probe`` (measured in tests).
-
-    ``quantizer``: prefit ``(C, D)`` centroids
-    (:func:`fit_ivf_quantizer` / :func:`load_quantizer`) — skips the
-    sample-collect + Lloyd fit entirely, amortizing the quantizer
-    across invocations; correctness never depends on which centers are
-    used (re-ranking is exact), only candidate volume does.
-    """
-    import numpy as np
-
-    base = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("v_norm", _norm(F.col("v")))
-    if quantizer is not None:
-        centers = np.asarray(quantizer, dtype=np.float64)
-        n_cells = len(centers)
-    else:
-        n = None
-        if n_cells is None:
-            n = base.count()
-            n_cells = adaptive_n_cells(n)
-        # quantizer fits on a bounded SAMPLE of unit vectors (driver-side
-        # numpy Lloyd — one collect job, not an MLlib iteration storm);
-        # assignment is a JVM/Arrow transform over the full corpus
-        centers = _fit_quantizer(
-            base.select(F.col("v"), F.col("v_norm").alias("nrm")), n_cells, seed, n=n
-        )
-    assigned = _assign_with_centers(
-        base, centers, nrm_col="v_norm"
-    ).select("neighbor_id", "v", "v_norm", "cell")
-
-    # probes need only their vectors — ONE narrow scan with the id filter
-    # pushed down; the collected rows then seed BOTH the driver-side cell
-    # shortlist and the broadcast probe table (no second corpus scan)
-    probe_rows = (
-        base.filter(F.col("neighbor_id").isin(probe_ids))
-        .select(
-            F.col("neighbor_id").alias("probe_id"),
-            F.col("v").alias("p"),
-            F.col("v_norm").alias("p_norm"),
-        )
-        .collect()
-    )
-    spark = emb.sparkSession
-    probes = spark.createDataFrame(
-        [(r["probe_id"], [float(x) for x in r["p"]], float(r["p_norm"])) for r in probe_rows],
-        "probe_id long, p array<double>, p_norm double",
-    )
-    # driver-side cell shortlist per probe (P × n_cells is tiny)
-    shortlist = []
-    for r in probe_rows:
-        p = np.array(r["p"])
-        p = p / np.linalg.norm(p)
-        d = ((centers - p[None, :]) ** 2).sum(axis=1)
-        for c in np.argsort(d)[:n_probe]:
-            shortlist.append((r["probe_id"], int(c)))
-    cells = spark.createDataFrame(shortlist, "probe_id long, cell int")
-
-    cands = (
-        assigned.join(F.broadcast(cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("probe_id"))
-        .join(F.broadcast(probes), "probe_id")
-    )
-    cos = _dot(F.col("p"), F.col("v")) / (F.col("p_norm") * F.col("v_norm"))
-    if round_digits is not None:
-        # round BEFORE ranking so a boundary candidate cannot rank
-        # differently across engines (same discipline as cosine_topk)
-        cos = F.round(cos, round_digits)
-    scored = cands.select("probe_id", "neighbor_id", cos.alias("cos"))
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "cos")
-    )
-
-
-def cosine_topk_lsh(
-    emb: DataFrame,
-    probe_ids: list[int],
-    k: int = 3,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    band_bits: int = 4,
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane signatures, banded buckets,
-    exact re-rank of candidates only.  Same output schema as
-    :func:`cosine_topk`; recall < 1 by design (measured in tests)."""
-    base = (
-        emb.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("v"),
-        )
-        .withColumn("v_norm", _norm(F.col("v")))
-        .withColumn("sig", signature_bits(F.col("v"), n_planes))
-    )
-    n_bands = n_planes // band_bits
-    mask = (1 << band_bits) - 1
-    bands = []
-    for b in range(n_bands):
-        bands.append(
-            base.select(
-                "neighbor_id",
-                "v",
-                "v_norm",
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("sig"), b * band_bits)
-                .bitwiseAND(mask)
-                .alias("bsig"),
-            )
-        )
-    banded = bands[0]
-    for bdf in bands[1:]:
-        banded = banded.unionByName(bdf)
-    probes = banded.filter(F.col("neighbor_id").isin(probe_ids)).select(
-        F.col("neighbor_id").alias("probe_id"),
-        F.col("v").alias("p"),
-        F.col("v_norm").alias("p_norm"),
-        "band",
-        "bsig",
-    )
-    cands = (
-        banded.join(F.broadcast(probes), ["band", "bsig"])
-        .filter(F.col("neighbor_id") != F.col("probe_id"))
-        .select("probe_id", "p", "p_norm", "neighbor_id", "v", "v_norm")
-        .distinct()
-    )
-    scored = cands.select(
-        "probe_id",
-        "neighbor_id",
-        (_dot(F.col("p"), F.col("v")) / (F.col("p_norm") * F.col("v_norm"))).alias(
-            "cos"
-        ),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("probe_id", "neighbor_id", "cos")
-    )
-
-
-def embedding_moments(df: DataFrame, *, vec_col: str = "embedding"):
-    """Mean vector and (upper-triangle) second-moment matrix of an
-    embedding column in ONE distributed aggregate: per partition the
-    Arrow batch accumulates ``Σx`` and ``Σ xxᵀ`` with BLAS (D and D²
-    floats per task — driver inflow is model-sized, never N-sized),
-    summed driver-side.  Returns ``(n, mean (D,), cov (D, D))`` with
-    ``cov`` the sample covariance.
-
-    The same partial-sum shape as the solver Gram passes — at 64-dim,
-    4096 doubles per task; for D ≳ 1000 the treeReduce gate in the
-    solver kernels is the pattern to copy.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    head = df.select(vec_col).first()
-    if head is None:
-        raise ValueError("embedding_moments needs >= 2 rows, got 0")
-    d = len(head[0])
-
-    def acc(batches):
-        n = 0
-        s = np.zeros(d)
-        ss = np.zeros((d, d))
-        for rb in batches:
-            col = rb.column(rb.schema.get_field_index(vec_col))
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            x = np.asarray(flat, dtype=np.float64).reshape(-1, d)
-            n += x.shape[0]
-            s += x.sum(axis=0)
-            ss += x.T @ x
-        payload = np.concatenate([[float(n)], s, ss.ravel()])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([payload.tobytes()], type=pa.binary())], names=["p"]
-        )
-
-    rows = df.select(vec_col).mapInArrow(acc, "p binary").collect()
-    tot = np.sum([np.frombuffer(r.p, dtype=np.float64) for r in rows], axis=0)
-    n = tot[0]
-    if n < 2:
-        raise ValueError(f"embedding_moments needs >= 2 rows, got {int(n)}")
-    mean = tot[1 : 1 + d] / n
-    ss = tot[1 + d :].reshape(d, d)
-    cov = (ss - n * np.outer(mean, mean)) / (n - 1.0)
-    return int(n), mean, cov
-
-
-def pca_project(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    k: int = 2,
-    out_col: str = "pc",
-):
-    """Project embeddings onto their top-``k`` principal components.
-
-    Covariance comes from :func:`embedding_moments` (one pass); the
-    D×D eigendecomposition runs on the driver (model-sized); the
-    projection is a pure JVM expression — ``aggregate`` dot products
-    against broadcast-literal component vectors, no Python on the
-    N-sized path.  Component signs are fixed so the largest-magnitude
-    loading is positive (eigenvectors are sign-ambiguous; deterministic
-    output needs a convention).
-
-    Returns ``(df with out_col array<double>, explained_variance_ratio)``.
-    """
-    import numpy as np
-
-    _, mean, cov = embedding_moments(df, vec_col=vec_col)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T  # (k, D)
-    for i in range(k):
-        j = int(np.abs(comps[i]).argmax())
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
-    evr = (vals[order] / vals.sum()).tolist()
-
-    mean_arr = F.array(*[F.lit(float(m)) for m in mean])
-    centered = F.zip_with(
-        _as_double(F.col(vec_col)), mean_arr, lambda x, m: x - m
-    )
-    projections = [
-        F.aggregate(
-            F.zip_with(
-                centered,
-                F.array(*[F.lit(float(c)) for c in comps[i]]),
-                lambda a, b: a * b,
-            ),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-        for i in range(k)
-    ]
-    return df.withColumn(out_col, F.array(*projections)), evr
-
-
 def semantic_dedup_assignments(
     emb: DataFrame,
     *,
@@ -1096,14 +274,13 @@ def semantic_dedup_assignments(
       oracle bit-for-bit (the registered query's mode).
     - ``"blas"``: per-cell ``applyInPandas`` — one normalized gram
       matmul per cell (numpy/BLAS) and a lower-triangle reduction;
-      measured ~40× faster at 20k vectors (spikes/semantic_dedup_scale)
-      and the right physical form at corpus scale.  One cell must fit a
+      measured ~40× faster at 20k vectors and the right physical form
+      at corpus scale.  One cell must fit a
       pandas frame — true by construction at C ≈ √N.
 
-    Contrast with :func:`cosine_near_dup_pairs_bucketed`: that one is
-    EXACT near-dup (triangle-inequality cell-pair completeness), this
-    one is the recall-bounded-by-clustering semantic variant that scales
-    to billions of documents in one cheap pass.
+    Recall is bounded by the clustering (pairs split across cells are
+    never compared); in exchange it scales to billions of documents in
+    one cheap pass.
     """
     if method not in ("pairs", "blas"):
         raise ValueError(f"method must be 'pairs' or 'blas', got {method!r}")
@@ -1266,386 +443,3 @@ def semantic_dedup_assignments(
 # ---------------------------------------------------------------------------
 
 
-def _kmeans_np(x, k: int, seed: int, iters: int = 10):
-    """Driver-side kmeans on a bounded numpy sample: kmeans++ seeding +
-    Lloyd via the dot-product expansion — the same arithmetic as
-    :func:`_fit_quantizer`, factored for per-subspace reuse."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    k = min(k, len(x))
-    cent = np.empty((k, x.shape[1]))
-    cent[0] = x[rng.integers(len(x))]
-    d2 = ((x - cent[0]) ** 2).sum(axis=1)
-    for i in range(1, k):
-        p = d2 / d2.sum() if d2.sum() > 0 else None
-        cent[i] = x[rng.choice(len(x), p=p)]
-        d2 = np.minimum(d2, ((x - cent[i]) ** 2).sum(axis=1))
-    for _ in range(iters):
-        d = (x @ cent.T) - 0.5 * (cent * cent).sum(axis=1)[None, :]
-        a = d.argmax(axis=1)
-        for c in range(k):
-            m = a == c
-            if m.any():
-                cent[c] = x[m].mean(axis=0)
-    return cent
-
-
-def fit_pq(
-    emb: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    m: int = 8,
-    k: int = 256,
-    seed: int = 42,
-    normalize: bool = True,
-):
-    """Fit a product quantizer: split D into ``m`` subspaces and kmeans
-    each to ``k`` centroids.  Returns the ``(m, k', D/m)`` codebook
-    array — a model-sized artifact (m·k·D/m floats, e.g. 8·256·8 = 16 KB
-    at D=64) to persist and broadcast, never a distributed object.
-
-    The scale story PQ buys: a D=768 float32 corpus is 3 KB/vector;
-    ``m=96, k=256`` codes are 96 BYTES/vector — a 100 TB embedding
-    store becomes ~3 TB of codes that fit executor memory for
-    compressed-domain scans (:func:`pq_topk` never touches the original
-    vectors).  Fit cost mirrors :func:`_fit_quantizer`: ONE bounded
-    sample collect (≤ max(64·k, 8192) rows), then m driver-side
-    kmeans runs on (S, D/m) slices.
-
-    ``normalize=True`` unit-normalizes the sample (and
-    :func:`pq_encode` / :func:`pq_topk` do the same), making ADC
-    L2 ranking equivalent to cosine ranking — the convention the rest
-    of this module uses.  ``k`` ≤ 256 so codes pack one byte per
-    subspace."""
-    import numpy as np
-
-    if not 1 <= k <= 256:
-        raise ValueError(f"k must be in [1, 256] (one byte/subspace), got {k}")
-    base = emb.select(_as_double(F.col(vec_col)).alias("v")).withColumn(
-        "nrm", _norm(F.col("v"))
-    )
-    target = max(64 * k, 8192)
-    n = base.count()
-    frac = min(1.0, target / max(n, 1))
-    fit_df = base if frac >= 1.0 else base.sample(False, frac, seed)
-    sel = (
-        F.transform("v", lambda x: x / F.col("nrm")) if normalize else F.col("v")
-    )
-    rows = fit_df.select(sel.alias("u")).collect()
-    if not rows:
-        raise ValueError("cannot fit PQ codebooks: embedding corpus is empty")
-    x = np.asarray([r["u"] for r in rows], dtype=np.float64)
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    ds = d // m
-    return np.stack(
-        [
-            _kmeans_np(x[:, j * ds : (j + 1) * ds], k, seed + j)
-            for j in range(m)
-        ]
-    )
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-    normalize: bool = True,
-) -> DataFrame:
-    """Encode each vector as ``m`` one-byte centroid ids (BinaryType) —
-    the compressed corpus representation.  One Arrow-batched
-    ``mapInPandas`` map stage over the corpus (the codebooks ride along
-    as a broadcast-sized closure constant), no shuffle; assignment per
-    subspace is one (B, k) matmul argmax.
-
-    Implementation note (measured, not assumed): a ``mapInArrow``
-    variant that views the list column's values buffer zero-copy was
-    A/B'd in-session at 1M×64 and LOST (1.5 s vs 1.0 s steady) — the
-    pandas conversion already hands back per-row numpy views and one
-    gather, while the Arrow path pays flatten/offset materialization
-    plus output-buffer assembly.  Keep the simpler shape."""
-    import numpy as np
-    import pandas as pd
-
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, k, ds = cb.shape
-    # ½|c|² per (subspace, centroid), hoisted out of the batch loop
-    half_c2 = 0.5 * (cb * cb).sum(axis=2)  # (m, k)
-    schema = f"{id_col} long, {out_col} binary"
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if x.ndim != 2 or x.shape[1] != m * ds:
-                raise ValueError(
-                    f"embedding dim {x.shape[-1] if x.size else 0} does not "
-                    f"match codebooks (m={m}, ds={ds})"
-                )
-            if normalize:
-                nrm = np.linalg.norm(x, axis=1, keepdims=True)
-                nrm[nrm == 0] = 1.0
-                x = x / nrm
-            codes = np.empty((len(x), m), dtype=np.uint8)
-            for j in range(m):
-                scores = x[:, j * ds : (j + 1) * ds] @ cb[j].T - half_c2[j]
-                codes[:, j] = scores.argmax(axis=1).astype(np.uint8)
-            yield pd.DataFrame(
-                {id_col: ids, out_col: [c.tobytes() for c in codes]}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
-def pq_topk(
-    codes: DataFrame,
-    codebooks,
-    query,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-    normalize: bool = True,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over the compressed corpus:
-    the query builds an ``(m, k')`` lookup table of exact subspace
-    distances ONCE on the driver; each row's approximate squared L2 is
-    then ``m`` table lookups — a compressed-domain scan that never
-    reads the original vectors.  Plan: one map stage
-    (``mapInPandas``, vectorized ``take``+sum) followed by
-    ``TakeOrderedAndProject`` for the global top-k (no full sort).
-
-    Returns ``(id_col, adc_dist)`` ascending.  With ``normalize=True``
-    (the fit/encode convention) ADC distance ≈ 2 − 2·cosine, so
-    ranking matches the exact cosine operators and recall is
-    re-rankable against them."""
-    import numpy as np
-    import pandas as pd
-
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, kc, ds = cb.shape
-    q = np.asarray(query, dtype=np.float64).ravel()
-    if q.size != m * ds:
-        raise ValueError(f"query dim {q.size} != codebook dim {m * ds}")
-    if normalize:
-        n = np.linalg.norm(q)
-        if n > 0:
-            q = q / n
-    # exact subspace distances: table[j, c] = ||q_j - cb[j, c]||²
-    table = np.stack(
-        [
-            ((cb[j] - q[j * ds : (j + 1) * ds]) ** 2).sum(axis=1)
-            for j in range(m)
-        ]
-    )  # (m, kc)
-    schema = f"{id_col} long, adc_dist double"
-
-    def gen(batches):
-        for pdf in batches:
-            raw = np.frombuffer(
-                b"".join(pdf[code_col]), dtype=np.uint8
-            ).reshape(-1, m)
-            dist = table[np.arange(m)[None, :], raw].sum(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "adc_dist": dist}
-            )
-
-    return (
-        codes.select(id_col, code_col)
-        .mapInPandas(gen, schema)
-        .orderBy("adc_dist", id_col)
-        .limit(k)
-    )
-
-
-def build_ivfpq_index(
-    emb: DataFrame,
-    centers,
-    codebooks,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
-) -> DataFrame:
-    """ONE-pass IVF+PQ index build (the FAISS IVFPQ layout): every
-    vector gets its coarse cell (argmax against the broadcast IVF
-    centroids) AND its byte-packed PQ code in a single Arrow map stage
-    — no second corpus scan, no id join.  Returns
-    ``(id_col, cell int, pq_code binary)``: the persistable compressed
-    index (≈ m+4 bytes/vector).  Both model artifacts ride the closure
-    (centers C×D, codebooks m×k×D/m — KBs)."""
-    import numpy as np
-    import pandas as pd
-
-    cent = np.ascontiguousarray(centers, dtype=np.float64)
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, kc, ds = cb.shape
-    half_c2 = 0.5 * (cb * cb).sum(axis=2)
-    half_cent2 = 0.5 * (cent * cent).sum(axis=1)[None, :]
-    schema = f"{id_col} long, cell int, pq_code binary"
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if x.ndim != 2 or x.shape[1] != m * ds:
-                raise ValueError(
-                    f"embedding dim mismatch vs codebooks (m={m}, ds={ds})"
-                )
-            if normalize:
-                nrm = np.linalg.norm(x, axis=1, keepdims=True)
-                nrm[nrm == 0] = 1.0
-                x = x / nrm
-            cells = (x @ cent.T - half_cent2).argmax(axis=1).astype(
-                np.int32
-            )
-            codes = np.empty((len(x), m), dtype=np.uint8)
-            for j in range(m):
-                scores = x[:, j * ds : (j + 1) * ds] @ cb[j].T - half_c2[j]
-                codes[:, j] = scores.argmax(axis=1).astype(np.uint8)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "cell": cells,
-                    "pq_code": [c.tobytes() for c in codes],
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
-def pq_topk_ivf(
-    index: DataFrame,
-    centers,
-    codebooks,
-    query,
-    *,
-    n_probe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-    normalize: bool = True,
-) -> DataFrame:
-    """IVF+PQ top-k (the production ANN shape): the query picks its
-    ``n_probe`` nearest coarse cells DRIVER-SIDE (C-sized arithmetic),
-    the compressed index is filtered to those cells (a partition-
-    prunable ``isin`` over ~n_probe/C of the corpus), and the ADC scan
-    of :func:`pq_topk` ranks only the survivors — candidate volume and
-    bytes touched both shrink by the same factor.  Recall is tuned by
-    ``n_probe`` exactly as in :func:`cosine_topk_ivf`; the shortlist
-    should be exact-re-ranked downstream."""
-    import numpy as np
-
-    cent = np.ascontiguousarray(centers, dtype=np.float64)
-    q = np.asarray(query, dtype=np.float64).ravel()
-    if normalize:
-        n = np.linalg.norm(q)
-        if n > 0:
-            q = q / n
-    d2 = ((cent - q[None, :]) ** 2).sum(axis=1)
-    short = [int(c) for c in np.argsort(d2)[:n_probe]]
-    cands = index.filter(F.col("cell").isin(short))
-    return pq_topk(
-        cands,
-        codebooks,
-        query,
-        k=k,
-        id_col=id_col,
-        code_col=code_col,
-        normalize=normalize,
-    )
-
-
-def pq_topk_batch(
-    codes: DataFrame,
-    codebooks,
-    queries,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-    normalize: bool = True,
-) -> DataFrame:
-    """Batched ADC top-k: ALL Q queries scan the compressed corpus in
-    ONE pass (a Q×m×k' distance-table stack rides the closure; per
-    batch the lookup is one vectorized gather giving a (B, Q) distance
-    matrix), then a per-query window ranks.  Q single-query
-    :func:`pq_topk` calls cost Q corpus scans; this costs one — the
-    shape an offline kNN-join (dedup, retrieval eval) actually runs.
-    Returns ``(query_id, id_col, adc_dist)``, k rows per query."""
-    import numpy as np
-    import pandas as pd
-
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, kc, ds = cb.shape
-    q = np.ascontiguousarray(queries, dtype=np.float64)
-    if q.ndim != 2 or q.shape[1] != m * ds:
-        raise ValueError(
-            f"queries must be (Q, {m * ds}); got {q.shape}"
-        )
-    if normalize:
-        # per-row 1-D norm (BLAS dot), NOT the axis= reduction: the two
-        # differ in the last ulp and must match pq_topk bit-for-bit
-        q = np.stack(
-            [
-                qi / n if (n := np.linalg.norm(qi)) > 0 else qi
-                for qi in q
-            ]
-        )
-    # table[qi, j, c] = ||q_sub - cb[j, c]||² — built with the IDENTICAL
-    # per-subspace reduction as pq_topk so batched results are
-    # bit-equal to single-query results (a fused broadcast sum differs
-    # in the last ulp and breaks ranking ties)
-    table = np.stack(
-        [
-            np.stack(
-                [
-                    ((cb[j] - q[qi, j * ds : (j + 1) * ds]) ** 2).sum(axis=1)
-                    for j in range(m)
-                ]
-            )
-            for qi in range(len(q))
-        ]
-    )  # (Q, m, kc)
-    nq = len(q)
-    schema = f"query_id int, {id_col} long, adc_dist double"
-
-    def gen(batches):
-        for pdf in batches:
-            raw = np.frombuffer(
-                b"".join(pdf[code_col]), dtype=np.uint8
-            ).reshape(-1, m)
-            # per-query 2-D gather+sum — the EXACT single-query
-            # arithmetic (a fused 3-D gather is non-contiguous and its
-            # strided reduction differs in the last ulp, breaking
-            # bit-parity with pq_topk); Q is small, B stays vectorized
-            gi = np.arange(m)[None, :]
-            dist = np.stack(
-                [table[qi][gi, raw].sum(axis=1) for qi in range(nq)]
-            )
-            b = raw.shape[0]
-            ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(np.arange(nq, dtype=np.int32), b),
-                    id_col: np.tile(ids, nq),
-                    "adc_dist": dist.ravel(),
-                }
-            )
-
-    scored = codes.select(id_col, code_col).mapInPandas(gen, schema)
-    w = Window.partitionBy("query_id").orderBy("adc_dist", id_col)
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", id_col, "adc_dist")
-    )

@@ -26,6 +26,7 @@ Design decisions for 100 TB scale:
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
@@ -128,6 +129,8 @@ _SPREAD_BYTES_CONF = "spark.ebw.spreadPartitionBytes"
 # spark.ebw.blobRowsPerPartition so the packed-blob coalesce becomes a
 # no-op instead of a second shuffle.
 _SPREAD_BYTES_DEFAULT = 2 * 1024 * 1024
+# set once the size-estimate fallback below has been logged in this process
+_SPREAD_FALLBACK_WARNED = False
 
 
 def _spread_width(rows: DataFrame) -> int | None:
@@ -164,7 +167,18 @@ def _spread_width(rows: DataFrame) -> int | None:
         est = int(
             rows._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:  # pragma: no cover - JVM estimate unavailable
+    except Exception as exc:
+        # private JVM chain: a Spark upgrade that breaks it must not
+        # silently restore the full-width spread
+        global _SPREAD_FALLBACK_WARNED
+        if not _SPREAD_FALLBACK_WARNED:
+            _SPREAD_FALLBACK_WARNED = True
+            logging.getLogger("entropy_balance_weighting_spark").warning(
+                "spread_width_fallback: optimizer size estimate unavailable "
+                "(%r); small inputs spread to all %d cores",
+                exc,
+                cores,
+            )
         return cores
     return min(cores, max(2, -(-est // spread_bytes)))
 

@@ -201,216 +201,6 @@ def s10_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "s11_warc_scan",
-    survey="ext:source-warc",
-    oracle="""
-SELECT source, count(*) AS n_docs,
-       CAST(sum(octet_length(encode(text))) AS BIGINT) AS body_bytes,
-       CAST(min(doc_id) AS BIGINT) AS min_id,
-       CAST(max(doc_id) AS BIGINT) AS max_id
-FROM documents GROUP BY source ORDER BY source
-""",
-)
-def s11_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC (ISO 28500 / Common Crawl) sink + source roundtrip — the
-    on-disk format of a 100 TB web corpus.  ``documents`` rows become
-    spec-shaped ``response`` records (gzip member-per-record, the
-    streamable Common Crawl convention) via
-    :func:`sources.warc.write_warc`, are read back with
-    :func:`sources.warc.read_warc` (binaryFile scan → one map stage,
-    file = task: gzip is not splittable, so file-level sharding is the
-    production parallelism unit), and aggregated per source with the
-    doc id recovered from the target URI.  The oracle computes the same
-    aggregate from the original parquet; any record loss, payload
-    corruption, or URI drift fails the hash."""
-    from entropy_balance_weighting_spark.sources.warc import (
-        read_warc,
-        write_warc,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.concat(
-            F.lit("http://"),
-            F.col("source"),
-            F.lit(".example.com/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-        F.col("text").alias("body"),
-    )
-    scratch = os.path.join(_SCRATCH, "s11_warc")
-    shutil.rmtree(scratch, ignore_errors=True)
-    write_warc(docs, scratch, n_files=4, id_col="doc_id")
-    back = read_warc(spark, scratch, glob="*.warc.gz")
-    return (
-        back.filter(F.col("warc_type") == "response")
-        .select(
-            F.regexp_extract("target_uri", r"http://([^.]+)\.", 1).alias(
-                "source"
-            ),
-            F.regexp_extract("target_uri", r"/(\d+)$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.length("payload").alias("nbytes"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nbytes").cast("long").alias("body_bytes"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"),
-        )
-        .orderBy("source")
-    )
-
-
-@register(
-    "s12_wet_roundtrip",
-    survey="ext:sink-wet",
-    oracle="""
-SELECT source, count(*) AS n_records,
-       CAST(sum(length(text)) AS BIGINT) AS text_chars,
-       CAST(min(doc_id) AS BIGINT) AS min_id,
-       CAST(max(doc_id) AS BIGINT) AS max_id
-FROM documents GROUP BY source ORDER BY source
-""",
-)
-def s12_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WET sink + source roundtrip — extracted-text interchange (Common
-    Crawl's WET convention: WARC ``conversion`` records, plain-UTF-8
-    block).  ``documents`` text leaves via
-    :func:`sources.warc.write_wet` (salt-hash sharding, one
-    applyInPandas exchange, gzip member-per-record) and comes back via
-    :func:`sources.warc.read_warc` (binaryFile scan → one map stage,
-    file = task), then aggregates per source with the doc id recovered
-    from the target URI.  The oracle recomputes from the original
-    parquet, so any record loss, UTF-8 payload corruption, or URI
-    drift fails the hash.  Complements s11 (response records / HTTP
-    bodies): this is the EXPORT half of acquisition→extraction."""
-    from entropy_balance_weighting_spark.sources.warc import (
-        read_warc,
-        write_wet,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.lit("http://"),
-            F.col("source"),
-            F.lit(".example.com/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-        F.col("text"),
-    )
-    scratch = os.path.join(_SCRATCH, "s12_wet")
-    shutil.rmtree(scratch, ignore_errors=True)
-    write_wet(docs, scratch, n_files=4, id_col="doc_id")
-    back = read_warc(spark, scratch, glob="*.warc.gz")
-    return (
-        back.filter(F.col("warc_type") == "conversion")
-        .select(
-            F.regexp_extract("target_uri", r"http://([^.]+)\.", 1).alias(
-                "source"
-            ),
-            F.regexp_extract("target_uri", r"/(\d+)$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            F.length(F.decode("payload", "UTF-8")).alias("nchars"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.sum("nchars").cast("long").alias("text_chars"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"),
-        )
-        .orderBy("source")
-    )
-
-
-@register(
-    "s13_token_shard_roundtrip",
-    survey="ext:source-token-shards",
-    oracle="""
-WITH tok AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('tok' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-           % 8 AS shard,
-         list_transform(
-           list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''),
-           w -> least(length(w), 1000)) AS ids
-  FROM documents
-), docs AS (
-  SELECT shard,
-         row_number() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-           AS doc_idx,
-         CAST(len(ids) AS BIGINT) AS n_tokens,
-         CAST(coalesce(list_sum(ids), 0) AS BIGINT) AS id_sum
-  FROM tok
-)
-SELECT shard, count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       CAST(sum(id_sum) AS BIGINT) AS total_id_sum,
-       CAST(sum(doc_idx * n_tokens) AS BIGINT) AS order_fingerprint,
-       CAST(0 AS BIGINT) AS n_truncated
-FROM docs GROUP BY shard ORDER BY shard
-""",
-)
-def s13_token_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-shard export → distributed re-read — the training-export
-    audit loop closed under one oracle.  Documents tokenize to small
-    ids (per-word ``least(length, 1000)`` — deterministic and
-    SQL-replayable), leave via :func:`sources.shards.write_token_shards`
-    (salt-hash sharding, docs sorted by id per shard, uint16 +
-    EOS-separator layout), and come back via
-    :func:`sources.shards.read_token_shards` (binaryFile → one Arrow
-    map stage, one task per shard, no shuffle).  The output aggregates
-    per shard: doc count, token count, token-id sum, and an
-    ORDER fingerprint (Σ doc_idx·n_tokens) that pins the writer's
-    within-shard sort; the oracle recomputes every column arithmetically
-    from the raw table — shard hash (same md5-prefix portable hash),
-    row_number ordering, token arithmetic — so a lost doc, a reordered
-    doc, a corrupted id, or a truncated tail (n_truncated) fails the
-    hash."""
-    from entropy_balance_weighting_spark.sources.shards import (
-        read_token_shards,
-        write_token_shards,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.transform(
-            F.filter(
-                F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != ""
-            ),
-            lambda w: F.least(F.length(w), F.lit(1000)).cast("int"),
-        ).alias("tokens"),
-    )
-    scratch = os.path.join(_SCRATCH, "s13_shards")
-    shutil.rmtree(scratch, ignore_errors=True)
-    write_token_shards(docs, scratch, n_shards=8, dtype="uint16")
-    back = read_token_shards(spark, scratch, dtype="uint16")
-    return (
-        back.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
-            F.sum(
-                F.aggregate(
-                    "tokens", F.lit(0).cast("long"), lambda a, x: a + x
-                )
-            ).cast("long").alias("total_id_sum"),
-            F.sum(F.col("doc_idx").cast("long") * F.col("n_tokens"))
-            .cast("long")
-            .alias("order_fingerprint"),
-            F.sum(F.col("truncated").cast("long")).alias("n_truncated"),
-        )
-        .orderBy("shard")
-    )
-
-
-@register(
     "s14_schema_evolution_scan",
     survey="ext:source-schema-evolution",
     oracle="""

@@ -1,20 +1,46 @@
 """Data-quality queries: referential audit, null profile, snapshot diff,
-column entropy.
+column entropy, key-skew profile — the audits run on a survey frame
+before it is reweighted.
 
-Split from the former monolithic pipeline.py (round-7 verdict item #6);
-registration names unchanged.  Hash-sensitive stages use the
-engine-portable md5-prefix hash so the DuckDB oracles replicate them
-bit-for-bit; float aggregates are rounded identically on both sides.
+Float aggregates are rounded identically on both sides so the DuckDB
+oracles match bit-for-bit.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entropy_balance_weighting_spark.functions import dedup, events, similarity
-from entropy_balance_weighting_spark.functions import multimodal, packing, sampling, text
 from entropy_balance_weighting_spark.queries.registry import register
 from entropy_balance_weighting_spark.session import load_table
+
+
+def snapshot_diff(
+    old_df: DataFrame,
+    new_df: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Corpus snapshot diff (the data-ops change audit between two
+    crawls/exports): classify every id as ``added`` (new only),
+    ``removed`` (old only), ``changed`` (both, content hash differs) or
+    ``unchanged``.  One FULL OUTER equi-join on the id comparing md5
+    content keys — 32 bytes per row cross the shuffle, never the texts.
+    Returns ``(id, status)``."""
+    o = old_df.select(
+        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("__ho")
+    )
+    n = new_df.select(
+        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("__hn")
+    )
+    j = o.join(n, "id", "full_outer")
+    status = (
+        F.when(F.col("__ho").isNull(), F.lit("added"))
+        .when(F.col("__hn").isNull(), F.lit("removed"))
+        .when(F.col("__ho") != F.col("__hn"), F.lit("changed"))
+        .otherwise(F.lit("unchanged"))
+    )
+    return j.select("id", status.alias("status"))
 
 
 @register(
@@ -94,8 +120,7 @@ def dq_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, per-column null counts, and exact distincts for the key
     columns, all in ONE aggregate — Spark plans the multi-distinct via
     one Expand (no per-column scans).  At 100 TB swap the exact
-    distincts for ``approx_count_distinct`` (mergeable HLL) — the same
-    swap `txt_vocab_size_approx` demonstrates."""
+    distincts for ``approx_count_distinct`` (mergeable HLL)."""
     ev = load_table(spark, sf_dir, "events")
     nulls = [
         (F.count(F.lit(1)) - F.count(c)).cast("long").alias(f"null_{c}")
@@ -131,7 +156,7 @@ SELECT status, count(*) AS n FROM j GROUP BY status ORDER BY status
 """,
 )
 def dq_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus snapshot diff (:func:`functions.dedup.snapshot_diff`):
+    """Corpus snapshot diff (:func:`snapshot_diff`):
     classify ids as added / removed / changed / unchanged between two
     snapshots — the change audit run between crawls.  One FULL OUTER
     equi-join comparing md5 content keys (32 bytes/row over the shuffle,
@@ -145,7 +170,7 @@ def dq_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % 10 == 0, F.concat(F.col("text"), F.lit(" rev2"))
         ).otherwise(F.col("text")).alias("text"),
     )
-    diff = dedup.snapshot_diff(old, new)
+    diff = snapshot_diff(old, new)
     return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n")).orderBy("status")
 
 

@@ -1,18 +1,16 @@
 """Sampling queries: stratified, shuffle-order, domain-mix,
 fixed-k-per-stratum, score-weighted.
 
-Split from the former monolithic pipeline.py (round-7 verdict item #6);
-registration names unchanged.  Hash-sensitive stages use the
-engine-portable md5-prefix hash so the DuckDB oracles replicate them
-bit-for-bit; float aggregates are rounded identically on both sides.
+Hash-sensitive stages use the engine-portable md5-prefix hash so the
+DuckDB oracles replicate them bit-for-bit; float aggregates are rounded
+identically on both sides.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entropy_balance_weighting_spark.functions import dedup, events, similarity
-from entropy_balance_weighting_spark.functions import multimodal, packing, sampling, text
+from entropy_balance_weighting_spark.functions import sampling
 from entropy_balance_weighting_spark.queries.registry import register
 from entropy_balance_weighting_spark.session import load_table
 
@@ -81,7 +79,7 @@ def samp_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df.repartitionByRange(shuffle_key).sortWithinPartitions`` (range
     sort, no single-partition window)."""
     docs = load_table(spark, sf_dir, "documents")
-    key = text.portable_hash32(
+    key = sampling.portable_hash32(
         F.concat(F.lit("ep0"), F.col("doc_id").cast("string"))
     )
     return (

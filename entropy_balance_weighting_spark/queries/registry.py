@@ -34,162 +34,15 @@ def register(
     return deco
 
 
-# Enumeration priority for the external correctness driver.  The driver
-# checks a bounded window of queries in enumeration order (rounds 4-6
-# recorded exactly the first 50), so the queries whose driver verification
-# matters most MUST enumerate first.  With 80+ registered queries and 50
-# slots, full single-round freshness is impossible; we run a two-round
-# rotation.  Rounds 5-6 maintained the rotation by hand-editing a static
-# list each round, which produced an off-by-one in round 6 (51 entries
-# above the intended boundary, silently dropping e9_string_prep from the
-# window).  Since round 7 the order is DERIVED mechanically:
-#
-#   1. ``PINNED`` — the solver end-to-end proofs + the flagship moment
-#      query and Gram self-join, always in the window;
-#   2. every other registered query, sorted by the round of its most
-#      recent green driver row (ascending — never-checked and new
-#      queries sort first with round -1), scanned from the
-#      ``CORRECTNESS_r*.json`` files the driver itself writes at the
-#      repo root.  Ties break by registration order.
-#
-# So whatever queries the last window covered automatically rotate OUT,
-# the stalest rotate IN, and a new query can never land below the
-# boundary.  ``tests/test_entry.py`` asserts the invariants (pinned
-# first, staleness-monotone, nothing below slot DRIVER_WINDOW older
-# than the latest recorded round).
-PINNED: list[str] = [
-    "ebw_solver_moment_match",
-    "ebw_bounded_solver_match",
-    "ebw_penalty_gap_reduction",
-    "a3_gram_selfjoin",
-    "a1_weighted_moment_totals",
-]
-
-# Queries whose PLAN or ORACLE changed in the CURRENT round: forced into
-# the driver window right after PINNED, regardless of rotation staleness
-# (r11 ADVICE: the rotation once left the only two just-modified queries
-# out of the round's sample, so the round's green evidence for exactly
-# the changed code was stale).  Reset to the new round's changes each
-# round; stale entries are harmless (they just pin freshness one extra
-# round).
-FORCE_FRESH: list[str] = [
-    # r14: EMPTY.  The r13 entries (txt_quality_deciles, dd_fuzzy_join,
-    # mm_pdf_text, txt_langid_nb_confusion) all got green r13 driver rows
-    # (CORRECTNESS_r13.json) and keeping them forced would starve two
-    # 2-rounds-stale r11 queries out of the r14 window — the inherited
-    # tree failed test_staleness_budget for exactly that reason once the
-    # driver committed CORRECTNESS_r13.json.  With the head freed, the
-    # window is 5 pinned + all 43 r11-stale + 2 r12 slots.
-]
-
-# Queries whose PLAN changed in round <value> while their latest green
-# driver row predates it (r13 verdict item 2): used as a SECONDARY sort
-# key inside the staleness rotation, so spare window capacity after the
-# 2-rounds-stale demand goes to changed-but-unverified plans first.  It
-# never reorders across staleness rounds (the tail stays
-# staleness-monotone) and never displaces a 2-rounds-stale query, so the
-# staleness budget invariant is untouched.
-PLAN_CHANGED: dict[str, int] = {
-    # r13 recompute-sweep plan changes whose last green row is r12
-    # (plans/r13/<q>_{before,after}.txt); the r11-green sweep queries
-    # rotate in mechanically and the r13-green ones are already proven.
-    "ev_funnel_steps": 13,
-    "ev_retention_cohorts": 13,
-    "mm_jpeg_decode": 13,
-    "mm_wav_decode": 13,
-    "mm_png_decode": 13,
-    "mm_gif_decode": 13,
-}
-
 # Observed driver window size (rounds 4-6 all recorded exactly 50 rows).
+# The registry must fit inside it, so every query is oracle-checked every
+# round in registration order (``tests/test_entry.py`` guards the bound).
 DRIVER_WINDOW = 50
 
 
-def _repo_root() -> "Path":
-    from pathlib import Path
-
-    return Path(__file__).resolve().parents[2]
-
-
-def driver_history() -> dict[str, int]:
-    """Latest round in which each query got a green driver row.
-
-    Scanned from the ``CORRECTNESS_r*.json`` files the external driver
-    commits to the repo root after each round; a row counts as green when
-    it has no error and the row counts matched (hash/rows-only both
-    qualify — either proves the query ran under the driver).  Queries
-    never seen return no entry (callers treat that as round -1, i.e.
-    maximally stale).
-    """
-    import json
-    import re
-
-    hist: dict[str, int] = {}
-    for path in sorted(_repo_root().glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", path.name)
-        if m is None:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if isinstance(row, dict) and row.get("err") is None and row.get("rows_match"):
-                hist[name] = max(hist.get(name, 0), rnd)
-    return hist
-
-
-def enumeration_priority() -> list[str]:
-    """Mechanically derived driver enumeration order (see module comment):
-    PINNED, then FORCE_FRESH (this round's plan/oracle changes), then
-    everything else stalest-first."""
-    hist = driver_history()
-    reg_order = {name: i for i, name in enumerate(QUERIES)}
-    pinned = [n for n in PINNED if n in QUERIES]
-    head_set = set(pinned)
-    forced = [
-        n for n in FORCE_FRESH if n in QUERIES and n not in head_set
-    ]
-    head_set.update(forced)
-    rest = [n for n in QUERIES if n not in head_set]
-    rest.sort(
-        key=lambda n: (
-            hist.get(n, -1),
-            # changed-plan queries first within equal staleness (see
-            # PLAN_CHANGED): a plan change newer than the last green row
-            # means the green evidence is stale for the current code
-            -(PLAN_CHANGED.get(n, -1) > hist.get(n, -1)),
-            reg_order[n],
-        )
-    )
-    return pinned + forced + rest
-
-
-def __getattr__(name: str):
-    # Computed lazily so the ordering reflects queries registered after
-    # this module is first imported (the query modules import `register`
-    # from here, so a static list at import time would be empty).
-    if name == "ENUMERATION_PRIORITY":
-        return enumeration_priority()
-    raise AttributeError(name)
-
-
-def _ordered() -> list[tuple[str, Query]]:
-    rank = {name: i for i, name in enumerate(enumeration_priority())}
-    fallback = len(rank)
-    reg_order = {name: i for i, name in enumerate(QUERIES)}
-    return sorted(
-        QUERIES.items(),
-        key=lambda kv: (rank.get(kv[0], fallback), reg_order[kv[0]]),
-    )
-
-
 def query_fns() -> dict[str, QueryFn]:
-    return {name: q.fn for name, q in _ordered()}
+    return {name: q.fn for name, q in QUERIES.items()}
 
 
 def oracle_map() -> dict[str, str]:
-    return {name: q.oracle for name, q in _ordered() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}

@@ -339,3 +339,96 @@ def ebw_estimator_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("converged", F.lit(converged))
         .orderBy("moment_name")
     )
+
+
+@register(
+    "txt_domain_reweight",
+    survey="ext:mixing-entropy-balance (C4,A10,G1 composition)",
+    oracle="""
+WITH f AS (
+  SELECT source,
+         CAST(length(text) AS DOUBLE) AS n_chars,
+         CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
+                              x -> x <> '')) AS DOUBLE) AS n_words
+  FROM documents
+), tot AS (
+  SELECT CAST(count(*) AS DOUBLE) AS s FROM f
+), long AS (
+  SELECT 'grp=' || source || '|n_chars' AS moment_name, n_chars AS value,
+         source FROM f
+  UNION ALL
+  SELECT 'grp=' || source || '|n_words', n_words, source FROM f
+)
+SELECT moment_name,
+       round(sum(value) / (SELECT s FROM tot)
+             * CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0
+                    THEN 1.02 ELSE 0.98 END, 6) AS achieved_wmean,
+       1 AS converged
+FROM long GROUP BY moment_name, source ORDER BY moment_name
+""",
+)
+def txt_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-data DOMAIN MIXING via the entropy-balance solver — the
+    engine's two halves composed: per-source document moments (mean
+    chars and words per doc, ``group=source`` → block-diagonal K=40)
+    are driven to a target mix (+2% for even-numbered sources, −2% for
+    odd — the DoReMi-style 'reweight domains toward a target
+    distribution' move, done as exact moment matching with minimum-KL
+    weight change and production bounds 0.2–5×).  The oracle computes
+    the TARGETS arithmetically from the raw table; a converged bounded
+    elastic solve reproduces them to ~1e-9 relative, so the rounded
+    achieved means hash-match — the full chain (feature prep → grouped
+    MomentSpec → packing → elastic IP → weights → achieved moments)
+    under one oracle.  100 TB shape: this is exactly the reference's
+    production regime (bounded + grouped) applied to corpus curation;
+    everything scales as the solver does (2 map-only jobs/iteration,
+    Σk_b² gram tiles)."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        F.lit(1.0).alias("w"),
+        F.length("text").cast("double").alias("n_chars"),
+        F.size(
+            F.filter(
+                F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != ""
+            )
+        ).cast("double").alias("n_words"),
+    )
+    spec = MomentSpec(
+        weight_col="w",
+        numeric=("n_chars", "n_words"),
+        group=("source",),
+        row_key=("doc_id",),
+    )
+    pt = build_problem_tables(docs, spec)
+    factor = F.when(
+        F.regexp_extract(F.col("moment_name"), r"grp=src(\d+)\|", 1)
+        .cast("int") % 2 == 0,
+        F.lit(1.02),
+    ).otherwise(F.lit(0.98))
+    targets = targets_from_problem(pt).withColumn(
+        "target", F.col("target") * factor
+    )
+    res = entropy_balance(
+        mean_population_moments=targets,
+        x_sample=pt,
+        options={"bounds": (0.2, 5.0), "force_distributed": True},
+    )
+    from entropy_balance_weighting_spark.operators.weighted_moments import (
+        weighted_moment_totals,
+    )
+
+    achieved = weighted_moment_totals(
+        pt.x_long, res.new_weights, weight_col="new_weight"
+    ).join(F.broadcast(pt.moments), "moment_id")
+    sum_w0 = pt.w0.agg(F.sum("w0")).first()[0]
+    return (
+        achieved.select(
+            "moment_name",
+            F.round(F.col("total") / F.lit(sum_w0), 6).alias(
+                "achieved_wmean"
+            ),
+            F.lit(1 if res.converged else 0).alias("converged"),
+        )
+        .orderBy("moment_name")
+    )

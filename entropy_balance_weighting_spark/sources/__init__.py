@@ -1,37 +1,12 @@
-"""Sources & sinks: problem-bundle serialization (SURVEY §2.1 S2/S3),
-storage layout (partitioned/bucketed parquet), deterministic
-train/val/test split writing with an audit manifest, the
-training-export token-shard sink (Megatron-style .bin + manifest),
-and the WARC web-archive source/sink (ISO 28500 / Common Crawl)."""
+"""Sources & sinks: problem-bundle serialization (SURVEY §2.1 S2/S3) and
+storage layout (partitioned/bucketed parquet)."""
 
 from entropy_balance_weighting_spark.sources.layout import (
     write_bucketed,
     write_partitioned,
 )
-from entropy_balance_weighting_spark.sources.shards import (
-    read_token_shard,
-    read_token_shards,
-    write_token_shards,
-)
-from entropy_balance_weighting_spark.sources.splits import (
-    split_column,
-    write_splits,
-)
-from entropy_balance_weighting_spark.sources.warc import (
-    read_warc,
-    write_warc,
-    write_wet,
-)
 
 __all__ = [
-    "read_token_shard",
-    "read_token_shards",
-    "read_warc",
-    "split_column",
     "write_bucketed",
     "write_partitioned",
-    "write_splits",
-    "write_token_shards",
-    "write_warc",
-    "write_wet",
 ]

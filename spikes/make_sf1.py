@@ -10,16 +10,13 @@ sf0.1's value marginals exactly):
   copy, so key structure (uniqueness, joinability, Morton spans) scales
   the way TPC-H's generator scales it.
 - ``documents``: ``doc_id`` offset per copy; text UNCHANGED.  That is
-  distribution-faithful for SCAN/AGGREGATE shapes (heavy hitters,
-  quality stats: counts just scale ×10) but NOT for pairwise-similarity
-  shapes — 10 exact twins per doc would inflate LSH candidate volume
-  quadratically — so the sf1 bench runs only the entries listed in
-  ``SF1_ENTRIES`` below and dedup/ANN entries are EXCLUDED by design
-  (documented, not silently dropped).
+  distribution-faithful for SCAN/AGGREGATE shapes (counts just scale
+  ×10), so the sf1 bench runs only the entries listed in ``SF1_ENTRIES``
+  below.
 
 Usage:  python spikes/make_sf1.py   (writes .scratch/sf1/*.parquet)
 Then:   SPARK_GRAFT_SF_DIR=$PWD/.scratch/sf1 \
-        SPARK_GRAFT_BENCH_ONLY=m1_problem_table_stats,txt_heavy_hitters \
+        SPARK_GRAFT_BENCH_ONLY=m1_problem_table_stats \
         python bench.py
 (the solver e2e entries run unconditionally from bench.py's
 _solver_bench and are the headline compute-bound measurement).
@@ -33,7 +30,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-SF1_ENTRIES = ["m1_problem_table_stats", "txt_heavy_hitters"]
+SF1_ENTRIES = ["m1_problem_table_stats"]
 COPIES = 10
 
 

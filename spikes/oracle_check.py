@@ -1,8 +1,8 @@
-"""Local replay of the driver's oracle compare for a named subset of
-registered queries (sf0.01 default): runs the Spark query and its DuckDB
-oracle side by side, sorts columns by name and rows by value, compares.
+"""Local replay of the external oracle compare for registered queries
+(sf0.01): runs the Spark query and its DuckDB oracle side by side, sorts
+columns by name and rows by value, compares.
 
-Usage: python spikes/oracle_check.py q1 q2 ...   (no names → FORCE_FRESH)
+Usage: python spikes/oracle_check.py [q1 q2 ...]   (no names → every query)
 """
 
 from __future__ import annotations
@@ -25,14 +25,9 @@ def main() -> int:
     from entropy_balance_weighting_spark.session import get_spark
 
     sf_dir = "/root/testdata/sf0.01"
-    names = sys.argv[1:]
-    if not names:
-        from entropy_balance_weighting_spark.queries.registry import FORCE_FRESH
-
-        names = list(FORCE_FRESH)
-
     spark = get_spark()
     qs = entry.queries()
+    names = sys.argv[1:] or list(qs)
     oracles = entry.oracle_sql()
     con = duckdb.connect()
     for t in TABLES:

@@ -55,10 +55,9 @@ def main() -> None:
 
     if not names:
         names = [
-            "txt_repetition", "txt_quality_stats", "txt_seq_packing",
-            "txt_rag_chunks", "sim_hamming_topk", "sim_cosine_topk",
-            "emb_quantize_int8", "dd_exact_dedup", "dd_decontaminate",
-            "dd_bloom_screen", "txt_heavy_hitters", "txt_tfidf_topterms",
+            "samp_stratified", "samp_shuffle_order", "samp_domain_mix",
+            "samp_fixed_per_stratum", "samp_quality_weighted",
+            "dq_column_entropy", "dq_snapshot_diff",
         ]
 
     def run_once(name: str, spread: bool) -> float:

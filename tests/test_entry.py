@@ -20,128 +20,19 @@ def test_queries_and_oracles_aligned():
     assert set(oracles).issubset(set(qs))
 
 
-def test_enumeration_priority_matches_registry():
-    """The mechanically derived enumeration order must cover every
-    registered query exactly once — a query missing from the order (or a
-    duplicate) would reintroduce the never-driver-checked class the
-    round-5 verdict flagged."""
-    from entropy_balance_weighting_spark.queries.registry import (
-        ENUMERATION_PRIORITY,
-        QUERIES,
-    )
-
-    assert sorted(ENUMERATION_PRIORITY) == sorted(QUERIES)
-    assert len(ENUMERATION_PRIORITY) == len(set(ENUMERATION_PRIORITY))
-
-
-def test_enumeration_rotation_invariants():
-    """Invariants of the round-7 mechanical rotation:
-
-    1. the pinned solver proofs enumerate first, in order, then this
-       round's FORCE_FRESH plan/oracle changes (r11 ADVICE: a changed
-       query must re-green in the SAME round, regardless of rotation);
-    2. the remaining tail is sorted by staleness (least-recently
-       driver-checked first), so the driver's 50-slot window always
-       takes the stalest queries;
-    3. two consecutive rounds union to full coverage whenever capacity
-       allows: queries older than the latest recorded round may fall
-       below the window ONLY when never-checked + stale demand exceeds
-       the window (inevitable after adding many queries in one round),
-       and then the overflow must be exactly the unavoidable minimum and
-       must consist of already-checked queries (a brand-new query must
-       never be the one dropped).
-    """
+def test_registry_fits_correctness_window():
+    """The external correctness check runs at most DRIVER_WINDOW queries
+    per round, in enumeration order.  Every registered query must fit
+    inside it and be enumerated exactly once, so each one is
+    oracle-checked every round; a bulk addition past the window fails
+    here instead of needing a rotation."""
     from entropy_balance_weighting_spark.queries.registry import (
         DRIVER_WINDOW,
-        FORCE_FRESH,
-        PINNED,
         QUERIES,
-        driver_history,
-        enumeration_priority,
     )
 
-    order = enumeration_priority()
-    assert order[: len(PINNED)] == [n for n in PINNED if n in QUERIES]
-    forced = [
-        n for n in FORCE_FRESH if n in QUERIES and n not in PINNED
-    ]
-    head = len(PINNED) + len(forced)
-    assert order[len(PINNED) : head] == forced
-    assert head <= DRIVER_WINDOW, "forced-fresh set larger than the window"
-
-    hist = driver_history()
-    head_names = set(order[:head])
-    tail_rounds = [hist.get(n, -1) for n in order[head:]]
-    assert tail_rounds == sorted(tail_rounds), "rotation tail not staleness-sorted"
-
-    if hist:
-        latest = max(hist.values())
-        capacity = DRIVER_WINDOW - head
-        demand = sum(
-            1
-            for n in QUERIES
-            if n not in head_names and hist.get(n, -1) < latest
-        )
-        overflow = max(0, demand - capacity)
-        below = order[DRIVER_WINDOW:]
-        stale_below = [n for n in below if hist.get(n, -1) < latest]
-        assert len(stale_below) <= overflow, (
-            f"{len(stale_below)} queries older than round {latest} fell below "
-            f"the {DRIVER_WINDOW}-slot driver window but only {overflow} "
-            f"were unavoidable: {stale_below[:5]}..."
-        )
-        assert all(n in hist for n in stale_below), (
-            "a never-driver-checked query was dropped below the window: "
-            f"{[n for n in stale_below if n not in hist][:5]}"
-        )
-
-
-def test_staleness_budget():
-    """Registry-size budget (r7 verdict item #2): with W driver slots, P
-    of them pinned, and M non-pinned queries, perfect rotation re-greens
-    each query every ceil(M / (W - P)) rounds — so a query's staleness
-    (rounds since last green) peaks at ceil(M / cap) - 1.  Keeping that
-    peak <= 2 rounds requires M <= 3 * (W - P).  This test makes the
-    budget explicit so a bulk query addition that would push ANY query
-    past 2-rounds-stale fails loudly and becomes a conscious trade
-    (grow the window understanding, prune queries, or accept by
-    amending this budget with a comment).
-
-    Also asserts the budget is honored in realized history: any query
-    already 2 rounds stale must be inside the upcoming driver window,
-    i.e. about to be re-greened, never silently sliding to 3.
-    """
-    from entropy_balance_weighting_spark.queries.registry import (
-        DRIVER_WINDOW,
-        PINNED,
-        QUERIES,
-        driver_history,
-        enumeration_priority,
-    )
-
-    cap = DRIVER_WINDOW - len(PINNED)
-    M = len(QUERIES) - len(PINNED)
-    assert M <= 3 * cap, (
-        f"{M} rotating queries over {cap} slots/round implies a "
-        f"worst-case inter-green gap of {-(-M // cap)} rounds "
-        f"(staleness {-(-M // cap) - 1} > 2). Prune queries or "
-        f"consciously amend the budget."
-    )
-
-    hist = driver_history()
-    if not hist:
-        return
-    latest = max(hist.values())
-    window = set(enumeration_priority()[:DRIVER_WINDOW])
-    too_stale = [
-        n
-        for n in QUERIES
-        if hist.get(n, latest) <= latest - 2 and n not in window
-    ]
-    assert not too_stale, (
-        f"queries already 2+ rounds stale are NOT in the upcoming driver "
-        f"window and would reach 3-rounds stale: {too_stale}"
-    )
+    assert len(QUERIES) <= DRIVER_WINDOW
+    assert sorted(entrymod.queries()) == sorted(QUERIES)
 
 
 def test_queries_md_index_is_current():

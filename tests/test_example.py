@@ -26,63 +26,3 @@ def test_survey_reweighting_example_end_to_end(spark):
     # reweighting preserved every row and correlates with the start weights
     assert out["n_reweighted"] == out["n"]
     assert 0.0 < out["weight_corr"] <= 1.0 + 1e-9
-
-
-def test_corpus_curation_example_end_to_end(spark):
-    from examples.corpus_curation import main as curation_main
-
-    out = curation_main(SF_DIR, spark=spark)
-    # the funnel only narrows
-    assert (
-        out["n_raw"]
-        >= out["n_quality"]
-        >= out["n_lm_gate"]
-        >= out["n_policy"]
-        >= out["n_exact_dedup"]
-        >= out["n_near_dedup"]
-        >= out["n_span_screened"]
-        >= out["n_decontaminated"]
-        >= out["n_semantic_dedup"]
-        >= out["n_domain_mixed"]
-    )
-    assert out["n_domain_mixed"] > 0
-    # chunk fan-out: at least one chunk per surviving doc
-    assert out["n_rag_chunks"] >= out["n_domain_mixed"]
-    # decontamination against a slice of the corpus itself must drop the
-    # overlapping docs but not empty the corpus
-    assert 0 < out["n_decontaminated"] < out["n_raw"]
-    assert out["n_contexts"] > 0
-    assert out["avg_context_tokens"] > 0
-    # the shard export records exactly the mixed corpus
-    assert out["n_exported_docs"] == out["n_domain_mixed"]
-    assert out["n_exported_tokens"] > 0
-    # video triage: exactly the 1080p half of the synthetic MP4s survives
-    # the header-only resolution filter (no frame decode anywhere)
-    assert out["n_videos_hd"] == 4
-    # crawl ingest: every document survives the WARC round trip and the
-    # HTML strip recovers non-empty text for each
-    assert out["n_warc_records"] == out["n_raw"]
-    assert out["n_html_extracted"] == out["n_raw"]
-    # caption sidecar: every synthetic SRT doc yields a transcript with
-    # the full 4.5 s on-screen span
-    assert out["n_caption_docs"] == 40
-
-
-def test_crawl_frontier_example_end_to_end(spark):
-    from examples.crawl_frontier import main as frontier_main
-
-    out = frontier_main(SF_DIR, spark=spark)
-    # 500 docs: +100 upper-cased duplicate seeds (ids %4==0, %5!=0)
-    assert out["n_seeds"] == 600
-    # robots walls off the 100 /private/ ids (%5==0)
-    assert out["n_polite"] == 500
-    # url_normalize collapses the 100 case-variant duplicates
-    assert out["n_frontier"] == 400
-    # every canonical allowed page fetches, extracts, and links once
-    assert out["n_fetched"] == 400
-    assert out["n_edges"] == 400
-    # the ring links stay inside the fetched set ((id+20)%500 keeps the
-    # id%5 class, so no edge points at a never-fetched private page)
-    assert out["n_ranked"] == 400
-    # PageRank conserves mass to the node count
-    assert abs(out["rank_mass"] - 400.0) < 1e-6

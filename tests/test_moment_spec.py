@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -198,11 +200,12 @@ def test_interaction_collinear_problem_solves(spark):
         assert ach[mid] == pytest.approx(t, rel=1e-5)
 
 
-def test_spread_width_is_size_derived_and_self_disabling(spark):
+def test_spread_width_is_size_derived_and_self_disabling(spark, monkeypatch, caplog):
     """r14: the small-input spread derives its width from the optimizer's
     size estimate (clamped to [2, defaultParallelism]) instead of a
     full-width defaultParallelism wave; wide inputs skip the spread; a
-    non-positive conf restores the full-width behavior."""
+    non-positive conf restores the full-width behavior; a failing size
+    estimate falls back to full width with one named warning."""
     from entropy_balance_weighting_spark.plans.moment_spec import (
         _SPREAD_BYTES_CONF,
         _spread_width,
@@ -230,3 +233,29 @@ def test_spread_width_is_size_derived_and_self_disabling(spark):
         assert _spread_width(small) == cores
     finally:
         spark.conf.unset(_SPREAD_BYTES_CONF)
+
+    # the private JVM size-estimate chain failing falls back to the full
+    # width and says so, once per process
+    class _NoStats:
+        def __init__(self, jdf):
+            self._jdf = jdf
+
+        def __getattr__(self, name):
+            return getattr(self._jdf, name)
+
+        def queryExecution(self):
+            raise RuntimeError("size estimate unavailable")
+
+    from entropy_balance_weighting_spark.plans import moment_spec
+
+    monkeypatch.setattr(moment_spec, "_SPREAD_FALLBACK_WARNED", False)
+    broken = small.select("*")
+    monkeypatch.setattr(broken, "_jdf", _NoStats(broken._jdf))
+    with caplog.at_level(logging.WARNING, logger="entropy_balance_weighting_spark"):
+        assert _spread_width(broken) == cores
+        assert _spread_width(broken) == cores
+    fallbacks = [
+        r for r in caplog.records if r.getMessage().startswith("spread_width_fallback")
+    ]
+    assert len(fallbacks) == 1, caplog.records
+    assert fallbacks[0].levelno == logging.WARNING

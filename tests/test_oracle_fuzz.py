@@ -2,8 +2,7 @@
 DuckDB oracles on RANDOM corpora, not just the driver's fixed testdata —
 data-dependent engine divergences (regex whitespace classes, unicode
 hashing, empty strings, duplicate texts, single-doc sources) hide from a
-fixed fixture but not from this sweep.  The r5 BPE \\x0B fix is exactly
-the class of bug this test exists to catch."""
+fixed fixture but not from this sweep."""
 
 from __future__ import annotations
 
@@ -19,21 +18,11 @@ from tests.conftest import SF_SMOKE
 
 # document-only queries, cheap enough to run per fuzz example
 FUZZ_QUERIES = [
-    "txt_bpe_token_count",
-    "txt_vocab_size",
-    "txt_vocab_sketch_rollup",
-    "txt_len_kll_rollup",
-    "txt_rag_chunks",
-    "txt_unigram_logprob",
-    "txt_bigram_logprob",
-    "dd_exact_dedup",
     "dq_column_entropy",
-    "txt_langid_confusion",
     "samp_quality_weighted",
     "samp_fixed_per_stratum",
     "samp_shuffle_order",
     "samp_stratified",
-    "txt_blocklist_filter",
 ]
 
 # token alphabet stressing both engines' string paths: ascii, digits,

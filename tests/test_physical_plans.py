@@ -100,18 +100,6 @@ def test_builder_prepacked_arrays_have_no_shuffle(spark):
     assert a == b
 
 
-def test_embedding_near_dups_has_no_cartesian(spark):
-    """The registered near-dup query must candidate-generate via bucketed
-    (equi-join) cell pairs — a corpus×corpus theta-join (cartesian /
-    nested-loop) is the r2 scale-killer this pins against."""
-    from entropy_balance_weighting_spark.queries import QUERIES
-
-    df = QUERIES["dd_embedding_near_dups"].fn(spark, SF_CORRECTNESS)
-    plan = _plan(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_solver_iteration_pass_has_no_shuffle(spark):
     """The packed-kernel per-iteration jobs must be map-only: the packing
     shuffle happens once at construction; stats/step/commit scans reuse
@@ -156,34 +144,6 @@ def test_solver_iteration_pass_has_no_shuffle(spark):
     sums_b, mins_b = pass_rdd.collect()[0]
     assert len(sums_b) > 0 and len(mins_b) == 8
     kern.cleanup()
-
-
-def test_incremental_dedup_is_anti_join_no_smj(spark):
-    """dd_incremental_new_docs: corpus keys reduce to a DISTINCT aggregate
-    feeding a LEFT ANTI hash join (broadcast at dim scale); the arrivals
-    filter pushes to the scan; no sort-merge join, no cartesian."""
-    from entropy_balance_weighting_spark.queries import QUERIES
-
-    df = QUERIES["dd_incremental_new_docs"].fn(spark, SF_CORRECTNESS)
-    plan = _plan(df)
-    assert "LeftAnti" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    # the doc_id split predicates reach the parquet scans
-    assert "PushedFilters" in plan and "doc_id" in plan
-
-
-def test_sketch_rollups_use_partial_aggregation(spark):
-    """HLL and KLL sketch rollups must show map-side partial sketch
-    aggregation (the mergeable-sketch property IS the plan shape: partial
-    sketches combine before the exchange)."""
-    from entropy_balance_weighting_spark.queries import QUERIES
-
-    for q in ("txt_vocab_sketch_rollup", "txt_len_kll_rollup"):
-        plan = _plan(QUERIES[q].fn(spark, SF_CORRECTNESS))
-        assert "partial_" in plan, q
-        assert "ObjectHashAggregate" in plan or "HashAggregate" in plan, q
 
 
 def test_fixed_k_sample_single_exchange_no_global_sort(spark):

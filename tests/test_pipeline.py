@@ -1,131 +1,14 @@
-"""Tests for the LLM-data-pipeline extension surface: oracle parity at the
-smoke SF plus library-function behavior the oracles can't express (LSH
-recall, multimodal stub contract)."""
+"""Multimodal contracts that the media tests cannot express: payloads no
+codec here understands fail loudly, the fake decoder is exactly
+deterministic, feature extraction keeps its batch/schema contract, and
+resize and frame sampling keep their geometry."""
 
 from __future__ import annotations
 
-import duckdb
 import numpy as np
 import pytest
 
-from tests.conftest import SF_SMOKE, register_duck_views
-
-PIPELINE_QUERIES = [
-    "dd_exact_dedup",
-    "dd_minhash_near_dups",
-    "dd_simhash_clusters",
-    "sim_cosine_topk",
-    "txt_quality_stats",
-    "ev_tumbling_windows",
-    "ev_sessionization",
-    "ev_json_props",
-    "mm_feature_extract",
-]
-
-
-@pytest.mark.parametrize("name", PIPELINE_QUERIES)
-def test_pipeline_query_matches_oracle(spark, name):
-    from entropy_balance_weighting_spark.queries import QUERIES
-
-    q = QUERIES[name]
-    con = duckdb.connect()
-    register_duck_views(con, SF_SMOKE)
-    srows = sorted(
-        tuple(f"{v:.9g}" if isinstance(v, float) else repr(v) for v in r)
-        for r in q.fn(spark, SF_SMOKE).collect()
-    )
-    orows = sorted(
-        tuple(f"{v:.9g}" if isinstance(v, float) else repr(v) for v in r)
-        for r in con.execute(q.oracle).fetchall()
-    )
-    assert srows == orows
-
-
-def test_minhash_finds_planted_near_dups(spark):
-    """The synthetic corpus plants near-duplicates; LSH must surface pairs
-    with very high verified Jaccard."""
-    from entropy_balance_weighting_spark.functions.dedup import verified_near_dups
-    from entropy_balance_weighting_spark.session import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = verified_near_dups(docs, "doc_id", "text", threshold=0.8).collect()
-    assert len(pairs) > 0
-    assert max(r["jaccard"] for r in pairs) > 0.95
-
-
-def test_minhash_signature_carries_exact_shingle_count(spark):
-    """The fused ``n_sh`` aggregate (r13 optimization: the Jaccard
-    denominator rides the signature groupBy instead of a second
-    shingle-table scan + shuffle) must equal the exact distinct-shingle
-    count per doc."""
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions.dedup import (
-        minhash_signatures,
-        shingle_table,
-    )
-    from entropy_balance_weighting_spark.session import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(50)
-    sh = shingle_table(docs, "doc_id", "text")
-    got = {
-        r["id"]: r["n_sh"] for r in minhash_signatures(sh).collect()
-    }
-    want = {
-        r["id"]: r["n"]
-        for r in sh.groupBy("id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_lsh_ann_recall_vs_brute_force(spark):
-    """The LSH-bucketed ANN must retrieve most of the exact top-3 (recall
-    is the contract; exactness is the brute-force path's job)."""
-    from entropy_balance_weighting_spark.functions.similarity import (
-        cosine_topk,
-        cosine_topk_lsh,
-    )
-    from entropy_balance_weighting_spark.session import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    probes = list(range(10))
-    exact = cosine_topk(emb, probes, k=3).collect()
-    approx = cosine_topk_lsh(emb, probes, k=3, n_planes=16, band_bits=4).collect()
-    exact_set = {(r["probe_id"], r["neighbor_id"]) for r in exact}
-    approx_set = {(r["probe_id"], r["neighbor_id"]) for r in approx}
-    recall = len(exact_set & approx_set) / len(exact_set)
-    assert recall >= 0.5, f"LSH recall {recall:.2f} too low"
-
-
-def test_ivf_ann_recall_vs_brute_force(spark):
-    """IVF (KMeans coarse quantizer + exact re-rank) recall against the
-    brute-force baseline; probing more cells must not lower recall."""
-    from entropy_balance_weighting_spark.functions.similarity import (
-        cosine_topk,
-        cosine_topk_ivf,
-    )
-    from entropy_balance_weighting_spark.session import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    probes = list(range(10))
-    exact_set = {
-        (r["probe_id"], r["neighbor_id"])
-        for r in cosine_topk(emb, probes, k=3).collect()
-    }
-
-    def recall(n_probe):
-        got = {
-            (r["probe_id"], r["neighbor_id"])
-            for r in cosine_topk_ivf(
-                emb, probes, k=3, n_cells=8, n_probe=n_probe
-            ).collect()
-        }
-        return len(exact_set & got) / len(exact_set)
-
-    r2 = recall(2)
-    r8 = recall(8)  # probing every cell == exhaustive → full recall
-    assert r8 == 1.0
-    assert r2 <= r8 and r2 >= 0.3
+from tests.conftest import SF_SMOKE
 
 
 def test_multimodal_real_decoder_is_stubbed(spark):
@@ -168,119 +51,6 @@ def test_multimodal_plumbing_batches_and_schema(spark):
         assert r["f0"] == float(r["n_bytes"])  # feature[0] == payload length
 
 
-def test_per_column_text_functions_match_annotate(spark):
-    """The composable per-column text functions and the fused
-    annotate_token_stats must compute identical values (drift guard)."""
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions import text
-    from entropy_balance_weighting_spark.session import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(40)
-    a = text.annotate_token_stats(docs).select("doc_id", "n_tok", "swr", "q", "is_en")
-    b = docs.select(
-        "doc_id",
-        text.token_count("text").cast("double").alias("n_tok"),
-        text.stopword_ratio(F.col("text")).alias("swr"),
-        text.quality_score(F.col("text")).alias("q"),
-        text.langid_en_score(F.col("text")).alias("is_en"),
-    )
-    ra = {r["doc_id"]: r for r in a.collect()}
-    rb = {r["doc_id"]: r for r in b.collect()}
-    assert ra.keys() == rb.keys()
-    for d in ra:
-        for c in ("n_tok", "swr", "q", "is_en"):
-            assert ra[d][c] == pytest.approx(rb[d][c], rel=1e-12)
-
-
-def test_doc_fingerprint_deterministic(spark):
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions.text import doc_fingerprint
-    from entropy_balance_weighting_spark.session import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(20)
-    f1 = docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fp")).collect()
-    f2 = docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fp")).collect()
-    assert {(r["doc_id"], r["fp"]) for r in f1} == {(r["doc_id"], r["fp"]) for r in f2}
-    assert all(0 <= r["fp"] < 2**32 for r in f1)
-
-
-def test_portable_hash_matches_duckdb(spark):
-    """The md5-prefix hash primitive is identical across engines — the
-    foundation every fingerprint oracle rests on."""
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions.text import portable_hash32
-
-    words = ["spark", "duck", "entropy", "balance", ""]
-    df = spark.createDataFrame([(w,) for w in words], ["w"])
-    got = {
-        r["w"]: r["h"]
-        for r in df.select("w", portable_hash32(F.col("w")).alias("h")).collect()
-    }
-    con = duckdb.connect()
-    for w in words:
-        (expect,) = con.execute(
-            "SELECT ('0x' || substr(md5(?),1,8))::BIGINT", [w]
-        ).fetchone()
-        assert got[w] == expect
-
-
-def test_bucketed_near_dups_exactly_match_all_pairs(spark):
-    """The IVF cell-pair-pruned near-dup generator is EXACT, not
-    approximate: the angular triangle inequality guarantees no qualifying
-    pair is pruned, so its output must equal the all-pairs baseline —
-    including borderline pairs at the threshold."""
-    from entropy_balance_weighting_spark.functions.similarity import (
-        cosine_near_dup_pairs,
-        cosine_near_dup_pairs_bucketed,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    for thresh in (0.45, 0.40):
-        exact = {
-            (r["id_a"], r["id_b"]): round(r["cos"], 9)
-            for r in cosine_near_dup_pairs(emb, thresh).collect()
-        }
-        bucketed = {
-            (r["id_a"], r["id_b"]): round(r["cos"], 9)
-            for r in cosine_near_dup_pairs_bucketed(emb, thresh).collect()
-        }
-        assert bucketed == exact
-        assert len(exact) > 0  # the fixture must actually exercise pairs
-
-
-def test_bucketed_near_dups_plan_has_no_theta_join(spark):
-    """100 TB shape: the bucketed generator must contain no cartesian /
-    nested-loop corpus self-join — candidates flow through equi-joins on
-    the pruned (cell_a, cell_b) list only."""
-    from entropy_balance_weighting_spark.functions.similarity import (
-        cosine_near_dup_pairs_bucketed,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    df = cosine_near_dup_pairs_bucketed(emb, 0.45)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_decontaminate_plan_broadcasts_benchmark(spark):
-    """100 TB shape: the benchmark gram set must broadcast — the corpus
-    side is never shuffled for the overlap join."""
-    from entropy_balance_weighting_spark.functions.dedup import decontaminate
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    out = decontaminate(
-        docs.filter("doc_id >= 20"), docs.filter("doc_id < 20")
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_resize_and_frame_sample_contracts(spark):
     """Resize: every output payload is exactly width*height bytes.  Frame
     sampling: fan-out matches the deterministic expectation computed in
@@ -319,529 +89,3 @@ def test_resize_and_frame_sample_contracts(spark):
     with _pytest.raises(NotImplementedError):
         multimodal.decode_video_frames(b"x", 64)
 
-
-def test_ngram_jaccard_skew_defense_keeps_values_exact(spark):
-    """max_shingle_df excludes ubiquitous shingles from candidate
-    generation only: every returned pair carries the EXACT full-set
-    Jaccard, and with a permissive cap the output equals exact mode."""
-    from entropy_balance_weighting_spark.functions.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    exact = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.6).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.6, max_shingle_df=10**6
-        ).collect()
-    }
-    assert capped == exact and len(exact) > 0
-    # an aggressive cap returns a subset with identical values
-    tight = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.6, max_shingle_df=2
-        ).collect()
-    }
-    assert set(tight) <= set(exact)
-    for k, v in tight.items():
-        assert v == exact[k]
-
-
-def test_asof_join_semantics_and_plan(spark):
-    """Piecewise-merge as-of join: ties match, no-match rows null, latest
-    prior row wins; the physical plan must be window-based (one hash
-    exchange on the key), never an inequality nested-loop join."""
-    from datetime import datetime
-
-    from entropy_balance_weighting_spark.functions.events import asof_join
-
-    t = lambda s: datetime(2024, 1, 1, 0, 0, s)
-    left = spark.createDataFrame(
-        [(1, t(5), "l5"), (1, t(10), "l10"), (1, t(2), "l2"), (2, t(7), "l7")],
-        "user_id long, ts timestamp, tag string",
-    )
-    right = spark.createDataFrame(
-        [(1, t(3), 30.0), (1, t(5), 50.0), (1, t(9), 90.0), (3, t(1), 10.0)],
-        "user_id long, ts timestamp, value double",
-    )
-    out = {
-        r["tag"]: r["asof_value"]
-        for r in asof_join(left, right, on="user_id", ts_col="ts").collect()
-    }
-    assert out == {
-        "l2": None,  # no right row at or before t=2 for user 1
-        "l5": 50.0,  # tie at t=5 matches (backward as-of, ties included)
-        "l10": 90.0,  # latest prior, not just any prior
-        "l7": None,  # user 2 has no right rows at all
-    }
-
-    plan = (
-        asof_join(left, right, on="user_id", ts_col="ts")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-    assert "Window" in plan
-
-
-def test_pack_sequences_straddle_semantics(spark):
-    """A doc whose tokens straddle a budget boundary belongs to the
-    context where its FIRST token lands; packing is a pure function of
-    (salt, ids, texts) — stable under repartitioning."""
-    from entropy_balance_weighting_spark.functions.packing import pack_sequences
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(["w"] * 30)) for i in range(6)],  # 30 tokens each
-        "doc_id long, text string",
-    )
-    out = pack_sequences(
-        docs, budget=64, n_shards=1, salt="t"
-    ).orderBy("doc_id")
-    rows = [(r["cum_tokens"], r["context_id"]) for r in out.collect()]
-    # offsets 0,30,60,90,120,150 → contexts 0,0,0,1,1,2 with budget 64
-    assert rows == [(30, 0), (60, 0), (90, 0), (120, 1), (150, 1), (180, 2)]
-
-    repart = pack_sequences(
-        docs.repartition(5), budget=64, n_shards=1, salt="t"
-    ).orderBy("doc_id")
-    assert [(r["cum_tokens"], r["context_id"]) for r in repart.collect()] == rows
-
-
-def test_asof_join_salted_equals_unsalted(spark):
-    """The skew-salted two-pass as-of join must reproduce the unsalted
-    operator exactly — including carries across empty buckets, ties at
-    bucket boundaries, and keys with no right rows at all."""
-    import random
-    from datetime import datetime, timedelta
-
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions.events import (
-        asof_join,
-        asof_join_salted,
-    )
-
-    rng = random.Random(7)
-    t0 = datetime(2024, 1, 1)
-    lrows, rrows = [], []
-    eid = 0
-    for _ in range(400):
-        user = rng.randrange(5)
-        # seconds chosen so rows cluster then gap across many 60 s buckets
-        ts = t0 + timedelta(seconds=rng.randrange(4000))
-        if rng.random() < 0.3:
-            rrows.append((user, ts, float(rng.randrange(100))))
-        else:
-            lrows.append((eid, user, ts))
-            eid += 1
-    left = spark.createDataFrame(lrows, "event_id long, user_id long, ts timestamp")
-    right = (
-        spark.createDataFrame(rrows, "user_id long, ts timestamp, value double")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("value"))
-    )
-
-    base = {
-        r["event_id"]: (r["asof_value"], r["asof_ts"])
-        for r in asof_join(left, right, on="user_id", ts_col="ts").collect()
-    }
-    salted = {
-        r["event_id"]: (r["asof_value"], r["asof_ts"])
-        for r in asof_join_salted(
-            left, right, on="user_id", ts_col="ts", bucket_seconds=60
-        ).collect()
-    }
-    assert salted == base and len(base) == len(lrows)
-
-
-def test_asof_join_matches_pandas_merge_asof(spark):
-    """Randomized third-oracle check: the distributed piecewise merge must
-    agree with pandas.merge_asof (backward, exact matches allowed) —
-    an implementation with no shared code or engine."""
-    import random
-    from datetime import datetime, timedelta
-
-    import pandas as pd
-
-    from entropy_balance_weighting_spark.functions.events import asof_join
-
-    rng = random.Random(11)
-    t0 = datetime(2024, 1, 1)
-    lrows = [
-        (i, rng.randrange(4), t0 + timedelta(seconds=rng.randrange(2000)))
-        for i in range(150)
-    ]
-    seen = set()
-    rrows = []
-    for _ in range(120):
-        key = (rng.randrange(4), rng.randrange(2000))
-        if key in seen:
-            continue  # unique (user, ts) per the operator contract
-        seen.add(key)
-        rrows.append((key[0], t0 + timedelta(seconds=key[1]), float(rng.randrange(50))))
-
-    left = spark.createDataFrame(lrows, "event_id long, user_id long, ts timestamp")
-    right = spark.createDataFrame(rrows, "user_id long, ts timestamp, value double")
-    got = {
-        r["event_id"]: (r["asof_value"], r["asof_ts"])
-        for r in asof_join(left, right, on="user_id", ts_col="ts").collect()
-    }
-
-    lp = pd.DataFrame(lrows, columns=["event_id", "user_id", "ts"]).sort_values("ts")
-    rp = pd.DataFrame(rrows, columns=["user_id", "ts", "value"]).sort_values("ts")
-    merged = pd.merge_asof(
-        lp, rp, on="ts", by="user_id", direction="backward",
-        allow_exact_matches=True, suffixes=("", "_r"),
-    )
-    for row in merged.itertuples(index=False):
-        want_val = None if pd.isna(row.value) else float(row.value)
-        assert got[row.event_id][0] == want_val, row
-    assert len(got) == len(lrows)
-
-
-def test_new_operator_edge_cases(spark):
-    """Degenerate inputs: empty sides, invalid parameters."""
-    import pytest as _pytest
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions.dedup import (
-        simhash_near_dup_pairs,
-    )
-    from entropy_balance_weighting_spark.functions.events import asof_join
-    from entropy_balance_weighting_spark.functions.packing import pack_sequences
-    from entropy_balance_weighting_spark.sources.splits import split_column
-
-    # as-of join with an EMPTY right side: every left row survives, nulls
-    left = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), "a")], "user_id long, ts timestamp, tag string"
-    )
-    empty_right = spark.createDataFrame(
-        [], "user_id long, ts timestamp, value double"
-    )
-    rows = asof_join(left, empty_right).collect()
-    assert len(rows) == 1 and rows[0]["asof_value"] is None
-
-    # packing an empty corpus: empty result, correct schema
-    empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    packed = pack_sequences(empty_docs)
-    assert packed.count() == 0
-    assert set(packed.columns) == {
-        "doc_id", "shard", "n_tokens", "cum_tokens", "context_id"
-    }
-
-    # invalid parameterizations fail loudly, not silently
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="max_hamming"):
-        simhash_near_dup_pairs(docs, "doc_id", "text", n_bands=4, max_hamming=4)
-    with _pytest.raises(ValueError, match="divide evenly"):
-        simhash_near_dup_pairs(docs, "doc_id", "text", n_bits=16, n_bands=5, max_hamming=2)
-    with _pytest.raises(ValueError, match="sum to 1"):
-        split_column("doc_id", {"train": 0.5, "val": 0.2})
-
-
-def test_incremental_dedup_rejects_replays_admits_new(spark):
-    from entropy_balance_weighting_spark.functions.dedup import incremental_dedup
-
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], "doc_id long, text string"
-    )
-    arrivals = spark.createDataFrame(
-        [
-            (10, "  Alpha Beta "),   # replay (normalization must catch it)
-            (11, "gamma delta"),     # replay
-            (12, "epsilon zeta"),    # new
-        ],
-        "doc_id long, text string",
-    )
-    out = incremental_dedup(arrivals, corpus)
-    assert [r.doc_id for r in out.collect()] == [12]
-
-
-def test_chunk_documents_geometry(spark):
-    """Chunk boundaries: overlap preserved between consecutive chunks,
-    short docs yield one chunk, reconstruction covers every token."""
-    from entropy_balance_weighting_spark.functions.text import chunk_documents
-
-    long_text = " ".join(f"t{i}" for i in range(150))
-    df = spark.createDataFrame(
-        [(1, long_text), (2, "a b c")], "doc_id long, text string"
-    )
-    out = chunk_documents(df, chunk_tokens=64, overlap_tokens=16)
-    rows = sorted(out.collect(), key=lambda r: (r.id, r.chunk_id))
-    short = [r for r in rows if r.id == 2]
-    assert len(short) == 1 and short[0].n_tok == 3
-
-    chunks = [r for r in rows if r.id == 1]
-    # ceil((150-16)/48) = 3 chunks
-    assert [r.chunk_id for r in chunks] == [0, 1, 2]
-    assert [r.n_tok for r in chunks] == [64, 64, 150 - 2 * 48]
-    t1, t2 = chunks[0].chunk_text.split(), chunks[1].chunk_text.split()
-    assert t1[-16:] == t2[:16]  # overlap region identical
-    # full coverage: union of chunk tokens == original tokens
-    seen = set()
-    for r in chunks:
-        seen.update(r.chunk_text.split())
-    assert seen == {f"t{i}" for i in range(150)}
-
-    import pytest
-
-    with pytest.raises(ValueError, match="overlap_tokens"):
-        chunk_documents(df, chunk_tokens=16, overlap_tokens=16)
-
-
-def test_cluster_representatives_policy(spark):
-    from entropy_balance_weighting_spark.functions.dedup import (
-        cluster_representatives,
-    )
-
-    cc = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)], "id long, cluster_id long"
-    )
-    scores = spark.createDataFrame(
-        [(1, 10.0), (2, 30.0), (3, 30.0), (7, 5.0), (8, 4.0)],
-        "id long, score double",
-    )
-    out = {(r.id): (r.cluster_id, r.is_keep)
-           for r in cluster_representatives(cc, scores).collect()}
-    # cluster 1: ids 2 and 3 tie on score -> lowest id (2) wins
-    assert out == {1: (1, 0), 2: (1, 1), 3: (1, 0), 7: (7, 1), 8: (7, 0)}
-
-
-def test_snapshot_diff_classifies(spark):
-    from entropy_balance_weighting_spark.functions.dedup import snapshot_diff
-
-    old = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
-    )
-    new = spark.createDataFrame(
-        [(2, "b"), (3, "c2"), (4, "d")], "doc_id long, text string"
-    )
-    got = {r.id: r.status for r in snapshot_diff(old, new).collect()}
-    assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
-
-
-def test_bigram_logprob_flags_scrambled_text(spark):
-    """The bigram model must separate fluent repetition from scrambled
-    transitions even when unigram profiles are identical: a corpus of
-    one repeated fluent phrase scores its member docs higher than a doc
-    with the same tokens in unseen transition order."""
-    from entropy_balance_weighting_spark.functions.text import (
-        bigram_doc_logprob,
-        unigram_doc_logprob,
-    )
-
-    fluent = "the quick brown fox jumps over the lazy dog"
-    scrambled = "dog the over quick lazy jumps brown the fox"
-    rows = [(i, fluent) for i in range(9)] + [(99, scrambled)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    bi = {r.doc_id: r.logprob for r in bigram_doc_logprob(df).collect()}
-    assert bi[99] < bi[0]  # unseen transitions score lower
-
-    uni = {r.doc_id: r.logprob for r in unigram_doc_logprob(df).collect()}
-    # same token multiset -> unigram can't tell them apart
-    assert abs(uni[99] - uni[0]) < 1e-9
-    # short docs (< 2 tokens) drop out instead of crashing
-    one = spark.createDataFrame([(1, "solo")], "doc_id long, text string")
-    assert bigram_doc_logprob(one).count() == 0
-
-
-def test_len_percentiles_rank_check_all_ok(spark):
-    """approx_percentile's rank-error contract (formerly the registered
-    txt_len_percentiles_approx query; pytest-proven since the r9
-    window-budget prune): every (source, p) satisfies the tie-robust
-    rank bound, so all ok flags are 1."""
-    from entropy_balance_weighting_spark.queries.pipeline_text_stats import (
-        len_percentiles_rank_check,
-    )
-
-    rows = len_percentiles_rank_check(spark, SF_SMOKE).collect()
-    assert len(rows) >= 3  # sources x 3 quantiles
-    assert all(r["ok"] == 1 for r in rows)
-
-
-def test_vocab_hll_error_check_all_ok(spark):
-    """approx_count_distinct's 3-sigma error contract (formerly the
-    registered txt_vocab_size_approx query; pytest-proven since the r10
-    window-budget prune): every source's HLL estimate is within 6% of
-    the exact vocabulary count."""
-    from entropy_balance_weighting_spark.queries.pipeline_text_stats import (
-        vocab_hll_error_check,
-    )
-
-    rows = vocab_hll_error_check(spark, SF_SMOKE).collect()
-    assert len(rows) >= 2  # one row per source
-    assert all(r["ok"] == 1 for r in rows)
-
-
-def test_langid_multilingual_scores_and_routing(spark):
-    """Multi-language function-word router (functions.text.LANG_MARKERS):
-    each planted sentence routes to its language, markerless text routes
-    to 'und', and the winning score is the struct's max."""
-    from entropy_balance_weighting_spark.functions import text as T
-
-    rows = [
-        (1, "the cat sat on the mat and that was that", "en"),
-        (2, "el perro corre por la calle y las casas que vemos", "es"),
-        (3, "le chat est dans la maison pour une nuit sur le toit", "fr"),
-        (4, "der hund und die katze das ist nicht ein problem", "de"),
-        (5, "il gatto che dorme sono contento di una bella casa", "it"),
-        (6, "o menino foi em uma casa do lado mais bonito da rua", "pt"),
-        (7, "qwzx bla foo bar baz", "und"),
-        (8, "", "und"),
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t, _ in rows], "id long, text string"
-    )
-    got = {
-        r["id"]: (r["lang"], r["s"].asDict())
-        for r in df.select(
-            "id",
-            T.langid_best("text").alias("lang"),
-            T.langid_scores("text").alias("s"),
-        ).collect()
-    }
-    for i, _t, want in rows:
-        lang, scores = got[i]
-        assert lang == want, (i, lang, want, scores)
-        if want != "und":
-            # the routed language carries the strict max score
-            assert scores[want] == max(scores.values())
-    # uppercase text routes identically (tokens are lower-cased)
-    up = spark.createDataFrame(
-        [(1, "THE CAT AND THE DOG WAS OF IT")], "id long, text string"
-    )
-    assert up.select(T.langid_best("text")).first()[0] == "en"
-
-
-def test_bm25_semantics_self_retrieval_and_exact_scores(spark):
-    """BM25 semantics pinned on a hand-sized corpus: (1) a query that IS
-    a document's prefix retrieves that document first; (2) a term
-    present in every document (df = N) still contributes positively
-    (the +1 idf floor — plain idf ln(N/df) would zero it out); (3) the
-    quantized integer score equals a NumPy replay of the Okapi formula
-    to 1e-6."""
-    import math
-
-    from entropy_balance_weighting_spark.functions.text import bm25_topk
-
-    corpus = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "the quick brown cat sleeps all day long"),
-        (2, "a completely different document about spark plans"),
-        (3, "the the the the the the the the the"),
-    ]
-    docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    queries = spark.createDataFrame(
-        [(0, "quick brown fox"), (1, "the")], "query_id long, qtext string"
-    )
-    got = bm25_topk(docs, queries, k=4)
-    rows = {
-        (r["query_id"], r["rk"]): (r["doc_id"], r["score"])
-        for r in got.collect()
-    }
-    # (1) doc 0 contains all three query terms — must rank first
-    assert rows[(0, 1)][0] == 0
-    # (2) 'the' occurs in 3 of 4 docs; every containing doc must score > 0
-    the_hits = [v for (qid, _rk), v in rows.items() if qid == 1]
-    assert len(the_hits) == 3 and all(s > 0 for _d, s in the_hits)
-
-    # (3) exact replay of doc 0 / query 0
-    n, k1, b = 4.0, 1.2, 0.75
-    dls = {d: len(t.split()) for d, t in corpus}
-    avgdl = sum(dls.values()) / 4.0
-    dfs = {"quick": 2, "brown": 2, "fox": 1}
-    tfs = {"quick": 1, "brown": 1, "fox": 1}
-    expect = 0
-    for t in ("quick", "brown", "fox"):
-        idf = math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
-        tfn = (tfs[t] * (k1 + 1)) / (
-            tfs[t] + k1 * (1 - b + b * dls[0] / avgdl)
-        )
-        expect += round(idf * tfn * 1_000_000)
-    assert abs(rows[(0, 1)][1] - expect / 1_000_000) < 1e-9
-
-
-def test_bm25_index_prunes_shards_and_matches_from_scratch(spark, tmp_path):
-    """The prebuilt-index ranker must (1) score bit-identically to the
-    from-scratch ranker on the same corpus, and (2) push the probe
-    terms' shard ids as a PARTITION filter so the postings scan lists
-    only those directories (the build-once/query-many contract)."""
-    from entropy_balance_weighting_spark.functions.text import (
-        bm25_query_index,
-        bm25_topk,
-        build_bm25_index,
-    )
-
-    corpus = [
-        (i, f"alpha w{i} w{i+1} beta common w{i*7%50}") for i in range(60)
-    ]
-    docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    queries = spark.createDataFrame(
-        [(0, "alpha w3"), (1, "beta w14 w15")], "query_id long, qtext string"
-    )
-    idx = str(tmp_path / "bm25idx")
-    stats = build_bm25_index(docs, idx, n_shards=16)
-    assert stats["segments"][0]["n_docs"] == 60
-
-    direct = {
-        (r["query_id"], r["rk"]): (r["doc_id"], r["score"])
-        for r in bm25_topk(docs, queries, k=4).collect()
-    }
-    via_idx_df = bm25_query_index(spark, idx, queries, k=4)
-    via_idx = {
-        (r["query_id"], r["rk"]): (r["doc_id"], r["score"])
-        for r in via_idx_df.collect()
-    }
-    assert direct == via_idx  # bit-identical scores and ranks
-
-    plan = via_idx_df._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "shard" in pf, f"shard filter not pushed to pruning:\n{plan[:1200]}"
-
-
-def test_bm25_incremental_update_matches_from_scratch_on_union(spark, tmp_path):
-    """Lucene-style segment append: build on corpus A, update with
-    corpus B (new doc ids), query — results must be bit-identical to
-    the from-scratch ranker on A∪B.  This is the property the off-row
-    df design exists for: appending B changes every shared term's
-    global df, and the query path must pick that up without rewriting
-    segment A."""
-    from entropy_balance_weighting_spark.functions.text import (
-        bm25_query_index,
-        bm25_topk,
-        build_bm25_index,
-        update_bm25_index,
-    )
-
-    a = [(i, f"alpha shared{i % 7} w{i} common") for i in range(40)]
-    b = [(100 + i, f"beta shared{i % 7} w{100 + i} common") for i in range(25)]
-    da = spark.createDataFrame(a, "doc_id long, text string")
-    db = spark.createDataFrame(b, "doc_id long, text string")
-    queries = spark.createDataFrame(
-        [(0, "alpha shared3"), (1, "common beta"), (2, "w105")],
-        "query_id long, qtext string",
-    )
-    idx = str(tmp_path / "bm25seg")
-    build_bm25_index(da, idx, n_shards=8)
-    stats = update_bm25_index(db, idx)
-    assert [s["name"] for s in stats["segments"]] == ["seg-000000", "seg-000001"]
-
-    union = da.unionByName(db)
-    direct = {
-        (r["query_id"], r["rk"]): (r["doc_id"], r["score"])
-        for r in bm25_topk(union, queries, k=5).collect()
-    }
-    via_idx = {
-        (r["query_id"], r["rk"]): (r["doc_id"], r["score"])
-        for r in bm25_query_index(spark, idx, queries, k=5).collect()
-    }
-    assert direct == via_idx

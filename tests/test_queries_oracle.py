@@ -77,3 +77,16 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
         (a, b) for a, b in zip(s_norm, o_norm) if a != b
     ]
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+
+
+def test_snapshot_diff_classifies(spark):
+    from entropy_balance_weighting_spark.queries.pipeline_dq import snapshot_diff
+
+    old = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
+    )
+    new = spark.createDataFrame(
+        [(2, "b"), (3, "c2"), (4, "d")], "doc_id long, text string"
+    )
+    got = {r.id: r.status for r in snapshot_diff(old, new).collect()}
+    assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}

@@ -235,7 +235,7 @@ def test_samp_domain_mix_single_job_before_sampler(spark):
     import pyspark.sql.functions as F
     from conftest import SF_SMOKE
 
-    from entropy_balance_weighting_spark.queries.pipeline import samp_domain_mix
+    from entropy_balance_weighting_spark.queries.pipeline_sampling import samp_domain_mix
     from entropy_balance_weighting_spark.session import load_table
 
     tracker = spark.sparkContext.statusTracker()
@@ -260,3 +260,24 @@ def test_samp_domain_mix_single_job_before_sampler(spark):
     out = samp_domain_mix(spark, SF_SMOKE)
     assert latest_job() - j1 == one_action
     assert out.count() > 0
+
+
+def test_portable_hash_matches_duckdb(spark):
+    """The md5-prefix hash primitive is identical across engines — the
+    foundation every sample-membership oracle rests on."""
+    import duckdb
+
+    from entropy_balance_weighting_spark.functions.sampling import portable_hash32
+
+    words = ["spark", "duck", "entropy", "balance", ""]
+    df = spark.createDataFrame([(w,) for w in words], ["w"])
+    got = {
+        r["w"]: r["h"]
+        for r in df.select("w", portable_hash32(F.col("w")).alias("h")).collect()
+    }
+    con = duckdb.connect()
+    for w in words:
+        (expect,) = con.execute(
+            "SELECT ('0x' || substr(md5(?),1,8))::BIGINT", [w]
+        ).fetchone()
+        assert got[w] == expect

@@ -55,32 +55,8 @@ def _scan_counts(jplan, seen_caches=None) -> Counter:
 
 # (query, table, max relation leaves for that table in the optimized plan)
 _PINS = [
-    # grams/hits/covered persisted: floor = grams build + touched toks +
-    # n_tok + the untouched branch
-    ("dd_span_removal", "documents.parquet", 4),
-    # result localCheckpoint'ed while caches are alive: consumption must
-    # not re-expand the iteration lineage at all
-    ("web_pagerank", "documents.parquet", 0),
-    # one-pass bloom_check with carry_cols: sketch build + the two
-    # fixture branches only
-    ("dd_bloom_screen", "documents.parquet", 3),
-    # persisted per-user stage minima: one events scan per event type,
-    # collapsed by the shared cache lineage
-    ("ev_funnel_steps", "events.parquet", 1),
     # explode-unpivot + persisted counts
     ("dq_column_entropy", "documents.parquet", 1),
-    # persisted token-set relations: one tokenization per side
-    ("dd_fuzzy_join", "documents.parquet", 2),
-    # persisted tf: the df aggregate must not rebuild the corpus explode
-    ("txt_tfidf_topterms", "documents.parquet", 1),
-    # persisted union: the two window/aggregate passes share one build
-    ("ev_asof_join_salted", "events.parquet", 2),
-    # persisted band signatures + bucket stats over the Python video chain
-    ("mm_video_fp_dups", "documents.parquet", 1),
-    # persisted freq / c2 tables (the scoring join's probe side is the one
-    # remaining corpus explode by design — cheaper than caching it)
-    ("txt_unigram_logprob", "documents.parquet", 2),
-    ("txt_bigram_logprob", "documents.parquet", 2),
     # single stack(4) Generate for numeric + one-hot moments
     ("a1_weighted_moment_totals", "lineitem.parquet", 1),
     # national mean from the K-row group partials

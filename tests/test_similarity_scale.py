@@ -1,24 +1,13 @@
-"""Scale behavior of the IVF-bucketed embedding near-dup path (VERDICT r3
-what's-wrong #2): the cell count must derive from corpus size, and the
-candidate join volume must grow SUB-QUADRATICALLY when the corpus grows the
-realistic way — new content (more clusters), near-dup density constant.
-
-For an unclusterable (uniform random) corpus no bucketing can beat all-pairs
-candidates — the function docstring documents that worst case; these tests
-pin the scaling on the clusterable case the design targets.
-"""
+"""Scale behavior of the IVF quantizer: the cell count must derive from
+corpus size (rows per cell), clamped to a driver-safe range, and the
+minibatch fit must stay mass-equivalent to the full fit."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from entropy_balance_weighting_spark.functions.similarity import (
-    adaptive_n_cells,
-    cosine_near_dup_pairs,
-    cosine_near_dup_pairs_bucketed,
-    ivf_candidate_stats,
-)
+from entropy_balance_weighting_spark.functions.similarity import adaptive_n_cells
 
 
 def _clustered_emb(spark, n_clusters: int, per_cluster: int, dim: int = 16, seed: int = 3):
@@ -45,116 +34,6 @@ def test_adaptive_n_cells_targets_rows_per_cell():
     assert adaptive_n_cells(1024 * 100 + 1) == 101
     assert adaptive_n_cells(10**12) == 65_536  # max clamp (driver ceiling)
     assert adaptive_n_cells(4096, rows_per_cell=256) == 16
-
-
-def test_candidate_volume_subquadratic_as_corpus_grows(spark):
-    # 4x the corpus by adding clusters; rows-per-cell targeting must keep
-    # the candidate volume ~linear (quadratic would be 16x).
-    small = _clustered_emb(spark, n_clusters=40, per_cluster=30)
-    large = _clustered_emb(spark, n_clusters=160, per_cluster=30)
-    st_s = ivf_candidate_stats(small, 0.9, rows_per_cell=16)
-    st_l = ivf_candidate_stats(large, 0.9, rows_per_cell=16)
-    assert st_l["n_rows"] == 4 * st_s["n_rows"]
-    assert st_l["n_cells"] == 4 * st_s["n_cells"]  # derived, not constant
-    ratio = st_l["candidate_volume"] / max(st_s["candidate_volume"], 1)
-    assert ratio < 8, f"candidate volume grew {ratio:.1f}x for 4x rows"
-    # and the large corpus is nowhere near all-pairs
-    all_pairs = st_l["n_rows"] ** 2 / 2
-    assert st_l["candidate_volume"] < 0.1 * all_pairs
-
-
-def test_simhash_width_scales_and_refines(spark):
-    # n_bits is the corpus-size knob (VERDICT r3 what's-wrong #2): wider
-    # signatures must refine narrower ones (bit b is width-independent),
-    # so scaling width up can only split buckets, never merge them.
-    import pytest
-
-    from entropy_balance_weighting_spark.functions.dedup import simhash16
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(40),
-            "text": [
-                f"alpha beta gamma delta {i % 7} common tail words" for i in range(40)
-            ],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    s16 = {r.id: r.simhash for r in simhash16(df, "doc_id", "text").collect()}
-    s24 = {
-        r.id: r.simhash
-        for r in simhash16(df, "doc_id", "text", n_bits=24).collect()
-    }
-    assert all(0 <= v < 2**16 for v in s16.values())
-    assert all(0 <= v < 2**24 for v in s24.values())
-    # refinement: equal 24-bit signatures imply equal 16-bit signatures
-    for i in s24:
-        for j in s24:
-            if s24[i] == s24[j]:
-                assert s16[i] == s16[j]
-    # and the low 16 bits of the wide signature ARE the narrow signature
-    assert all(s24[i] % 2**16 == s16[i] for i in s16)
-    with pytest.raises(ValueError, match="n_bits"):
-        simhash16(df, "doc_id", "text", n_bits=40)
-
-
-def test_bucketed_adaptive_matches_allpairs_exactly(spark):
-    # completeness of the pruning under the ADAPTIVE cell count: the
-    # bucketed result must equal the exact all-pairs result bit-for-bit
-    emb = _clustered_emb(spark, n_clusters=10, per_cluster=40, seed=11)
-    exact = sorted(
-        (r.id_a, r.id_b, round(r.cos, 9))
-        for r in cosine_near_dup_pairs(emb, 0.9).collect()
-    )
-    bucketed = sorted(
-        (r.id_a, r.id_b, round(r.cos, 9))
-        for r in cosine_near_dup_pairs_bucketed(
-            emb, 0.9, rows_per_cell=32
-        ).collect()
-    )
-    assert exact == bucketed
-    assert len(exact) > 0
-
-
-def test_prefit_quantizer_roundtrip_identical(spark, tmp_path):
-    """Persisted quantizer centers reload bit-identically, give the same
-    cell assignments, and the prefit cosine_topk_ivf output matches the
-    fit-inline form exactly (exact-mode re-ranking)."""
-    from entropy_balance_weighting_spark.functions.similarity import (
-        _as_double,
-        _assign_with_centers,
-        _norm,
-        cosine_topk_ivf,
-        fit_ivf_quantizer,
-        load_quantizer,
-        save_quantizer,
-    )
-    from entropy_balance_weighting_spark.session import load_table
-    from pyspark.sql import functions as F
-    from tests.conftest import SF_SMOKE
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    centers = fit_ivf_quantizer(emb, n_cells=8)
-    p = str(tmp_path / "quant.json")
-    save_quantizer(centers, p)
-    back = load_quantizer(p)
-    assert back.shape == centers.shape
-    assert np.array_equal(back, centers)
-
-    base = emb.select(
-        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
-    a1 = {r.id: r.cell for r in _assign_with_centers(base, centers).collect()}
-    a2 = {r.id: r.cell for r in _assign_with_centers(base, back).collect()}
-    assert a1 == a2
-
-    inline = cosine_topk_ivf(
-        emb, [0, 1, 2], k=3, n_cells=8, n_probe=8, round_digits=5
-    ).collect()
-    prefit = cosine_topk_ivf(
-        emb, [0, 1, 2], k=3, n_probe=8, round_digits=5, quantizer=back
-    ).collect()
-    assert sorted(map(tuple, inline)) == sorted(map(tuple, prefit))
 
 
 def test_minibatch_quantizer_mass_equivalent_removals(spark):
@@ -184,97 +63,3 @@ def test_minibatch_quantizer_mass_equivalent_removals(spark):
     drift = abs(counts["minibatch"] - counts["full"]) / counts["full"]
     assert drift <= 0.05, counts
 
-
-def test_binary_quantize_and_hamming_match_numpy(spark):
-    """Sign-bit packing and XOR+popcount distance, pinned against a
-    plain numpy reference on random vectors (incl. a dim that is not a
-    multiple of the 32-bit word) — integer arithmetic, exact."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions import similarity as sim
-
-    rng = np.random.default_rng(42)
-    for dim in (64, 40):  # word-aligned and ragged tail
-        vecs = rng.normal(size=(30, dim)).astype(np.float32)
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))],
-            "vec_id long, embedding array<float>",
-        )
-        # numpy reference pack
-        bits_ref = (vecs > 0)
-        def ham(a, b):
-            return int(np.sum(a != b))
-
-        got = {
-            r["vec_id"]: list(r["bits"])
-            for r in df.select(
-                "vec_id",
-                sim.binary_quantize_bits(
-                    F.col("embedding").cast("array<double>")
-                ).alias("bits"),
-            ).collect()
-        }
-        n_words = (dim + 31) // 32
-        for i in range(len(vecs)):
-            assert len(got[i]) == n_words
-            packed = 0
-            for w, word in enumerate(got[i]):
-                packed |= int(word) << (32 * w)
-            want = sum(1 << j for j in range(dim) if bits_ref[i, j])
-            assert packed == want, i
-
-        # distances against every probe
-        out = sim.hamming_topk(df, probe_ids=[0, 1], k=29)
-        got_d = {
-            (r["probe_id"], r["neighbor_id"]): r["hamming"]
-            for r in out.collect()
-        }
-        for p in (0, 1):
-            for j in range(len(vecs)):
-                if j == p:
-                    continue
-                assert got_d[(p, j)] == ham(bits_ref[p], bits_ref[j]), (p, j)
-
-
-def test_binary_quantize_empty_vector_is_empty_bits(spark):
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions import similarity as sim
-
-    df = spark.createDataFrame(
-        [(0, []), (1, [1.0, -1.0])], "vec_id long, embedding array<double>"
-    )
-    got = {
-        r["vec_id"]: list(r["bits"])
-        for r in df.select(
-            "vec_id", sim.binary_quantize_bits(F.col("embedding")).alias("bits")
-        ).collect()
-    }
-    assert got[0] == []
-    assert got[1] == [1]  # bit 0 set only
-
-
-def test_binary_quantize_null_vector_is_null_and_never_ranks(spark):
-    """NULL embedding → NULL bits (filterable), and hamming_topk drops
-    the row instead of ranking a null-padded distance (r11 ADVICE)."""
-    from pyspark.sql import functions as F
-
-    from entropy_balance_weighting_spark.functions import similarity as sim
-
-    df = spark.createDataFrame(
-        [(0, [1.0, -1.0]), (1, None), (2, [1.0, 1.0]), (3, [-1.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    rows = df.select(
-        "vec_id", sim.binary_quantize_bits(F.col("embedding")).alias("bits")
-    ).collect()
-    by_id = {r["vec_id"]: r["bits"] for r in rows}
-    assert by_id[1] is None
-    assert by_id[0] is not None
-
-    out = sim.hamming_topk(df, probe_ids=[0], k=10).collect()
-    neighbors = {r["neighbor_id"] for r in out}
-    assert 1 not in neighbors  # NULL row never ranked
-    assert neighbors == {2, 3}
-    assert all(r["hamming"] is not None for r in out)
