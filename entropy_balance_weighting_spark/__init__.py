@@ -37,7 +37,12 @@ from __future__ import annotations
 
 import logging
 
+from entropy_balance_weighting_spark import _zipimport_shim
 from entropy_balance_weighting_spark.results import EntropyBalanceResults
+
+# inside a PySpark task only: later tasks of this worker skip the per-task
+# zip directory rescan (see _zipimport_shim)
+_zipimport_shim.install_in_task()
 
 __version__ = "0.1.0"
 

@@ -14,6 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a new session: ``SPARK_DRIVER_MEM`` when
+    set, else 32g capped at half of physical RAM, so a local-mode driver
+    on a small host cannot grow past what the host holds."""
+    pinned = os.environ.get("SPARK_DRIVER_MEM")
+    if pinned:
+        return pinned
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):  # name unknown on this platform
+        return "32g"
+    return f"{min(32 * 1024, ram // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "entropy_balance_weighting_spark",
     master: str | None = None,
@@ -52,7 +66,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
