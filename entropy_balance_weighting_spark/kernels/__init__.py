@@ -10,8 +10,9 @@ Two implementations with identical semantics:
 
 - :class:`kernels.local.LocalKernel` — dense numpy, used below a size
   threshold and as the parity oracle.
-- :class:`kernels.spark.SparkKernel` — packed rows cached as Arrow IPC
-  blobs; one pass computes all of an iteration's reductions.  The elastic
+- :class:`kernels.spark.SparkKernel` — packed rows cached as Arrow blobs
+  written by Spark's JVM Arrow writer; one pass computes all of an
+  iteration's reductions.  The elastic
   and penalty solvers have the same local/distributed pair, and the three
   distributed kernels share one blob plane (:mod:`kernels.blob_plane`).
 """

@@ -1,18 +1,25 @@
 """Blob plane shared by the three distributed kernels (Newton, elastic,
-penalty): how packed rows become cached Arrow IPC blobs, how passes read
-them back, and how pass payloads and weights leave them.
+penalty): how packed rows become cached Arrow blobs, how passes read them
+back, and how pass payloads and weights leave them.
 
-- **encode / decode** — one IPC stream blob per Arrow record batch; a
-  dense ``[0..k)`` idx pattern is elided per batch (:func:`maybe_elide_idx`).
-- **cache** — every cached blob RDD carries the same batch-size-1
-  serializer (:data:`BLOB_SER`) and ``MEMORY_AND_DISK`` (:func:`persist`);
-  small problems coalesce to few partitions once, at encode
-  (:func:`adaptive_blob_partitions`).
-- **split state** — the stateful kernels (elastic, penalty) cache an
-  immutable base RDD and a small mutable state RDD, aligned element for
-  element and read as ``base.zip(state)`` (:func:`split_state`).
-- **passes** — :func:`batches` turns blob or zip-pair elements into record
-  batches; a pass yields one ``(sums, mins)`` payload per partition
+- **encode** — runs on the JVM: Spark's own Arrow writer
+  (``Dataset.toArrowBatchRdd``) turns the packed DataFrame into one IPC
+  record-batch message per Arrow batch, cached as a raw-bytes RDD
+  (:func:`encode`).  No Python worker, Row pickling or shuffle touches the
+  base; the partitioning is the packed plan's own (the data layer's
+  ``_spread_width`` is the one small-input sizing rule).  A dense
+  ``[0..k)`` idx column is dropped when the plan proves it
+  (:func:`dense_idx`).
+- **decode** — a base element decodes against the Arrow schema the kernel
+  keeps from its packed DataFrame; Python-written state and commit blobs
+  are self-describing IPC streams (:func:`batches`).
+- **cache** — ``MEMORY_AND_DISK`` everywhere; Python-written blob RDDs
+  share the batch-size-1 serializer (:data:`BLOB_SER`) so they ``zip``
+  with the raw-bytes base as they are (:func:`persist`).
+- **split state** — the stateful kernels (elastic, penalty) cache the
+  immutable base and a small mutable state RDD derived from it element
+  for element, read as ``base.zip(state)`` (:func:`split_state`).
+- **passes** — a pass yields one ``(sums, mins)`` payload per partition
   (:func:`pack_payload`), reduced by :func:`reduce_payload`; a commit pass
   re-caches its output as new blobs (:func:`transform` + :func:`commit`),
   truncating lineage every :data:`CKPT_EVERY` commits.
@@ -30,70 +37,98 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark import StorageLevel
-from pyspark.serializers import BatchedSerializer, CPickleSerializer
+from py4j.protocol import Py4JError, Py4JJavaError
+from pyspark import RDD, StorageLevel
+from pyspark.serializers import (
+    BatchedSerializer,
+    CPickleSerializer,
+    NoOpSerializer,
+)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 BASE_NAMES = ["row_id", "w0", "idx", "val"]
 
-# Dense-idx elision: when every row of a batch has idx == [0..k), the idx
-# list column is pure redundancy — k·4 B/row (a quarter of a k=8 blob)
-# paid on every crossing and in the cache.  The encode drops the column
-# and stamps k in the schema metadata; the kernels' ``_flatten_rb``
-# resynthesizes the flat index vector (np.tile) for one allocation per pass.
+# Dense-idx elision: when every row's idx is [0..k), the idx list column is
+# pure redundancy — k·4 B/row (a quarter of a k=8 blob) paid on every
+# crossing and in the cache.  The encode drops the column and stamps k in
+# the decode schema's metadata; the kernels' ``_flatten_rb`` resynthesizes
+# the flat index vector (np.tile) for one allocation per pass.
 DENSE_IDX_META = b"ebw_dense_k"
 
-# Identical batched serializer on every cached blob RDD: ``RDD.zip`` (the
+# Shared serializer of every Python-written blob RDD.  ``RDD.zip`` (the
 # split-state base↔state align) silently re-pickles BOTH sides per job when
 # batch sizes differ (pyspark/core/rdd.py, ``zip``; measured 3.6× slower
-# passes).  Batch size 1 is right regardless — each element is already a
-# multi-MB Arrow IPC blob.
+# passes); the raw-bytes base counts as batch size 1, so this must be 1 too.
 BLOB_SER = BatchedSerializer(CPickleSerializer(), 1)
 
 CKPT_EVERY = 8  # commits between lineage truncations
 
 BOUNDS_ERROR = "bounds must strictly contain the initial ratio guess"
 
-# Scale-adaptive blob partitioning (r13, guide §2.2 "fewer, larger
-# partitions"): an iteration pass's per-task numpy work on a ~19k-row blob
-# is sub-millisecond, so at small N the per-task fixed cost (scheduling +
-# Python-worker round trip) dominates every pass — measured 276 ms/job at
-# 32 partitions vs 162 ms at 4 for identical work.  Encoding therefore
-# coalesces the finished blobs down to ceil(N / rows-per-partition)
-# partitions (shuffle=True so the ENCODE still runs at full input
-# parallelism and only the blobs move, once, at setup).  At real scale
-# N/rows_target >> defaultParallelism and the coalesce never fires.
-_BLOB_ROWS_PER_PARTITION_CONF = "spark.ebw.blobRowsPerPartition"
-_BLOB_ROWS_PER_PARTITION_DEFAULT = 150_000
+# the warm-start ratio column of a split-state base (named apart from the
+# state's own ``ratio`` so the zipped batch has one column of each name)
+GUESS = "ratio_guess"
+
+# ``private[sql]`` on Spark's classic Dataset; Scala compiles it public, so
+# py4j reaches it.  Resolved in one place (:func:`_arrow_batch_rdd`).
+_ARROW_WRITER = "toArrowBatchRdd"
 
 
 # -- encode / decode ---------------------------------------------------------
-def maybe_elide_idx(rb: pa.RecordBatch, k: int) -> pa.RecordBatch:
-    """Drop the ``idx`` column from a packed batch when it is exactly the
-    dense ``[0..k)`` pattern on every row (stamped in schema metadata for
-    ``_flatten_rb`` to resynthesize); returns ``rb`` unchanged for any
-    other sparsity pattern."""
-    i = rb.schema.get_field_index("idx")
-    if i < 0 or k <= 0:
-        return rb
-    idx = rb.column(i)
-    lens = pc.list_value_length(idx).to_numpy().astype(np.int64, copy=False)
-    if lens.size == 0 or not (lens == k).all():
-        return rb
-    flat = idx.flatten().to_numpy(zero_copy_only=False)
-    if not np.array_equal(
-        flat, np.tile(np.arange(k, dtype=flat.dtype), lens.size)
-    ):
-        return rb
-    arrays = [rb.column(j) for j in range(rb.num_columns) if j != i]
-    fields = [rb.schema.field(j) for j in range(rb.num_columns) if j != i]
-    meta = dict(rb.schema.metadata or {})
-    meta[DENSE_IDX_META] = str(k).encode()
-    return pa.RecordBatch.from_arrays(
-        arrays, schema=pa.schema(fields, metadata=meta)
-    )
+def _arrow_batch_rdd(df: DataFrame):
+    """JavaRDD of ``df``'s Arrow IPC record-batch messages, written by the
+    JVM; raises ``blob_encode_unavailable`` when this Spark build lacks the
+    writer (there is no Python-encode fallback)."""
+    try:
+        return getattr(df._jdf, _ARROW_WRITER)().toJavaRDD()
+    except (AttributeError, Py4JError) as exc:
+        if isinstance(exc, Py4JJavaError):
+            raise
+        raise RuntimeError(
+            f"blob_encode_unavailable: Spark {df.sparkSession.version} has "
+            f"no JVM Dataset.{_ARROW_WRITER}, which the blob encode needs "
+            f"({type(exc).__name__}: {exc})"
+        ) from exc
+
+
+def dense_idx(df: DataFrame, k: int) -> bool:
+    """Whether the optimized plan proves every row's ``idx`` is ``[0..k)``:
+    the column folds to that literal array (the data layer's static moment
+    ids).  Anything else — ids from a join, an aggregate or a per-row
+    expression, or a plan shape this check does not read — keeps the
+    column, which costs bytes, never correctness."""
+    if k <= 0:
+        return False
+    try:
+        plan = df.select("idx")._jdf.queryExecution().optimizedPlan()
+        if plan.nodeName() != "Project":
+            return False
+        expr = plan.expressions().head()
+        if expr.nodeName() == "Alias":
+            expr = expr.child()
+        if not expr.foldable():
+            return False
+        ids = expr.eval(None).toIntArray()
+    except Py4JError:
+        return False
+    return list(ids) == list(range(k))
+
+
+def encode(df: DataFrame, k: int, dense: bool) -> tuple[RDD, pa.Schema]:
+    """Lazily cached blob RDD of ``df`` — one JVM-written Arrow record-batch
+    message per batch — and the schema its elements decode against.
+    ``dense`` (from :func:`dense_idx`) drops ``idx`` and stamps
+    :data:`DENSE_IDX_META`.  The first job that reads the cache runs the
+    source scan, the encode and that job's own work in one pass."""
+    if dense:
+        df = df.drop("idx")
+    schema = to_arrow_schema(df.schema)
+    if dense:
+        schema = schema.with_metadata({DENSE_IDX_META: str(k).encode()})
+    rdd = RDD(_arrow_batch_rdd(df), df.sparkSession.sparkContext, NoOpSerializer())
+    return persist(rdd), schema
 
 
 def ipc_ser(rb: pa.RecordBatch) -> bytes:
@@ -103,16 +138,27 @@ def ipc_ser(rb: pa.RecordBatch) -> bytes:
     return sink.getvalue().to_pybytes()
 
 
-def ipc_deser(b: bytes) -> pa.RecordBatch:
-    return pa.ipc.open_stream(pa.BufferReader(b)).read_next_batch()
+def ipc_deser(b) -> pa.RecordBatch:
+    return pa.ipc.open_stream(pa.py_buffer(b)).read_next_batch()
 
 
-def _combine(base_blob, state_blob) -> pa.RecordBatch:
+def decode(blob, schema: pa.Schema) -> pa.RecordBatch:
+    """One blob → one RecordBatch, zero-copy.  A Python-written blob is an
+    IPC stream (it opens with a schema message); a JVM-written base
+    element is a bare record-batch message, decoded against ``schema``."""
+    msg = pa.ipc.read_message(pa.py_buffer(blob))
+    if msg.type == "schema":
+        return ipc_deser(blob)
+    rb = pa.ipc.read_record_batch(msg, schema)
+    return rb.replace_schema_metadata(schema.metadata)
+
+
+def _combine(base_blob, state_blob, schema: pa.Schema) -> pa.RecordBatch:
     """One zip pair → one RecordBatch, zero-copy (same buffers).  The
-    combined schema keeps the BASE blob's metadata: a dense-elided base has
-    no idx column, and the stamp that resynthesizes it must survive."""
-    b = ipc_deser(bytes(base_blob))
-    s = ipc_deser(bytes(state_blob))
+    combined schema keeps the BASE's metadata: a dense-elided base has no
+    idx column, and the stamp that resynthesizes it must survive."""
+    b = decode(base_blob, schema)
+    s = decode(state_blob, schema)
     fields = [
         *(b.schema.field(i) for i in range(b.num_columns)),
         *(s.schema.field(i) for i in range(s.num_columns)),
@@ -123,76 +169,29 @@ def _combine(base_blob, state_blob) -> pa.RecordBatch:
     )
 
 
-def batches(elements) -> Iterator[pa.RecordBatch]:
-    """Record batches of a blob RDD partition.  An element is a blob, or a
-    ``(base, state)`` zip pair whose state side is a blob or the elastic
-    fused commit+stats cache's ``(state, sums, mins)`` tuple."""
+def batches(elements, schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Record batches of a blob RDD partition; ``schema`` decodes the
+    JVM-written base elements.  An element is a blob, or a ``(base,
+    state)`` zip pair whose state side is a blob or the elastic fused
+    commit+stats cache's ``(state, sums, mins)`` tuple."""
     for e in elements:
         if isinstance(e, tuple):
             base, state = e
             if isinstance(state, tuple):
                 state = state[0]
-            yield _combine(base, state)
+            yield _combine(base, state, schema)
         else:
-            yield ipc_deser(bytes(e))
+            yield decode(e, schema)
 
 
 # -- cache -------------------------------------------------------------------
 def persist(rdd):
-    """Cache a blob RDD with the shared serializer (lazy: the next job
-    that reads it materializes it)."""
-    return rdd._reserialize(BLOB_SER).persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def adaptive_blob_partitions(spark, n: int, current: int) -> int | None:
-    """Target blob-partition count for an N-row packed problem, or None
-    when the current partitioning should stand (large problems, or the
-    knob disabled with a non-positive value)."""
-    try:
-        rows_target = int(
-            spark.conf.get(
-                _BLOB_ROWS_PER_PARTITION_CONF,
-                str(_BLOB_ROWS_PER_PARTITION_DEFAULT),
-            )
-        )
-    except Exception:  # pragma: no cover - conf unavailable
-        rows_target = _BLOB_ROWS_PER_PARTITION_DEFAULT
-    if rows_target <= 0 or n <= 0:
-        return None
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    p = max(1, -(-n // rows_target))
-    if p > par:
-        # not a small problem: N already exceeds rows_target per core —
-        # moving blobs around would shuffle real data for no pass savings
-        return None
-    return p if p < current else None
-
-
-def _coalesce_small(rdd, spark, n: int):
-    p = adaptive_blob_partitions(spark, n, rdd.getNumPartitions())
-    return rdd if p is None else rdd.coalesce(p, shuffle=True)
-
-
-def encode(
-    df: DataFrame,
-    k: int,
-    n: int,
-    to_rb: Callable[[pa.RecordBatch], pa.RecordBatch] | None = None,
-):
-    """Lazily cached blob RDD of ``df``: one blob per non-empty Arrow batch
-    (optionally reshaped by ``to_rb``), dense idx elided.  The first job
-    that reads it runs encode + cache + that job's own work in one scan."""
-
-    def to_blob(it: Iterator[pa.RecordBatch]):
-        for rb in it:
-            if rb.num_rows:
-                out = maybe_elide_idx(to_rb(rb) if to_rb else rb, k)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([ipc_ser(out)], type=pa.binary())], ["payload"]
-                )
-
-    rdd = df.mapInArrow(to_blob, "payload binary").rdd.map(lambda r: bytes(r[0]))
-    return persist(_coalesce_small(rdd, df.sparkSession, n))
+    """Cache a blob RDD (lazy: the next job that reads it materializes
+    it).  The JVM-encoded base is cached as raw bytes; a Python-written
+    RDD takes the shared :data:`BLOB_SER`."""
+    if not isinstance(rdd._jrdd_deserializer, NoOpSerializer):
+        rdd = rdd._reserialize(BLOB_SER)
+    return rdd.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _inside(ratio: np.ndarray, bounds) -> bool:
@@ -207,82 +206,60 @@ def _inside(ratio: np.ndarray, bounds) -> bool:
 def split_state(
     df: DataFrame,
     k: int,
-    n: int,
     state_of: Callable[[np.ndarray], pa.RecordBatch],
     *,
     bounds: tuple[float, float | None] | None = None,
     ratio_guess: DataFrame | None = None,
 ):
-    """``(base, state)`` blob RDDs for a stateful kernel, aligned element
-    for element so every pass reads ``base.zip(state)``.  ``state_of``
-    renders the state batch for a start-ratio vector; the start ratio must
-    lie strictly inside ``bounds = (lb, ub | None)`` when given.
+    """``(base, state, schema)`` for a stateful kernel: the JVM-encoded
+    base, a state blob RDD derived from it element for element (so every
+    pass reads ``base.zip(state)``), and the base's decode schema.
+    ``state_of`` renders the state batch for a start-ratio vector; the
+    start ratio must lie strictly inside ``bounds = (lb, ub | None)`` when
+    given.
 
     Cold start (constant ratio 1.0): the bounds check is a driver-side
-    scalar test and the state derives from the base cache; nothing runs
-    here — the kernel's first pass materializes BOTH caches in one source
-    scan.  Warm start (per-row ``ratio_guess``): one Arrow pass renders
-    aligned (base, state) blobs with the per-row bounds check riding the
-    same scan, and both caches are counted here so a bounds violation
-    surfaces at construction."""
+    scalar test and nothing runs here — the kernel's first pass
+    materializes BOTH caches in one source scan.  Warm start (per-row
+    ``ratio_guess``): the base encode carries the guess as
+    :data:`GUESS`, the state pass derives the state from it with the
+    per-row bounds check, and the state cache is counted here (which
+    materializes the base too) so a bounds violation surfaces at
+    construction."""
+    dense = dense_idx(df, k)
+    cols = list(BASE_NAMES)
     if ratio_guess is None:
         if not _inside(np.ones(1), bounds):
             raise ValueError(BOUNDS_ERROR)
-        base = encode(df.select(*BASE_NAMES), k, n)
+    else:
+        df = df.join(
+            ratio_guess.select("row_id", F.col("ratio").alias(GUESS)),
+            "row_id",
+            "left",
+        ).withColumn(GUESS, F.coalesce(GUESS, F.lit(1.0)))
+        cols.append(GUESS)
+    base, schema = encode(df.select(*cols), k, dense)
 
-        def init_state(blobs):
-            for b in blobs:
-                yield ipc_ser(state_of(np.ones(ipc_deser(bytes(b)).num_rows)))
+    def init_state(blobs):
+        for rb in batches(blobs, schema):
+            i = rb.schema.get_field_index(GUESS)
+            if i < 0:
+                ratio = np.ones(rb.num_rows)
+            else:
+                ratio = rb.column(i).to_numpy(zero_copy_only=False)
+                if not _inside(ratio, bounds):
+                    raise ValueError(BOUNDS_ERROR)
+            yield ipc_ser(state_of(ratio))
 
-        return base, persist(
-            base.mapPartitions(init_state, preservesPartitioning=True)
-        )
-
-    df = df.join(
-        ratio_guess.select("row_id", "ratio"), "row_id", "left"
-    ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
-
-    def to_pair(it: Iterator[pa.RecordBatch]):
-        for rb in it:
-            if not rb.num_rows:
-                continue
-            ratio = rb.column(rb.schema.get_field_index("ratio")).to_numpy(
-                zero_copy_only=False
-            )
-            if not _inside(ratio, bounds):
-                raise ValueError(BOUNDS_ERROR)
-            base_rb = maybe_elide_idx(
-                pa.RecordBatch.from_arrays(
-                    [rb.column(rb.schema.get_field_index(c)) for c in BASE_NAMES],
-                    BASE_NAMES,
-                ),
-                k,
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([ipc_ser(base_rb)], type=pa.binary()),
-                    pa.array([ipc_ser(state_of(ratio))], type=pa.binary()),
-                ],
-                ["base", "state"],
-            )
-
-    pairs = (
-        df.select(*BASE_NAMES, "ratio")
-        .mapInArrow(to_pair, "base binary, state binary")
-        .rdd.map(lambda r: (bytes(r[0]), bytes(r[1])))
-    )
-    pairs = persist(_coalesce_small(pairs, df.sparkSession, n))
-    base = persist(pairs.map(lambda t: t[0], preservesPartitioning=True))
-    state = persist(pairs.map(lambda t: t[1], preservesPartitioning=True))
-    try:
-        base.count()
-    except Exception as exc:
-        if BOUNDS_ERROR in str(exc):
-            raise ValueError(BOUNDS_ERROR) from None
-        raise
-    state.count()  # reads the pair cache, not the source scan
-    pairs.unpersist(blocking=True)
-    return base, state
+    state = persist(base.mapPartitions(init_state, preservesPartitioning=True))
+    if ratio_guess is not None:
+        try:
+            state._jrdd.count()
+        except Exception as exc:
+            if BOUNDS_ERROR in str(exc):
+                raise ValueError(BOUNDS_ERROR) from None
+            raise
+    return base, state, schema
 
 
 def commit(rdd, commits_since_ckpt: int):
@@ -322,21 +299,21 @@ def pack_payload(sums, mins) -> tuple[bytes, bytes]:
     return sbuf.tobytes(), np.asarray(mins, dtype=np.float64).tobytes()
 
 
-def payloads(rdd, pass_fn: Callable):
+def payloads(rdd, pass_fn: Callable, schema: pa.Schema):
     """RDD of the ``(sums, mins)`` payloads ``pass_fn`` yields over each
     partition's record batches."""
     return rdd.mapPartitions(
-        lambda it: pass_fn(batches(it)), preservesPartitioning=True
+        lambda it: pass_fn(batches(it, schema)), preservesPartitioning=True
     )
 
 
-def transform(rdd, pass_fn: Callable, names=None):
+def transform(rdd, pass_fn: Callable, schema: pa.Schema, names=None):
     """Blob RDD of the batches ``pass_fn`` yields (uncached), keeping only
     the ``names`` columns when given — a split-state commit re-encodes the
     mutable state, never the immutable base."""
 
     def fn(it):
-        for rb in pass_fn(batches(it)):
+        for rb in pass_fn(batches(it, schema)):
             if names is not None:
                 rb = pa.RecordBatch.from_arrays(
                     [rb.column(rb.schema.get_field_index(c)) for c in names],
@@ -391,14 +368,17 @@ def _unpack(it: Iterator[pa.RecordBatch]):
 
 
 def weights_df(
-    spark, rdd, weight_of: Callable[[pa.RecordBatch], np.ndarray]
+    spark,
+    rdd,
+    schema: pa.Schema,
+    weight_of: Callable[[pa.RecordBatch], np.ndarray],
 ) -> DataFrame:
     """``(row_id, new_weight)`` DataFrame, Arrow end to end: each batch's
     weights (``weight_of``) cross the RDD→DataFrame seam as one binary row,
     then ``mapInArrow`` explodes them JVM-side."""
 
     def to_payload(it):
-        for rb in batches(it):
+        for rb in batches(it, schema):
             out = pa.RecordBatch.from_arrays(
                 [
                     rb.column(rb.schema.get_field_index("row_id")),

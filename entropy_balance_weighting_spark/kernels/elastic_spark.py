@@ -11,9 +11,9 @@ co-partitioned caches (that align is a join = a shuffle per iteration), but
 because the state RDD is derived element-for-element from the base RDD.
 
 Data plane (``kernels/blob_plane.py``):
-  - **base RDD** — one element per Arrow batch: the IPC-serialized
-    immutable columns ``(row_id, w0, idx, val)``.  Cached ONCE, never
-    rewritten.
+  - **base RDD** — one element per Arrow batch: the immutable columns
+    ``(row_id, w0, idx, val)`` as written by Spark's JVM Arrow writer.
+    Cached ONCE, never rewritten.
   - **state RDD** — IPC batches of the 3 mutable doubles
     ``(ratio, lm_lo, lm_hi)`` (24 B/row since r9 — the bound slacks are
     DERIVED, see STATE_NAMES — vs ~150 B/row for full packed rows at
@@ -307,7 +307,7 @@ def _ecommit_state_pass(
 
 def _ecommit_stats_pass(
     k, clam, cdlam, ceta, cmu_s, alpha_p, alpha_d,
-    lam, eta, mu_s, lb, ub, has_ub, blocks,
+    lam, eta, mu_s, lb, ub, has_ub, blocks, schema,
 ) -> Callable:
     """FUSED commit+stats — the r9 commit-bandwidth cut.  One pass over
     ``base.zip(old_state)`` per batch: replay the pending commit (step
@@ -335,7 +335,7 @@ def _ecommit_stats_pass(
         acc = _EStatsAcc(k, blocks)
         n_state = len(STATE_NAMES)
         held = None
-        for rb in blob_plane.batches(pair_iter):
+        for rb in blob_plane.batches(pair_iter, schema):
             flat_idx, flat_val, lens = _flatten_rb(rb)
             pieces = _pieces(
                 rb, flat_idx, flat_val, lens, clam, ceta, cmu_s, lb, ub,
@@ -400,11 +400,12 @@ def _g1_pass(k, validate: bool = False) -> Callable:
 
 class ElasticSparkKernel:
     def __init__(
-        self, base_rdd, state_rdd, spark, k: int, sum_w0: float, n: int,
-        lb: float, ub: float, has_ub: bool, block_structure=None,
+        self, base_rdd, state_rdd, schema, spark, k: int, sum_w0: float,
+        n: int, lb: float, ub: float, has_ub: bool, block_structure=None,
     ) -> None:
         self._base = base_rdd
         self._state = state_rdd
+        self._schema = schema  # decode schema of the JVM-encoded base
         self._spark = spark
         self.k = k
         self.sum_w0 = sum_w0
@@ -459,8 +460,8 @@ class ElasticSparkKernel:
                 ]
             )
 
-        base_rdd, state_rdd = blob_plane.split_state(
-            df, k, n, state_of,
+        base_rdd, state_rdd, schema = blob_plane.split_state(
+            df, k, state_of,
             bounds=(lb, ub if has_ub else None),
             ratio_guess=ratio_guess,
         )
@@ -468,13 +469,15 @@ class ElasticSparkKernel:
 
         bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
         return cls(
-            base_rdd, state_rdd, df.sparkSession, k, sum_w0, n, lb, ub,
-            has_ub, block_structure=bs,
+            base_rdd, state_rdd, schema, df.sparkSession, k, sum_w0, n, lb,
+            ub, has_ub, block_structure=bs,
         )
 
     def _reduce(self, fn, big: bool = False, pairs=None):
         if pairs is None:
-            pairs = blob_plane.payloads(self._base.zip(self._state), fn)
+            pairs = blob_plane.payloads(
+                self._base.zip(self._state), fn, self._schema
+            )
         sums, mins = blob_plane.reduce_payload(pairs, big)
         # the reduce materialized any flushed lazy commit into its cache
         if self._prev is not None:
@@ -522,7 +525,7 @@ class ElasticSparkKernel:
                     _ecommit_stats_pass(
                         k, clam, cdlam, ceta, cmu_s, ap, ad,
                         lam, eta, mu_s, self.lb, self.ub, self.has_ub,
-                        blocks_tuple(self.block_structure),
+                        blocks_tuple(self.block_structure), self._schema,
                     ),
                     preservesPartitioning=True,
                 ),
@@ -601,6 +604,7 @@ class ElasticSparkKernel:
                     clam, cdlam, ceta, cmu_s, ap, ad, self.lb, self.ub,
                     self.has_ub,
                 ),
+                self._schema,
             ),
             self._commits_since_ckpt,
         )
@@ -638,6 +642,7 @@ class ElasticSparkKernel:
         return blob_plane.weights_df(
             self._spark,
             self._base.zip(self._state),
+            self._schema,
             lambda rb: _rb_col(rb, "ratio") * _rb_col(rb, "w0"),
         )
 

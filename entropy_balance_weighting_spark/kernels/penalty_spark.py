@@ -284,11 +284,12 @@ class PenaltySparkKernel:
     """Distributed penalty kernel over split-state Arrow blobs."""
 
     def __init__(
-        self, base_rdd, state_rdd, spark, k: int, sum_w0: float, n: int,
-        has_ub: bool, bounded: bool, block_structure=None,
+        self, base_rdd, state_rdd, schema, spark, k: int, sum_w0: float,
+        n: int, has_ub: bool, bounded: bool, block_structure=None,
     ) -> None:
         self._base = base_rdd
         self._state = state_rdd
+        self._schema = schema  # decode schema of the JVM-encoded base
         self._spark = spark
         self.k = k
         self.sum_w0 = sum_w0
@@ -343,8 +344,8 @@ class PenaltySparkKernel:
                 names,
             )
 
-        base_rdd, state_rdd = blob_plane.split_state(
-            df, k, n, state_of,
+        base_rdd, state_rdd, schema = blob_plane.split_state(
+            df, k, state_of,
             bounds=(lb, ub if has_ub else None) if bounded else None,
             ratio_guess=ratio_guess,
         )
@@ -352,14 +353,15 @@ class PenaltySparkKernel:
 
         bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
         return cls(
-            base_rdd, state_rdd, df.sparkSession, k, sum_w0, n, has_ub,
-            bounded, block_structure=bs,
+            base_rdd, state_rdd, schema, df.sparkSession, k, sum_w0, n,
+            has_ub, bounded, block_structure=bs,
         )
 
     # -- plumbing ----------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
         sums, mins = blob_plane.reduce_payload(
-            blob_plane.payloads(self._base.zip(self._state), fn), big
+            blob_plane.payloads(self._base.zip(self._state), fn, self._schema),
+            big,
         )
         # a reduce materializes any pending lazy commit into its cache
         if self._prev is not None:
@@ -379,7 +381,8 @@ class PenaltySparkKernel:
         mutable state columns are re-cached."""
         new_state, self._commits_since_ckpt = blob_plane.commit(
             blob_plane.transform(
-                self._base.zip(self._state), fn, self._state_names
+                self._base.zip(self._state), fn, self._schema,
+                self._state_names,
             ),
             self._commits_since_ckpt,
         )
@@ -416,6 +419,7 @@ class PenaltySparkKernel:
         return blob_plane.weights_df(
             self._spark,
             self._base.zip(self._state),
+            self._schema,
             lambda rb: _rb_col(rb, "ratio") * _rb_col(rb, "w0"),
         )
 

@@ -6,7 +6,7 @@ per-row CSR (the Spark rendering of the reference's package-wide CSR
 canonicalization, ref: shared.py:11-12); q = w0/Σw0 and the analytic start
 wstar are recomputed per pass, a materialized wstar column appears only
 after a warm start or a materialized commit, and a dense ``[0..k)`` idx
-pattern is elided per batch (``blob_plane.maybe_elide_idx``).  Packing
+column is dropped when the plan proves it (``blob_plane.dense_idx``).  Packing
 happens once; every solver iteration then runs whole-pass batch jobs that
 compute ALL of the iteration's N→{scalar,K,K×K} reductions in a single
 scan (the same fusion the reference gets from numexpr + MKL, ref:
@@ -16,7 +16,8 @@ zero-copy by ``_flatten_rb``; pandas conversion would materialize one
 Python ndarray PER ROW per list column.
 
 The packed rows are cached as an RDD of Arrow IPC byte blobs (one element
-per record batch), not as a DataFrame — see ``kernels/blob_plane.py``,
+per record batch, written by Spark's JVM Arrow writer), not as a
+DataFrame — see ``kernels/blob_plane.py``,
 which holds the encode, cache, reduce and render plumbing all three
 distributed kernels share.  This module holds the batch math they share
 (CSR decode, X·λ / Xᵀv products, Gram accumulators, the reduce-topology
@@ -588,9 +589,11 @@ class SparkKernel:
     eviction can never cascade a long recompute chain."""
 
     def __init__(
-        self, rdd, spark, k: int, sum_w0: float, n: int, block_structure=None
+        self, rdd, schema, spark, k: int, sum_w0: float, n: int,
+        block_structure=None,
     ) -> None:
         self._rdd = rdd
+        self._schema = schema  # decode schema of the JVM-encoded base
         self._spark = spark
         self.k = k
         self.sum_w0 = sum_w0
@@ -647,37 +650,30 @@ class SparkKernel:
 
         r8 pack-cost work (PLANS.md §13): the blob carries only
         ``(row_id, w0, idx?, val)`` — q and the analytic start wstar are
-        recomputed per pass (one divide), a dense ``[0..k)`` idx pattern
-        is elided per batch (``blob_plane.maybe_elide_idx``), and the persist is
-        LAZY: the first stats reduce materializes encode+cache+reductions
-        in one job instead of a separate pack scan."""
+        recomputed per pass (one divide), a dense ``[0..k)`` idx column is
+        dropped when the plan proves it (``blob_plane.dense_idx``), and the
+        persist is LAZY: the first stats reduce materializes
+        encode+cache+reductions in one job instead of a separate pack
+        scan.  A warm start adds the materialized start state as the
+        column ``wstar = (w0 / Σw0) · ratio``."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
-        has_guess = ratio_guess is not None
-        if has_guess:
+        dense = blob_plane.dense_idx(df, k)
+        cols = [F.col(c) for c in BASE_NAMES]
+        if ratio_guess is not None:
             df = df.join(
                 ratio_guess.select("row_id", "ratio"), "row_id", "left"
-            ).withColumn("ratio", F.coalesce("ratio", F.lit(1.0)))
-
-        def with_wstar(rb: pa.RecordBatch) -> pa.RecordBatch:
-            # warm start: the blob carries the materialized start wstar
-            q = _rb_col(rb, "w0") / sum_w0
-            wstar = np.ascontiguousarray(q * _rb_col(rb, "ratio"))
-            return pa.RecordBatch.from_arrays(
-                [rb.column(rb.schema.get_field_index(c)) for c in BASE_NAMES]
-                + [pa.array(wstar, type=pa.float64())],
-                [*BASE_NAMES, "wstar"],
             )
-
-        cols = [*BASE_NAMES, *(["ratio"] if has_guess else [])]
-        rdd = blob_plane.encode(
-            df.select(*cols), k, n, with_wstar if has_guess else None
-        )
+            ratio = F.coalesce("ratio", F.lit(1.0))
+            cols.append(((F.col("w0") / F.lit(sum_w0)) * ratio).alias("wstar"))
+        rdd, schema = blob_plane.encode(df.select(*cols), k, dense)
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
         bs = (
             BlockStructure.from_groups(moment_groups) if moment_groups else None
         )
-        kern = cls(rdd, df.sparkSession, k, sum_w0, n, block_structure=bs)
+        kern = cls(
+            rdd, schema, df.sparkSession, k, sum_w0, n, block_structure=bs
+        )
         if ratio_guess is None:
             # wstar = q = q·exp(X·0): the start point is analytic
             kern._wprog = [("exp", np.zeros(k))]
@@ -687,8 +683,9 @@ class SparkKernel:
         """Force the (lazy) blob cache to build now.  The solve path never
         needs this — the first stats reduce materializes encode + cache +
         reductions in ONE job — but benches/tests that want the pack cost
-        on its own line call it explicitly."""
-        self._rdd.count()
+        on its own line call it explicitly.  Counted on the JVM, so no
+        Python worker starts and the time is the encode's."""
+        self._rdd._jrdd.count()
 
     def init_state(self, ratio_guess=None) -> None:
         if ratio_guess is not None:
@@ -698,7 +695,9 @@ class SparkKernel:
 
     # -- passes ------------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        return blob_plane.reduce_payload(blob_plane.payloads(self._rdd, fn), big)
+        return blob_plane.reduce_payload(
+            blob_plane.payloads(self._rdd, fn, self._schema), big
+        )
 
     @property
     def _gram_big(self) -> bool:
@@ -892,6 +891,7 @@ class SparkKernel:
             blob_plane.transform(
                 self._rdd,
                 _commit_pass(choice, lam, dlam, alpha, self._wprog, self.sum_w0),
+                self._schema,
             ),
             self._commits_since_ckpt,
         )
@@ -933,7 +933,9 @@ class SparkKernel:
             q = _rb_q(rb, sum_w0)
             return _w_state(rb, q, flat_idx, flat_val, lens, wprog) * sum_w0
 
-        return blob_plane.weights_df(self._spark, self._rdd, weight_of)
+        return blob_plane.weights_df(
+            self._spark, self._rdd, self._schema, weight_of
+        )
 
     def cleanup(self) -> None:
         blob_plane.release(self._spark.sparkContext, self._rdd, self._prev)

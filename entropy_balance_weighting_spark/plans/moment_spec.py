@@ -125,9 +125,8 @@ _SPREAD_BYTES_CONF = "spark.ebw.spreadPartitionBytes"
 # Unit: the OPTIMIZER'S size-estimate domain (optimizedPlan().stats()),
 # which for a pruned parquet scan tracks encoded column bytes (~12 B/row
 # for the bench specs) — NOT in-memory row size.  2 MiB of estimate ≈
-# 150k prepared rows, aligning the spread width with
-# spark.ebw.blobRowsPerPartition so the packed-blob coalesce becomes a
-# no-op instead of a second shuffle.
+# 150k prepared rows.  This is the one small-input sizing rule: the
+# kernels' blob caches keep the packed plan's partitioning as it is.
 _SPREAD_BYTES_DEFAULT = 2 * 1024 * 1024
 # set once the size-estimate fallback below has been logged in this process
 _SPREAD_FALLBACK_WARNED = False
@@ -147,7 +146,8 @@ def _spread_width(rows: DataFrame) -> int | None:
     5× its 8-core time under exactly that amplification) — than the
     parallelism returns, and every downstream consumer (counts
     aggregate, long explode, packed encode) hits its per-task sweet
-    spot near the blob kernel's 150k rows/partition.  Conf-overridable;
+    spot near 150k rows/partition.  The kernels' blob caches inherit
+    this width; nothing downstream re-sizes them.  Conf-overridable;
     ``<= 0`` restores the full-width r13 behavior."""
     sc = rows.sparkSession.sparkContext
     cores = sc.defaultParallelism

@@ -1,21 +1,23 @@
-"""Dense-idx elision + narrow-blob contracts (kernels/blob_plane.py, r8).
+"""Blob-plane encode/decode contracts (kernels/blob_plane.py).
 
-Pure-pyarrow unit tests (no Spark session): the elision must be exactly
-invertible through _flatten_rb, must refuse non-dense patterns, and must
-survive the zip/commit batch rebuilds that propagate schema metadata.
+The pure-pyarrow tests build dense-elided batches by hand and check that
+the elision stamp survives the zip and commit batch rebuilds.  The Spark
+tests check that the JVM-encoded base cache decodes to exactly the packed
+rows, that the plan-time elision fires only for provably dense ids, and
+that a Spark build without the JVM Arrow writer fails with a named error.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pytest
 
+from entropy_balance_weighting_spark.kernels import blob_plane
 from entropy_balance_weighting_spark.kernels.blob_plane import (
     DENSE_IDX_META,
     batches,
-    ipc_deser,
     ipc_ser,
-    maybe_elide_idx,
 )
 from entropy_balance_weighting_spark.kernels.spark import (
     _commit_pass,
@@ -40,35 +42,12 @@ def _packed_rb(idx_rows, val_rows, w0=None):
     )
 
 
-def test_elide_roundtrip_dense():
-    k, n = 5, 7
-    idx_rows = [list(range(k))] * n
-    val_rows = [[float(i * k + j) for j in range(k)] for i in range(n)]
-    rb = _packed_rb(idx_rows, val_rows)
-    fi0, fv0, l0 = _flatten_rb(rb)
-
-    elided = maybe_elide_idx(rb, k)
-    assert elided.schema.get_field_index("idx") == -1
-    assert elided.schema.metadata[DENSE_IDX_META] == b"5"
-    # roundtrips through IPC (the blob cache representation)
-    back = ipc_deser(ipc_ser(elided))
-    fi1, fv1, l1 = _flatten_rb(back)
-    np.testing.assert_array_equal(fi0, fi1)
-    np.testing.assert_array_equal(fv0, fv1)
-    np.testing.assert_array_equal(l0, l1)
-
-
-def test_elide_refuses_non_dense_patterns():
-    k = 3
-    # wrong length row
-    rb = _packed_rb([[0, 1, 2], [0, 1]], [[1.0, 2.0, 3.0], [1.0, 2.0]])
-    assert maybe_elide_idx(rb, k) is rb
-    # right length, wrong indices
-    rb2 = _packed_rb([[0, 1, 2], [0, 2, 1]], [[1.0] * 3, [1.0] * 3])
-    assert maybe_elide_idx(rb2, k) is rb2
-    # empty batch
-    rb3 = _packed_rb([], [])
-    assert maybe_elide_idx(rb3, k) is rb3
+def _elided_rb(k, val_rows, w0=None):
+    """A dense-elided base batch as the encode produces it: no idx column,
+    k stamped in the schema metadata."""
+    rb = _packed_rb([list(range(k))] * len(val_rows), val_rows, w0)
+    rb = rb.drop_columns(["idx"])
+    return rb.replace_schema_metadata({DENSE_IDX_META: str(k).encode()})
 
 
 def test_rb_q_recomputes_from_w0():
@@ -78,14 +57,16 @@ def test_rb_q_recomputes_from_w0():
 
 def test_zip_combined_preserves_elision_metadata():
     k, n = 4, 3
-    base = maybe_elide_idx(
-        _packed_rb([list(range(k))] * n, [[1.0] * k] * n), k
-    )
+    base = _elided_rb(k, [[1.0] * k] * n)
     state = pa.RecordBatch.from_arrays(
         [pa.array(np.ones(n), type=pa.float64())], ["ratio"]
     )
+    # the base side is a bare record-batch message, as the JVM writes it
     (combined,) = list(
-        batches([(ipc_ser(base), ipc_ser(state))])
+        batches(
+            [(base.serialize().to_pybytes(), ipc_ser(state))],
+            base.schema,
+        )
     )
     assert combined.schema.metadata[DENSE_IDX_META] == str(k).encode()
     fi, fv, lens = _flatten_rb(combined)
@@ -96,14 +77,7 @@ def test_zip_combined_preserves_elision_metadata():
 
 def test_commit_pass_appends_wstar_and_keeps_metadata():
     k, n = 3, 4
-    base = maybe_elide_idx(
-        _packed_rb(
-            [list(range(k))] * n,
-            [[0.1, 0.2, 0.3]] * n,
-            w0=np.full(n, 2.0),
-        ),
-        k,
-    )
+    base = _elided_rb(k, [[0.1, 0.2, 0.3]] * n, w0=np.full(n, 2.0))
     sum_w0 = 8.0
     wprog = [("exp", np.zeros(k))]
     fn = _commit_pass("dual", np.zeros(k), np.zeros(k), 1.0, wprog, sum_w0)
@@ -122,28 +96,207 @@ def test_commit_pass_appends_wstar_and_keeps_metadata():
         )
     )
     assert out2.num_columns == out.num_columns
+    # the Python-written commit blob is a self-describing IPC stream
+    (back,) = list(batches([ipc_ser(out2)], base.schema))
+    assert back.schema.metadata[DENSE_IDX_META] == str(k).encode()
+    assert back.schema.get_field_index("wstar") >= 0
 
 
-def test_adaptive_blob_partitions(spark):
-    """Scale-adaptive blob partitioning (r13): small problems coalesce to
-    ceil(N / rows-per-partition) clamped to the core count; large problems
-    (and a disabled knob) leave the encode partitioning alone."""
-    from entropy_balance_weighting_spark.kernels.blob_plane import (
-        adaptive_blob_partitions,
+# -- JVM encode round trip -----------------------------------------------------
+def _decoded_rows(rdd, schema):
+    """(row_id, w0, idx, val) of every row a blob cache decodes to."""
+    rows = []
+    for rb in batches(rdd.collect(), schema):
+        flat_idx, flat_val, lens = _flatten_rb(rb)
+        ends = np.cumsum(lens)
+        for i, (rid, w) in enumerate(
+            zip(
+                rb.column(rb.schema.get_field_index("row_id")).to_pylist(),
+                rb.column(rb.schema.get_field_index("w0")).to_pylist(),
+            )
+        ):
+            lo = ends[i] - lens[i]
+            rows.append(
+                (
+                    rid,
+                    w,
+                    tuple(int(j) for j in flat_idx[lo : ends[i]]),
+                    tuple(float(v) for v in flat_val[lo : ends[i]]),
+                )
+            )
+    return sorted(rows)
+
+
+def _packed_rows(df):
+    return sorted(
+        (r["row_id"], r["w0"], tuple(r["idx"]), tuple(r["val"]))
+        for r in df.collect()
     )
 
-    par = spark.sparkContext.defaultParallelism
-    # small problem at default 150k rows/partition: 600k rows -> 4 parts
-    assert adaptive_blob_partitions(spark, 600_000, 32) == 4
-    # already at (or below) the target: leave alone
-    assert adaptive_blob_partitions(spark, 600_000, 4) is None
-    assert adaptive_blob_partitions(spark, 600_000, 2) is None
-    # large problem: target clamps to parallelism, current >= that -> None
-    assert adaptive_blob_partitions(spark, 10**9, max(par, 64)) is None
-    # degenerate/disabled
-    assert adaptive_blob_partitions(spark, 0, 32) is None
-    spark.conf.set("spark.ebw.blobRowsPerPartition", "0")
+
+def _static_packed(spark, ids, n=300):
+    from pyspark.sql import functions as F
+
+    return spark.range(n, numPartitions=3).select(
+        F.col("id").alias("row_id"),
+        (F.col("id") % 7 + 0.5).alias("w0"),
+        F.array(*[F.lit(j).cast("int") for j in ids]).alias("idx"),
+        F.array(
+            *[(F.col("id") * (j + 1) % 11).cast("double") for j in ids]
+        ).alias("val"),
+    )
+
+
+def test_jvm_encode_roundtrip_dense_static_ids_elided(spark):
+    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
+
+    k = 8
+    packed = _static_packed(spark, range(k))
+    assert blob_plane.dense_idx(packed, k)
+    kern = SparkKernel.from_problem(None, None, k, prepacked=packed)
     try:
-        assert adaptive_blob_partitions(spark, 600_000, 32) is None
+        assert kern._schema.get_field_index("idx") == -1
+        assert kern._schema.metadata[DENSE_IDX_META] == str(k).encode()
+        assert _decoded_rows(kern._rdd, kern._schema) == _packed_rows(packed)
     finally:
-        spark.conf.unset("spark.ebw.blobRowsPerPartition")
+        kern.cleanup()
+
+
+def test_jvm_encode_roundtrip_non_dense_static_ids_kept(spark):
+    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
+
+    ids = [1, 2, 3, 4, 5, 6, 7, 0]
+    k = len(ids)
+    packed = _static_packed(spark, ids)
+    assert not blob_plane.dense_idx(packed, k)
+    kern = SparkKernel.from_problem(None, None, k, prepacked=packed)
+    try:
+        assert kern._schema.get_field_index("idx") >= 0
+        assert DENSE_IDX_META not in (kern._schema.metadata or {})
+        assert _decoded_rows(kern._rdd, kern._schema) == _packed_rows(packed)
+    finally:
+        kern.cleanup()
+
+
+def test_jvm_encode_roundtrip_grouped_and_generic_paths(spark):
+    import pandas as pd
+
+    from entropy_balance_weighting_spark.kernels.elastic_spark import (
+        ElasticSparkKernel,
+    )
+    from entropy_balance_weighting_spark.kernels.spark import (
+        SparkKernel,
+        pack_rows,
+    )
+    from entropy_balance_weighting_spark.plans import (
+        MomentSpec,
+        build_problem_tables,
+    )
+
+    rng = np.random.default_rng(3)
+    n = 240
+    pdf = pd.DataFrame(
+        {
+            "rid": np.arange(n),
+            "w": rng.uniform(0.5, 2.0, n),
+            "x0": rng.uniform(size=n),
+            "g": rng.choice(["a", "b", "c"], n),
+        }
+    )
+    src = spark.createDataFrame(pdf).repartition(3)
+    # grouped: ids come from the broadcast combo table, never elided
+    pt = build_problem_tables(
+        src,
+        MomentSpec(
+            weight_col="w", numeric=("x0",), group=("g",), row_key=("rid",)
+        ),
+    )
+    assert not blob_plane.dense_idx(pt.packed_arrays, pt.k)
+    kern = ElasticSparkKernel.from_problem(
+        None, None, pt.k, bounds=(0.2, 5.0), prepacked=pt.packed_arrays,
+        moment_groups=pt.moment_groups,
+    )
+    try:
+        assert kern._schema.get_field_index("idx") >= 0
+        assert _decoded_rows(kern._base, kern._schema) == _packed_rows(
+            pt.packed_arrays
+        )
+    finally:
+        kern.cleanup()
+    # generic x_long path (explode + groupBy): dense in fact, but the plan
+    # cannot prove it, so idx is kept
+    pt = build_problem_tables(
+        src, MomentSpec(weight_col="w", numeric=("x0",), row_key=("rid",))
+    )
+    generic, _, _ = pack_rows(pt.x_long, pt.w0)
+    kern = SparkKernel.from_problem(pt.x_long, pt.w0, pt.k)
+    try:
+        assert kern._schema.get_field_index("idx") >= 0
+        assert _decoded_rows(kern._rdd, kern._schema) == _packed_rows(generic)
+    finally:
+        kern.cleanup()
+
+
+def test_missing_jvm_arrow_writer_fails_loudly(spark, monkeypatch):
+    """No Python-encode fallback: a Spark build without the JVM writer
+    raises the named error, with the Spark version in it."""
+    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
+
+    monkeypatch.setattr(blob_plane, "_ARROW_WRITER", "noSuchArrowWriter")
+    with pytest.raises(RuntimeError, match="blob_encode_unavailable") as info:
+        SparkKernel.from_problem(
+            None, None, 2, prepacked=_static_packed(spark, range(2), n=10)
+        )
+    assert spark.version in str(info.value)
+
+
+def test_warm_start_encodes_start_state(spark):
+    """Warm starts ride the same JVM encode: Newton's base carries
+    ``wstar = (w0 / Σw0) · ratio`` as a column, and a split-state kernel
+    derives its state ratio from the guess column (rows missing from the
+    guess start at 1.0); the dense-id decision is taken before the join."""
+    from pyspark.sql import functions as F
+
+    from entropy_balance_weighting_spark.kernels.elastic_spark import (
+        ElasticSparkKernel,
+    )
+    from entropy_balance_weighting_spark.kernels.spark import (
+        SparkKernel,
+        _rb_col,
+    )
+
+    k, n = 3, 120
+    packed = _static_packed(spark, range(k), n=n)
+    guess = packed.filter(F.col("row_id") % 5 != 0).select(
+        "row_id", (1.0 + (F.col("row_id") % 4) / 8.0).alias("ratio")
+    )
+    want = {r["row_id"]: r["ratio"] for r in guess.collect()}
+    ratio_of = lambda rid: want.get(rid, 1.0)  # noqa: E731
+
+    kern = SparkKernel.from_problem(
+        None, None, k, prepacked=packed, ratio_guess=guess
+    )
+    try:
+        assert kern._schema.metadata[DENSE_IDX_META] == str(k).encode()
+        seen = 0
+        for rb in batches(kern._rdd.collect(), kern._schema):
+            rid, w0 = _rb_col(rb, "row_id"), _rb_col(rb, "w0")
+            wstar = _rb_col(rb, "wstar")
+            expect = (w0 / kern.sum_w0) * np.array([ratio_of(r) for r in rid])
+            np.testing.assert_array_equal(wstar, expect)
+            seen += rb.num_rows
+        assert seen == n
+    finally:
+        kern.cleanup()
+
+    kern = ElasticSparkKernel.from_problem(
+        None, None, k, bounds=(0.2, 5.0), prepacked=packed, ratio_guess=guess
+    )
+    try:
+        pairs = kern._base.zip(kern._state).collect()
+        got = {}
+        for rb in batches(pairs, kern._schema):
+            got.update(zip(_rb_col(rb, "row_id"), _rb_col(rb, "ratio")))
+        assert got == {rid: ratio_of(rid) for rid in range(n)}
+    finally:
+        kern.cleanup()
