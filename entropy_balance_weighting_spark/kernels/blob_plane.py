@@ -20,9 +20,15 @@ back, and how pass payloads and weights leave them.
   immutable base and a small mutable state RDD derived from it element
   for element, read as ``base.zip(state)`` (:func:`split_state`).
 - **passes** — a pass yields one ``(sums, mins)`` payload per partition
-  (:func:`pack_payload`), reduced by :func:`reduce_payload`; a commit pass
+  (:func:`pack_payload`), after reading its batches; :func:`reduce` runs
+  it and reduces the payloads (:func:`reduce_payload`).  A commit pass
   re-caches its output as new blobs (:func:`transform` + :func:`commit`),
   truncating lineage every :data:`CKPT_EVERY` commits.
+- **validation** — the V1 bad-input check rides a kernel's first pass:
+  ``reduce(..., validate=True)`` counts bad ``val`` rows and bad ``w0``
+  weights in the batches that pass reads and raises the V1 error
+  (:func:`count_bad_entries`, :func:`raise_if_bad`), so it costs no job
+  of its own.
 - **render** — ``(row_id, new_weight)`` as a DataFrame (:func:`weights_df`).
 
 Why blobs: a ``mapInArrow`` scan over a cached DataFrame re-encodes the
@@ -37,6 +43,7 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark import RDD, StorageLevel
 from pyspark.serializers import (
@@ -305,6 +312,66 @@ def payloads(rdd, pass_fn: Callable, schema: pa.Schema):
     return rdd.mapPartitions(
         lambda it: pass_fn(batches(it, schema)), preservesPartitioning=True
     )
+
+
+def count_bad_entries(rb: pa.RecordBatch) -> tuple[float, float]:
+    """V1 validation counts for one packed batch: rows with any
+    non-finite ``val`` entry, and ``w0`` weights that are non-finite or
+    ≤ 0 (nulls arrive as NaN through the Arrow conversion, so one
+    finiteness check covers null/NaN/±Inf — the reference's V1 predicate
+    set, ref: shared.py:105-133)."""
+    val = rb.column(rb.schema.get_field_index("val"))
+    bad = ~np.isfinite(val.flatten().to_numpy(zero_copy_only=False))
+    rows = pc.list_parent_indices(val).to_numpy()
+    w0 = rb.column(rb.schema.get_field_index("w0")).to_numpy(
+        zero_copy_only=False
+    )
+    with np.errstate(invalid="ignore"):
+        bad_w = np.count_nonzero(~np.isfinite(w0) | (w0 <= 0))
+    return float(np.unique(rows[bad]).size), float(bad_w)
+
+
+def raise_if_bad(bad_x: float, bad_w: float) -> None:
+    """The V1 error every distributed kernel's first pass raises."""
+    if bad_x or bad_w:
+        raise ValueError(
+            f"Inputs include invalid values ({int(bad_x)} bad X "
+            f"rows, {int(bad_w)} bad weights)"
+        )
+
+
+def reduce(
+    rdd, pass_fn: Callable, schema: pa.Schema, big: bool = False,
+    *, validate: bool = False,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Run ``pass_fn`` over ``rdd`` and reduce its payloads
+    (:func:`reduce_payload`).
+
+    ``validate`` runs the V1 check in the same pass: each partition counts
+    the bad entries of the batches it reads (:func:`count_bad_entries`)
+    and appends the two counts to its payload; the counts are stripped
+    after the reduce and :func:`raise_if_bad` raises before anything is
+    returned.  A kernel arms this for its first pass, the one that also
+    materializes its blob caches."""
+    if not validate:
+        return reduce_payload(payloads(rdd, pass_fn, schema), big)
+
+    def checked(it):
+        bad = np.zeros(2)
+
+        def counted():
+            for rb in batches(it, schema):
+                bad[:] += count_bad_entries(rb)
+                yield rb
+
+        for sums, mins in pass_fn(counted()):
+            yield sums + bad.tobytes(), mins
+
+    sums, mins = reduce_payload(
+        rdd.mapPartitions(checked, preservesPartitioning=True), big
+    )
+    raise_if_bad(sums[-2], sums[-1])
+    return sums[:-2], mins
 
 
 def transform(rdd, pass_fn: Callable, schema: pa.Schema, names=None):

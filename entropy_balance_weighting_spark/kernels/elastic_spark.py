@@ -25,13 +25,20 @@ Data plane (``kernels/blob_plane.py``):
     before; K/K²-sized partials only; commits stay lazy (zero jobs) and
     materialize inside the next stats scan — 2 jobs per iteration, the
     same discipline the job-count pin (tests/test_elastic.py) enforces.
-  - **fused commit+stats (r9)** — a pending commit is applied BY the
-    next stats scan itself (``_ecommit_stats_pass``): one pass over
-    ``base.zip(old_state)`` yields the new state cache elements (with
-    the partition stats payload piggybacked on each partition's last
-    element) while accumulating the stats on the just-committed state —
-    the base cache crosses the JVM/Python boundary once per iteration's
-    stats job instead of twice, and each batch flattens once.
+  - **fused commit+stats (r9)** — the one commit transform, at every N:
+    a pending commit is applied BY the next stats scan itself
+    (``_ecommit_stats_pass``): one pass over ``base.zip(old_state)``
+    yields the new state cache elements (with the partition stats payload
+    piggybacked on each partition's last element) while accumulating the
+    stats on the just-committed state — the base cache crosses the
+    JVM/Python boundary once per iteration's stats job instead of twice,
+    and each batch flattens once.  A consumer other than ``elastic_stats``
+    declares the same RDD and leaves its payload unread.  An r10 gate sent
+    N < 2M through a separate chained-swap commit pass; re-measured after
+    the zipimport and JVM-encode changes it bought nothing at 100k or
+    600k rows (same jobs, stages, tasks and bits), so it is gone.
+  - **validation** — the deferred V1 check rides the first pass
+    (``elastic_g1``) through ``blob_plane.reduce``.
 
 Measured at N=5M, K=8 (solo box, r7): full iteration 4.5–5.5 s vs
 7.8–10 s for the packed-row design.  At N=100M, K=8 (r9): stats+commit
@@ -59,11 +66,9 @@ from entropy_balance_weighting_spark.kernels.spark import (
     _x_dot,
     _xt_v,
     blocks_tuple,
-    count_bad_entries,
     gram_from_sums,
     make_gram_accum,
     pack_rows,
-    raise_if_bad,
     reduce_big,
 )
 
@@ -265,46 +270,6 @@ def _state_rb(arrays) -> pa.RecordBatch:
     )
 
 
-# Fused commit+stats pays off only when the state cache is big enough
-# that reading the base cache ONCE (not twice) dominates its fixed
-# costs (payload piggyback elements, per-batch commit recompute inside
-# the stats scan).  Measured (r10): N=600k bounded at sf0.1 runs
-# ~10.8-11.2 s unfused vs 12.6-13.8 s fused (the r9 sf0.1 drift, now
-# adjudicated as REAL); N=100M runs ~9.2 s/iter fused vs ~14.5
-# unfused (PLANS §15).  Below this row count the commit flushes as a
-# chained lazy swap and stats runs the plain pass.
-_FUSED_MIN_ROWS = 2_000_000
-
-
-def _ecommit_state_pass(
-    lam, dlam, eta, mu_s, alpha_p, alpha_d, lb, ub, has_ub
-) -> Callable:
-    """Per-pair commit, RECOMPUTE form (the flush path — see
-    ``_flush_pending_lazy``): recompute the step on the CURRENT state and
-    emit only the next state batch — the immutable base columns are never
-    rewritten."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            pieces = _pieces(
-                rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
-            )
-            r_step, li_lo, li_hi, _ss_lo, _ss_hi = _steps_arrays(
-                pieces, flat_idx, flat_val, lens, dlam, mu_s, has_ub
-            )
-            _, r, _s_lo, _s_hi, lm_lo, lm_hi = _cols(rb, lb, ub, has_ub)
-            yield _state_rb(
-                [
-                    r + alpha_p * r_step,
-                    lm_lo + alpha_d * li_lo,
-                    lm_hi + alpha_d * li_hi if has_ub else lm_hi,
-                ]
-            )
-
-    return fn
-
-
 def _ecommit_stats_pass(
     k, clam, cdlam, ceta, cmu_s, alpha_p, alpha_d,
     lam, eta, mu_s, lb, ub, has_ub, blocks, schema,
@@ -373,27 +338,23 @@ def _ecommit_stats_pass(
     return fn
 
 
-def _g1_pass(k, validate: bool = False) -> Callable:
-    """``validate``: append the V1 bad-entry counts to the payload — the
-    deferred validation rides this first pass (which also materializes
-    both blob caches) instead of running its own aggregate."""
+def _weights(rb: pa.RecordBatch) -> np.ndarray:
+    """New weights of a split-state batch, ratio·w0 — the elastic and
+    penalty kernels' weight render and their Xᵀ(w0∘r) pass read this."""
+    return _rb_col(rb, "ratio") * _rb_col(rb, "w0")
+
+
+def _g1_pass(k) -> Callable:
+    """Xᵀ(w0∘r): the elastic init gap and the penalty final moments."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         g1 = np.zeros(k)
-        bad_x = bad_w = 0.0
         for rb in batches:
             if not rb.num_rows:
                 continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
-            w0 = _rb_col(rb, "w0")
-            if validate:
-                bx, bw = count_bad_entries(flat_val, lens, w0)
-                bad_x += bx
-                bad_w += bw
-            r = _rb_col(rb, "ratio")
-            g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
-        sums = [g1, bad_x, bad_w] if validate else [g1]
-        yield pack_payload(sums, [np.inf])
+            g1 += _xt_v(flat_idx, flat_val, lens, _weights(rb), k)
+        yield pack_payload([g1], [np.inf])
 
     return fn
 
@@ -414,18 +375,15 @@ class ElasticSparkKernel:
         self.ub = ub
         self.has_ub = has_ub
         self.block_structure = block_structure
-        self._prev = None
+        # state caches superseded by a declared commit, released once a
+        # reduce has materialized their successor
+        self._prev: list = []
         self._commits_since_ckpt = 0
-        # _store: the PERSISTED rdd behind the current state; _state may
-        # be a filter/map view of it (the fused commit+stats cache whose
-        # elements also carry the partition payloads)
-        self._store = state_rdd
         # pending lazy commit parameters (lam, dlam, eta, mu_s, αp, αd) —
-        # applied by the next elastic_stats as the fused pass, or flushed
-        # into a chained lazy state swap by any other consumer
+        # applied by the next elastic_stats as the fused pass
         self._pending = None
         # deferred V1 validation flag — armed by the API layer, consumed
-        # by the first elastic_g1 pass (see defer_validation)
+        # by the first reduce (see defer_validation)
         self._validate_first_pass = False
 
     @classmethod
@@ -474,32 +432,33 @@ class ElasticSparkKernel:
         )
 
     def _reduce(self, fn, big: bool = False, pairs=None):
+        """Run pass ``fn`` over ``base.zip(state)``, or reduce ready
+        ``pairs`` (the fused commit+stats payloads); then release the
+        state caches the reduce superseded."""
         if pairs is None:
-            pairs = blob_plane.payloads(
-                self._base.zip(self._state), fn, self._schema
+            validate = self._validate_first_pass
+            self._validate_first_pass = False
+            sums, mins = blob_plane.reduce(
+                self._base.zip(self._state), fn, self._schema, big,
+                validate=validate,
             )
-        sums, mins = blob_plane.reduce_payload(pairs, big)
-        # the reduce materialized any flushed lazy commit into its cache
-        if self._prev is not None:
-            self._prev.unpersist()
-            self._prev = None
+        else:
+            sums, mins = blob_plane.reduce_payload(pairs, big)
+        for rdd in self._prev:
+            rdd.unpersist()
+        self._prev = []
         return sums, mins
 
     def defer_validation(self) -> None:
-        """Arm the fused V1 check: the next ``elastic_g1`` pass (the
+        """Arm the fused V1 check: the next pass (``elastic_g1``, the
         solve's first job, which also materializes both blob caches)
-        counts bad X rows / bad weights in its payload and raises the
-        same ValueError the eager aggregate would."""
+        counts bad X rows / bad weights and raises the same ValueError the
+        eager aggregate would."""
         self._validate_first_pass = True
 
     def elastic_g1(self) -> np.ndarray:
         self._flush_pending_lazy()
-        validate = self._validate_first_pass
-        sums, _ = self._reduce(_g1_pass(self.k, validate=validate))
-        if validate:
-            self._validate_first_pass = False
-            raise_if_bad(sums[-2], sums[-1])
-            sums = sums[:-2]
+        sums, _ = self._reduce(_g1_pass(self.k))
         return sums
 
     def elastic_stats(self, lam, eta, mu_s) -> EStats:
@@ -507,41 +466,7 @@ class ElasticSparkKernel:
         big = reduce_big(
             k, self.block_structure, self._base.getNumPartitions()
         )
-        if self._pending is not None and self.n < _FUSED_MIN_ROWS:
-            # Small-N: the fused pass's fixed costs exceed its bandwidth
-            # savings (see _FUSED_MIN_ROWS) — flush the commit as a
-            # chained LAZY swap (zero jobs; the stats scan below
-            # materializes it through the RDD chain) and take the plain
-            # stats path.
-            self._flush_pending_lazy()
-        if self._pending is not None:
-            # Fused commit+stats: ONE pass over base.zip(old_state) whose
-            # persisted elements are the new state blobs + partition
-            # payloads — the base cache crosses once, not twice (r9).
-            clam, cdlam, ceta, cmu_s, ap, ad = self._pending
-            self._pending = None
-            fused, self._commits_since_ckpt = blob_plane.commit(
-                self._base.zip(self._state).mapPartitions(
-                    _ecommit_stats_pass(
-                        k, clam, cdlam, ceta, cmu_s, ap, ad,
-                        lam, eta, mu_s, self.lb, self.ub, self.has_ub,
-                        blocks_tuple(self.block_structure), self._schema,
-                    ),
-                    preservesPartitioning=True,
-                ),
-                self._commits_since_ckpt,
-            )
-            payloads = fused.map(lambda t: (t[1], t[2])).filter(
-                lambda t: len(t[0]) > 0
-            )
-            prev_store = self._store
-            sums, mins = self._reduce(None, big=big, pairs=payloads)
-            prev_store.unpersist()
-            self._store = fused
-            # consumers zip this cache with the base at the JVM level and
-            # blob_plane.batches unwraps the (state, sums, mins) tuples
-            self._state = fused
-        else:
+        if self._pending is None:
             sums, mins = self._reduce(
                 _estats_pass(
                     k, lam, eta, mu_s, self.lb, self.ub, self.has_ub,
@@ -549,6 +474,15 @@ class ElasticSparkKernel:
                 ),
                 big=big,
             )
+        else:
+            # Fused commit+stats: ONE pass over base.zip(old_state) whose
+            # persisted elements are the new state blobs + partition
+            # payloads — the base cache crosses once, not twice (r9).
+            self._declare_commit(lam, eta, mu_s)
+            payloads = self._state.map(lambda t: (t[1], t[2])).filter(
+                lambda t: len(t[0]) > 0
+            )
+            sums, mins = self._reduce(None, big=big, pairs=payloads)
         (f_val, cd_sq, ci_sq, cs_sq, alt_sq, nan_ct,
          sl_sum, sl_sq, sl_cnt) = sums[:9]
         g1 = sums[9 : 9 + k]
@@ -588,29 +522,38 @@ class ElasticSparkKernel:
             has_nan=sums[1] > 0,
         )
 
-    def _flush_pending_lazy(self) -> None:
-        """Convert a pending commit into the chained lazy state swap (zero
-        jobs) — for consumers other than ``elastic_stats`` (whose fused
-        pass is the fast path the solver loop always takes: commit is
-        invariably followed by stats there)."""
-        if self._pending is None:
-            return
+    def _declare_commit(self, lam, eta, mu_s) -> None:
+        """Swap in the pending commit as the fused commit+stats RDD (lazy,
+        zero jobs; persisted, so the next reduce over it materializes the
+        new state cache), with its stats payload taken at ``(lam, eta,
+        mu_s)``.  Consumers zip it with the base at the JVM level and
+        ``blob_plane.batches`` unwraps its ``(state, sums, mins)``
+        elements."""
         clam, cdlam, ceta, cmu_s, ap, ad = self._pending
         self._pending = None
-        new_state, self._commits_since_ckpt = blob_plane.commit(
-            blob_plane.transform(
-                self._base.zip(self._state),
-                _ecommit_state_pass(
-                    clam, cdlam, ceta, cmu_s, ap, ad, self.lb, self.ub,
-                    self.has_ub,
+        fused, self._commits_since_ckpt = blob_plane.commit(
+            self._base.zip(self._state).mapPartitions(
+                _ecommit_stats_pass(
+                    self.k, clam, cdlam, ceta, cmu_s, ap, ad,
+                    lam, eta, mu_s, self.lb, self.ub, self.has_ub,
+                    blocks_tuple(self.block_structure), self._schema,
                 ),
-                self._schema,
+                preservesPartitioning=True,
             ),
             self._commits_since_ckpt,
         )
-        self._prev = self._store
-        self._store = new_state
-        self._state = new_state
+        self._prev.append(self._state)
+        self._state = fused
+
+    def _flush_pending_lazy(self) -> None:
+        """Declare a pending commit for a consumer other than
+        ``elastic_stats`` — one that ``solve_elastic`` never reaches with a
+        commit pending, since it follows every commit with stats.  The
+        same fused RDD, its payload (here at the commit-time parameters)
+        left unread."""
+        if self._pending is not None:
+            clam, _, ceta, cmu_s, _, _ = self._pending
+            self._declare_commit(clam, ceta, cmu_s)
 
     def elastic_commit(
         self, lam, dlam, eta, mu_s, alpha_p, alpha_d
@@ -621,12 +564,11 @@ class ElasticSparkKernel:
         post-commit slack/multiplier aggregates the μ/η rules need.  2 jobs
         per iteration total (stats, step), same shape as the Newton solver.
 
-        The solver loop always follows a commit with ``elastic_stats``,
-        which applies it as the FUSED commit+stats pass (one base
-        crossing — see ``_ecommit_stats_pass``); any other next consumer
-        flushes it into the r8-style chained lazy swap first."""
-        if self._pending is not None:
-            self._flush_pending_lazy()
+        The next ``elastic_stats`` applies it as the FUSED commit+stats
+        pass (one base crossing — see ``_ecommit_stats_pass``); any other
+        next consumer declares the same pass first
+        (``_flush_pending_lazy``)."""
+        self._flush_pending_lazy()
         self._pending = (
             np.array(lam, dtype=float, copy=True),
             np.array(dlam, dtype=float, copy=True),
@@ -640,15 +582,12 @@ class ElasticSparkKernel:
         """(row_id, new_weight = ratio·w0) as a DataFrame."""
         self._flush_pending_lazy()
         return blob_plane.weights_df(
-            self._spark,
-            self._base.zip(self._state),
-            self._schema,
-            lambda rb: _rb_col(rb, "ratio") * _rb_col(rb, "w0"),
+            self._spark, self._base.zip(self._state), self._schema, _weights
         )
 
     def cleanup(self) -> None:
         blob_plane.release(
-            self._spark.sparkContext, self._base, self._store, self._prev
+            self._spark.sparkContext, self._base, self._state, *self._prev
         )
-        self._prev = None
+        self._prev = []
         self._pending = None

@@ -12,13 +12,19 @@ from entropy_balance_weighting_spark.kernels.base import IterStats, StepStats
 
 
 class LocalKernel:
-    def __init__(self, x: np.ndarray, w0: np.ndarray) -> None:
+    def __init__(
+        self,
+        x: np.ndarray,
+        w0: np.ndarray,
+        *,
+        ratio_guess: np.ndarray | None = None,
+    ) -> None:
         self.x = np.asarray(x, dtype=np.float64)
         self.w0 = np.asarray(w0, dtype=np.float64)
         self.n, self.k = self.x.shape
         self.sum_w0 = float(np.sum(self.w0))
         self.q = self.w0 / self.sum_w0
-        self.wstar = self.q.copy()
+        self.init_state(ratio_guess)
         self._cd: np.ndarray | None = None
         self._dw: np.ndarray | None = None
         self._wdual: np.ndarray | None = None

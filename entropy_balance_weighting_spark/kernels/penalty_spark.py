@@ -27,6 +27,10 @@ from entropy_balance_weighting_spark.kernels.base import (
     ftb_batch,
 )
 from entropy_balance_weighting_spark.kernels.blob_plane import pack_payload
+from entropy_balance_weighting_spark.kernels.elastic_spark import (
+    _g1_pass,
+    _weights,
+)
 from entropy_balance_weighting_spark.kernels.spark import (
     _flatten_rb,
     _rb_col,
@@ -34,11 +38,9 @@ from entropy_balance_weighting_spark.kernels.spark import (
     _x_dot,
     _xt_v,
     blocks_tuple,
-    count_bad_entries,
     gram_from_sums,
     make_gram_accum,
     pack_rows,
-    raise_if_bad,
     reduce_big,
 )
 
@@ -46,41 +48,15 @@ UNBOUNDED_STATE = ["ratio"]
 BOUNDED_STATE = ["ratio", "s_lo", "lm_lo", "s_hi", "lm_hi"]
 
 
-def _gram_init_pass(k: int, blocks, validate: bool = False) -> Callable:
-    """``validate``: append the V1 bad-entry counts to the payload — the
-    deferred validation rides this first pass (which also materializes
-    both blob caches) instead of running its own aggregate."""
-
+def _gram_init_pass(k: int, blocks) -> Callable:
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         g2, g2_add = make_gram_accum(k, blocks)
-        bad_x = bad_w = 0.0
         for rb in batches:
             if not rb.num_rows:
                 continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
-            w0 = _rb_col(rb, "w0")
-            if validate:
-                bx, bw = count_bad_entries(flat_val, lens, w0)
-                bad_x += bx
-                bad_w += bw
-            g2_add(flat_idx, flat_val, lens, w0**2)
-        sums = [g2, bad_x, bad_w] if validate else [g2]
-        yield pack_payload(sums, [np.inf])
-
-    return fn
-
-
-def _moment_totals_pass(k: int) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        g1 = np.zeros(k)
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            w0 = _rb_col(rb, "w0")
-            r = _rb_col(rb, "ratio")
-            g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
-        yield pack_payload([g1], [np.inf])
+            g2_add(flat_idx, flat_val, lens, _rb_col(rb, "w0") ** 2)
+        yield pack_payload([g2], [np.inf])
 
     return fn
 
@@ -301,7 +277,7 @@ class PenaltySparkKernel:
         self._prev = None
         self._commits_since_ckpt = 0
         # deferred V1 validation flag — armed by the API layer, consumed
-        # by the first penalty_init pass (see defer_validation)
+        # by the first reduce (see defer_validation)
         self._validate_first_pass = False
 
     @classmethod
@@ -359,9 +335,10 @@ class PenaltySparkKernel:
 
     # -- plumbing ----------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        sums, mins = blob_plane.reduce_payload(
-            blob_plane.payloads(self._base.zip(self._state), fn, self._schema),
-            big,
+        validate, self._validate_first_pass = self._validate_first_pass, False
+        sums, mins = blob_plane.reduce(
+            self._base.zip(self._state), fn, self._schema, big,
+            validate=validate,
         )
         # a reduce materializes any pending lazy commit into its cache
         if self._prev is not None:
@@ -390,37 +367,26 @@ class PenaltySparkKernel:
         self._state = new_state
 
     def defer_validation(self) -> None:
-        """Arm the fused V1 check: the next ``penalty_init`` pass (the
+        """Arm the fused V1 check: the next pass (``penalty_init``, the
         solve's first job, which also materializes both blob caches)
-        counts bad X rows / bad weights in its payload and raises the V1
-        ValueError."""
+        counts bad X rows / bad weights and raises the V1 ValueError."""
         self._validate_first_pass = True
 
     # -- shared ------------------------------------------------------------
     def penalty_init(self):
-        validate = self._validate_first_pass
         sums, _ = self._reduce(
-            _gram_init_pass(
-                self.k, blocks_tuple(self.block_structure), validate=validate
-            ),
+            _gram_init_pass(self.k, blocks_tuple(self.block_structure)),
             big=self._gram_big,
         )
-        if validate:
-            self._validate_first_pass = False
-            raise_if_bad(sums[-2], sums[-1])
-            sums = sums[:-2]
         return gram_from_sums(sums, self.k, self.block_structure)
 
     def moment_totals(self) -> np.ndarray:
-        sums, _ = self._reduce(_moment_totals_pass(self.k))
+        sums, _ = self._reduce(_g1_pass(self.k))
         return sums
 
     def new_weights(self) -> DataFrame:
         return blob_plane.weights_df(
-            self._spark,
-            self._base.zip(self._state),
-            self._schema,
-            lambda rb: _rb_col(rb, "ratio") * _rb_col(rb, "w0"),
+            self._spark, self._base.zip(self._state), self._schema, _weights
         )
 
     def cleanup(self) -> None:

@@ -347,49 +347,16 @@ def _w_state(rb, q, flat_idx, flat_val, lens, wprog):
     return w
 
 
-def count_bad_entries(
-    flat_val: np.ndarray, lens: np.ndarray, w0: np.ndarray
-) -> tuple[float, float]:
-    """V1 validation counts for one packed batch: rows with any
-    non-finite X value, and weights that are non-finite or ≤ 0 (nulls
-    arrive as NaN through the Arrow conversion, so one finiteness check
-    covers null/NaN/±Inf — the reference's V1 predicate set, ref:
-    shared.py:105-133)."""
-    bad_x = 0.0
-    if flat_val.size:
-        bad_x = float(
-            np.count_nonzero(
-                _segsum((~np.isfinite(flat_val)).astype(np.float64), lens)
-            )
-        )
-    with np.errstate(invalid="ignore"):
-        bad_w = float(np.count_nonzero(~np.isfinite(w0) | (w0 <= 0)))
-    return bad_x, bad_w
-
-
-def raise_if_bad(bad_x: float, bad_w: float) -> None:
-    """The V1 error every distributed kernel's first pass raises."""
-    if bad_x or bad_w:
-        raise ValueError(
-            f"Inputs include invalid values ({int(bad_x)} bad X "
-            f"rows, {int(bad_w)} bad weights)"
-        )
-
-
 def _stats_pass(
     k: int,
     lam: np.ndarray,
     blocks=None,
     wprog=None,
     sum_w0: float = 1.0,
-    validate: bool = False,
 ) -> Callable:
     """``blocks``: None → dense K×K Gram scratch; else the
     (block_of, local, sizes, flat_offsets, total_flat) arrays → flat Σk_b²
-    per-block accumulation (the huge-K path).  ``validate``: append the V1
-    bad-entry counts (bad X rows, bad weights) to the payload tail — the
-    deferred-validation pass that rides the cache-materializing first
-    stats scan instead of running its own aggregate (r13 optimization)."""
+    per-block accumulation (the huge-K path)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
         f_val = 0.0
@@ -399,16 +366,11 @@ def _stats_pass(
         xt_wcd = np.zeros(k)
         gram, gram_add = make_gram_accum(k, blocks)
         min_w = np.inf
-        bad_x = bad_w = 0.0
         for rb in batches:
             if not rb.num_rows:
                 continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
             w0 = _rb_col(rb, "w0")
-            if validate:
-                bx, bw = count_bad_entries(flat_val, lens, w0)
-                bad_x += bx
-                bad_w += bw
             q = _rb_q(rb, sum_w0)
             w = _w_state(rb, q, flat_idx, flat_val, lens, wprog)
             r = w / q
@@ -425,10 +387,9 @@ def _stats_pass(
             gram_add(flat_idx, flat_val, lens, w)
             if len(w):
                 min_w = min(min_w, float(w.min()))
-        sums = [f_val, cd_sq, nan_ct, xt_w, xt_wcd, gram]
-        if validate:
-            sums += [bad_x, bad_w]
-        yield pack_payload(sums, [min_w])
+        yield pack_payload(
+            [f_val, cd_sq, nan_ct, xt_w, xt_wcd, gram], [min_w]
+        )
 
     return fn
 
@@ -610,10 +571,9 @@ class SparkKernel:
         self._prev_wprog: list | None = None
         self._last_commit: str | None = None
         # deferred V1 validation: armed by the API layer, consumed by the
-        # first stats pass (which also materializes the blob cache) — the
-        # bad-entry counts ride the payload tail, so validation costs zero
-        # extra jobs (r13 optimization)
-        self._validate_first_stats = False
+        # first reduce (``blob_plane.reduce``), which also materializes the
+        # blob cache — validation costs zero extra jobs (r13 optimization)
+        self._validate_first_pass = False
         # Speculative α=1 primal stats (r13 optimization): the step pass
         # fuses the NEXT iteration's stats reductions for the α=1 primal
         # candidate; ``commit`` marks the stash live when the driver indeed
@@ -695,8 +655,9 @@ class SparkKernel:
 
     # -- passes ------------------------------------------------------------
     def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        return blob_plane.reduce_payload(
-            blob_plane.payloads(self._rdd, fn, self._schema), big
+        validate, self._validate_first_pass = self._validate_first_pass, False
+        return blob_plane.reduce(
+            self._rdd, fn, self._schema, big, validate=validate
         )
 
     @property
@@ -706,16 +667,15 @@ class SparkKernel:
         )
 
     def defer_validation(self) -> None:
-        """Arm the fused V1 check: the next ``stats`` pass counts bad X
-        rows / bad weights in its payload and raises the same ValueError
-        the eager aggregate would — one fewer full scan per solve."""
-        self._validate_first_stats = True
+        """Arm the fused V1 check: the next pass (the first ``stats``)
+        counts bad X rows / bad weights and raises the same ValueError the
+        eager aggregate would — one fewer full scan per solve."""
+        self._validate_first_pass = True
 
     def stats(self, lam: np.ndarray) -> IterStats:
         k = self.k
-        validate = self._validate_first_stats
         if (
-            not validate
+            not self._validate_first_pass
             and self._spec is not None
             and self._spec["committed"]
             and np.array_equal(lam, self._spec["lam_new"])
@@ -734,14 +694,9 @@ class SparkKernel:
                 blocks_tuple(self.block_structure),
                 self._wprog,
                 self.sum_w0,
-                validate=validate,
             ),
             big=self._gram_big,
         )
-        if validate:
-            self._validate_first_stats = False
-            raise_if_bad(sums[-2], sums[-1])
-            sums = sums[:-2]
         # the reduce materialized any pending lazy commit into its cache —
         # the superseded state's CACHE can go; the RDD handle is kept so a
         # zero-weight guard can roll back via lineage recompute (bounded by

@@ -121,13 +121,13 @@ class ProblemTables:
         return len(self.moment_names)
 
 
-_SPREAD_BYTES_CONF = "spark.ebw.spreadPartitionBytes"
-# Unit: the OPTIMIZER'S size-estimate domain (optimizedPlan().stats()),
-# which for a pruned parquet scan tracks encoded column bytes (~12 B/row
-# for the bench specs) — NOT in-memory row size.  2 MiB of estimate ≈
-# 150k prepared rows.  This is the one small-input sizing rule: the
-# kernels' blob caches keep the packed plan's partitioning as it is.
-_SPREAD_BYTES_DEFAULT = 2 * 1024 * 1024
+# Target bytes per spread partition, in the OPTIMIZER'S size-estimate
+# domain (optimizedPlan().stats()), which for a pruned parquet scan
+# tracks encoded column bytes (~12 B/row for the bench specs) — NOT
+# in-memory row size.  2 MiB of estimate ≈ 150k prepared rows.  This is
+# the one small-input sizing rule: the kernels' blob caches keep the
+# packed plan's partitioning as it is.
+_SPREAD_BYTES = 2 * 1024 * 1024
 # set once the size-estimate fallback below has been logged in this process
 _SPREAD_FALLBACK_WARNED = False
 
@@ -147,22 +147,11 @@ def _spread_width(rows: DataFrame) -> int | None:
     parallelism returns, and every downstream consumer (counts
     aggregate, long explode, packed encode) hits its per-task sweet
     spot near 150k rows/partition.  The kernels' blob caches inherit
-    this width; nothing downstream re-sizes them.  Conf-overridable;
-    ``<= 0`` restores the full-width r13 behavior."""
+    this width; nothing downstream re-sizes them."""
     sc = rows.sparkSession.sparkContext
     cores = sc.defaultParallelism
     if rows.rdd.getNumPartitions() >= max(2, cores // 2):
         return None
-    try:
-        spread_bytes = int(
-            rows.sparkSession.conf.get(
-                _SPREAD_BYTES_CONF, str(_SPREAD_BYTES_DEFAULT)
-            )
-        )
-    except Exception:  # pragma: no cover - conf unavailable
-        spread_bytes = _SPREAD_BYTES_DEFAULT
-    if spread_bytes <= 0:
-        return cores
     try:
         est = int(
             rows._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -180,7 +169,7 @@ def _spread_width(rows: DataFrame) -> int | None:
                 cores,
             )
         return cores
-    return min(cores, max(2, -(-est // spread_bytes)))
+    return min(cores, max(2, -(-est // _SPREAD_BYTES)))
 
 
 def _interaction_cols(spec: MomentSpec) -> tuple[list[str], list[str]]:
@@ -329,47 +318,23 @@ def long_moments(rows: DataFrame, spec: MomentSpec) -> DataFrame:
 
 
 def _moment_names(spec: MomentSpec, combos: list[dict]) -> list[str]:
-    """Render the distinct moment names from the collected (group, one-hot)
-    combinations — Python mirror of the Spark name expressions (values are
-    already Spark-cast strings; ``None`` mirrors concat-null semantics:
-    ``concat_ws`` skips null group parts, ``concat`` nulls the whole name,
-    and null names never join into the long table)."""
-
-    def grouped(base: str, cd: dict) -> str:
-        if not spec.group:
-            return base
-        grp = "/".join(
-            s for s in (cd[c] for c in spec.group) if s is not None
-        )
-        return f"grp={grp}|{base}"
-
-    static_bases = list(spec.numeric) + (["_count"] if spec.intercept else [])
-    static_bases += [
-        f"{a}:{b}"
-        for a, b in spec.interactions
-        if a not in spec.onehot and b not in spec.onehot
-    ]
+    """The distinct moment names of the collected (group, one-hot)
+    combinations, sorted — every combo's :func:`_combo_entry_names`.
+    Without combos (the spec has no combo columns, or no rows survived)
+    an ungrouped spec names its moments that need no category, a grouped
+    one names none."""
     if not combos:
-        return sorted(static_bases) if not spec.group else []
-    names: set[str] = set()
-    for cd in combos:
-        for b in static_bases:
-            names.add(grouped(b, cd))
-        for c in spec.onehot:
-            if cd[c] is not None:
-                names.add(grouped(f"{c}={cd[c]}", cd))
-        for a, b in spec.interactions:
-            a_cat, b_cat = a in spec.onehot, b in spec.onehot
-            if a_cat and b_cat:
-                if cd[a] is not None and cd[b] is not None:
-                    names.add(grouped(f"{a}={cd[a]}:{b}={cd[b]}", cd))
-            elif a_cat:
-                if cd[a] is not None:
-                    names.add(grouped(f"{a}={cd[a]}:{b}", cd))
-            elif b_cat:
-                if cd[b] is not None:
-                    names.add(grouped(f"{a}:{b}={cd[b]}", cd))
-    return sorted(names)
+        if spec.group:
+            return []
+        combos = [dict.fromkeys(spec.onehot)]
+    return sorted(
+        {
+            name
+            for cd in combos
+            for name in _combo_entry_names(spec, cd)
+            if name is not None
+        }
+    )
 
 
 def _weighted_sums_from_combo_stats(
@@ -378,48 +343,20 @@ def _weighted_sums_from_combo_stats(
     """moment_name → Σ value·w0 from the builder's per-combo aggregate
     rows — the driver-side mirror of what ``targets_from_problem``'s
     relational path sums over the long table (null aggregates, i.e.
-    all-null value columns within a combo, contribute nothing)."""
-
-    def grouped(base: str, cd: dict) -> str:
-        if not spec.group:
-            return base
-        grp = "/".join(
-            s for s in (cd[c] for c in spec.group) if s is not None
-        )
-        return f"grp={grp}|{base}"
-
-    sums: dict[str, float] = {}
-
-    def add(name: str | None, v) -> None:
-        if name is None or v is None:
-            return
-        sums[name] = sums.get(name, 0.0) + float(v)
-
+    all-null value columns within a combo, contribute nothing).  Each
+    entry of :func:`_combo_entry_names` reads its aggregate column."""
+    cols = (
+        [f"__s{j}" for j in range(len(spec.numeric))]
+        + ["__sw"] * (int(spec.intercept) + len(spec.onehot))
+        + [f"__i{j}" for j in range(len(spec.interactions))]
+    )
     combo_cols = [*spec.group, *spec.onehot]
+    sums: dict[str, float] = {}
     for r in crows:
-        cd = {c: r[c] for c in combo_cols}
-        for j, c in enumerate(spec.numeric):
-            add(grouped(c, cd), r[f"__s{j}"])
-        if spec.intercept:
-            add(grouped("_count", cd), r["__sw"])
-        for c in spec.onehot:
-            nm = grouped(f"{c}={cd[c]}", cd) if cd[c] is not None else None
-            add(nm, r["__sw"])
-        for j, (a, b) in enumerate(spec.interactions):
-            a_cat, b_cat = a in spec.onehot, b in spec.onehot
-            if a_cat and b_cat:
-                nm = (
-                    grouped(f"{a}={cd[a]}:{b}={cd[b]}", cd)
-                    if cd[a] is not None and cd[b] is not None
-                    else None
-                )
-            elif a_cat:
-                nm = grouped(f"{a}={cd[a]}:{b}", cd) if cd[a] is not None else None
-            elif b_cat:
-                nm = grouped(f"{a}:{b}={cd[b]}", cd) if cd[b] is not None else None
-            else:
-                nm = grouped(f"{a}:{b}", cd)
-            add(nm, r[f"__i{j}"])
+        names = _combo_entry_names(spec, {c: r[c] for c in combo_cols})
+        for name, col in zip(names, cols):
+            if name is not None and r[col] is not None:
+                sums[name] = sums.get(name, 0.0) + float(r[col])
     return sums
 
 

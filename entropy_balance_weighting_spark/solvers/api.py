@@ -130,10 +130,14 @@ def entropy_balance(
             options=opts,
         )
 
-    kernel, m, original = _build_kernel(
-        x_sample, weights0, mean_population_moments, opts
-    )
+    from entropy_balance_weighting_spark.kernels.local import LocalKernel
+    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
     from entropy_balance_weighting_spark.solvers.newton import solve_unbounded
+
+    kernel, m, original = _build_kernel(
+        x_sample, weights0, mean_population_moments, opts, LocalKernel,
+        SparkKernel,
+    )
 
     res = solve_unbounded(kernel, m, opts, original_weights=original)
     _maybe_dump(opts, x_sample, weights0, m, res)
@@ -150,6 +154,12 @@ def entropy_balance_penalty(
     """Quadratic-penalty variant (ref: ebw_penalty.py:17-23); dispatches to
     the bounded variant when ``options['bounds']`` is set (ref:
     ebw_penalty.py:155-162)."""
+    from entropy_balance_weighting_spark.kernels.penalty_local import (
+        PenaltyLocalKernel,
+    )
+    from entropy_balance_weighting_spark.kernels.penalty_spark import (
+        PenaltySparkKernel,
+    )
     from entropy_balance_weighting_spark.solvers.penalty import (
         solve_penalty,
         solve_penalty_bounded,
@@ -157,8 +167,9 @@ def entropy_balance_penalty(
 
     opts = _validate_options(options)
     bounds = opts.get("bounds")
-    kernel, m, original = _build_penalty_kernel(
-        x_sample, weights0, mean_population_moments, opts, bounds
+    kernel, m, original = _build_kernel(
+        x_sample, weights0, mean_population_moments, opts, PenaltyLocalKernel,
+        PenaltySparkKernel, bounds=bounds,
     )
     solve = solve_penalty_bounded if bounds else solve_penalty
     res = solve(kernel, m, penalty_parameter, opts, original_weights=original)
@@ -333,117 +344,40 @@ def _resolve_problem(x_sample, weights0, mean_population_moments, opts):
     )
 
 
-def _build_kernel(x_sample, weights0, mean_population_moments, opts):
-    """Unbounded-Newton kernel factory → (kernel, m-vector, original)."""
+def _build_kernel(
+    x_sample, weights0, mean_population_moments, opts, local_cls, spark_cls,
+    **kernel_kw,
+):
+    """Kernel factory → (kernel, m-vector, original).  The problem runs on
+    ``local_cls`` (driver numpy) or ``spark_cls`` (distributed, built by
+    ``from_problem`` with the V1 check deferred into its first pass);
+    ``kernel_kw`` (the bounds, for elastic and penalty) goes to either."""
     mode, payload = _resolve_problem(
         x_sample, weights0, mean_population_moments, opts
     )
     guess = opts.get("initial_ratio_guess")
     if mode == "local":
         x, w0, m, original, wrap = payload
-        from entropy_balance_weighting_spark.kernels.local import LocalKernel
-
-        kernel = LocalKernel(x, w0)
-        kernel.init_state(None if guess is None else np.asarray(guess, float))
-        return wrap(kernel), m, original
-
-    pt, m, original, validate = payload
-    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
-
-    kernel = SparkKernel.from_problem(
-        pt.x_long,
-        pt.w0,
-        pt.k,
-        ratio_guess=guess,
-        moment_groups=pt.moment_groups,
-        known_sums=(
-            (pt.sum_w0, pt.n) if pt.sum_w0 is not None and pt.n is not None else None
-        ),
-        prepacked=pt.packed_arrays,
-    )
-    if validate:
-        kernel.defer_validation()
-    return kernel, m, original
-
-
-def _build_penalty_kernel(x_sample, weights0, mean_population_moments, opts, bounds):
-    """Penalty kernel factory → (kernel, m-vector, original)."""
-    mode, payload = _resolve_problem(
-        x_sample, weights0, mean_population_moments, opts
-    )
-    guess = opts.get("initial_ratio_guess")
-    if mode == "local":
-        x, w0, m, original, wrap = payload
-        from entropy_balance_weighting_spark.kernels.penalty_local import (
-            PenaltyLocalKernel,
-        )
-
-        kernel = PenaltyLocalKernel(
+        kernel = local_cls(
             x,
             w0,
-            bounds=bounds,
             ratio_guess=None if guess is None else np.asarray(guess, float),
+            **kernel_kw,
         )
         return wrap(kernel), m, original
 
     pt, m, original, validate = payload
-    from entropy_balance_weighting_spark.kernels.penalty_spark import (
-        PenaltySparkKernel,
-    )
-
-    kernel = PenaltySparkKernel.from_problem(
+    kernel = spark_cls.from_problem(
         pt.x_long,
         pt.w0,
         pt.k,
-        bounds=bounds,
         ratio_guess=guess,
         moment_groups=pt.moment_groups,
         known_sums=(
             (pt.sum_w0, pt.n) if pt.sum_w0 is not None and pt.n is not None else None
         ),
         prepacked=pt.packed_arrays,
-    )
-    if validate:
-        kernel.defer_validation()
-    return kernel, m, original
-
-
-def _build_elastic_kernel(x_sample, weights0, mean_population_moments, opts, bounds):
-    """Elastic kernel factory → (kernel, m-vector, original)."""
-    mode, payload = _resolve_problem(
-        x_sample, weights0, mean_population_moments, opts
-    )
-    guess = opts.get("initial_ratio_guess")
-    if mode == "local":
-        x, w0, m, original, wrap = payload
-        from entropy_balance_weighting_spark.kernels.elastic_local import (
-            ElasticLocalKernel,
-        )
-
-        kernel = ElasticLocalKernel(
-            x,
-            w0,
-            bounds=bounds,
-            ratio_guess=None if guess is None else np.asarray(guess, float),
-        )
-        return wrap(kernel), m, original
-
-    pt, m, original, validate = payload
-    from entropy_balance_weighting_spark.kernels.elastic_spark import (
-        ElasticSparkKernel,
-    )
-
-    kernel = ElasticSparkKernel.from_problem(
-        pt.x_long,
-        pt.w0,
-        pt.k,
-        bounds=bounds,
-        ratio_guess=guess,
-        moment_groups=pt.moment_groups,
-        known_sums=(
-            (pt.sum_w0, pt.n) if pt.sum_w0 is not None and pt.n is not None else None
-        ),
-        prepacked=pt.packed_arrays,
+        **kernel_kw,
     )
     if validate:
         kernel.defer_validation()

@@ -70,15 +70,22 @@ def entropy_balance_elastic(
     options: dict | None = None,
 ) -> EntropyBalanceResults:
     """Public elastic entry point (ref: ebw_routines.py:334-340)."""
+    from entropy_balance_weighting_spark.kernels.elastic_local import (
+        ElasticLocalKernel,
+    )
+    from entropy_balance_weighting_spark.kernels.elastic_spark import (
+        ElasticSparkKernel,
+    )
     from entropy_balance_weighting_spark.solvers.api import (
-        _build_elastic_kernel,
+        _build_kernel,
         _validate_options,
     )
 
     opts = _validate_options(options)
     bounds = opts.get("bounds") or (0.0, None)
-    kernel, m, original = _build_elastic_kernel(
-        x_sample, weights0, mean_population_moments, opts, bounds
+    kernel, m, original = _build_kernel(
+        x_sample, weights0, mean_population_moments, opts, ElasticLocalKernel,
+        ElasticSparkKernel, bounds=bounds,
     )
     return solve_elastic(kernel, m, opts, original_weights=original)
 

@@ -367,61 +367,63 @@ def test_eta_growth_cannot_declare_convergence_below_max_multiplier():
     assert res.eta >= mult_max - 1e-9
 
 
-def test_fused_gate_small_n_takes_plain_path_same_answer(spark, monkeypatch):
-    """The r10 fused-pass N gate: below _FUSED_MIN_ROWS the commit
-    flushes as a chained lazy swap and stats runs the plain pass
-    (measured faster at sf0.1's 600k rows); forcing the fused path at
-    the same tiny N must give the same converged weights and the same
-    2-jobs-per-iteration reduce count — the gate is a physical-plan
-    choice, never a semantics change."""
+def test_consumer_right_after_commit_matches_in_order_path(spark):
+    """A commit is applied by the next ``elastic_stats`` as the fused
+    commit+stats pass.  ``new_weights()`` or ``elastic_step`` called right
+    after ``elastic_commit``, with no stats pass between, declares that
+    same pass and leaves its payload unread; the weights and the step
+    stats must match the in-order commit → stats path bit for bit."""
+    import dataclasses
+
     import pandas as pd
 
-    from entropy_balance_weighting_spark.kernels import elastic_spark as es
+    from entropy_balance_weighting_spark.kernels.elastic_spark import (
+        ElasticSparkKernel,
+    )
     from entropy_balance_weighting_spark.plans import (
         MomentSpec,
         build_problem_tables,
     )
 
-    x, w0, m = _problem(n=250, seed=37)
+    x, w0, _ = _problem(n=250, seed=37)
     pdf = pd.DataFrame(
         {"rid": np.arange(250), "w": w0, "x0": x[:, 0], "x1": x[:, 1], "x2": x[:, 2]}
     )
-    df = spark.createDataFrame(pdf)
     spec = MomentSpec(weight_col="w", numeric=("x0", "x1", "x2"), row_key=("rid",))
-    opts = {"bounds": (0.5, 1.8), "force_distributed": True}
+    pt = build_problem_tables(spark.createDataFrame(pdf), spec)
+    lam0, lam1 = np.zeros(pt.k), np.array([0.02, -0.01, 0.015])
+    dlam = np.array([0.01, 0.005, -0.02])
+    eta, mu_s = 1.0, 0.05
 
-    def solve():
-        n_reduces = 0
-        orig_reduce = es.ElasticSparkKernel._reduce
-
-        def counting(self, fn, **kw):
-            nonlocal n_reduces
-            n_reduces += 1
-            return orig_reduce(self, fn, **kw)
-
-        es.ElasticSparkKernel._reduce = counting
-        try:
-            res = entropy_balance(
-                mean_population_moments=m,
-                x_sample=build_problem_tables(df, spec),
-                options=opts,
-            )
-        finally:
-            es.ElasticSparkKernel._reduce = orig_reduce
-        assert res.converged
-        assert n_reduces == 2 * res.n_iterations + 2, (
-            n_reduces, res.n_iterations,
+    def committed():
+        kern = ElasticSparkKernel.from_problem(
+            pt.x_long, pt.w0, pt.k, bounds=(0.5, 1.8),
+            known_sums=(pt.sum_w0, pt.n), prepacked=pt.packed_arrays,
         )
-        return {
-            r["row_id"]: r["new_weight"] for r in res.new_weights.collect()
-        }, res.n_iterations
+        kern.elastic_g1()
+        kern.elastic_stats(lam0, eta, mu_s)
+        kern.elastic_step(lam0, lam1 - lam0, eta, mu_s)
+        kern.elastic_commit(lam0, lam1 - lam0, eta, mu_s, 0.5, 0.4)
+        return kern
 
-    assert 250 < es._FUSED_MIN_ROWS  # default: plain path at this N
-    w_plain, it_plain = solve()
-    monkeypatch.setattr(es, "_FUSED_MIN_ROWS", 0)  # force the fused path
-    w_fused, it_fused = solve()
-    assert it_plain == it_fused
-    assert set(w_plain) == set(w_fused)
-    a = np.array([w_plain[i] for i in sorted(w_plain)])
-    b = np.array([w_fused[i] for i in sorted(w_plain)])
-    np.testing.assert_allclose(b, a, rtol=1e-12, atol=1e-15)
+    def weights(kern):
+        rows = sorted(kern.new_weights().collect(), key=lambda r: r["row_id"])
+        return np.array([r["new_weight"] for r in rows])
+
+    def step_fields(kern):
+        return dataclasses.astuple(kern.elastic_step(lam1, dlam, eta, mu_s))
+
+    in_order, direct_w, direct_s = committed(), committed(), committed()
+    try:
+        in_order.elastic_stats(lam1, eta, mu_s)  # the fused pass
+        want_w, want_s = weights(in_order), step_fields(in_order)
+        got_w, got_s = weights(direct_w), step_fields(direct_s)
+        np.testing.assert_array_equal(got_w, want_w)
+        assert len(got_s) == len(want_s)
+        for got, want in zip(got_s, want_s):
+            np.testing.assert_array_equal(got, want)
+        # the commit moved the weights: the match is not that of the start
+        assert not np.allclose(np.sort(want_w), np.sort(w0))
+    finally:
+        for kern in (in_order, direct_w, direct_s):
+            kern.cleanup()

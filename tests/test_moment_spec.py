@@ -146,6 +146,64 @@ def test_interaction_cat_cat_and_grouped(spark):
     assert totals["grp=CA|cat=b:lvl=lo"] == pytest.approx(3.0)
 
 
+def test_combo_fast_path_names_and_sums_match_long_table(spark):
+    """Without a row_key the builder names the moments and sums Σ value·w0
+    per moment on the driver, from its per-combo aggregate.  Both must
+    agree with what Spark emits: the distinct long-table names, and the
+    weighted sums over ``x_long_w0``.  Null categories and a null group
+    exercise the null-name rules; a combo whose only ``y`` is null has a
+    moment but no sum."""
+    from entropy_balance_weighting_spark.plans.moment_spec import (
+        long_moments,
+        prepared_rows,
+    )
+
+    rows = [
+        (1, "CA", "a", "u", 2.0, 1.0, 3.0),
+        (2, "CA", "b", "v", 3.0, 2.0, None),
+        (3, "NY", "a", "v", 5.0, 0.5, 1.5),
+        (4, "NY", None, "u", 1.5, 4.0, 2.0),
+        (5, None, "b", "u", 0.7, 3.0, 1.0),
+        (6, "CA", "a", "u", 1.2, -1.0, 0.25),
+    ]
+    df = spark.createDataFrame(
+        rows, "id int, state string, cat string, kind string, w double, "
+        "x double, y double",
+    )
+    spec = MomentSpec(
+        weight_col="w",
+        numeric=("x",),
+        intercept=True,
+        onehot=("cat", "kind"),
+        interactions=(("x", "y"), ("cat", "y"), ("x", "kind"), ("cat", "kind")),
+        group=("state",),
+        dropna=False,
+    )
+    pt = build_problem_tables(df, spec)
+    assert pt.weighted_sums is not None  # the combo-aggregate fast path
+
+    emitted = sorted(
+        r["moment_name"]
+        for r in long_moments(prepared_rows(df, spec), spec)
+        .select("moment_name")
+        .where(F.col("moment_name").isNotNull())
+        .distinct()
+        .collect()
+    )
+    assert pt.moment_names == emitted
+    assert "grp=|cat=b:kind=u" in emitted  # null group part skipped
+
+    relational = {
+        pt.moment_names[r["moment_id"]]: r["t"]
+        for r in pt.x_long_w0.groupBy("moment_id")
+        .agg(F.sum(F.col("value") * F.col("w0")).alias("t"))
+        .collect()
+    }
+    assert relational["grp=CA|cat=b:y"] is None  # row 2's y is null
+    expected = {nm: t for nm, t in relational.items() if t is not None}
+    assert pt.weighted_sums == pytest.approx(expected, rel=1e-12, abs=0)
+
+
 def test_interaction_collinear_problem_solves(spark):
     """A deliberately collinear interaction design (x:cat duplicates x when
     cat has one level... built with redundant cross terms) still converges —
@@ -204,12 +262,10 @@ def test_spread_width_is_size_derived_and_self_disabling(spark, monkeypatch, cap
     """r14: the small-input spread derives its width from the optimizer's
     size estimate (clamped to [2, defaultParallelism]) instead of a
     full-width defaultParallelism wave; wide inputs skip the spread; a
-    non-positive conf restores the full-width behavior; a failing size
-    estimate falls back to full width with one named warning."""
-    from entropy_balance_weighting_spark.plans.moment_spec import (
-        _SPREAD_BYTES_CONF,
-        _spread_width,
-    )
+    failing size estimate falls back to full width with one named
+    warning."""
+    from entropy_balance_weighting_spark.plans import moment_spec
+    from entropy_balance_weighting_spark.plans.moment_spec import _spread_width
 
     cores = spark.sparkContext.defaultParallelism
     small = spark.range(0, 10, 1, 1).selectExpr(
@@ -221,18 +277,10 @@ def test_spread_width_is_size_derived_and_self_disabling(spark, monkeypatch, cap
     # self-disabling: input already at >= half the cores
     wide = small.repartition(max(2, cores))
     assert _spread_width(wide) is None
-    # conf <= 0 -> legacy full-width spread
-    spark.conf.set(_SPREAD_BYTES_CONF, "0")
-    try:
-        assert _spread_width(small) == cores
-    finally:
-        spark.conf.unset(_SPREAD_BYTES_CONF)
     # a 1-byte target maxes out at the core count, never beyond
-    spark.conf.set(_SPREAD_BYTES_CONF, "1")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(moment_spec, "_SPREAD_BYTES", 1)
         assert _spread_width(small) == cores
-    finally:
-        spark.conf.unset(_SPREAD_BYTES_CONF)
 
     # the private JVM size-estimate chain failing falls back to the full
     # width and says so, once per process
@@ -245,8 +293,6 @@ def test_spread_width_is_size_derived_and_self_disabling(spark, monkeypatch, cap
 
         def queryExecution(self):
             raise RuntimeError("size estimate unavailable")
-
-    from entropy_balance_weighting_spark.plans import moment_spec
 
     monkeypatch.setattr(moment_spec, "_SPREAD_FALLBACK_WARNED", False)
     broken = small.select("*")
