@@ -10,7 +10,7 @@
 
 The other modules here are library code that no registered query uses:
 the media codecs and probes (:mod:`functions.multimodal`,
-:mod:`functions.container_meta` and the ``*_codec`` modules).  Their own
-tests pin them; they stay until later changes retire them a few tests at
-a time.
+:mod:`functions.container_meta` and the ``*_codec`` modules; the PDF
+codec is already retired).  Their own tests pin them; they stay until
+later changes retire them one codec family at a time.
 """

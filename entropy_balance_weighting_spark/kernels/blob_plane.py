@@ -16,14 +16,18 @@ back, and how pass payloads and weights leave them.
 - **cache** — ``MEMORY_AND_DISK`` everywhere; Python-written blob RDDs
   share the batch-size-1 serializer (:data:`BLOB_SER`) so they ``zip``
   with the raw-bytes base as they are (:func:`persist`).
-- **split state** — the stateful kernels (elastic, penalty) cache the
-  immutable base and a small mutable state RDD derived from it element
-  for element, read as ``base.zip(state)`` (:func:`split_state`).
+- **split state** — every kernel caches the immutable base once
+  (:func:`encode_base`, which also carries a warm start's guess) and
+  never rewrites it.  Mutable state lives in a small state RDD derived
+  from the base element for element, read as ``base.zip(state)``
+  (:func:`split_state` for elastic and penalty; Newton's compacted
+  ``wstar``).  :func:`reduce_state` and :func:`commit_state` are the
+  Newton and penalty kernels' shared bookkeeping.
 - **passes** — a pass yields one ``(sums, mins)`` payload per partition
   (:func:`pack_payload`), after reading its batches; :func:`reduce` runs
   it and reduces the payloads (:func:`reduce_payload`).  A commit pass
-  re-caches its output as new blobs (:func:`transform` + :func:`commit`),
-  truncating lineage every :data:`CKPT_EVERY` commits.
+  re-caches the state columns it yields as new blobs (:func:`transform`
+  + :func:`commit`), truncating lineage every :data:`CKPT_EVERY` commits.
 - **validation** — the V1 bad-input check rides a kernel's first pass:
   ``reduce(..., validate=True)`` counts bad ``val`` rows and bad ``w0``
   weights in the batches that pass reads and raises the V1 error
@@ -210,6 +214,26 @@ def _inside(ratio: np.ndarray, bounds) -> bool:
     )
 
 
+def encode_base(
+    df: DataFrame, k: int, ratio_guess: DataFrame | None = None
+) -> tuple[RDD, pa.Schema]:
+    """The immutable base of a kernel (:func:`encode` of the
+    :data:`BASE_NAMES` columns) and its decode schema.  A warm start's
+    per-row ``ratio_guess`` rides along as the :data:`GUESS` column (1.0
+    for rows the guess lacks); the dense-id decision is taken before that
+    join."""
+    dense = dense_idx(df, k)
+    cols = list(BASE_NAMES)
+    if ratio_guess is not None:
+        df = df.join(
+            ratio_guess.select("row_id", F.col("ratio").alias(GUESS)),
+            "row_id",
+            "left",
+        ).withColumn(GUESS, F.coalesce(GUESS, F.lit(1.0)))
+        cols.append(GUESS)
+    return encode(df.select(*cols), k, dense)
+
+
 def split_state(
     df: DataFrame,
     k: int,
@@ -219,33 +243,22 @@ def split_state(
     ratio_guess: DataFrame | None = None,
 ):
     """``(base, state, schema)`` for a stateful kernel: the JVM-encoded
-    base, a state blob RDD derived from it element for element (so every
-    pass reads ``base.zip(state)``), and the base's decode schema.
-    ``state_of`` renders the state batch for a start-ratio vector; the
-    start ratio must lie strictly inside ``bounds = (lb, ub | None)`` when
-    given.
+    base (:func:`encode_base`), a state blob RDD derived from it element
+    for element (so every pass reads ``base.zip(state)``), and the base's
+    decode schema.  ``state_of`` renders the state batch for a start-ratio
+    vector; the start ratio must lie strictly inside ``bounds = (lb, ub |
+    None)`` when given.
 
     Cold start (constant ratio 1.0): the bounds check is a driver-side
     scalar test and nothing runs here — the kernel's first pass
     materializes BOTH caches in one source scan.  Warm start (per-row
-    ``ratio_guess``): the base encode carries the guess as
-    :data:`GUESS`, the state pass derives the state from it with the
-    per-row bounds check, and the state cache is counted here (which
-    materializes the base too) so a bounds violation surfaces at
-    construction."""
-    dense = dense_idx(df, k)
-    cols = list(BASE_NAMES)
-    if ratio_guess is None:
-        if not _inside(np.ones(1), bounds):
-            raise ValueError(BOUNDS_ERROR)
-    else:
-        df = df.join(
-            ratio_guess.select("row_id", F.col("ratio").alias(GUESS)),
-            "row_id",
-            "left",
-        ).withColumn(GUESS, F.coalesce(GUESS, F.lit(1.0)))
-        cols.append(GUESS)
-    base, schema = encode(df.select(*cols), k, dense)
+    ``ratio_guess``): the state pass derives the state from the base's
+    :data:`GUESS` column with the per-row bounds check, and the state
+    cache is counted here (which materializes the base too) so a bounds
+    violation surfaces at construction."""
+    if ratio_guess is None and not _inside(np.ones(1), bounds):
+        raise ValueError(BOUNDS_ERROR)
+    base, schema = encode_base(df, k, ratio_guess)
 
     def init_state(blobs):
         for rb in batches(blobs, schema):
@@ -280,6 +293,43 @@ def commit(rdd, commits_since_ckpt: int):
         rdd.localCheckpoint()
         commits_since_ckpt = 0
     return rdd, commits_since_ckpt
+
+
+def state_rows(kern):
+    """What a pass of a split-state kernel reads: ``base.zip(state)``, or
+    the base alone while the kernel holds no state (Newton between
+    compactions)."""
+    if kern._state is None:
+        return kern._base
+    return kern._base.zip(kern._state)
+
+
+def reduce_state(kern, pass_fn: Callable, big: bool = False):
+    """A split-state kernel's reduce (the Newton and penalty kernels bind
+    it as ``_reduce``): :func:`reduce` over :func:`state_rows`, running the
+    kernel's armed V1 check, then releasing the state cache the last
+    commit superseded — this reduce read, and so materialized, its
+    successor."""
+    validate, kern._validate_first_pass = kern._validate_first_pass, False
+    sums, mins = reduce(
+        state_rows(kern), pass_fn, kern._schema, big, validate=validate
+    )
+    if kern._prev is not None:
+        kern._prev.unpersist()
+        kern._prev = None
+    return sums, mins
+
+
+def commit_state(kern, pass_fn: Callable, names) -> None:
+    """A split-state kernel's lazy commit (bound as ``_commit``): the
+    ``names`` state columns of ``pass_fn`` over :func:`state_rows` become
+    the new state cache, materialized by the next reduce in the same scan
+    (no job here); the base is never rewritten."""
+    kern._prev = kern._state
+    kern._state, kern._commits_since_ckpt = commit(
+        transform(state_rows(kern), pass_fn, kern._schema, names),
+        kern._commits_since_ckpt,
+    )
 
 
 def release(sc, *rdds) -> None:
@@ -374,18 +424,17 @@ def reduce(
     return sums[:-2], mins
 
 
-def transform(rdd, pass_fn: Callable, schema: pa.Schema, names=None):
-    """Blob RDD of the batches ``pass_fn`` yields (uncached), keeping only
-    the ``names`` columns when given — a split-state commit re-encodes the
-    mutable state, never the immutable base."""
+def transform(rdd, pass_fn: Callable, schema: pa.Schema, names):
+    """Blob RDD of the ``names`` columns of the batches ``pass_fn`` yields
+    (uncached) — a commit re-encodes the mutable state, never the
+    immutable base."""
 
     def fn(it):
         for rb in pass_fn(batches(it, schema)):
-            if names is not None:
-                rb = pa.RecordBatch.from_arrays(
-                    [rb.column(rb.schema.get_field_index(c)) for c in names],
-                    names,
-                )
+            rb = pa.RecordBatch.from_arrays(
+                [rb.column(rb.schema.get_field_index(c)) for c in names],
+                names,
+            )
             yield ipc_ser(rb)
 
     return rdd.mapPartitions(fn, preservesPartitioning=True)

@@ -334,37 +334,14 @@ class PenaltySparkKernel:
         )
 
     # -- plumbing ----------------------------------------------------------
-    def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        validate, self._validate_first_pass = self._validate_first_pass, False
-        sums, mins = blob_plane.reduce(
-            self._base.zip(self._state), fn, self._schema, big,
-            validate=validate,
-        )
-        # a reduce materializes any pending lazy commit into its cache
-        if self._prev is not None:
-            self._prev.unpersist()
-            self._prev = None
-        return sums, mins
+    _reduce = blob_plane.reduce_state
+    _commit = blob_plane.commit_state
 
     @property
     def _gram_big(self) -> bool:
         return reduce_big(
             self.k, self.block_structure, self._base.getNumPartitions()
         )
-
-    def _commit(self, fn) -> None:
-        """Lazy state transition: persisted, materialized by the next
-        reduce in the same scan (no standalone commit job); only the
-        mutable state columns are re-cached."""
-        new_state, self._commits_since_ckpt = blob_plane.commit(
-            blob_plane.transform(
-                self._base.zip(self._state), fn, self._schema,
-                self._state_names,
-            ),
-            self._commits_since_ckpt,
-        )
-        self._prev = self._state
-        self._state = new_state
 
     def defer_validation(self) -> None:
         """Arm the fused V1 check: the next pass (``penalty_init``, the
@@ -418,7 +395,7 @@ class PenaltySparkKernel:
 
     def penalty_commit(self, z: np.ndarray) -> tuple[float, bool]:
         sums, _ = self._reduce(_pstep_sq_pass(z))
-        self._commit(_pcommit_pass(z))
+        self._commit(_pcommit_pass(z), self._state_names)
         return float(sums[0]), sums[1] > 0
 
     # -- bounded -----------------------------------------------------------
@@ -460,4 +437,6 @@ class PenaltySparkKernel:
         )
 
     def pb_commit(self, z: np.ndarray, mu: float, bp: float, bd: float) -> None:
-        self._commit(_pbcommit_pass(z, mu, bp, bd, self.has_ub))
+        self._commit(
+            _pbcommit_pass(z, mu, bp, bd, self.has_ub), self._state_names
+        )

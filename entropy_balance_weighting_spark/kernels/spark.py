@@ -3,12 +3,10 @@
 Layout: one logical row per observation —
 ``(row_id BIGINT, w0 DOUBLE, idx ARRAY<INT>, val ARRAY<DOUBLE>)`` — i.e.
 per-row CSR (the Spark rendering of the reference's package-wide CSR
-canonicalization, ref: shared.py:11-12); q = w0/Σw0 and the analytic start
-wstar are recomputed per pass, a materialized wstar column appears only
-after a warm start or a materialized commit, and a dense ``[0..k)`` idx
-column is dropped when the plan proves it (``blob_plane.dense_idx``).  Packing
-happens once; every solver iteration then runs whole-pass batch jobs that
-compute ALL of the iteration's N→{scalar,K,K×K} reductions in a single
+canonicalization, ref: shared.py:11-12); q = w0/Σw0 and the weight state
+are recomputed per pass, and a dense ``[0..k)`` idx column is dropped when
+the plan proves it (``blob_plane.dense_idx``).  Packing happens once;
+every solver iteration then runs whole-pass batch jobs that compute ALL of the iteration's N→{scalar,K,K×K} reductions in a single
 scan (the same fusion the reference gets from numexpr + MKL, ref:
 ebw_routines.py:210-233), shipping only K- and K²-sized partials to the
 driver.  The Arrow list arrays' offset buffers ARE the CSR encoding, read
@@ -30,15 +28,16 @@ iteration, while this design shuffles nothing after setup — partials are
 partition-local and only K²-sized buffers cross the driver boundary
 (SURVEY §3.4).
 
-State commits are a DRIVER-SIDE program update in the common case: the
-iterate is a short op-chain (``exp`` for dual steps, ``lin`` for primal
-steps) replayed against the immutable once-cached base by every pass, so
-no N-row cache is ever rewritten mid-solve (2 map-only jobs per
-iteration, zero cache churn).  Only a long primal chain (or a warm-start
-state) falls back to a lazy persisted blob rewrite, materialized by the
-NEXT stats scan; an RDD ``localCheckpoint`` every few such commits
-truncates lineage so long solves never grow an unbounded plan — the
-classic iterative-MLlib pitfall (SURVEY §4 caching note).
+State commits are a DRIVER-SIDE program update: the iterate is a short
+op-chain (a start op, then ``lin`` ops for primal steps; see
+``_w_state``) replayed against the immutable once-cached base by every
+pass, so the base is never rewritten (2 map-only jobs per iteration).  A
+primal chain longer than ``SparkKernel._MAX_PROG`` is compacted into an
+8 B/row ``wstar`` state cache, zipped with the base element for element
+like the elastic and penalty kernels' state; an RDD ``localCheckpoint``
+every few compactions truncates lineage so long solves never grow an
+unbounded plan — the classic iterative-MLlib pitfall (SURVEY §4 caching
+note).
 """
 
 from __future__ import annotations
@@ -54,8 +53,8 @@ from pyspark.sql import functions as F
 from entropy_balance_weighting_spark.kernels import blob_plane
 from entropy_balance_weighting_spark.kernels.base import IterStats, StepStats
 from entropy_balance_weighting_spark.kernels.blob_plane import (
-    BASE_NAMES,
     DENSE_IDX_META,
+    GUESS,
     pack_payload,
 )
 
@@ -85,8 +84,8 @@ def _flatten_rb(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]
 
 
 def _rb_col(rb: pa.RecordBatch, name: str) -> np.ndarray:
-    # Blob schemas are variable (wstar/dense-idx columns are conditional
-    # since r8), and get_field_index returns -1 for a missing name — which
+    # Blob schemas are variable (guess/state/dense-idx columns are
+    # conditional), and get_field_index returns -1 for a missing name — which
     # rb.column() silently resolves to the LAST column. Guard it.
     i = rb.schema.get_field_index(name)
     if i < 0:
@@ -326,20 +325,23 @@ def pack_rows(
 def _w_state(rb, q, flat_idx, flat_val, lens, wprog):
     """Current weight-state vector for a batch.
 
-    ``wprog`` is the kernel's analytic weight program (see
-    SparkKernel.commit): a short driver-side list of ops replayed against
-    the immutable base, so commits never rewrite the N-row cache —
-    ``("exp", λ)`` renders the dual iterate ``q·exp(X·λ)``;
-    ``("lin", α, λ, Δλ)`` applies a primal update
-    ``w·(1 + α·(X·Δλ − cd))`` with ``cd = log(w/q) − X·λ``.
-    ``wprog=None`` → the state is the materialized ``wstar`` column."""
-    if wprog is None:
-        return _rb_col(rb, "wstar")
+    ``wprog`` is the kernel's weight program (see SparkKernel.commit): a
+    short driver-side list of ops replayed against the immutable base.  It
+    opens with a start op — ``("exp", λ)`` renders the dual iterate
+    ``q·exp(X·λ)``, ``("guess",)`` a warm start ``q·ratio_guess`` from the
+    base's ``blob_plane.GUESS`` column, ``("state",)`` the compacted
+    ``wstar`` column of the zipped state — then ``("lin", α, λ, Δλ)`` ops
+    apply primal updates ``w·(1 + α·(X·Δλ − cd))`` with
+    ``cd = log(w/q) − X·λ``."""
     w = None
     with np.errstate(over="ignore", divide="ignore", invalid="ignore"):
         for op in wprog:
             if op[0] == "exp":
                 w = q * np.exp(_x_dot(flat_idx, flat_val, lens, op[1]))
+            elif op[0] == "guess":
+                w = q * _rb_col(rb, GUESS)
+            elif op[0] == "state":
+                w = _rb_col(rb, "wstar")
             else:
                 _, alpha, lam_v, dlam_v = op
                 cd = np.log(w / q) - _x_dot(flat_idx, flat_val, lens, lam_v)
@@ -487,49 +489,17 @@ def _step_pass(
     return fn
 
 
-def _commit_pass(
-    choice: str,
-    lam: np.ndarray,
-    dlam: np.ndarray,
-    alpha: float,
-    wprog=None,
-    sum_w0: float = 1.0,
-) -> Callable:
+def _compact_pass(wprog, sum_w0: float) -> Callable:
+    """The program rendered as the one ``wstar`` state column: a batch per
+    input batch, empty ones included, so the state zips with the base."""
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            if not rb.num_rows:
-                yield rb
-                continue
             flat_idx, flat_val, lens = _flatten_rb(rb)
-            q = _rb_q(rb, sum_w0)
-            xlam = _x_dot(flat_idx, flat_val, lens, lam)
-            if choice == "primal":
-                w = _w_state(rb, q, flat_idx, flat_val, lens, wprog)
-                xdl = _x_dot(flat_idx, flat_val, lens, dlam)
-                cd = np.log(w / q) - xlam
-                new_w = w + alpha * (xdl - cd) * w
-            else:
-                xdl = _x_dot(flat_idx, flat_val, lens, dlam)
-                new_w = q * np.exp(xlam + xdl)
-            arrays = [rb.column(i) for i in range(rb.num_columns)]
-            i_w = rb.schema.get_field_index("wstar")
-            w_arr = pa.array(new_w, type=pa.float64())
-            if i_w >= 0:
-                arrays[i_w] = w_arr
-                yield pa.RecordBatch.from_arrays(arrays, schema=rb.schema)
-            else:
-                # base blobs stop carrying wstar (r8 narrow blob); the
-                # first materialized commit appends it, preserving the
-                # schema metadata (the dense-idx elision stamp).
-                arrays.append(w_arr)
-                fields = [
-                    *(rb.schema.field(j) for j in range(rb.num_columns)),
-                    pa.field("wstar", pa.float64()),
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays,
-                    schema=pa.schema(fields, metadata=rb.schema.metadata),
-                )
+            w = _w_state(rb, _rb_q(rb, sum_w0), flat_idx, flat_val, lens, wprog)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(w, type=pa.float64())], ["wstar"]
+            )
 
     return fn
 
@@ -542,34 +512,49 @@ class SparkKernel:
     task instead of K² — the path that reaches the reference's
     'hundreds of thousands of constraints' regime (ref: README.md:8).
 
-    Iteration job fusion: ``commit`` only DECLARES the state transition
-    (lazy blob rewrite + persist); the very next ``stats`` job both
-    materializes the new state into the cache and computes its reductions
-    in a single scan — 2 jobs per iteration instead of 3.  Lineage is
-    truncated with an RDD ``localCheckpoint`` every few commits so a cache
-    eviction can never cascade a long recompute chain."""
+    State: the packed base is cached once and never rewritten.  The
+    iterate is the weight program ``_wprog`` (see ``_w_state``), replayed
+    by every pass — over ``base.zip(state)`` once a long primal chain has
+    been compacted into the ``wstar`` state cache (see ``commit``).  A
+    compaction is only declared (lazy, persisted): the next reduce
+    materializes it in the same scan as its own reductions, and the step
+    pass's speculative stats spare most stats jobs — at most 2 jobs per
+    iteration."""
+
+    # Lin ops replayed on top of the start op before a primal chain is
+    # compacted.  Values are identical at any cap (the compacted wstar
+    # stores exactly what the replay computes — pinned by
+    # tests/test_speculative_stats.py): up to _MAX_PROG replayed lin ops
+    # per pass (2 dots + a log each) against one 8 B/row state write.
+    # Typical Newton solves (3–10 iterations) never compact.
+    _MAX_PROG = 8
+    # Speculative α=1 primal stats (see ``step_stats``); tests switch it
+    # off to compare against the unfused solve.
+    _SPECULATE = True
+
+    # split-state bookkeeping shared with the penalty kernel
+    _reduce = blob_plane.reduce_state
+    _commit = blob_plane.commit_state
 
     def __init__(
-        self, rdd, schema, spark, k: int, sum_w0: float, n: int,
+        self, base_rdd, schema, spark, k: int, sum_w0: float, n: int, start,
         block_structure=None,
     ) -> None:
-        self._rdd = rdd
+        self._base = base_rdd
         self._schema = schema  # decode schema of the JVM-encoded base
         self._spark = spark
         self.k = k
         self.sum_w0 = sum_w0
         self.n = n
         self.block_structure = block_structure
+        # the compacted wstar state (None until a compaction), the state a
+        # declared commit superseded (released by the next reduce), and
+        # the pre-commit (program, state) that ``rollback`` restores
+        self._state = None
         self._prev = None
-        self._rollback_src = None
         self._commits_since_ckpt = 0
-        # Analytic weight state: when set, the TRUE iterate is the replay
-        # of this short op-program against the immutable base (see
-        # ``_w_state``) and the cached wstar column may be stale — commits
-        # are then a driver-side list update, never a cache rewrite.
-        self._wprog: list | None = None
-        self._prev_wprog: list | None = None
-        self._last_commit: str | None = None
+        self._wprog: list = [start]
+        self._undo: tuple | None = None
         # deferred V1 validation: armed by the API layer, consumed by the
         # first reduce (``blob_plane.reduce``), which also materializes the
         # blob cache — validation costs zero extra jobs (r13 optimization)
@@ -577,20 +562,12 @@ class SparkKernel:
         # Speculative α=1 primal stats (r13 optimization): the step pass
         # fuses the NEXT iteration's stats reductions for the α=1 primal
         # candidate; ``commit`` marks the stash live when the driver indeed
-        # commits primal at exactly α=1 with an analytic program append,
-        # and ``stats`` then returns it with ZERO Spark jobs.  Two
-        # prediction misses (dual commit or α<1) disable speculation for
-        # the rest of the solve, bounding wasted work on problems where
-        # the fraction-to-boundary binds.  Conf kill switch for A/B:
-        # spark.ebw.speculativeStats=false.
+        # commits primal at exactly α=1, and ``stats`` then returns it with
+        # ZERO Spark jobs.  Two prediction misses (dual commit or α<1)
+        # disable speculation for the rest of the solve, bounding wasted
+        # work on problems where the fraction-to-boundary binds.
         self._spec: dict | None = None
         self._spec_misses = 0
-        self._spec_conf = (
-            str(
-                spark.conf.get("spark.ebw.speculativeStats", "true")
-            ).lower()
-            != "false"
-        )
         self.spec_hits = 0  # observable for tests/diagnostics
 
     @classmethod
@@ -609,35 +586,28 @@ class SparkKernel:
         shuffle; every subsequent iteration is shuffle-free.
 
         r8 pack-cost work (PLANS.md §13): the blob carries only
-        ``(row_id, w0, idx?, val)`` — q and the analytic start wstar are
+        ``(row_id, w0, idx?, val)`` — q and the weight state are
         recomputed per pass (one divide), a dense ``[0..k)`` idx column is
         dropped when the plan proves it (``blob_plane.dense_idx``), and the
         persist is LAZY: the first stats reduce materializes
         encode+cache+reductions in one job instead of a separate pack
-        scan.  A warm start adds the materialized start state as the
-        column ``wstar = (w0 / Σw0) · ratio``."""
+        scan.  A warm start's guess rides in the base as the
+        ``blob_plane.GUESS`` column (``blob_plane.encode_base``, the
+        split-state kernels' encode) and the program starts at
+        ``("guess",)``."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
-        dense = blob_plane.dense_idx(df, k)
-        cols = [F.col(c) for c in BASE_NAMES]
-        if ratio_guess is not None:
-            df = df.join(
-                ratio_guess.select("row_id", "ratio"), "row_id", "left"
-            )
-            ratio = F.coalesce("ratio", F.lit(1.0))
-            cols.append(((F.col("w0") / F.lit(sum_w0)) * ratio).alias("wstar"))
-        rdd, schema = blob_plane.encode(df.select(*cols), k, dense)
+        base, schema = blob_plane.encode_base(df, k, ratio_guess)
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
         bs = (
             BlockStructure.from_groups(moment_groups) if moment_groups else None
         )
-        kern = cls(
-            rdd, schema, df.sparkSession, k, sum_w0, n, block_structure=bs
+        # the cold start wstar = q = q·exp(X·0) is analytic
+        start = ("exp", np.zeros(k)) if ratio_guess is None else ("guess",)
+        return cls(
+            base, schema, df.sparkSession, k, sum_w0, n, start,
+            block_structure=bs,
         )
-        if ratio_guess is None:
-            # wstar = q = q·exp(X·0): the start point is analytic
-            kern._wprog = [("exp", np.zeros(k))]
-        return kern
 
     def materialize(self) -> None:
         """Force the (lazy) blob cache to build now.  The solve path never
@@ -645,7 +615,7 @@ class SparkKernel:
         reductions in ONE job — but benches/tests that want the pack cost
         on its own line call it explicitly.  Counted on the JVM, so no
         Python worker starts and the time is the encode's."""
-        self._rdd._jrdd.count()
+        self._base._jrdd.count()
 
     def init_state(self, ratio_guess=None) -> None:
         if ratio_guess is not None:
@@ -654,16 +624,10 @@ class SparkKernel:
             )
 
     # -- passes ------------------------------------------------------------
-    def _reduce(self, fn, big: bool = False) -> tuple[np.ndarray, np.ndarray]:
-        validate, self._validate_first_pass = self._validate_first_pass, False
-        return blob_plane.reduce(
-            self._rdd, fn, self._schema, big, validate=validate
-        )
-
     @property
     def _gram_big(self) -> bool:
         return reduce_big(
-            self.k, self.block_structure, self._rdd.getNumPartitions()
+            self.k, self.block_structure, self._base.getNumPartitions()
         )
 
     def defer_validation(self) -> None:
@@ -697,15 +661,6 @@ class SparkKernel:
             ),
             big=self._gram_big,
         )
-        # the reduce materialized any pending lazy commit into its cache —
-        # the superseded state's CACHE can go; the RDD handle is kept so a
-        # zero-weight guard can roll back via lineage recompute (bounded by
-        # blob_plane.CKPT_EVERY passes since the last checkpoint; failure
-        # path only)
-        if self._prev is not None:
-            self._prev.unpersist()
-            self._rollback_src = self._prev
-            self._prev = None
         f_val, cd_sq, nan_ct = sums[0], sums[1], sums[2]
         xt_w = sums[3 : 3 + k]
         xt_wcd = sums[3 + k : 3 + 2 * k]
@@ -722,7 +677,7 @@ class SparkKernel:
 
     def step_stats(self, lam: np.ndarray, dlam: np.ndarray) -> StepStats:
         k = self.k
-        speculate = self._spec_conf and self._spec_misses < 2
+        speculate = self._SPECULATE and self._spec_misses < 2
         lam_new = np.asarray(lam + dlam, dtype=np.float64) if speculate else None
         sums, mins = self._reduce(
             _step_pass(
@@ -768,116 +723,76 @@ class SparkKernel:
             has_nan=sums[1] > 0,
         )
 
-    # Analytic ops before a primal chain is materialized.  Raised 4 → 8 in
-    # r13: the speculative stats fusion changed the economics — each
-    # materialization now costs a full blob re-encode + persist AND loses
-    # one fused iteration (its stats pass must run for real), so short
-    # solves (typical Newton counts are 3–10) should never materialize.
-    # The price is up to 7 replayed lin ops per pass (2 dots + a log
-    # each) on solves that do run long — linear in chain length and paid
-    # only past iteration 8.  Values are identical either way (the
-    # materialized wstar stores exactly what the replay computes —
-    # pinned by tests/test_speculative_stats.py); this is purely a
-    # rewrite-avoidance knob.
-    _MAX_PROG = 8
-
     def commit(self, choice: str, lam: np.ndarray, dlam: np.ndarray, alpha: float) -> None:
-        """Advance the iterate — a driver-side program update, NOT a cache
-        rewrite, in the common case.
+        """Advance the iterate — a driver-side program update; the packed
+        base is never rewritten.
 
         ``dual``: the new state is ``q·exp(X·(λ+Δλ))`` — a pure function
-        of a driver-side vector, so the commit resets the analytic program
-        to a single ``exp`` op with ZERO Spark work.
+        of a driver-side vector, so the program resets to a single ``exp``
+        op and any compacted state is dropped, with ZERO Spark work.
 
         ``primal``: ``w·(1 + α·(X·Δλ − cd))`` depends on the current
-        weights; while the state is analytic, the update is appended to the
-        program (one extra dot-product replayed per pass).  Only when the
-        primal chain outgrows ``_MAX_PROG`` — or the state was already
-        materialized (warm start) — is a LAZY cache rewrite declared
-        (``mapInArrow`` + persist), which the next ``stats`` reduce
-        materializes in the same scan that computes its reductions.
+        weights, so a ``lin`` op is appended (one more dot product
+        replayed per pass).  When that would pass ``_MAX_PROG`` lin ops,
+        the program with the new op is compacted instead: a LAZY
+        ``wstar`` state cache (8 B/row, ``_compact_pass``) that the next
+        reduce materializes in the same scan as its own reductions; the
+        program restarts as ``[("state",)]`` and appends again.
 
-        Either way the packed base stays immutable and checkpointed once;
-        passes recompute the iterate from it in the same scan as their
-        reductions.  No extra min-job: zero-weight detection uses the step
-        pass's ``min_wdual`` (dual candidate) and the next stats pass's
-        ``min_w`` (primal underflow)."""
-        self._prev_wprog = self._wprog
-        if choice == "dual":
-            if self._spec is not None:
-                # prediction miss: the speculative α=1 primal stats were
-                # computed but the driver committed the dual candidate
-                self._spec = None
+        A primal commit at exactly α=1 on the speculated step makes the
+        next ``stats`` free (see ``step_stats``); a dual commit or any
+        other primal commit after a speculative step is a miss.  No extra
+        min-job: zero-weight detection uses the step pass's ``min_wdual``
+        (dual candidate) and the next stats' ``min_w`` (primal
+        underflow)."""
+        self._undo = (self._wprog, self._state)
+        spec, self._spec = self._spec, None
+        if spec is not None:
+            if (
+                choice == "primal"
+                and alpha == 1.0
+                and np.array_equal(lam, spec["lam"])
+                and np.array_equal(dlam, spec["dlam"])
+            ):
+                # the committed state IS the speculated candidate: the
+                # next stats() call returns the stash with zero jobs
+                spec["committed"] = True
+                self._spec = spec
+            else:
                 self._spec_misses += 1
-            self._last_commit = "analytic"
+        if choice == "dual":
             self._wprog = [("exp", np.asarray(lam + dlam, dtype=np.float64))]
+            if self._state is not None:
+                self._prev, self._state = self._state, None
             return
-        if self._wprog is not None and len(self._wprog) < self._MAX_PROG:
-            if self._spec is not None:
-                if (
-                    alpha == 1.0
-                    and np.array_equal(lam, self._spec["lam"])
-                    and np.array_equal(dlam, self._spec["dlam"])
-                ):
-                    # the committed state IS the speculated candidate: the
-                    # next stats() call returns the stash with zero jobs
-                    self._spec["committed"] = True
-                else:
-                    self._spec = None
-                    self._spec_misses += 1
-            self._last_commit = "analytic"
-            self._wprog = [
-                *self._wprog,
-                (
-                    "lin",
-                    float(alpha),
-                    np.asarray(lam, dtype=np.float64),
-                    np.asarray(dlam, dtype=np.float64),
-                ),
-            ]
-            return
-        # materialized commit: the next stats pass must run for real (it
-        # materializes the rewritten cache and releases the superseded
-        # one), so the stash is unusable here — dropped without a miss
-        # penalty (the prediction itself was not wrong)
-        self._spec = None
-        self._last_commit = "materialized"
-        new_rdd, self._commits_since_ckpt = blob_plane.commit(
-            blob_plane.transform(
-                self._rdd,
-                _commit_pass(choice, lam, dlam, alpha, self._wprog, self.sum_w0),
-                self._schema,
-            ),
-            self._commits_since_ckpt,
+        op = (
+            "lin",
+            float(alpha),
+            np.asarray(lam, dtype=np.float64),
+            np.asarray(dlam, dtype=np.float64),
         )
-        self._prev = self._rdd
-        self._rdd = new_rdd
-        self._wprog = None
+        if len(self._wprog) <= self._MAX_PROG:
+            self._wprog = [*self._wprog, op]
+            return
+        self._commit(_compact_pass([*self._wprog, op], self.sum_w0), ["wstar"])
+        self._wprog = [("state",)]
 
     def rollback(self) -> None:
-        """Undo the last commit: restore the pre-commit state (reference
-        semantics — a zero-weight step fails BEFORE committing,
-        ebw_routines.py:274-282).  An analytic commit is undone by
-        restoring the previous program; a materialized commit's pre-commit
-        cache was released by the stats reduce, so that path recomputes via
-        lineage — paid only on the failure path."""
-        if self._last_commit is None:
+        """Undo the last commit: restore the pre-commit program and state
+        handle (reference semantics — a zero-weight step fails BEFORE
+        committing, ebw_routines.py:274-282).  The base is never touched;
+        a restored state whose cache a reduce already released is
+        recomputed from lineage — paid only on the failure path."""
+        if self._undo is None:
             raise RuntimeError("no committed step to roll back")
         self._spec = None  # stale by definition after an undo
-        if self._last_commit == "analytic":
-            self._wprog = self._prev_wprog
-            self._last_commit = None
-            return
-        src = self._prev if self._prev is not None else self._rollback_src
-        if src is None:
-            raise RuntimeError("no committed step to roll back")
-        self._rdd.unpersist()
-        self._rdd = blob_plane.persist(src)
-        self._prev = None
-        self._rollback_src = None
-        self._wprog = self._prev_wprog
-        self._last_commit = None
-        self._commits_since_ckpt = max(0, self._commits_since_ckpt - 1)
+        self._wprog, state = self._undo
+        self._undo = None
+        if state is not self._state:
+            if self._state is not None:
+                self._state.unpersist()
+            self._prev = None
+            self._state = state if state is None else blob_plane.persist(state)
 
     def new_weights(self) -> DataFrame:
         sum_w0 = self.sum_w0
@@ -889,9 +804,11 @@ class SparkKernel:
             return _w_state(rb, q, flat_idx, flat_val, lens, wprog) * sum_w0
 
         return blob_plane.weights_df(
-            self._spark, self._rdd, self._schema, weight_of
+            self._spark, blob_plane.state_rows(self), self._schema, weight_of
         )
 
     def cleanup(self) -> None:
-        blob_plane.release(self._spark.sparkContext, self._rdd, self._prev)
+        blob_plane.release(
+            self._spark.sparkContext, self._base, self._state, self._prev
+        )
         self._prev = None

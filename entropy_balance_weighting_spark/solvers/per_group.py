@@ -126,7 +126,6 @@ def solve_per_group(
             )
 
             kern = LocalKernel(x, w0)
-            kern.init_state(None)
             res = solve_unbounded(kern, m, opts, original_weights=w0.copy())
         out = pd.DataFrame({c: rows[c] for c in group_cols + key_cols})
         out["new_weight"] = np.asarray(res.new_weights, dtype=np.float64)

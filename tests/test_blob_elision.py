@@ -16,13 +16,16 @@ import pytest
 from entropy_balance_weighting_spark.kernels import blob_plane
 from entropy_balance_weighting_spark.kernels.blob_plane import (
     DENSE_IDX_META,
+    GUESS,
     batches,
     ipc_ser,
 )
 from entropy_balance_weighting_spark.kernels.spark import (
-    _commit_pass,
+    _compact_pass,
     _flatten_rb,
+    _rb_col,
     _rb_q,
+    _w_state,
 )
 
 
@@ -75,31 +78,46 @@ def test_zip_combined_preserves_elision_metadata():
     assert combined.schema.get_field_index("ratio") >= 0
 
 
-def test_commit_pass_appends_wstar_and_keeps_metadata():
+def test_compaction_blob_zips_with_elided_base_bit_for_bit():
+    """A Newton compaction writes only ``wstar``, one batch per base batch
+    (empty ones included, so the zip stays aligned).  Zipped with a
+    dense-elided base the stamp survives, and the state replays the
+    program bit for bit, also when the chain goes on after it."""
     k, n = 3, 4
-    base = _elided_rb(k, [[0.1, 0.2, 0.3]] * n, w0=np.full(n, 2.0))
-    sum_w0 = 8.0
-    wprog = [("exp", np.zeros(k))]
-    fn = _commit_pass("dual", np.zeros(k), np.zeros(k), 1.0, wprog, sum_w0)
-    (out,) = list(fn(iter([base])))
-    i_w = out.schema.get_field_index("wstar")
-    assert i_w >= 0
-    assert out.schema.metadata[DENSE_IDX_META] == str(k).encode()
-    # dual step with lam=dlam=0: wstar = q = w0/sum_w0
-    np.testing.assert_allclose(
-        out.column(i_w).to_numpy(), np.full(n, 0.25)
+    rng = np.random.default_rng(0)
+    base = _elided_rb(
+        k, rng.uniform(size=(n, k)).tolist(), w0=rng.uniform(1.0, 2.0, n)
     )
-    # a second commit replaces in place (no duplicate column)
-    (out2,) = list(
-        _commit_pass("dual", np.zeros(k), np.zeros(k), 1.0, None, sum_w0)(
-            iter([out])
-        )
+    empty = base.slice(0, 0)
+    sum_w0 = 7.5
+
+    def lin(alpha, s):
+        return ("lin", alpha, np.full(k, s), np.linspace(-s, s, k))
+
+    prog = [("exp", np.full(k, 0.1)), lin(1.0, 0.2), lin(0.5, 0.3)]
+    out = list(_compact_pass(prog, sum_w0)(iter([base, empty])))
+    assert [rb.schema.names for rb in out] == [["wstar"], ["wstar"]]
+    assert [rb.num_rows for rb in out] == [n, 0]
+    (combined, _) = batches(
+        [
+            (b.serialize().to_pybytes(), ipc_ser(s))
+            for b, s in zip([base, empty], out)
+        ],
+        base.schema,
     )
-    assert out2.num_columns == out.num_columns
-    # the Python-written commit blob is a self-describing IPC stream
-    (back,) = list(batches([ipc_ser(out2)], base.schema))
-    assert back.schema.metadata[DENSE_IDX_META] == str(k).encode()
-    assert back.schema.get_field_index("wstar") >= 0
+    assert combined.schema.metadata[DENSE_IDX_META] == str(k).encode()
+
+    def replay(rb, wprog):
+        fi, fv, lens = _flatten_rb(rb)
+        return _w_state(rb, _rb_q(rb, sum_w0), fi, fv, lens, wprog)
+
+    np.testing.assert_array_equal(
+        _rb_col(combined, "wstar"), replay(base, prog)
+    )
+    np.testing.assert_array_equal(
+        replay(combined, [("state",), lin(1.0, 0.4)]),
+        replay(base, [*prog, lin(1.0, 0.4)]),
+    )
 
 
 # -- JVM encode round trip -----------------------------------------------------
@@ -157,7 +175,7 @@ def test_jvm_encode_roundtrip_dense_static_ids_elided(spark):
     try:
         assert kern._schema.get_field_index("idx") == -1
         assert kern._schema.metadata[DENSE_IDX_META] == str(k).encode()
-        assert _decoded_rows(kern._rdd, kern._schema) == _packed_rows(packed)
+        assert _decoded_rows(kern._base, kern._schema) == _packed_rows(packed)
     finally:
         kern.cleanup()
 
@@ -173,7 +191,7 @@ def test_jvm_encode_roundtrip_non_dense_static_ids_kept(spark):
     try:
         assert kern._schema.get_field_index("idx") >= 0
         assert DENSE_IDX_META not in (kern._schema.metadata or {})
-        assert _decoded_rows(kern._rdd, kern._schema) == _packed_rows(packed)
+        assert _decoded_rows(kern._base, kern._schema) == _packed_rows(packed)
     finally:
         kern.cleanup()
 
@@ -232,7 +250,7 @@ def test_jvm_encode_roundtrip_grouped_and_generic_paths(spark):
     kern = SparkKernel.from_problem(pt.x_long, pt.w0, pt.k)
     try:
         assert kern._schema.get_field_index("idx") >= 0
-        assert _decoded_rows(kern._rdd, kern._schema) == _packed_rows(generic)
+        assert _decoded_rows(kern._base, kern._schema) == _packed_rows(generic)
     finally:
         kern.cleanup()
 
@@ -251,19 +269,18 @@ def test_missing_jvm_arrow_writer_fails_loudly(spark, monkeypatch):
 
 
 def test_warm_start_encodes_start_state(spark):
-    """Warm starts ride the same JVM encode: Newton's base carries
-    ``wstar = (w0 / Σw0) · ratio`` as a column, and a split-state kernel
-    derives its state ratio from the guess column (rows missing from the
-    guess start at 1.0); the dense-id decision is taken before the join."""
+    """Warm starts ride the same JVM encode (``blob_plane.encode_base``):
+    the base carries the guess column, Newton's program renders the start
+    state ``q · ratio`` with the same bits as ``(w0 / Σw0) · ratio``, and
+    a split-state kernel derives its state ratio from the guess column
+    (rows missing from the guess start at 1.0); the dense-id decision is
+    taken before the join."""
     from pyspark.sql import functions as F
 
     from entropy_balance_weighting_spark.kernels.elastic_spark import (
         ElasticSparkKernel,
     )
-    from entropy_balance_weighting_spark.kernels.spark import (
-        SparkKernel,
-        _rb_col,
-    )
+    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
 
     k, n = 3, 120
     packed = _static_packed(spark, range(k), n=n)
@@ -278,12 +295,17 @@ def test_warm_start_encodes_start_state(spark):
     )
     try:
         assert kern._schema.metadata[DENSE_IDX_META] == str(k).encode()
+        assert kern._wprog == [("guess",)]
         seen = 0
-        for rb in batches(kern._rdd.collect(), kern._schema):
+        for rb in batches(kern._base.collect(), kern._schema):
             rid, w0 = _rb_col(rb, "row_id"), _rb_col(rb, "w0")
-            wstar = _rb_col(rb, "wstar")
-            expect = (w0 / kern.sum_w0) * np.array([ratio_of(r) for r in rid])
-            np.testing.assert_array_equal(wstar, expect)
+            ratio = np.array([ratio_of(r) for r in rid])
+            np.testing.assert_array_equal(_rb_col(rb, GUESS), ratio)
+            fi, fv, lens = _flatten_rb(rb)
+            wstar = _w_state(
+                rb, _rb_q(rb, kern.sum_w0), fi, fv, lens, kern._wprog
+            )
+            np.testing.assert_array_equal(wstar, (w0 / kern.sum_w0) * ratio)
             seen += rb.num_rows
         assert seen == n
     finally:

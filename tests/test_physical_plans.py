@@ -133,13 +133,13 @@ def test_solver_iteration_pass_has_no_shuffle(spark):
     kern = SparkKernel.from_problem(pt.x_long, pt.w0, pt.k)
     # the base cache is encoded on the JVM: no blob shuffle and no Python
     # worker in its own lineage
-    base_lineage = kern._rdd.toDebugString().decode()
+    base_lineage = kern._base.toDebugString().decode()
     assert "ShuffledRDD" not in base_lineage, base_lineage
     assert "PythonRDD" not in base_lineage, base_lineage
     # iteration passes are narrow mapPartitions over the cached blob RDD:
     # the lineage must contain no shuffle stage
     pass_rdd = payloads(
-        kern._rdd,
+        kern._base,
         _stats_pass(
             kern.k, np.zeros(kern.k), wprog=kern._wprog, sum_w0=kern.sum_w0
         ),

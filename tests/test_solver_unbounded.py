@@ -240,6 +240,61 @@ def test_distributed_matches_local(spark, small_problem_tables):
     assert local.n_iterations == dist.n_iterations
 
 
+def test_distributed_warm_start_matches_local(spark):
+    """A distributed Newton warm start (the guess rides in the base, the
+    weight program starts at ``("guess",)``) reaches LocalKernel's
+    warm-start weights in the same number of iterations; rows the guess
+    frame lacks start at ratio 1."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from entropy_balance_weighting_spark.plans import (
+        MomentSpec,
+        build_problem_tables,
+    )
+
+    rng = np.random.default_rng(11)
+    n, k = 300, 3
+    x = rng.uniform(size=(n, k))
+    w0 = rng.uniform(0.5, 2.0, n)
+    m = (x.T @ w0) / w0.sum() * np.array([1.02, 0.98, 1.01])
+    ratio = 1.0 + 0.05 * x[:, 0]
+    ratio[::7] = 1.0  # the rows left out of the guess frame below
+    local = entropy_balance(
+        mean_population_moments=m,
+        x_sample=x,
+        weights0=w0,
+        options={"initial_ratio_guess": ratio},
+    )
+
+    cols = [f"x{j}" for j in range(k)]
+    pdf = pd.DataFrame({"rid": np.arange(n), "w": w0, "ratio": ratio})
+    for j, c in enumerate(cols):
+        pdf[c] = x[:, j]
+    df = spark.createDataFrame(pdf)
+    pt = build_problem_tables(
+        df, MomentSpec(weight_col="w", numeric=tuple(cols), row_key=("rid",))
+    )
+    guess = df.filter(F.col("rid") % 7 != 0).select(
+        F.xxhash64("rid").alias("row_id"), "ratio"
+    )
+    dist = entropy_balance(
+        mean_population_moments=m,
+        x_sample=pt,
+        options={"force_distributed": True, "initial_ratio_guess": guess},
+    )
+    assert local.converged and dist.converged
+    assert dist.n_iterations == local.n_iterations
+    rid_of = {
+        r["row_id"]: r["rid"]
+        for r in df.select("rid", F.xxhash64("rid").alias("row_id")).collect()
+    }
+    got = np.empty(n)
+    for r in dist.new_weights.collect():
+        got[rid_of[r["row_id"]]] = r["new_weight"]
+    np.testing.assert_allclose(got, local.new_weights, rtol=1e-8)
+
+
 def test_reference_largest_workload_shape_converges():
     """Scaled replica of the reference's largest in-repo dense workload
     (ref: examples/simple_examples.py:9-43 — N=100k × K=2000, 50%

@@ -39,20 +39,21 @@ def problem(spark):
     return pt, targets_from_problem(pt, perturb=0.02)
 
 
-def _solve(spark, problem, flag: str):
+def _solve(spark, problem, speculate: bool):
     import entropy_balance_weighting_spark.kernels.spark as ks
     from entropy_balance_weighting_spark import entropy_balance
 
     pt, targets = problem
-    spark.conf.set("spark.ebw.speculativeStats", flag)
     kernels = []
     orig_init = ks.SparkKernel.__init__
+    orig_spec = ks.SparkKernel._SPECULATE
 
     def init(self, *a, **kw):
         orig_init(self, *a, **kw)
         kernels.append(self)
 
     ks.SparkKernel.__init__ = init
+    ks.SparkKernel._SPECULATE = speculate
     try:
         res = entropy_balance(
             mean_population_moments=targets,
@@ -61,18 +62,31 @@ def _solve(spark, problem, flag: str):
         )
     finally:
         ks.SparkKernel.__init__ = orig_init
-        spark.conf.set("spark.ebw.speculativeStats", "true")
+        ks.SparkKernel._SPECULATE = orig_spec
     hits = sum(k.spec_hits for k in kernels)
     return res, hits
 
 
+def _kernel(problem):
+    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
+
+    pt, _ = problem
+    return SparkKernel.from_problem(
+        pt.x_long,
+        pt.w0,
+        pt.k,
+        prepacked=pt.packed_arrays,
+        known_sums=(pt.sum_w0, pt.n),
+    )
+
+
 def test_speculative_fusion_fires_and_is_bit_identical(spark, problem):
-    res_off, hits_off = _solve(spark, problem, "false")
-    res_on, hits_on = _solve(spark, problem, "true")
+    res_off, hits_off = _solve(spark, problem, False)
+    res_on, hits_on = _solve(spark, problem, True)
 
     assert hits_off == 0
-    # every analytic primal α=1 commit except the materialized ones must
-    # convert its follow-up stats job into a stash hit
+    # every primal α=1 commit must convert its follow-up stats job into a
+    # stash hit
     assert hits_on > 0
 
     assert res_on.converged and res_off.converged
@@ -125,16 +139,58 @@ def test_max_prog_is_value_neutral(spark, problem):
     assert out[0] == out[1]
 
 
-def test_speculation_disabled_after_two_misses(spark):
-    """The miss counter must disable speculation permanently for the solve
-    — bounded waste on problems where the fraction-to-boundary binds."""
-    from entropy_balance_weighting_spark.kernels.spark import SparkKernel
+def test_speculation_disabled_after_two_misses(spark, problem):
+    """Two prediction misses (dual commits after speculative steps)
+    disable speculation for the rest of the solve: the next step pass
+    stashes nothing — bounded waste where the fraction-to-boundary
+    binds."""
+    kern = _kernel(problem)
+    try:
+        lam = np.zeros(kern.k)
+        dlam = np.full(kern.k, 1e-3)
+        kern.stats(lam)
+        for _ in range(2):
+            kern.step_stats(lam, dlam)
+            assert kern._spec is not None
+            kern.commit("dual", lam, dlam, 1.0)
+            lam = lam + dlam
+            kern.stats(lam)
+        kern.step_stats(lam, dlam)
+        assert kern._spec is None
+        assert kern.spec_hits == 0
+    finally:
+        kern.cleanup()
 
-    kern = SparkKernel.__new__(SparkKernel)
-    kern._spec = None
-    kern._spec_misses = 2
-    kern._spec_conf = True
-    assert not (kern._spec_conf and kern._spec_misses < 2)
+
+def test_compaction_keeps_speculation_live(spark, problem, monkeypatch):
+    """A primal commit past ``_MAX_PROG`` lin ops compacts the chain into
+    the ``wstar`` state; the program restarts from it and appends again,
+    so the next α=1 primal commit is still a speculation hit, and the
+    stash equals what a real stats pass computes over the state."""
+    import entropy_balance_weighting_spark.kernels.spark as ks
+
+    monkeypatch.setattr(ks.SparkKernel, "_MAX_PROG", 2)
+    kern = _kernel(problem)
+    try:
+        lam = np.zeros(kern.k)
+        dlam = np.full(kern.k, 1e-3)
+        kern.stats(lam)
+        for i in range(4):
+            kern.step_stats(lam, dlam)
+            kern.commit("primal", lam, dlam, 1.0)
+            lam = lam + dlam
+            if i == 2:
+                assert kern._state is not None
+                assert kern._wprog == [("state",)]
+            hit = kern.stats(lam)
+            assert kern.spec_hits == i + 1
+        assert [op[0] for op in kern._wprog] == ["state", "lin"]
+        real = kern.stats(lam)
+        assert kern.spec_hits == 4
+        for f in ("f_val", "xt_w", "cd_sq", "xt_wcd", "gram", "min_w"):
+            assert np.array_equal(getattr(hit, f), getattr(real, f)), f
+    finally:
+        kern.cleanup()
 
 
 def test_rollback_clears_speculative_stash(spark, problem):
