@@ -242,9 +242,10 @@ def test_distributed_matches_local(spark, small_problem_tables):
 
 def test_distributed_warm_start_matches_local(spark):
     """A distributed Newton warm start (the guess rides in the base, the
-    weight program starts at ``("guess",)``) reaches LocalKernel's
-    warm-start weights in the same number of iterations; rows the guess
-    frame lacks start at ratio 1."""
+    weight program starts at ``("guess",)``) follows LocalKernel's
+    warm-start path — same criterion at every iteration, starting from the
+    guess — to the same weights in the same number of iterations; rows
+    the guess frame lacks start at ratio 1."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -285,6 +286,12 @@ def test_distributed_warm_start_matches_local(spark):
     )
     assert local.converged and dist.converged
     assert dist.n_iterations == local.n_iterations
+    np.testing.assert_allclose(
+        [h["criterion"] for h in dist.diagnostics["history"]],
+        [h["criterion"] for h in local.diagnostics["history"]],
+        rtol=1e-8,
+    )
+    assert local.diagnostics["history"][0]["criterion"] > 0.0
     rid_of = {
         r["row_id"]: r["rid"]
         for r in df.select("rid", F.xxhash64("rid").alias("row_id")).collect()
