@@ -3,9 +3,12 @@
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Protocol
+from typing import TYPE_CHECKING, Protocol
 
 import numpy as np
+
+if TYPE_CHECKING:
+    from entropy_balance_weighting_spark.solvers.linalg import BlockGram
 
 TAU = 0.995  # fraction-to-boundary (ref: shared.py:76-91 call sites)
 
@@ -33,8 +36,8 @@ class IterStats:
     xt_w: np.ndarray  # X^T wstar                         (K,)
     cd_sq: float  # ‖Cd‖², Cd = log(wstar/q) − Xλ
     xt_wcd: np.ndarray  # X^T (wstar ∘ Cd)                  (K,)
-    gram: "np.ndarray | object"  # X^T Diag(wstar) X: dense (K,K) ndarray, or
-    # a solvers.linalg.BlockGram on the block-diagonal large-K path
+    gram: BlockGram  # X^T Diag(wstar) X as Σk_b² tiles; a dense Gram is one
+    # K×K block (solvers.linalg)
     min_w: float  # min wstar
     has_nan: bool
 
@@ -65,7 +68,7 @@ class PenaltyStats:
     g2v: np.ndarray  # X^T (w0∘r∘log r)                          (K,)
     h: np.ndarray  # X^T (w0²∘log r)                            (K,)
     s_ll: float  # Σ w0²·(log r)²
-    gram: np.ndarray  # X^T Diag(w0∘r) X                          (K,K)
+    gram: BlockGram  # X^T Diag(w0∘r) X                       (Σk_b²)
     has_nan: bool
 
 
@@ -81,7 +84,7 @@ class PBStats:
     g1: np.ndarray  # X^T (w0∘r)                                 (K,)
     sd0_sq: float  # Σ d0², d0 = w0·log r − λ_lo + λ_hi
     hd: np.ndarray  # X^T (w0∘d0)                                 (K,)
-    gb: np.ndarray  # X^T Diag(w0²/h̃_b) X, h̃_b = w0/r + λ/s sums (K,K)
+    gb: BlockGram  # X^T Diag(w0²/h̃_b) X, h̃_b = w0/r + λ/s sums (Σk_b²)
     u1a: np.ndarray  # X^T (w0/h̃_b ∘ w0·log r)                    (K,)
     u1b: np.ndarray  # X^T (w0/h̃_b ∘ (1/s_lo − 1/s_hi))           (K,)
     s_sum: float  # Σ s·λ over present slack blocks
@@ -125,7 +128,7 @@ class EStats:
     g1: np.ndarray  # X^T (w0∘r) = A^T r                          (K,)
     rhs_leg: np.ndarray  # X^T (w0/h̃ ∘ (Cd + zterm)), at passed μ_s (K,)
     rhs_mu_leg: np.ndarray  # X^T (w0/h̃ ∘ (1/s_lo − 1/s_hi))     (K,)
-    gram: np.ndarray  # X^T Diag(w0²/h̃) X                        (K,K)
+    gram: BlockGram  # X^T Diag(w0²/h̃) X                      (Σk_b²)
     sl_sum: float  # Σ s·λ_ineq over present slack blocks
     sl_sq: float  # Σ (s·λ_ineq)²
     sl_min: float  # min s·λ_ineq

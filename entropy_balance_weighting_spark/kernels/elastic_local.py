@@ -17,6 +17,7 @@ from entropy_balance_weighting_spark.kernels.base import (
     EStepStats,
     ftb_batch,
 )
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram
 
 
 class ElasticLocalKernel:
@@ -124,7 +125,7 @@ class ElasticLocalKernel:
             g1=self.x.T @ (w0 * r),
             rhs_leg=self.x.T @ (w0 * inv_ht * (cdf + zterm)),
             rhs_mu_leg=self.x.T @ (w0 * inv_ht * z1),
-            gram=(self.x * (w0**2 * inv_ht)[:, None]).T @ self.x,
+            gram=BlockGram.dense((self.x * (w0**2 * inv_ht)[:, None]).T @ self.x),
             sl_sum=float(np.sum(sl)),
             sl_sq=float(sl @ sl),
             sl_min=float(np.min(sl)),

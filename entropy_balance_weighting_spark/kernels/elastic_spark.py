@@ -425,7 +425,7 @@ class ElasticSparkKernel:
         )
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
-        bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
+        bs = BlockStructure.from_groups(moment_groups)
         return cls(
             base_rdd, state_rdd, schema, df.sparkSession, k, sum_w0, n, lb,
             ub, has_ub, block_structure=bs,

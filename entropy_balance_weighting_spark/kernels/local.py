@@ -9,6 +9,7 @@ from __future__ import annotations
 import numpy as np
 
 from entropy_balance_weighting_spark.kernels.base import IterStats, StepStats
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram
 
 
 class LocalKernel:
@@ -50,7 +51,7 @@ class LocalKernel:
             xt_w=self.x.T @ w,
             cd_sq=float(cd @ cd) if np.all(np.isfinite(cd)) else float("nan"),
             xt_wcd=self.x.T @ (w * cd),
-            gram=xw.T @ self.x,
+            gram=BlockGram.dense(xw.T @ self.x),
             min_w=float(w.min()) if self.n else 0.0,
             has_nan=bool(np.any(~np.isfinite(cd)) or not np.isfinite(f_val)),
         )

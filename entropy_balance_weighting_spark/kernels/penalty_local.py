@@ -17,6 +17,7 @@ from entropy_balance_weighting_spark.kernels.base import (
     PenaltyStats,
     ftb_batch,
 )
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram
 
 
 class PenaltyLocalKernel:
@@ -61,9 +62,9 @@ class PenaltyLocalKernel:
             )
 
     # -- shared ------------------------------------------------------------
-    def penalty_init(self) -> np.ndarray:
+    def penalty_init(self) -> BlockGram:
         """G2 = X^T Diag(w0²) X — constant across iterations (for ‖Cd‖²)."""
-        return (self.x * (self.w0**2)[:, None]).T @ self.x
+        return BlockGram.dense((self.x * (self.w0**2)[:, None]).T @ self.x)
 
     def moment_totals(self) -> np.ndarray:
         """X^T (w0∘r) = A^T r — the final constraint-gap reduce."""
@@ -89,7 +90,7 @@ class PenaltyLocalKernel:
             g2v=self.x.T @ (w0 * r * lrf),
             h=self.x.T @ (w0**2 * lrf),
             s_ll=float(np.sum(w0**2 * lrf**2)),
-            gram=(self.x * (w0 * r)[:, None]).T @ self.x,
+            gram=BlockGram.dense((self.x * (w0 * r)[:, None]).T @ self.x),
             has_nan=bool(bad.any()),
         )
 
@@ -131,7 +132,7 @@ class PenaltyLocalKernel:
             g1=self.x.T @ (w0 * r),
             sd0_sq=float(d0 @ d0),
             hd=self.x.T @ (w0 * d0),
-            gb=(self.x * (w0**2 * inv_hb)[:, None]).T @ self.x,
+            gb=BlockGram.dense((self.x * (w0**2 * inv_hb)[:, None]).T @ self.x),
             u1a=self.x.T @ (w0 * inv_hb * w0 * lrf),
             u1b=self.x.T @ (w0 * inv_hb * sinv),
             s_sum=float(np.sum(sl)),

@@ -327,7 +327,7 @@ class PenaltySparkKernel:
         )
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
-        bs = BlockStructure.from_groups(moment_groups) if moment_groups else None
+        bs = BlockStructure.from_groups(moment_groups)
         return cls(
             base_rdd, state_rdd, schema, df.sparkSession, k, sum_w0, n,
             has_ub, bounded, block_structure=bs,

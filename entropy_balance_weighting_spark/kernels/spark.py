@@ -226,12 +226,16 @@ def reduce_big(k: int, block_structure, n_parts: int) -> bool:
 
 
 def gram_from_sums(flat: np.ndarray, k: int, block_structure):
-    """Driver-side decode of a packed gram buffer: BlockGram or dense."""
-    if block_structure is not None:
-        from entropy_balance_weighting_spark.solvers.linalg import BlockGram
+    """Driver-side decode of a packed gram buffer: a BlockGram, one block
+    of size K when the pass accumulated a dense Gram."""
+    from entropy_balance_weighting_spark.solvers.linalg import (
+        BlockGram,
+        BlockStructure,
+    )
 
-        return BlockGram(structure=block_structure, flat=flat)
-    return flat.reshape(k, k)
+    if block_structure is None:
+        block_structure = BlockStructure.single(k)
+    return BlockGram(structure=block_structure, flat=flat)
 
 
 def blocks_tuple(block_structure):
@@ -599,9 +603,7 @@ class SparkKernel:
         base, schema = blob_plane.encode_base(df, k, ratio_guess)
         from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
-        bs = (
-            BlockStructure.from_groups(moment_groups) if moment_groups else None
-        )
+        bs = BlockStructure.from_groups(moment_groups)
         # the cold start wstar = q = q·exp(X·0) is analytic
         start = ("exp", np.zeros(k)) if ratio_guess is None else ("guess",)
         return cls(

@@ -50,16 +50,9 @@ import numpy as np
 
 from entropy_balance_weighting_spark.kernels.base import ftb_batch
 from entropy_balance_weighting_spark.results import EntropyBalanceResults
+from entropy_balance_weighting_spark.solvers import linalg
 
 logger = logging.getLogger("entropy_balance_weighting_spark")
-
-
-def _mu_update(products: np.ndarray) -> float:
-    """Mehrotra-flavored ζ/σ barrier rule (ref: ebw_routines.py:560-574)."""
-    mean = float(np.mean(products))
-    zeta = float(np.min(products)) / mean
-    sigma = 0.1 * min(0.05 * (1.0 - zeta) / zeta, 2.0) ** 3
-    return sigma * mean
 
 
 def entropy_balance_elastic(
@@ -136,12 +129,9 @@ def solve_elastic(
             # Barrier updates from THIS scan's post-commit state; the
             # μ_s-dependent reductions are re-derived EXACTLY (linear /
             # quadratic in μ_s — see EStats) at the new value.
-            mean_sl = st.sl_sum / st.sl_cnt
-            zeta = st.sl_min / mean_sl
-            sigma = 0.1 * min(0.05 * (1.0 - zeta) / zeta, 2.0) ** 3
-            new_mu_s = sigma * mean_sl
-            mu_u = _mu_update(u * lu)
-            mu_v = _mu_update(v * lv)
+            new_mu_s = linalg.barrier_mu(st.sl_sum / st.sl_cnt, st.sl_min)
+            mu_u = linalg.barrier_mu(float(np.mean(u * lu)), float(np.min(u * lu)))
+            mu_v = linalg.barrier_mu(float(np.mean(v * lv)), float(np.min(v * lv)))
             rhs_leg = st.rhs_leg + (mu_s - new_mu_s) * st.rhs_mu_leg
             cs_sq = (
                 st.sl_sq
@@ -226,13 +216,8 @@ def solve_elastic(
         # Condensed K×K Schur system (L5) with adaptive Tikhonov (L3) and
         # ×10 escalation on failure (L2; ref: 448-455,497-506).  On the
         # block-diagonal large-K path both lhs assembly and the solve stay
-        # per-block — nothing K²-sized on the driver either.
-        from entropy_balance_weighting_spark.solvers.linalg import (
-            BlockGram,
-            solve_regularized,
-        )
-
-        delta = max(1e-8, 1e-5 * opt_viol**0.55)
+        # per-block — nothing K²-sized on the driver either.  The solve is
+        # looked up on the module at call time, so a patched one is seen.
         rhs = (
             ce
             + (v / lv) * (cvv + clv / v)
@@ -240,20 +225,9 @@ def solve_elastic(
             - rhs_leg
         )
         try:
-            if isinstance(st.gram, BlockGram):
-                lhs = st.gram.with_added_diag(u / lu + v / lv)
-                dlam = -solve_regularized(lhs, rhs, delta)
-            else:
-                lhs = st.gram + np.diag(u / lu + v / lv)
-                eye = np.eye(k)
-                while True:
-                    try:
-                        dlam = -np.linalg.solve(lhs + delta * eye, rhs)
-                        break
-                    except np.linalg.LinAlgError:
-                        delta *= 10.0
-                        if delta > 1e12:
-                            raise
+            lhs = st.gram.with_added_diag(u / lu + v / lv)
+            delta = linalg.tikhonov_penalty(opt_viol)
+            dlam = -linalg.solve_regularized(lhs, rhs, delta)
         except np.linalg.LinAlgError:
             error_message = "Singular Schur system"
             break

@@ -1,13 +1,21 @@
-"""Driver-local K×K linear algebra (SURVEY §2.10 L1-L3) and the
-block-diagonal large-K path.
+"""Driver-local K×K linear algebra (SURVEY §2.10 L1-L3) over one Gram type.
 
-scipy/PARDISO are not assumed in this environment; ``numpy.linalg`` handles
-K up to a few thousand densely.  Beyond that, the reference's "hundreds of
-thousands of constraints" regime (ref: README.md:8) is reached through
-STRUCTURE, not a bigger factorization: group-specific moments never
-co-occur in a row, so the Gram matrix is block-diagonal by construction
-(SURVEY §7.2) — Σ k_b² storage instead of K², and B independent small
-solves instead of one K×K solve.
+Every Gram a kernel returns is a :class:`BlockGram`: a block-diagonal
+matrix stored as flat per-block tiles.  A dense K×K Gram is the one-block
+case.  scipy/PARDISO are not assumed in this environment; ``numpy.linalg``
+handles a block of up to a few thousand moments.  Beyond that, the
+reference's "hundreds of thousands of constraints" regime (ref:
+README.md:8) is reached through STRUCTURE, not a bigger factorization:
+group-specific moments never co-occur in a row, so the Gram matrix is
+block-diagonal by construction (SURVEY §7.2) — Σ k_b² storage instead of
+K², and B independent small solves instead of one K×K solve.
+
+Blocks are numbered by descending size, so the blocks of one size k are
+contiguous in the flat buffer and each size class is a ``(B_k, k, k)``
+view of it.  Every operation is one batched NumPy call chain per size
+class.  ``np.matmul`` and ``np.linalg`` run the same BLAS/LAPACK call per
+block as a per-block loop would, so each block's result is bit-identical
+to solving that block alone.
 """
 
 from __future__ import annotations
@@ -16,6 +24,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+_MAX_ESCALATIONS = 30  # ×10 Tikhonov escalations before a block is unsolvable
+
 
 @dataclass
 class BlockStructure:
@@ -23,40 +33,64 @@ class BlockStructure:
 
     Built from the data layer's ``moment_groups`` metadata (every moment
     carries its group label; moments of different groups never share a
-    row).  Valid ONLY when every moment is grouped — one global moment
-    (e.g. an intercept) couples all blocks and forces the dense path.
+    row), or as the single block of a dense Gram.  Block ids run by
+    descending size, then label.
     """
 
     block_of: np.ndarray  # (K,) block id per moment
     members: list[np.ndarray]  # moment ids per block (id-ordered)
     local: np.ndarray  # (K,) index of each moment within its block
-    sizes: np.ndarray  # (B,) block sizes
+    sizes: np.ndarray  # (B,) block sizes, non-increasing
     flat_offsets: np.ndarray  # (B,) offsets into the flat Σk_b² buffer
     total_flat: int  # Σ k_b²
+    # per block size k: (k, (B_k, k) member ids, flat offset of the class)
+    classes: list[tuple[int, np.ndarray, int]]
 
     @classmethod
-    def from_groups(cls, moment_groups: list[str]) -> "BlockStructure | None":
-        """None when the partition does not yield >1 all-grouped blocks."""
+    def from_groups(cls, moment_groups: list[str] | None) -> "BlockStructure | None":
+        """None unless every moment is grouped into >1 blocks: one global
+        moment (e.g. an intercept) couples all blocks into one dense one."""
         if not moment_groups or any(g == "" for g in moment_groups):
             return None
-        labels = sorted(set(moment_groups))
+        labels, lab = np.unique(np.asarray(moment_groups), return_inverse=True)
         if len(labels) < 2:
             return None
-        lab_id = {g: i for i, g in enumerate(labels)}
-        block_of = np.array([lab_id[g] for g in moment_groups], dtype=np.int64)
-        members = [np.where(block_of == b)[0] for b in range(len(labels))]
-        local = np.empty(len(moment_groups), dtype=np.int64)
-        for mem in members:
-            local[mem] = np.arange(len(mem))
-        sizes = np.array([len(m) for m in members], dtype=np.int64)
-        flat_offsets = np.concatenate([[0], np.cumsum(sizes**2)[:-1]])
+        # one stable sort: by block size (descending), then label; moment
+        # ids stay ascending within a block
+        order = np.lexsort((lab, -np.bincount(lab)[lab]))
+        first = np.flatnonzero(np.diff(lab[order], prepend=-1))
+        return cls._from_order(order, np.diff(first, append=len(order)))
+
+    @classmethod
+    def single(cls, k: int) -> "BlockStructure":
+        """One block holding all K moments: the dense Gram."""
+        return cls._from_order(np.arange(k), np.array([k]))
+
+    @classmethod
+    def _from_order(cls, order: np.ndarray, sizes: np.ndarray) -> "BlockStructure":
+        """``order``: moment ids grouped by block, blocks by descending size."""
+        k = len(order)
+        starts = np.cumsum(sizes) - sizes
+        block_of = np.empty(k, dtype=np.int64)
+        block_of[order] = np.repeat(np.arange(len(sizes)), sizes)
+        local = np.empty(k, dtype=np.int64)
+        local[order] = np.arange(k) - np.repeat(starts, sizes)
+        sq = sizes**2
+        flat_offsets = np.cumsum(sq) - sq
+        classes = []
+        for b0 in np.flatnonzero(np.diff(sizes, prepend=0)):  # first of a size
+            s = int(sizes[b0])
+            nb = int(np.count_nonzero(sizes == s))
+            ids = order[starts[b0] : starts[b0] + nb * s].reshape(nb, s)
+            classes.append((s, ids, int(flat_offsets[b0])))
         return cls(
             block_of=block_of,
-            members=members,
+            members=np.split(order, starts[1:]),
             local=local,
             sizes=sizes,
             flat_offsets=flat_offsets,
-            total_flat=int(np.sum(sizes**2)),
+            total_flat=int(np.sum(sq)),
+            classes=classes,
         )
 
 
@@ -65,39 +99,43 @@ class BlockGram:
     """Block-diagonal Gram: the flat per-block buffer + its structure.
 
     Carries the driver-side K×K algebra the solvers need (matvec, diagonal
-    shifts, and the two solve shapes) so no solver ever materializes the
-    dense K×K when the problem is block-structured."""
+    shifts, and the two solve shapes), batched per size class, so no
+    solver ever materializes the dense K×K of a block-structured problem."""
 
     structure: BlockStructure
     flat: np.ndarray  # (Σ k_b²,)
 
-    def block(self, b: int) -> np.ndarray:
-        s = int(self.structure.sizes[b])
-        o = int(self.structure.flat_offsets[b])
-        return self.flat[o : o + s * s].reshape(s, s)
+    @classmethod
+    def dense(cls, g: np.ndarray) -> "BlockGram":
+        """A dense K×K Gram as the one-block case."""
+        return cls(structure=BlockStructure.single(len(g)), flat=g.reshape(-1))
+
+    def tiles(self):
+        """Per size class k: (k, (B_k, k) member ids, (B_k, k, k) tile view)."""
+        for k, ids, off in self.structure.classes:
+            yield k, ids, self.flat[off : off + ids.size * k].reshape(-1, k, k)
 
     def matvec(self, v: np.ndarray) -> np.ndarray:
         out = np.empty_like(v)
-        for b, mem in enumerate(self.structure.members):
-            out[mem] = self.block(b) @ v[mem]
+        for _, ids, t in self.tiles():
+            out[ids] = (t @ v[ids][..., None])[..., 0]
         return out
 
     def with_added_diag(self, d: np.ndarray) -> "BlockGram":
         """G + Diag(d) — block-diagonal plus diagonal stays block-diagonal."""
         out = BlockGram(structure=self.structure, flat=self.flat.copy())
-        for b, mem in enumerate(self.structure.members):
-            blk = out.block(b)
-            blk[np.diag_indices_from(blk)] += d[mem]
+        for k, ids, t in out.tiles():
+            diag = np.arange(k)
+            t[:, diag, diag] += d[ids]
         return out
 
     def solve_i_plus_g_diag(self, p: np.ndarray, rhs: np.ndarray) -> np.ndarray:
         """Solve (I + G·Diag(p)) x = rhs block-wise (the penalty Woodbury
         inner system — not symmetric, plain LU per block)."""
         out = np.empty_like(rhs)
-        for b, mem in enumerate(self.structure.members):
-            sz = len(mem)
-            a = np.eye(sz) + self.block(b) * p[mem][None, :]
-            out[mem] = np.linalg.solve(a, rhs[mem])
+        for k, ids, t in self.tiles():
+            a = np.eye(k) + t * p[ids][:, None, :]
+            out[ids] = np.linalg.solve(a, rhs[ids][..., None])[..., 0]
         return out
 
 
@@ -110,77 +148,66 @@ def tikhonov_penalty(residual_norm: float) -> float:
     return max(1e-8, float(1e-5 * residual_norm**0.55))
 
 
-def solve_regularized(
-    lhs: np.ndarray,
-    rhs: np.ndarray,
-    penalty: float,
-    *,
-    max_escalations: int = 30,
-    relative: bool = True,
-) -> np.ndarray:
-    """Solve (lhs + δI)x = rhs, escalating δ ×10 on numerical failure.
+def barrier_mu(mean: float, minimum: float) -> float:
+    """Mehrotra-flavored ζ/σ barrier update from the mean and minimum of
+    the complementarity products s·λ (ref: ebw_routines.py:560-574,
+    ebw_penalty.py:319-323)."""
+    zeta = minimum / mean
+    sigma = 0.1 * min(0.05 * (1.0 - zeta) / zeta, 2.0) ** 3
+    return sigma * mean
+
+
+def _gated_solve(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """x = a⁻¹b per block of the stack ``a``, with NaN rows for the blocks
+    that fail the Cholesky gate or the solve.  A batched ``np.linalg`` call
+    raises if any block fails, so a failing stack is bisected until the
+    failing blocks stand alone."""
+    try:
+        np.linalg.cholesky(a)  # positive-definiteness gate
+        return np.linalg.solve(a, b[..., None])[..., 0]
+    except np.linalg.LinAlgError:
+        if len(a) == 1:
+            return np.full_like(b, np.nan)
+        h = len(a) // 2
+        return np.concatenate([_gated_solve(a[:h], b[:h]), _gated_solve(a[h:], b[h:])])
+
+
+def solve_regularized(lhs: BlockGram, rhs: np.ndarray, penalty: float) -> np.ndarray:
+    """Solve (lhs + δ_b I)x = rhs block by block, escalating a block's δ_b
+    ×10 on numerical failure of that block only.
 
     Same retry semantics as the reference's dense path (ref:
     ebw_routines.py:247-257): require positive-definiteness (Cholesky
     check, the numpy analogue of ``assume_a='pos'``), escalate the
     Tikhonov term until the system factorizes and yields finite values.
 
-    Documented deviation: with ``relative=True`` (default) the Tikhonov
-    term is scaled by the mean Gram diagonal, making the damping
-    SCALE-INVARIANT.  The reference's absolute δ silently over-damps
-    problems whose Gram entries are far below 1 (e.g. thousands of group
-    blocks over small-magnitude columns: entries ~1e-6 vs δ ~1e-4 turn
-    quadratic Newton into a slow linear crawl).  On unit-scale problems —
-    the reference's own regime — the behavior is essentially identical,
-    and the collinearity defense is preserved exactly (a rank-deficient
-    Gram still receives a strictly positive relative shift).
+    Documented deviation: the Tikhonov term is scaled by each block's mean
+    Gram diagonal, making the damping SCALE-INVARIANT.  The reference's
+    absolute δ silently over-damps problems whose Gram entries are far
+    below 1 (e.g. thousands of group blocks over small-magnitude columns:
+    entries ~1e-6 vs δ ~1e-4 turn quadratic Newton into a slow linear
+    crawl), and heterogeneous block magnitudes each get damping of their
+    own size.  On unit-scale problems — the reference's own regime — the
+    behavior is essentially identical, and the collinearity defense is
+    preserved exactly (a rank-deficient Gram still receives a strictly
+    positive relative shift).
     """
-    if isinstance(lhs, BlockGram):
-        return solve_regularized_blocks(
-            lhs, rhs, penalty, max_escalations=max_escalations, relative=relative
-        )
-    k = lhs.shape[0]
-    eye = np.eye(k)
-    if relative:
-        scale = float(np.trace(lhs)) / max(k, 1)
-        if scale > 0 and np.isfinite(scale):
-            penalty = penalty * scale
-    for _ in range(max_escalations):
-        a = lhs + penalty * eye
-        try:
-            np.linalg.cholesky(a)  # positive-definiteness gate
-            x = np.linalg.solve(a, rhs)
-            if np.all(np.isfinite(x)):
-                return x
-        except np.linalg.LinAlgError:
-            pass
-        penalty *= 10.0
-    raise np.linalg.LinAlgError("K×K system unsolvable after escalating regularization")
-
-
-def solve_regularized_blocks(
-    gram: BlockGram,
-    rhs: np.ndarray,
-    penalty: float,
-    *,
-    max_escalations: int = 30,
-    relative: bool = True,
-) -> np.ndarray:
-    """Block-diagonal solve: B independent regularized solves, each k_b×k_b.
-
-    Exactly equivalent to the dense solve when the off-block entries are
-    structurally zero (group moments, SURVEY A10/§7.2) — parity-tested —
-    but costs Σ k_b³ instead of K³ and never materializes K².  The
-    relative Tikhonov scaling applies PER BLOCK, so heterogeneous block
-    magnitudes each get appropriately-sized damping."""
-    st = gram.structure
     out = np.empty_like(rhs)
-    for b, mem in enumerate(st.members):
-        out[mem] = solve_regularized(
-            gram.block(b),
-            rhs[mem],
-            penalty,
-            max_escalations=max_escalations,
-            relative=relative,
-        )
+    for k, ids, t in lhs.tiles():
+        scale = np.trace(t, axis1=1, axis2=2) / k
+        pen = np.where((scale > 0) & np.isfinite(scale), penalty * scale, penalty)
+        todo = np.arange(len(ids))
+        for _ in range(_MAX_ESCALATIONS):
+            a = t[todo] + pen[todo, None, None] * np.eye(k)
+            x = _gated_solve(a, rhs[ids[todo]])
+            ok = np.all(np.isfinite(x), axis=1)
+            out[ids[todo[ok]]] = x[ok]
+            todo = todo[~ok]
+            if not todo.size:
+                break
+            pen[todo] *= 10.0
+        else:
+            raise np.linalg.LinAlgError(
+                "K×K system unsolvable after escalating regularization"
+            )
     return out

@@ -30,25 +30,14 @@ import math
 import numpy as np
 
 from entropy_balance_weighting_spark.results import EntropyBalanceResults
+from entropy_balance_weighting_spark.solvers.linalg import barrier_mu
 
 logger = logging.getLogger("entropy_balance_weighting_spark")
 
 
-def _gmatvec(g, v: np.ndarray) -> np.ndarray:
-    """G·v for dense ndarray or block-diagonal BlockGram."""
-    from entropy_balance_weighting_spark.solvers.linalg import BlockGram
-
-    return g.matvec(v) if isinstance(g, BlockGram) else g @ v
-
-
 def _solve_i_plus_gp(g, p: np.ndarray, rhs: np.ndarray) -> np.ndarray:
-    """Solve (I + G·Diag(p)) x = rhs — the Woodbury inner system; block-wise
-    on the large-K path (never materializes K²)."""
-    from entropy_balance_weighting_spark.solvers.linalg import BlockGram
-
-    if isinstance(g, BlockGram):
-        return g.solve_i_plus_g_diag(p, rhs)
-    return np.linalg.solve(np.eye(len(rhs)) + g * p[None, :], rhs)
+    """Solve (I + G·Diag(p)) x = rhs — the Woodbury inner system."""
+    return g.solve_i_plus_g_diag(p, rhs)
 
 
 def check_penalty_parameter(k: int, penalty_parameter) -> np.ndarray:
@@ -107,7 +96,7 @@ def solve_penalty(
         st = kernel.penalty_stats()
         ce = st.g1 - b
         c = p * ce
-        cd_sq = st.s_ll + 2.0 * float(c @ st.h) + float(c @ _gmatvec(g2, c))
+        cd_sq = st.s_ll + 2.0 * float(c @ st.h) + float(c @ g2.matvec(c))
         cd_norm = math.sqrt(max(cd_sq, 0.0))
         logger.info(
             "penalty iter=%d f=%.6e |Ce|=%.3e |Cd|=%.3e",
@@ -120,9 +109,8 @@ def solve_penalty(
             logger.info("NaN in penalty criterion — failing")
             break
 
-        # Woodbury: t2 = (I + V invA U)^{-1} V invA x, all driver-side —
-        # block-wise on the large-K path
-        t1 = -(st.g2v + _gmatvec(st.gram, c))
+        # Woodbury: t2 = (I + V invA U)^{-1} V invA x, all driver-side
+        t1 = -(st.g2v + st.gram.matvec(c))
         t2 = _solve_i_plus_gp(st.gram, p, t1)
         z = c + p * t2
         step_sq, step_nan = kernel.penalty_commit(z)
@@ -168,7 +156,7 @@ def solve_penalty_bounded(
         st = kernel.pb_stats()
         ce = st.g1 - b
         c = p * ce
-        cd_sq = st.sd0_sq + 2.0 * float(c @ st.hd) + float(c @ _gmatvec(g2, c))
+        cd_sq = st.sd0_sq + 2.0 * float(c @ st.hd) + float(c @ g2.matvec(c))
         cd_norm = math.sqrt(max(cd_sq, 0.0))
         cs_sq = st.s_sq - 2.0 * mu * st.s_sum + st.s_cnt * mu * mu
         cs_norm = math.sqrt(max(cs_sq, 0.0))
@@ -188,13 +176,10 @@ def solve_penalty_bounded(
         # Barrier update when the perturbed KKT error is already ≤ μ
         # (Mehrotra-flavored ζ/σ rule, ref: ebw_penalty.py:319-323)
         if max(cd_norm, cs_norm) <= mu:
-            mean_sl = st.s_sum / st.s_cnt
-            zeta = st.s_min / mean_sl
-            sigma = 0.1 * min(0.05 * (1.0 - zeta) / zeta, 2.0) ** 3
-            mu = sigma * mean_sl
+            mu = barrier_mu(st.s_sum / st.s_cnt, st.s_min)
 
         u1 = st.u1a - mu * st.u1b
-        t1 = -(u1 + _gmatvec(st.gb, c))
+        t1 = -(u1 + st.gb.matvec(c))
         t2 = _solve_i_plus_gp(st.gb, p, t1)
         z = c + p * t2
 

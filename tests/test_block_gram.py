@@ -1,6 +1,7 @@
 """Block-diagonal Gram path tests (SURVEY §7.2 large-K; VERDICT r1 #7):
 group-specific moments must solve without K²-sized allocations, and the
-block solve must agree exactly with the dense solve at small K."""
+batched block algebra must agree bit for bit with solving each block
+alone (a dense Gram being the one-block case)."""
 
 from __future__ import annotations
 
@@ -30,28 +31,110 @@ def test_block_structure_from_groups():
     assert BlockStructure.from_groups(["grp=A", "grp=A"]) is None
 
 
-def test_block_solve_matches_dense_solve():
-    rng = np.random.default_rng(2)
-    groups = ["grp=A"] * 3 + ["grp=B"] * 4 + ["grp=C"] * 2
-    bs = BlockStructure.from_groups(groups)
-    k = len(groups)
-    dense = np.zeros((k, k))
+def _reference_solve(blk, rhs, penalty):
+    """One block's gated, escalating solve, written out per block: the
+    batched solve must reproduce it bit for bit.  Returns (x, number of
+    ×10 escalations taken)."""
+    k = len(blk)
+    scale = np.trace(blk) / k
+    if scale > 0 and np.isfinite(scale):
+        penalty = penalty * scale
+    for escalations in range(30):
+        a = blk + penalty * np.eye(k)
+        try:
+            np.linalg.cholesky(a)
+            x = np.linalg.solve(a, rhs)
+            if np.all(np.isfinite(x)):
+                return x, escalations
+        except np.linalg.LinAlgError:
+            pass
+        penalty *= 10.0
+    raise np.linalg.LinAlgError("unsolvable")
+
+
+def _mixed_gram(rng, sizes):
+    """A BlockGram over interleaved groups of the given sizes, with random
+    SPD tiles; returns (gram, tiles indexed by block id)."""
+    groups = [f"grp={b}" for b, s in enumerate(sizes) for _ in range(s)]
+    bs = BlockStructure.from_groups(list(rng.permutation(groups)))
     flat = np.zeros(bs.total_flat)
-    for b, mem in enumerate(bs.members):
-        sz = len(mem)
-        a = rng.uniform(size=(sz, sz))
-        blockmat = a @ a.T + sz * np.eye(sz)
-        dense[np.ix_(mem, mem)] = blockmat
-        o = int(bs.flat_offsets[b])
-        flat[o : o + sz * sz] = blockmat.ravel()
-    rhs = rng.uniform(size=k)
-    # relative=False: exact machinery equivalence (the relative Tikhonov
-    # scaling intentionally differs per block vs globally)
-    x_dense = solve_regularized(dense, rhs, 1e-8, relative=False)
-    x_block = solve_regularized(
-        BlockGram(structure=bs, flat=flat), rhs, 1e-8, relative=False
+    tiles = []
+    for mem, off in zip(bs.members, bs.flat_offsets):
+        a = rng.uniform(size=(len(mem), len(mem)))
+        tile = a @ a.T + len(mem) * np.eye(len(mem))
+        flat[off : off + tile.size] = tile.ravel()
+        tiles.append(tile)
+    return BlockGram(structure=bs, flat=flat), tiles
+
+
+def _set_tile(gram, b, tile):
+    off = int(gram.structure.flat_offsets[b])
+    gram.flat[off : off + tile.size] = tile.ravel()
+
+
+def test_block_solve_matches_dense_solve():
+    """Every batched op over mixed block sizes equals the same op on each
+    block alone, bit for bit, and agrees with the assembled dense K×K
+    matrix; a dense Gram solves as one block."""
+    rng = np.random.default_rng(2)
+    gram, tiles = _mixed_gram(rng, [3, 1, 4, 2, 3, 1, 4, 2, 2, 5])
+    bs = gram.structure
+    k = len(bs.block_of)
+    assert list(bs.sizes) == sorted(bs.sizes, reverse=True)
+    for i in range(k):
+        assert bs.members[bs.block_of[i]][bs.local[i]] == i
+    dense = np.zeros((k, k))
+    for mem, tile in zip(bs.members, tiles):
+        assert np.all(np.diff(mem) > 0)  # id-ordered within a block
+        dense[np.ix_(mem, mem)] = tile
+    v, d, p = rng.uniform(size=(3, k))
+    shifted = gram.with_added_diag(d)
+    mv = gram.matvec(v)
+    ip = gram.solve_i_plus_g_diag(p, v)
+    reg = solve_regularized(shifted, v, 1e-8)
+    for mem, tile in zip(bs.members, tiles):
+        np.testing.assert_array_equal(mv[mem], tile @ v[mem])
+        eye = np.eye(len(mem))
+        np.testing.assert_array_equal(
+            ip[mem], np.linalg.solve(eye + tile * p[mem][None, :], v[mem])
+        )
+        np.testing.assert_array_equal(
+            reg[mem], _reference_solve(tile + np.diag(d[mem]), v[mem], 1e-8)[0]
+        )
+    np.testing.assert_allclose(mv, dense @ v, rtol=1e-12)
+    np.testing.assert_allclose(
+        shifted.matvec(v), (dense + np.diag(d)) @ v, rtol=1e-12
     )
-    np.testing.assert_allclose(x_block, x_dense, rtol=1e-10)
+    np.testing.assert_allclose(
+        ip, np.linalg.solve(np.eye(k) + dense * p[None, :], v), rtol=1e-10
+    )
+    one = BlockGram.dense(dense)
+    assert len(one.structure.members) == 1
+    np.testing.assert_array_equal(
+        solve_regularized(one, v, 1e-8), _reference_solve(dense, v, 1e-8)[0]
+    )
+
+
+def test_escalation_is_per_block():
+    """One indefinite block among many: only its δ grows, every other
+    block's solution is bit-identical to solving it alone, and a block no
+    escalation can fix raises LinAlgError."""
+    rng = np.random.default_rng(7)
+    gram, tiles = _mixed_gram(rng, [2] * 40 + [3] * 20 + [1] * 10)
+    bs = gram.structure
+    bad = int(np.flatnonzero(bs.sizes == 2)[5])
+    tiles[bad] = np.array([[1.0, 0.0], [0.0, -1.0]])  # trace 0, indefinite
+    _set_tile(gram, bad, tiles[bad])
+    rhs = rng.uniform(size=len(bs.block_of))
+    x = solve_regularized(gram, rhs, 1e-8)
+    for b, (mem, tile) in enumerate(zip(bs.members, tiles)):
+        x_ref, escalations = _reference_solve(tile, rhs[mem], 1e-8)
+        np.testing.assert_array_equal(x[mem], x_ref)
+        assert (escalations > 0) == (b == bad), b
+    for unsolvable in (np.diag([-1e300, 1.0]), np.full((2, 2), np.nan)):
+        _set_tile(gram, bad, unsolvable)
+        with pytest.raises(np.linalg.LinAlgError):
+            solve_regularized(gram, rhs, 1e-8)
 
 
 def test_group_problem_solves_distributed_via_block_path(spark):

@@ -49,7 +49,7 @@ def test_condensed_step_satisfies_full_kkt_newton_system():
     cvv = 1.0 + lam - lv
     clu = u * lu - mu_u
     clv = v * lv - mu_v
-    lhs = st.gram + np.diag(u / lu + v / lv)
+    lhs = st.gram.flat.reshape(k, k) + np.diag(u / lu + v / lv)  # one tile
     rhs = ce + (v / lv) * (cvv + clv / v) - (u / lu) * (cu + clu / u) - st.rhs_leg
     dlam = -np.linalg.solve(lhs, rhs)  # δ=0: test the exact condensation
 
@@ -142,9 +142,10 @@ def test_elastic_infeasible_converges_with_certificate():
 
 def test_elastic_violation_decreases_with_eta():
     """Higher η (L¹ price) ⇒ weakly smaller violation on an infeasible
-    problem (ref: test_elastic.py eta monotonicity)."""
+    problem (ref: test_elastic.py eta monotonicity).  Targets at 1.8× the
+    start moments are out of reach of ratios ≤ 1.6 on nonnegative columns."""
     x, w0, m = _problem(seed=29)
-    m_bad = m * 1.5
+    m_bad = m * 1.8
     viols = []
     for eta in (10.0, 1000.0):
         res = entropy_balance(
@@ -294,7 +295,7 @@ def test_estats_mu_decomposition_identities(bounds):
     )
     # μ-free pieces must agree between the two scans
     assert np.isclose(st1.cd_sq, st2.cd_sq)
-    np.testing.assert_allclose(st1.gram, st2.gram)
+    np.testing.assert_allclose(st1.gram.flat, st2.gram.flat)
 
 
 def test_elastic_distributed_two_jobs_per_iteration(spark):

@@ -87,8 +87,9 @@ def test_penalty_newton_step_matches_explicit_solve():
     kern = PenaltyLocalKernel(x, w0)
     st = kern.penalty_stats()
     c = pen * (st.g1 - b)
-    t1 = -(st.g2v + st.gram @ c)
-    t2 = np.linalg.solve(np.eye(k) + st.gram * pen[None, :], t1)
+    gram = st.gram.flat.reshape(k, k)  # a dense Gram is one K×K tile
+    t1 = -(st.g2v + gram @ c)
+    t2 = np.linalg.solve(np.eye(k) + gram * pen[None, :], t1)
     z = c + pen * t2
     step = -r * (np.log(r) + x @ z)
     np.testing.assert_allclose(step, expected, rtol=1e-9, atol=1e-12)

@@ -187,8 +187,9 @@ def test_compaction_keeps_speculation_live(spark, problem, monkeypatch):
         assert [op[0] for op in kern._wprog] == ["state", "lin"]
         real = kern.stats(lam)
         assert kern.spec_hits == 4
-        for f in ("f_val", "xt_w", "cd_sq", "xt_wcd", "gram", "min_w"):
+        for f in ("f_val", "xt_w", "cd_sq", "xt_wcd", "min_w"):
             assert np.array_equal(getattr(hit, f), getattr(real, f)), f
+        assert np.array_equal(hit.gram.flat, real.gram.flat)
     finally:
         kern.cleanup()
 

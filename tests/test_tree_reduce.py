@@ -103,7 +103,7 @@ def test_dense_collinear_solve_small(spark):
         )
         assert np.allclose(final.xt_w, m, rtol=1e-6, atol=1e-8)
         # the duplicated columns really are duplicated (singular Gram)
-        g = stats0.gram
+        g = stats0.gram.flat.reshape(k, k)  # a dense Gram is one K×K tile
         for d in range(n_dup):
             assert np.allclose(g[:, k - n_dup + d], g[:, 1 + d])
     finally:
