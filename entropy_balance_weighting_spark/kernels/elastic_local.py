@@ -17,7 +17,7 @@ from entropy_balance_weighting_spark.kernels.base import (
     EStepStats,
     ftb_batch,
 )
-from entropy_balance_weighting_spark.solvers.linalg import BlockGram
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
 
 class ElasticLocalKernel:
@@ -32,6 +32,7 @@ class ElasticLocalKernel:
         self.x = np.asarray(x, dtype=np.float64)
         self.w0 = np.asarray(w0, dtype=np.float64)
         self.n, self.k = self.x.shape
+        self.block_structure = BlockStructure.single(self.k)  # dense Gram
         self.sum_w0 = float(np.sum(self.w0))
         self.lb = max(float(bounds[0]), 0.0)  # ref clamps lb≥0 (ebw_routines.py:362)
         ub = bounds[1]
@@ -125,7 +126,10 @@ class ElasticLocalKernel:
             g1=self.x.T @ (w0 * r),
             rhs_leg=self.x.T @ (w0 * inv_ht * (cdf + zterm)),
             rhs_mu_leg=self.x.T @ (w0 * inv_ht * z1),
-            gram=BlockGram.dense((self.x * (w0**2 * inv_ht)[:, None]).T @ self.x),
+            gram=BlockGram(
+                self.block_structure,
+                ((self.x * (w0**2 * inv_ht)[:, None]).T @ self.x).ravel(),
+            ),
             sl_sum=float(np.sum(sl)),
             sl_sq=float(sl @ sl),
             sl_min=float(np.min(sl)),

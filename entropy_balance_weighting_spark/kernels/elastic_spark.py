@@ -66,11 +66,11 @@ from entropy_balance_weighting_spark.kernels.spark import (
     _x_dot,
     _xt_v,
     blocks_tuple,
-    gram_from_sums,
     make_gram_accum,
     pack_rows,
     reduce_big,
 )
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
 # r9 narrow state: the bound slacks are NOT stored — the IP's own step
 # algebra maintains s_lo ≡ r − lb and s_hi ≡ ub − r exactly (ss_lo =
@@ -362,7 +362,8 @@ def _g1_pass(k) -> Callable:
 class ElasticSparkKernel:
     def __init__(
         self, base_rdd, state_rdd, schema, spark, k: int, sum_w0: float,
-        n: int, lb: float, ub: float, has_ub: bool, block_structure=None,
+        n: int, lb: float, ub: float, has_ub: bool,
+        block_structure: BlockStructure,
     ) -> None:
         self._base = base_rdd
         self._state = state_rdd
@@ -423,9 +424,7 @@ class ElasticSparkKernel:
             bounds=(lb, ub if has_ub else None),
             ratio_guess=ratio_guess,
         )
-        from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
-
-        bs = BlockStructure.from_groups(moment_groups)
+        bs = BlockStructure.from_groups(moment_groups) or BlockStructure.single(k)
         return cls(
             base_rdd, state_rdd, schema, df.sparkSession, k, sum_w0, n, lb,
             ub, has_ub, block_structure=bs,
@@ -488,7 +487,7 @@ class ElasticSparkKernel:
         g1 = sums[9 : 9 + k]
         rhs_leg = sums[9 + k : 9 + 2 * k]
         rhs_mu_leg = sums[9 + 2 * k : 9 + 3 * k]
-        gram = gram_from_sums(sums[9 + 3 * k :], k, self.block_structure)
+        gram = BlockGram(self.block_structure, sums[9 + 3 * k :])
         return EStats(
             f_val=float(f_val),
             cd_sq=float(cd_sq),

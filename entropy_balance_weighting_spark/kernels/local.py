@@ -9,7 +9,7 @@ from __future__ import annotations
 import numpy as np
 
 from entropy_balance_weighting_spark.kernels.base import IterStats, StepStats
-from entropy_balance_weighting_spark.solvers.linalg import BlockGram
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
 
 class LocalKernel:
@@ -23,6 +23,7 @@ class LocalKernel:
         self.x = np.asarray(x, dtype=np.float64)
         self.w0 = np.asarray(w0, dtype=np.float64)
         self.n, self.k = self.x.shape
+        self.block_structure = BlockStructure.single(self.k)  # dense Gram
         self.sum_w0 = float(np.sum(self.w0))
         self.q = self.w0 / self.sum_w0
         self.init_state(ratio_guess)
@@ -51,7 +52,7 @@ class LocalKernel:
             xt_w=self.x.T @ w,
             cd_sq=float(cd @ cd) if np.all(np.isfinite(cd)) else float("nan"),
             xt_wcd=self.x.T @ (w * cd),
-            gram=BlockGram.dense(xw.T @ self.x),
+            gram=BlockGram(self.block_structure, (xw.T @ self.x).ravel()),
             min_w=float(w.min()) if self.n else 0.0,
             has_nan=bool(np.any(~np.isfinite(cd)) or not np.isfinite(f_val)),
         )

@@ -17,7 +17,7 @@ from entropy_balance_weighting_spark.kernels.base import (
     PenaltyStats,
     ftb_batch,
 )
-from entropy_balance_weighting_spark.solvers.linalg import BlockGram
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
 
 class PenaltyLocalKernel:
@@ -34,6 +34,7 @@ class PenaltyLocalKernel:
         self.x = np.asarray(x, dtype=np.float64)
         self.w0 = np.asarray(w0, dtype=np.float64)
         self.n, self.k = self.x.shape
+        self.block_structure = BlockStructure.single(self.k)  # dense Gram
         self.sum_w0 = float(np.sum(self.w0))
         self.ratio = (
             np.ones(self.n)
@@ -64,7 +65,10 @@ class PenaltyLocalKernel:
     # -- shared ------------------------------------------------------------
     def penalty_init(self) -> BlockGram:
         """G2 = X^T Diag(w0²) X — constant across iterations (for ‖Cd‖²)."""
-        return BlockGram.dense((self.x * (self.w0**2)[:, None]).T @ self.x)
+        return BlockGram(
+            self.block_structure,
+            ((self.x * (self.w0**2)[:, None]).T @ self.x).ravel(),
+        )
 
     def moment_totals(self) -> np.ndarray:
         """X^T (w0∘r) = A^T r — the final constraint-gap reduce."""
@@ -90,7 +94,10 @@ class PenaltyLocalKernel:
             g2v=self.x.T @ (w0 * r * lrf),
             h=self.x.T @ (w0**2 * lrf),
             s_ll=float(np.sum(w0**2 * lrf**2)),
-            gram=BlockGram.dense((self.x * (w0 * r)[:, None]).T @ self.x),
+            gram=BlockGram(
+                self.block_structure,
+                ((self.x * (w0 * r)[:, None]).T @ self.x).ravel(),
+            ),
             has_nan=bool(bad.any()),
         )
 
@@ -132,7 +139,10 @@ class PenaltyLocalKernel:
             g1=self.x.T @ (w0 * r),
             sd0_sq=float(d0 @ d0),
             hd=self.x.T @ (w0 * d0),
-            gb=BlockGram.dense((self.x * (w0**2 * inv_hb)[:, None]).T @ self.x),
+            gb=BlockGram(
+                self.block_structure,
+                ((self.x * (w0**2 * inv_hb)[:, None]).T @ self.x).ravel(),
+            ),
             u1a=self.x.T @ (w0 * inv_hb * w0 * lrf),
             u1b=self.x.T @ (w0 * inv_hb * sinv),
             s_sum=float(np.sum(sl)),

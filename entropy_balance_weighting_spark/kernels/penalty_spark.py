@@ -38,11 +38,11 @@ from entropy_balance_weighting_spark.kernels.spark import (
     _x_dot,
     _xt_v,
     blocks_tuple,
-    gram_from_sums,
     make_gram_accum,
     pack_rows,
     reduce_big,
 )
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
 UNBOUNDED_STATE = ["ratio"]
 BOUNDED_STATE = ["ratio", "s_lo", "lm_lo", "s_hi", "lm_hi"]
@@ -261,7 +261,7 @@ class PenaltySparkKernel:
 
     def __init__(
         self, base_rdd, state_rdd, schema, spark, k: int, sum_w0: float,
-        n: int, has_ub: bool, bounded: bool, block_structure=None,
+        n: int, has_ub: bool, bounded: bool, block_structure: BlockStructure,
     ) -> None:
         self._base = base_rdd
         self._state = state_rdd
@@ -325,9 +325,7 @@ class PenaltySparkKernel:
             bounds=(lb, ub if has_ub else None) if bounded else None,
             ratio_guess=ratio_guess,
         )
-        from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
-
-        bs = BlockStructure.from_groups(moment_groups)
+        bs = BlockStructure.from_groups(moment_groups) or BlockStructure.single(k)
         return cls(
             base_rdd, state_rdd, schema, df.sparkSession, k, sum_w0, n,
             has_ub, bounded, block_structure=bs,
@@ -355,7 +353,7 @@ class PenaltySparkKernel:
             _gram_init_pass(self.k, blocks_tuple(self.block_structure)),
             big=self._gram_big,
         )
-        return gram_from_sums(sums, self.k, self.block_structure)
+        return BlockGram(self.block_structure, sums)
 
     def moment_totals(self) -> np.ndarray:
         sums, _ = self._reduce(_g1_pass(self.k))
@@ -382,7 +380,7 @@ class PenaltySparkKernel:
         g1 = sums[3 : 3 + k]
         g2v = sums[3 + k : 3 + 2 * k]
         h = sums[3 + 2 * k : 3 + 3 * k]
-        gram = gram_from_sums(sums[3 + 3 * k :], k, self.block_structure)
+        gram = BlockGram(self.block_structure, sums[3 + 3 * k :])
         return PenaltyStats(
             f_val=float(f_val),
             g1=g1,
@@ -411,7 +409,7 @@ class PenaltySparkKernel:
         hd = sums[off + k : off + 2 * k]
         u1a = sums[off + 2 * k : off + 3 * k]
         u1b = sums[off + 3 * k : off + 4 * k]
-        gb = gram_from_sums(sums[off + 4 * k :], k, self.block_structure)
+        gb = BlockGram(self.block_structure, sums[off + 4 * k :])
         return PBStats(
             f_val=float(f_val),
             g1=g1,

@@ -57,6 +57,7 @@ from entropy_balance_weighting_spark.kernels.blob_plane import (
     GUESS,
     pack_payload,
 )
+from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
 
 def _flatten_rb(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -225,22 +226,11 @@ def reduce_big(k: int, block_structure, n_parts: int) -> bool:
     )
 
 
-def gram_from_sums(flat: np.ndarray, k: int, block_structure):
-    """Driver-side decode of a packed gram buffer: a BlockGram, one block
-    of size K when the pass accumulated a dense Gram."""
-    from entropy_balance_weighting_spark.solvers.linalg import (
-        BlockGram,
-        BlockStructure,
-    )
-
-    if block_structure is None:
-        block_structure = BlockStructure.single(k)
-    return BlockGram(structure=block_structure, flat=flat)
-
-
-def blocks_tuple(block_structure):
-    """Closure-serializable view of a BlockStructure (or None)."""
-    if block_structure is None:
+def blocks_tuple(block_structure: BlockStructure):
+    """Closure-serializable view of a BlockStructure for the executor's
+    Gram accumulator: None for the one-block (dense) case, which
+    accumulates the K×K Gram with BLAS."""
+    if len(block_structure.sizes) == 1:
         return None
     return (
         block_structure.block_of,
@@ -542,7 +532,7 @@ class SparkKernel:
 
     def __init__(
         self, base_rdd, schema, spark, k: int, sum_w0: float, n: int, start,
-        block_structure=None,
+        block_structure: BlockStructure,
     ) -> None:
         self._base = base_rdd
         self._schema = schema  # decode schema of the JVM-encoded base
@@ -601,9 +591,7 @@ class SparkKernel:
         ``("guess",)``."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
         base, schema = blob_plane.encode_base(df, k, ratio_guess)
-        from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
-
-        bs = BlockStructure.from_groups(moment_groups)
+        bs = BlockStructure.from_groups(moment_groups) or BlockStructure.single(k)
         # the cold start wstar = q = q·exp(X·0) is analytic
         start = ("exp", np.zeros(k)) if ratio_guess is None else ("guess",)
         return cls(
@@ -666,7 +654,7 @@ class SparkKernel:
         f_val, cd_sq, nan_ct = sums[0], sums[1], sums[2]
         xt_w = sums[3 : 3 + k]
         xt_wcd = sums[3 + k : 3 + 2 * k]
-        gram = gram_from_sums(sums[3 + 2 * k :], k, self.block_structure)
+        gram = BlockGram(self.block_structure, sums[3 + 2 * k :])
         return IterStats(
             f_val=float(f_val),
             xt_w=xt_w,
@@ -709,8 +697,8 @@ class SparkKernel:
                     xt_w=sums[off + 3 : off + 3 + k],
                     cd_sq=float(sums[off + 1]),
                     xt_wcd=sums[off + 3 + k : off + 3 + 2 * k],
-                    gram=gram_from_sums(
-                        sums[off + 3 + 2 * k :], k, self.block_structure
+                    gram=BlockGram(
+                        self.block_structure, sums[off + 3 + 2 * k :]
                     ),
                     min_w=float(mins[2]),
                     has_nan=sums[off + 2] > 0,

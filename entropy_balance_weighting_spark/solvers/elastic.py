@@ -225,9 +225,10 @@ def solve_elastic(
             - rhs_leg
         )
         try:
-            lhs = st.gram.with_added_diag(u / lu + v / lv)
             delta = linalg.tikhonov_penalty(opt_viol)
-            dlam = -linalg.solve_regularized(lhs, rhs, delta)
+            dlam = -linalg.solve_regularized(
+                st.gram, rhs, delta, shift=u / lu + v / lv
+            )
         except np.linalg.LinAlgError:
             error_message = "Singular Schur system"
             break

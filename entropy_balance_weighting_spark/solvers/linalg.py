@@ -98,17 +98,12 @@ class BlockStructure:
 class BlockGram:
     """Block-diagonal Gram: the flat per-block buffer + its structure.
 
-    Carries the driver-side K×K algebra the solvers need (matvec, diagonal
-    shifts, and the two solve shapes), batched per size class, so no
-    solver ever materializes the dense K×K of a block-structured problem."""
+    Carries the driver-side K×K algebra the solvers need (matvec and the
+    two solve shapes), batched per size class, so no solver ever
+    materializes the dense K×K of a block-structured problem."""
 
     structure: BlockStructure
     flat: np.ndarray  # (Σ k_b²,)
-
-    @classmethod
-    def dense(cls, g: np.ndarray) -> "BlockGram":
-        """A dense K×K Gram as the one-block case."""
-        return cls(structure=BlockStructure.single(len(g)), flat=g.reshape(-1))
 
     def tiles(self):
         """Per size class k: (k, (B_k, k) member ids, (B_k, k, k) tile view)."""
@@ -119,14 +114,6 @@ class BlockGram:
         out = np.empty_like(v)
         for _, ids, t in self.tiles():
             out[ids] = (t @ v[ids][..., None])[..., 0]
-        return out
-
-    def with_added_diag(self, d: np.ndarray) -> "BlockGram":
-        """G + Diag(d) — block-diagonal plus diagonal stays block-diagonal."""
-        out = BlockGram(structure=self.structure, flat=self.flat.copy())
-        for k, ids, t in out.tiles():
-            diag = np.arange(k)
-            t[:, diag, diag] += d[ids]
         return out
 
     def solve_i_plus_g_diag(self, p: np.ndarray, rhs: np.ndarray) -> np.ndarray:
@@ -172,9 +159,14 @@ def _gated_solve(a: np.ndarray, b: np.ndarray) -> np.ndarray:
         return np.concatenate([_gated_solve(a[:h], b[:h]), _gated_solve(a[h:], b[h:])])
 
 
-def solve_regularized(lhs: BlockGram, rhs: np.ndarray, penalty: float) -> np.ndarray:
-    """Solve (lhs + δ_b I)x = rhs block by block, escalating a block's δ_b
-    ×10 on numerical failure of that block only.
+def solve_regularized(
+    gram: BlockGram,
+    rhs: np.ndarray,
+    penalty: float,
+    shift: np.ndarray | None = None,
+) -> np.ndarray:
+    """Solve (G + Diag(shift) + δ_b I)x = rhs block by block, escalating a
+    block's δ_b ×10 on numerical failure of that block only.
 
     Same retry semantics as the reference's dense path (ref:
     ebw_routines.py:247-257): require positive-definiteness (Cholesky
@@ -182,20 +174,27 @@ def solve_regularized(lhs: BlockGram, rhs: np.ndarray, penalty: float) -> np.nda
     Tikhonov term until the system factorizes and yields finite values.
 
     Documented deviation: the Tikhonov term is scaled by each block's mean
-    Gram diagonal, making the damping SCALE-INVARIANT.  The reference's
-    absolute δ silently over-damps problems whose Gram entries are far
-    below 1 (e.g. thousands of group blocks over small-magnitude columns:
-    entries ~1e-6 vs δ ~1e-4 turn quadratic Newton into a slow linear
-    crawl), and heterogeneous block magnitudes each get damping of their
-    own size.  On unit-scale problems — the reference's own regime — the
-    behavior is essentially identical, and the collinearity defense is
-    preserved exactly (a rank-deficient Gram still receives a strictly
-    positive relative shift).
+    Gram diagonal where that is below 1.  The reference's absolute δ
+    silently over-damps problems whose Gram entries are far below 1 (e.g.
+    thousands of group blocks over small-magnitude columns: entries ~1e-6
+    vs δ ~1e-4 turn quadratic Newton into a slow linear crawl); such a
+    block gets damping of its own size, and the collinearity defense is
+    preserved (a rank-deficient Gram still receives a strictly positive
+    relative shift).  A block at or above unit scale keeps the reference's
+    absolute δ: the elastic Schur system carries moment totals (its Gram
+    grows with N), and a δ grown with it leaves the equality residual of a
+    feasible problem ~10³× above the reference's at convergence.  The scale
+    is G's own, never the shift's: the elastic term u/lu + v/lv grows large
+    on infeasible moments and would over-damp every moment of its block.
     """
     out = np.empty_like(rhs)
-    for k, ids, t in lhs.tiles():
+    for k, ids, t in gram.tiles():
         scale = np.trace(t, axis1=1, axis2=2) / k
-        pen = np.where((scale > 0) & np.isfinite(scale), penalty * scale, penalty)
+        pen = penalty * np.where((scale > 0) & (scale < 1), scale, 1.0)
+        if shift is not None:
+            diag = np.arange(k)
+            t = t.copy()
+            t[:, diag, diag] += shift[ids]
         todo = np.arange(len(ids))
         for _ in range(_MAX_ESCALATIONS):
             a = t[todo] + pen[todo, None, None] * np.eye(k)

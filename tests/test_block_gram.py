@@ -31,16 +31,18 @@ def test_block_structure_from_groups():
     assert BlockStructure.from_groups(["grp=A", "grp=A"]) is None
 
 
-def _reference_solve(blk, rhs, penalty):
-    """One block's gated, escalating solve, written out per block: the
-    batched solve must reproduce it bit for bit.  Returns (x, number of
+def _reference_solve(blk, rhs, penalty, shift=0.0):
+    """One block's gated, escalating solve of (blk + Diag(shift) + δI)x =
+    rhs, written out per block: the batched solve must reproduce it bit
+    for bit.  δ is scaled down by the mean diagonal of ``blk`` itself (not
+    of the shifted matrix) when that is below 1.  Returns (x, number of
     ×10 escalations taken)."""
     k = len(blk)
     scale = np.trace(blk) / k
-    if scale > 0 and np.isfinite(scale):
+    if 0 < scale < 1:
         penalty = penalty * scale
     for escalations in range(30):
-        a = blk + penalty * np.eye(k)
+        a = blk + np.diag(np.broadcast_to(shift, k)) + penalty * np.eye(k)
         try:
             np.linalg.cholesky(a)
             x = np.linalg.solve(a, rhs)
@@ -52,16 +54,17 @@ def _reference_solve(blk, rhs, penalty):
     raise np.linalg.LinAlgError("unsolvable")
 
 
-def _mixed_gram(rng, sizes):
+def _mixed_gram(rng, sizes, magnitudes=(1.0,)):
     """A BlockGram over interleaved groups of the given sizes, with random
-    SPD tiles; returns (gram, tiles indexed by block id)."""
+    SPD tiles, each scaled by one of ``magnitudes``; returns (gram, tiles
+    indexed by block id)."""
     groups = [f"grp={b}" for b, s in enumerate(sizes) for _ in range(s)]
     bs = BlockStructure.from_groups(list(rng.permutation(groups)))
     flat = np.zeros(bs.total_flat)
     tiles = []
     for mem, off in zip(bs.members, bs.flat_offsets):
         a = rng.uniform(size=(len(mem), len(mem)))
-        tile = a @ a.T + len(mem) * np.eye(len(mem))
+        tile = (a @ a.T + len(mem) * np.eye(len(mem))) * rng.choice(magnitudes)
         flat[off : off + tile.size] = tile.ravel()
         tiles.append(tile)
     return BlockGram(structure=bs, flat=flat), tiles
@@ -73,11 +76,14 @@ def _set_tile(gram, b, tile):
 
 
 def test_block_solve_matches_dense_solve():
-    """Every batched op over mixed block sizes equals the same op on each
-    block alone, bit for bit, and agrees with the assembled dense K×K
-    matrix; a dense Gram solves as one block."""
+    """Every batched op over mixed block sizes and magnitudes (Tikhonov
+    scaled down below unit scale, absolute above) equals the same op on
+    each block alone, bit for bit, and agrees with the assembled dense
+    K×K matrix; a dense Gram solves as one block."""
     rng = np.random.default_rng(2)
-    gram, tiles = _mixed_gram(rng, [3, 1, 4, 2, 3, 1, 4, 2, 2, 5])
+    gram, tiles = _mixed_gram(
+        rng, [3, 1, 4, 2, 3, 1, 4, 2, 2, 5, 2, 3], magnitudes=(1e-6, 1e-2, 1e3)
+    )
     bs = gram.structure
     k = len(bs.block_of)
     assert list(bs.sizes) == sorted(bs.sizes, reverse=True)
@@ -88,10 +94,9 @@ def test_block_solve_matches_dense_solve():
         assert np.all(np.diff(mem) > 0)  # id-ordered within a block
         dense[np.ix_(mem, mem)] = tile
     v, d, p = rng.uniform(size=(3, k))
-    shifted = gram.with_added_diag(d)
     mv = gram.matvec(v)
     ip = gram.solve_i_plus_g_diag(p, v)
-    reg = solve_regularized(shifted, v, 1e-8)
+    reg = solve_regularized(gram, v, 1e-8, shift=d)
     for mem, tile in zip(bs.members, tiles):
         np.testing.assert_array_equal(mv[mem], tile @ v[mem])
         eye = np.eye(len(mem))
@@ -99,16 +104,16 @@ def test_block_solve_matches_dense_solve():
             ip[mem], np.linalg.solve(eye + tile * p[mem][None, :], v[mem])
         )
         np.testing.assert_array_equal(
-            reg[mem], _reference_solve(tile + np.diag(d[mem]), v[mem], 1e-8)[0]
+            reg[mem], _reference_solve(tile, v[mem], 1e-8, d[mem])[0]
         )
     np.testing.assert_allclose(mv, dense @ v, rtol=1e-12)
     np.testing.assert_allclose(
-        shifted.matvec(v), (dense + np.diag(d)) @ v, rtol=1e-12
+        (dense + np.diag(d)) @ reg, v, rtol=1e-6, atol=1e-12
     )
     np.testing.assert_allclose(
         ip, np.linalg.solve(np.eye(k) + dense * p[None, :], v), rtol=1e-10
     )
-    one = BlockGram.dense(dense)
+    one = BlockGram(BlockStructure.single(k), dense.ravel())
     assert len(one.structure.members) == 1
     np.testing.assert_array_equal(
         solve_regularized(one, v, 1e-8), _reference_solve(dense, v, 1e-8)[0]
