@@ -182,10 +182,11 @@ def solve_regularized(
     preserved (a rank-deficient Gram still receives a strictly positive
     relative shift).  A block at or above unit scale keeps the reference's
     absolute δ: the elastic Schur system carries moment totals (its Gram
-    grows with N), and a δ grown with it leaves the equality residual of a
-    feasible problem ~10³× above the reference's at convergence.  The scale
-    is G's own, never the shift's: the elastic term u/lu + v/lv grows large
-    on infeasible moments and would over-damp every moment of its block.
+    grows with N), and a δ grown with it leaves the equality residual of
+    a feasible problem 10³–10⁴× above the reference's at convergence.
+    The scale is G's own, never the shift's: the elastic term u/lu + v/lv
+    grows large on infeasible moments and would over-damp every moment of
+    its block.
     """
     out = np.empty_like(rhs)
     for k, ids, t in gram.tiles():
