@@ -27,7 +27,9 @@ Prints ONE JSON line:
 ``{"metric": "kernel_scan_throughput", "n": ..., "k": ...,
    "queries": {"pack": s, "stats_pass": s, "step_pass": s, "solve": s,
                "solve_iterations": i, "elastic_stats_pass": s, ...},
-   "throughput_rows_per_sec": {"newton": r, "elastic": r, "penalty": r}}``
+   "throughput_rows_per_sec": {"newton": r, "elastic": r, "penalty": r},
+   "pass_rows_per_sec": {"stats_pass": r, "step_pass": r, ...},
+   "loadavg_start": [...], "loadavg_end": [...], "steal_pct": p}``
 """
 
 from __future__ import annotations
@@ -54,7 +56,18 @@ def _min3(fn) -> float:
     return min(_timed(fn) for _ in range(3))
 
 
+def _cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) jiffies over all CPUs, from /proc/stat."""
+    try:
+        with open("/proc/stat") as f:
+            fields = [int(x) for x in f.readline().split()[1:9]]
+    except OSError:
+        return 0, 0
+    return fields[7], sum(fields)
+
+
 _LOAD0 = os.getloadavg()
+_JIFFIES0 = _cpu_jiffies()
 
 
 def main() -> None:
@@ -147,6 +160,7 @@ def main() -> None:
     if "pipeline" in solvers:
         _bench_pipeline(spark, n, n_parts, timings, throughput)
 
+    steal, total = (b - a for a, b in zip(_JIFFIES0, _cpu_jiffies()))
     print(
         json.dumps(
             {
@@ -158,6 +172,12 @@ def main() -> None:
                 "partitions": n_parts,
                 "queries": timings,
                 "throughput_rows_per_sec": throughput,
+                # every timed pass as rows/s (n over its best-of-3 wall)
+                "pass_rows_per_sec": {
+                    name: round(n / t, 1)
+                    for name, t in timings.items()
+                    if name.endswith("_pass") and t > 0
+                },
                 # contamination evidence: loadavg at start and end — this
                 # script has no sleep-retry gate like bench.py, so the
                 # reader (or the next session) judges cold-vs-steady and
@@ -166,6 +186,8 @@ def main() -> None:
                 # one; 1-min loadavg decays slowly after 32-core bursts)
                 "loadavg_start": [round(x, 2) for x in _LOAD0],
                 "loadavg_end": [round(x, 2) for x in os.getloadavg()],
+                # hypervisor steal over the whole run, % of all CPU time
+                "steal_pct": round(100.0 * steal / total, 2) if total else None,
             }
         )
     )

@@ -62,10 +62,11 @@ from pyspark.sql.pandas.types import to_arrow_schema
 BASE_NAMES = ["row_id", "w0", "idx", "val"]
 
 # Dense-idx elision: when every row's idx is [0..k), the idx list column is
-# pure redundancy — k·4 B/row (a quarter of a k=8 blob) paid on every
-# crossing and in the cache.  The encode drops the column and stamps k in
-# the decode schema's metadata; the kernels' ``_flatten_rb`` resynthesizes
-# the flat index vector (np.tile) for one allocation per pass.
+# pure redundancy — k·4 B/row plus offsets (36 of a k=8 base row's 120 B),
+# paid on every crossing and in the cache.  The encode drops the column and
+# stamps k in the decode schema's metadata; the kernels' ``_flatten_rb``
+# then reads the batch's ``val`` buffer as a dense (n, k) matrix, and every
+# product is a BLAS call.
 DENSE_IDX_META = b"ebw_dense_k"
 
 # Shared serializer of every Python-written blob RDD.  ``RDD.zip`` (the
@@ -167,7 +168,7 @@ def decode(blob, schema: pa.Schema) -> pa.RecordBatch:
 def _combine(base_blob, state_blob, schema: pa.Schema) -> pa.RecordBatch:
     """One zip pair → one RecordBatch, zero-copy (same buffers).  The
     combined schema keeps the BASE's metadata: a dense-elided base has no
-    idx column, and the stamp that resynthesizes it must survive."""
+    idx column, and the stamp that marks it dense must survive."""
     b = decode(base_blob, schema)
     s = decode(state_blob, schema)
     fields = [

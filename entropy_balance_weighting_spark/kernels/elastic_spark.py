@@ -63,8 +63,6 @@ from entropy_balance_weighting_spark.kernels.blob_plane import pack_payload
 from entropy_balance_weighting_spark.kernels.spark import (
     _flatten_rb,
     _rb_col,
-    _x_dot,
-    _xt_v,
     blocks_tuple,
     make_gram_accum,
     pack_rows,
@@ -95,12 +93,13 @@ def _cols(rb: pa.RecordBatch, lb: float, ub: float, has_ub: bool):
     )
 
 
-def _pieces(rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub):
-    """Batch rendering of ElasticLocalKernel._pieces (kept in lockstep)."""
+def _pieces(rb, x, lam, eta, mu_s, lb, ub, has_ub):
+    """Batch rendering of ElasticLocalKernel._pieces (kept in lockstep);
+    ``x`` is the batch's rows (``kernels.spark._flatten_rb``)."""
     w0, r, s_lo, s_hi, lm_lo, lm_hi = _cols(rb, lb, ub, has_ub)
     with np.errstate(divide="ignore", invalid="ignore"):
         lr = np.log(r)
-    xlam = _x_dot(flat_idx, flat_val, lens, lam)
+    xlam = x.dot(lam)
     lm_net = lm_lo - lm_hi if has_ub else lm_lo
     cd = (1.0 / eta) * w0 * lr - w0 * xlam - lm_net
     ci_lo = r - s_lo - lb
@@ -119,10 +118,10 @@ def _pieces(rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub):
     return w0, r, s_lo, s_hi, lm_lo, lm_hi, lr, xlam, lm_net, cd, ci_lo, ci_hi, cs_lo, cs_hi, ht, zterm
 
 
-def _steps_arrays(pieces, flat_idx, flat_val, lens, dlam, mu_s, has_ub):
+def _steps_arrays(pieces, x, dlam, mu_s, has_ub):
     (w0, r, s_lo, s_hi, lm_lo, lm_hi, lr, xlam, lm_net, cd,
      ci_lo, ci_hi, cs_lo, cs_hi, ht, zterm) = pieces
-    xdl = _x_dot(flat_idx, flat_val, lens, dlam)
+    xdl = x.dot(dlam)
     r_step = (1.0 / ht) * (w0 * xdl - cd - zterm)
     li_lo = lm_lo / s_lo * (-r_step - ci_lo - cs_lo / lm_lo)
     ss_lo = -s_lo - s_lo / lm_lo * li_lo + mu_s / lm_lo
@@ -152,7 +151,7 @@ class _EStatsAcc:
         self.rhs_mu_leg = np.zeros(k)
         self.gram, self.gram_add = make_gram_accum(k, blocks)
 
-    def add(self, rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub):
+    def add(self, rb, x, lam, eta, mu_s, lb, ub, has_ub):
         if not rb.num_rows:
             # Zero-row batches contribute nothing; guarded HERE (not in
             # each caller) so the plain and fused stats passes share one
@@ -160,9 +159,7 @@ class _EStatsAcc:
             # lm_lo.max()/sl.min() reductions below.
             return
         k = self.k
-        pieces = _pieces(
-            rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
-        )
+        pieces = _pieces(rb, x, lam, eta, mu_s, lb, ub, has_ub)
         (w0, r, s_lo, s_hi, lm_lo, lm_hi, lr, xlam, lm_net, cd,
          ci_lo, ci_hi, cs_lo, cs_hi, ht, zterm) = pieces
         bad = ~np.isfinite(cd) | ~np.isfinite(ht) | (ht <= 0)
@@ -200,12 +197,10 @@ class _EStatsAcc:
         self.sl_cnt += float(len(sl))
         self.sl_min = min(self.sl_min, float(sl.min()))
         self.neg_lm_max = min(self.neg_lm_max, -lm_mx)
-        self.g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
-        self.rhs_leg += _xt_v(
-            flat_idx, flat_val, lens, w0 * inv_ht * (cdf + zterm), k
-        )
-        self.rhs_mu_leg += _xt_v(flat_idx, flat_val, lens, w0 * inv_ht * z1, k)
-        self.gram_add(flat_idx, flat_val, lens, w0**2 * inv_ht)
+        self.g1 += x.tdot(w0 * r, k)
+        self.rhs_leg += x.tdot(w0 * inv_ht * (cdf + zterm), k)
+        self.rhs_mu_leg += x.tdot(w0 * inv_ht * z1, k)
+        self.gram_add(x, w0**2 * inv_ht)
 
     def payload(self) -> tuple[bytes, bytes]:
         return pack_payload(
@@ -222,10 +217,7 @@ def _estats_pass(k, lam, eta, mu_s, lb, ub, has_ub, blocks) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            acc.add(
-                rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
-            )
+            acc.add(rb, _flatten_rb(rb), lam, eta, mu_s, lb, ub, has_ub)
         yield acc.payload()
 
     return fn
@@ -240,19 +232,17 @@ def _estep_pass(k, lam, dlam, eta, mu_s, lb, ub, has_ub) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            pieces = _pieces(
-                rb, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
-            )
+            x = _flatten_rb(rb)
+            pieces = _pieces(rb, x, lam, eta, mu_s, lb, ub, has_ub)
             r_step, li_lo, li_hi, ss_lo, ss_hi = _steps_arrays(
-                pieces, flat_idx, flat_val, lens, dlam, mu_s, has_ub
+                pieces, x, dlam, mu_s, has_ub
             )
             s_lo, s_hi, lm_lo, lm_hi = pieces[2], pieces[3], pieces[4], pieces[5]
             bad = ~np.isfinite(r_step)
             nan_ct += float(bad.sum())
             rsf = np.where(bad, 0.0, r_step)
             rstep_sq += float(rsf @ rsf)
-            xt_rstep += _xt_v(flat_idx, flat_val, lens, rsf, k)
+            xt_rstep += x.tdot(rsf, k)
             ftb_s = min(ftb_s, ftb_batch(s_lo, ss_lo))
             ftb_l = min(ftb_l, ftb_batch(lm_lo, li_lo))
             if has_ub:
@@ -301,13 +291,10 @@ def _ecommit_stats_pass(
         n_state = len(STATE_NAMES)
         held = None
         for rb in blob_plane.batches(pair_iter, schema):
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            pieces = _pieces(
-                rb, flat_idx, flat_val, lens, clam, ceta, cmu_s, lb, ub,
-                has_ub,
-            )
+            x = _flatten_rb(rb)
+            pieces = _pieces(rb, x, clam, ceta, cmu_s, lb, ub, has_ub)
             r_step, li_lo, li_hi, _ss_lo, _ss_hi = _steps_arrays(
-                pieces, flat_idx, flat_val, lens, cdlam, cmu_s, has_ub
+                pieces, x, cdlam, cmu_s, has_ub
             )
             r, lm_lo, lm_hi = pieces[1], pieces[4], pieces[5]
             st_rb = _state_rb(
@@ -328,9 +315,7 @@ def _ecommit_stats_pass(
                 [rb.column(i) for i in range(nb)] + list(st_rb.columns),
                 schema=pa.schema(fields, metadata=rb.schema.metadata),
             )
-            acc.add(
-                rb2, flat_idx, flat_val, lens, lam, eta, mu_s, lb, ub, has_ub
-            )
+            acc.add(rb2, x, lam, eta, mu_s, lb, ub, has_ub)
         if held is None:
             return  # empty partition: no batches, no payload
         yield (held, *acc.payload())
@@ -352,8 +337,7 @@ def _g1_pass(k) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            g1 += _xt_v(flat_idx, flat_val, lens, _weights(rb), k)
+            g1 += _flatten_rb(rb).tdot(_weights(rb), k)
         yield pack_payload([g1], [np.inf])
 
     return fn

@@ -35,8 +35,6 @@ from entropy_balance_weighting_spark.kernels.spark import (
     _flatten_rb,
     _rb_col,
     _rb_with,
-    _x_dot,
-    _xt_v,
     blocks_tuple,
     make_gram_accum,
     pack_rows,
@@ -54,8 +52,7 @@ def _gram_init_pass(k: int, blocks) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            g2_add(flat_idx, flat_val, lens, _rb_col(rb, "w0") ** 2)
+            g2_add(_flatten_rb(rb), _rb_col(rb, "w0") ** 2)
         yield pack_payload([g2], [np.inf])
 
     return fn
@@ -74,7 +71,7 @@ def _pstats_pass(k: int, blocks) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
+            x = _flatten_rb(rb)
             w0 = _rb_col(rb, "w0")
             r = _rb_col(rb, "ratio")
             with np.errstate(divide="ignore", invalid="ignore"):
@@ -84,10 +81,10 @@ def _pstats_pass(k: int, blocks) -> Callable:
             lrf = np.where(bad, 0.0, lr)
             f_val += float(np.sum(w0 * (r * lrf - r + 1.0)))
             s_ll += float(np.sum(w0**2 * lrf**2))
-            g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
-            g2v += _xt_v(flat_idx, flat_val, lens, w0 * r * lrf, k)
-            h += _xt_v(flat_idx, flat_val, lens, w0**2 * lrf, k)
-            gram_add(flat_idx, flat_val, lens, w0 * r)
+            g1 += x.tdot(w0 * r, k)
+            g2v += x.tdot(w0 * r * lrf, k)
+            h += x.tdot(w0**2 * lrf, k)
+            gram_add(x, w0 * r)
         yield pack_payload([f_val, s_ll, nan_ct, g1, g2v, h, gram], [np.inf])
 
     return fn
@@ -99,10 +96,9 @@ def _pcommit_pass(z: np.ndarray) -> Callable:
             if not rb.num_rows:
                 yield rb
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
             r = _rb_col(rb, "ratio")
             with np.errstate(divide="ignore", invalid="ignore"):
-                p = -r * (np.log(r) + _x_dot(flat_idx, flat_val, lens, z))
+                p = -r * (np.log(r) + _flatten_rb(rb).dot(z))
             yield _rb_with(rb, ratio=r + np.where(np.isfinite(p), p, 0.0))
 
     return fn
@@ -117,10 +113,9 @@ def _pstep_sq_pass(z: np.ndarray) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
             r = _rb_col(rb, "ratio")
             with np.errstate(divide="ignore", invalid="ignore"):
-                p = -r * (np.log(r) + _x_dot(flat_idx, flat_val, lens, z))
+                p = -r * (np.log(r) + _flatten_rb(rb).dot(z))
             bad = ~np.isfinite(p)
             nan_ct += float(bad.sum())
             pf = np.where(bad, 0.0, p)
@@ -161,7 +156,7 @@ def _pbstats_pass(k: int, has_ub: bool, blocks) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
+            x = _flatten_rb(rb)
             w0, r, s_lo, lm_lo, s_hi, lm_hi, lr, inv_hb = _bounded_pieces(
                 rb, has_ub
             )
@@ -173,12 +168,12 @@ def _pbstats_pass(k: int, has_ub: bool, blocks) -> Callable:
             lrf = np.where(np.isfinite(lr), lr, 0.0)
             f_val += float(np.sum(w0 * (r * lrf - r + 1.0)))
             sd0_sq += float(d0 @ d0)
-            g1 += _xt_v(flat_idx, flat_val, lens, w0 * r, k)
-            hd += _xt_v(flat_idx, flat_val, lens, w0 * d0, k)
-            u1a += _xt_v(flat_idx, flat_val, lens, w0 * inv_hb * w0 * lrf, k)
+            g1 += x.tdot(w0 * r, k)
+            hd += x.tdot(w0 * d0, k)
+            u1a += x.tdot(w0 * inv_hb * w0 * lrf, k)
             sinv = 1.0 / s_lo - (1.0 / s_hi if has_ub else 0.0)
-            u1b += _xt_v(flat_idx, flat_val, lens, w0 * inv_hb * sinv, k)
-            gb_add(flat_idx, flat_val, lens, w0**2 * inv_hb)
+            u1b += x.tdot(w0 * inv_hb * sinv, k)
+            gb_add(x, w0**2 * inv_hb)
             sl = s_lo * lm_lo
             if has_ub:
                 sl = np.concatenate([sl, s_hi * lm_hi])
@@ -193,10 +188,10 @@ def _pbstats_pass(k: int, has_ub: bool, blocks) -> Callable:
     return fn
 
 
-def _pb_step_arrays(rb, flat_idx, flat_val, lens, z, mu, has_ub):
+def _pb_step_arrays(rb, x, z, mu, has_ub):
     w0, r, s_lo, lm_lo, s_hi, lm_hi, lr, inv_hb = _bounded_pieces(rb, has_ub)
     e = w0 * lr - mu / s_lo + (mu / s_hi if has_ub else 0.0)
-    p = -inv_hb * (e + w0 * _x_dot(flat_idx, flat_val, lens, z))
+    p = -inv_hb * (e + w0 * x.dot(z))
     dl_lo = lm_lo / s_lo * (-p - s_lo + mu / lm_lo)
     dl_hi = (
         lm_hi / s_hi * (p - s_hi + mu / lm_hi) if has_ub else np.zeros(len(r))
@@ -213,9 +208,8 @@ def _pbstep_pass(z: np.ndarray, mu: float, has_ub: bool) -> Callable:
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
             p, dl_lo, dl_hi, s_lo, lm_lo, s_hi, lm_hi = _pb_step_arrays(
-                rb, flat_idx, flat_val, lens, z, mu, has_ub
+                rb, _flatten_rb(rb), z, mu, has_ub
             )
             bad = ~np.isfinite(p)
             nan_ct += float(bad.sum())
@@ -239,9 +233,8 @@ def _pbcommit_pass(
             if not rb.num_rows:
                 yield rb
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
             p, dl_lo, dl_hi, s_lo, lm_lo, s_hi, lm_hi = _pb_step_arrays(
-                rb, flat_idx, flat_val, lens, z, mu, has_ub
+                rb, _flatten_rb(rb), z, mu, has_ub
             )
             new_cols = {
                 "ratio": _rb_col(rb, "ratio") + bp * p,

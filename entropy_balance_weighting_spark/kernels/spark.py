@@ -4,21 +4,28 @@ Layout: one logical row per observation —
 ``(row_id BIGINT, w0 DOUBLE, idx ARRAY<INT>, val ARRAY<DOUBLE>)`` — i.e.
 per-row CSR (the Spark rendering of the reference's package-wide CSR
 canonicalization, ref: shared.py:11-12); q = w0/Σw0 and the weight state
-are recomputed per pass, and a dense ``[0..k)`` idx column is dropped when
-the plan proves it (``blob_plane.dense_idx``).  Packing happens once;
-every solver iteration then runs whole-pass batch jobs that compute ALL of the iteration's N→{scalar,K,K×K} reductions in a single
-scan (the same fusion the reference gets from numexpr + MKL, ref:
-ebw_routines.py:210-233), shipping only K- and K²-sized partials to the
-driver.  The Arrow list arrays' offset buffers ARE the CSR encoding, read
-zero-copy by ``_flatten_rb``; pandas conversion would materialize one
-Python ndarray PER ROW per list column.
+are recomputed per pass.  Packing happens once; every solver iteration
+then runs whole-pass batch jobs that compute ALL of the iteration's
+N→{scalar,K,K×K} reductions in a single scan (the same fusion the
+reference gets from numexpr + MKL, ref: ebw_routines.py:210-233), shipping
+only K- and K²-sized partials to the driver.
+
+A pass reads each batch's rows once as one value (``_flatten_rb``), which
+every product goes through: X·λ, Xᵀu and the Gram accumulators.  When the
+plan proves every row's ids are ``[0..k)`` (``blob_plane.dense_idx``: the
+data layer's static-id specs) the encode drops ``idx`` and a batch is the
+zero-copy ``(n, k)`` view of the ``val`` buffer, so the products are BLAS
+calls (``DenseRows``).  Any other batch is CSR read zero-copy from the list
+arrays' offsets (``CsrRows``: gather, row ``reduceat``, ``bincount``).
+Pandas conversion would materialize one Python ndarray PER ROW per list
+column.
 
 The packed rows are cached as an RDD of Arrow IPC byte blobs (one element
 per record batch, written by Spark's JVM Arrow writer), not as a
 DataFrame — see ``kernels/blob_plane.py``,
 which holds the encode, cache, reduce and render plumbing all three
 distributed kernels share.  This module holds the batch math they share
-(CSR decode, X·λ / Xᵀv products, Gram accumulators, the reduce-topology
+(the batch rows and their products, Gram accumulators, the reduce-topology
 gate) and the unbounded Newton kernel.
 
 Why whole-pass batch jobs and not joins/explodes: the per-iteration
@@ -60,28 +67,126 @@ from entropy_balance_weighting_spark.kernels.blob_plane import (
 from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
 
-def _flatten_rb(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Arrow-native CSR pieces — zero-copy flat buffers straight from the
-    list arrays' offsets.  The pandas route materializes one Python
-    ndarray object PER ROW for each array column; at millions of rows that
-    conversion dominates the whole pass, so every kernel pass runs on
-    ``mapInArrow`` and reads the batch columns directly."""
+def _flatten_rb(rb: pa.RecordBatch) -> "DenseRows | CsrRows":
+    """The batch's design-matrix rows, read zero-copy from the Arrow
+    buffers.  An idx-elided batch (:data:`DENSE_IDX_META`: every row holds
+    ``[0..k)``) is the row-major ``(n, k)`` view of the ``val`` child
+    buffer; any other batch is CSR, the list arrays' offsets read as row
+    lengths.  The pandas route would materialize one Python ndarray PER
+    ROW for each array column, so every kernel pass reads the batch
+    columns directly."""
     val = rb.column(rb.schema.get_field_index("val"))
     flat_val = val.flatten().to_numpy(zero_copy_only=False).astype(
         np.float64, copy=False
     )
     i = rb.schema.get_field_index("idx")
-    if i < 0:  # dense-elided batch: resynthesize [0..k) per row
+    if i < 0:
         k = int((rb.schema.metadata or {})[DENSE_IDX_META])
-        lens = np.full(rb.num_rows, k, dtype=np.int64)
-        flat_idx = np.tile(np.arange(k, dtype=np.int64), rb.num_rows)
-        return flat_idx, flat_val, lens
+        if flat_val.size != rb.num_rows * k:
+            raise ValueError(
+                f"idx-elided batch holds {flat_val.size} values for "
+                f"{rb.num_rows} rows of {k}"
+            )
+        return DenseRows(flat_val.reshape(rb.num_rows, k))
     idx = rb.column(i)
     lens = pc.list_value_length(idx).to_numpy().astype(np.int64, copy=False)
     flat_idx = idx.flatten().to_numpy(zero_copy_only=False).astype(
         np.int64, copy=False
     )
-    return flat_idx, flat_val, lens
+    return CsrRows(flat_idx, flat_val, lens)
+
+
+# Rows per chunk of a dense K×K Gram accumulation: the chunk's scratch
+# stays ~32 MB (this many doubles) at any K.
+_GRAM_CHUNK_CELLS = 4_000_000
+
+
+def _gram_chunk(k: int) -> int:
+    return max(256, int(_GRAM_CHUNK_CELLS / max(k, 1)))
+
+
+class DenseRows:
+    """X of an idx-elided batch: ``v`` is the ``(n, k)`` matrix, so X·λ,
+    Xᵀu and the Gram are BLAS products."""
+
+    __slots__ = ("v",)
+
+    def __init__(self, v: np.ndarray) -> None:
+        self.v = v
+
+    def dot(self, lam: np.ndarray) -> np.ndarray:
+        """X·λ — per-row dot products."""
+        return self.v @ lam
+
+    def tdot(self, u: np.ndarray, k: int) -> np.ndarray:
+        """Xᵀu — a K-vector."""
+        return u @ self.v
+
+    def gram(self, d: np.ndarray, k: int, out: np.ndarray) -> None:
+        """out += Xᵀ Diag(d) X, chunked over rows."""
+        v = self.v
+        step = _gram_chunk(k)
+        for lo in range(0, len(v), step):
+            vc = v[lo : lo + step]
+            out += (vc * d[lo : lo + step, None]).T @ vc
+
+    def csr(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The CSR triple of the same rows (the block-Gram path's input)."""
+        n, k = self.v.shape
+        return (
+            np.tile(np.arange(k, dtype=np.int64), n),
+            self.v.ravel(),
+            np.full(n, k, dtype=np.int64),
+        )
+
+
+class CsrRows:
+    """X of a batch with an ``idx`` column, as CSR: ``flat_idx`` and
+    ``flat_val`` hold every row's entries back to back, ``lens`` the
+    entry count of each row."""
+
+    __slots__ = ("flat_idx", "flat_val", "lens")
+
+    def __init__(self, flat_idx, flat_val, lens) -> None:
+        self.flat_idx = flat_idx
+        self.flat_val = flat_val
+        self.lens = lens
+
+    def dot(self, lam: np.ndarray) -> np.ndarray:
+        """X·λ — per-row dot products."""
+        if self.flat_idx.size == 0:
+            return np.zeros(len(self.lens))
+        return _segsum(self.flat_val * lam[self.flat_idx], self.lens)
+
+    def tdot(self, u: np.ndarray, k: int) -> np.ndarray:
+        """Xᵀu — scatter-add into a K-vector."""
+        if self.flat_idx.size == 0:
+            return np.zeros(k)
+        return np.bincount(
+            self.flat_idx,
+            weights=self.flat_val * np.repeat(u, self.lens),
+            minlength=k,
+        )
+
+    def gram(self, d: np.ndarray, k: int, out: np.ndarray) -> None:
+        """out += Xᵀ Diag(d) X via chunked densify + the BLAS product."""
+        lens, flat_idx, flat_val = self.lens, self.flat_idx, self.flat_val
+        n = len(lens)
+        if flat_idx.size == 0 or n == 0:
+            return
+        step = _gram_chunk(k)
+        ends = np.cumsum(lens)
+        starts = ends - lens
+        for lo in range(0, n, step):
+            hi = min(lo + step, n)
+            s, e = starts[lo], ends[hi - 1]
+            xc = np.zeros((hi - lo, k))
+            rr = np.repeat(np.arange(hi - lo), lens[lo:hi])
+            xc[rr, flat_idx[s:e]] = flat_val[s:e]
+            out += (xc * d[lo:hi, None]).T @ xc
+
+    def csr(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        return self.flat_idx, self.flat_val, self.lens
 
 
 def _rb_col(rb: pa.RecordBatch, name: str) -> np.ndarray:
@@ -114,24 +219,14 @@ def _rb_with(rb: pa.RecordBatch, **cols: np.ndarray) -> pa.RecordBatch:
 
 
 def _segsum(prod: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Row-wise sums of a flat product vector (handles empty rows)."""
-    cs = np.concatenate(([0.0], np.cumsum(prod)))
-    ends = np.cumsum(lens)
-    return cs[ends] - cs[ends - lens]
-
-
-def _xt_v(flat_idx, flat_val, lens, v, k) -> np.ndarray:
-    """X_batch^T v — scatter-add into a K-vector."""
-    if flat_idx.size == 0:
-        return np.zeros(k)
-    return np.bincount(flat_idx, weights=flat_val * np.repeat(v, lens), minlength=k)
-
-
-def _x_dot(flat_idx, flat_val, lens, lam) -> np.ndarray:
-    """X_batch · λ — per-row dot products."""
-    if flat_idx.size == 0:
-        return np.zeros(len(lens))
-    return _segsum(flat_val * lam[flat_idx], lens)
+    """Row-wise sums of a flat product vector: one ``reduceat`` over the
+    non-empty rows (each sum is its own row's, not a difference of a
+    batch-wide running sum); empty rows sum to 0."""
+    out = np.zeros(len(lens))
+    full = lens > 0
+    if prod.size:
+        out[full] = np.add.reduceat(prod, (np.cumsum(lens) - lens)[full])
+    return out
 
 
 def _gram_accum_blocks(
@@ -173,23 +268,23 @@ def _gram_accum_blocks(
 
 
 def make_gram_accum(k: int, blocks):
-    """(buffer, add_fn) pair for a pass: dense K×K scratch when ``blocks``
-    is None, else the flat Σk_b² block accumulator.  Shared by every
+    """(buffer, add_fn) pair for a pass: ``add_fn(x, d)`` adds the batch
+    rows ``x``'s Xᵀ Diag(d) X — into a dense K×K scratch when ``blocks``
+    is None, else into the flat Σk_b² block accumulator.  Shared by every
     kernel's stats pass so all three solvers get the large-K path."""
     if blocks is None:
         buf = np.zeros((k, k))
 
-        def add(flat_idx, flat_val, lens, d):
-            _gram_accum(flat_idx, flat_val, lens, d, k, buf)
+        def add(x, d):
+            x.gram(d, k, buf)
 
     else:
         block_of, local, sizes, flat_offsets, total_flat = blocks
         buf = np.zeros(total_flat)
 
-        def add(flat_idx, flat_val, lens, d):
+        def add(x, d):
             _gram_accum_blocks(
-                flat_idx, flat_val, lens, d, block_of, local, sizes,
-                flat_offsets, buf,
+                *x.csr(), d, block_of, local, sizes, flat_offsets, buf
             )
 
     return buf, add
@@ -239,29 +334,6 @@ def blocks_tuple(block_structure: BlockStructure):
         block_structure.flat_offsets,
         block_structure.total_flat,
     )
-
-
-def _gram_accum(flat_idx, flat_val, lens, d, k, out: np.ndarray) -> None:
-    """out += X_batch^T Diag(d) X_batch via chunked densify + BLAS syrk-shape.
-
-    Chunk size adapts to K so the dense scratch stays ~32 MB; the
-    block-diagonal huge-K regime (group moments) takes
-    :func:`_gram_accum_blocks` instead.
-    """
-    n = len(lens)
-    if flat_idx.size == 0 or n == 0:
-        return
-    chunk = max(256, int(4_000_000 / max(k, 1)))
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    for lo in range(0, n, chunk):
-        hi = min(lo + chunk, n)
-        rows = hi - lo
-        s, e = starts[lo], ends[hi - 1]
-        xc = np.zeros((rows, k))
-        rr = np.repeat(np.arange(rows), lens[lo:hi])
-        xc[rr, flat_idx[s:e]] = flat_val[s:e]
-        out += (xc * d[lo:hi, None]).T @ xc
 
 
 def pack_rows(
@@ -316,7 +388,7 @@ def pack_rows(
     return df, sum_w0, n
 
 
-def _w_state(rb, q, flat_idx, flat_val, lens, wprog):
+def _w_state(rb, q, x, wprog):
     """Current weight-state vector for a batch.
 
     ``wprog`` is the kernel's weight program (see SparkKernel.commit): a
@@ -326,20 +398,20 @@ def _w_state(rb, q, flat_idx, flat_val, lens, wprog):
     base's ``blob_plane.GUESS`` column, ``("state",)`` the compacted
     ``wstar`` column of the zipped state — then ``("lin", α, λ, Δλ)`` ops
     apply primal updates ``w·(1 + α·(X·Δλ − cd))`` with
-    ``cd = log(w/q) − X·λ``."""
+    ``cd = log(w/q) − X·λ``; ``x`` is the batch's rows (:func:`_flatten_rb`)."""
     w = None
     with np.errstate(over="ignore", divide="ignore", invalid="ignore"):
         for op in wprog:
             if op[0] == "exp":
-                w = q * np.exp(_x_dot(flat_idx, flat_val, lens, op[1]))
+                w = q * np.exp(x.dot(op[1]))
             elif op[0] == "guess":
                 w = q * _rb_col(rb, GUESS)
             elif op[0] == "state":
                 w = _rb_col(rb, "wstar")
             else:
                 _, alpha, lam_v, dlam_v = op
-                cd = np.log(w / q) - _x_dot(flat_idx, flat_val, lens, lam_v)
-                w = w + alpha * (_x_dot(flat_idx, flat_val, lens, dlam_v) - cd) * w
+                cd = np.log(w / q) - x.dot(lam_v)
+                w = w + alpha * (x.dot(dlam_v) - cd) * w
     return w
 
 
@@ -365,22 +437,22 @@ def _stats_pass(
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
+            x = _flatten_rb(rb)
             w0 = _rb_col(rb, "w0")
             q = _rb_q(rb, sum_w0)
-            w = _w_state(rb, q, flat_idx, flat_val, lens, wprog)
+            w = _w_state(rb, q, x, wprog)
             r = w / q
             with np.errstate(divide="ignore", invalid="ignore"):
                 lr = np.log(r)
                 f_val += float(np.sum(w0 * (r * lr - r + 1.0)))
-                cd = lr - _x_dot(flat_idx, flat_val, lens, lam)
+                cd = lr - x.dot(lam)
             bad = ~np.isfinite(cd)
             nan_ct += float(bad.sum())
             cdf = np.where(bad, 0.0, cd)
             cd_sq += float(cdf @ cdf)
-            xt_w += _xt_v(flat_idx, flat_val, lens, w, k)
-            xt_wcd += _xt_v(flat_idx, flat_val, lens, w * cdf, k)
-            gram_add(flat_idx, flat_val, lens, w)
+            xt_w += x.tdot(w, k)
+            xt_wcd += x.tdot(w * cdf, k)
+            gram_add(x, w)
             if len(w):
                 min_w = min(min_w, float(w.min()))
         yield pack_payload(
@@ -434,11 +506,11 @@ def _step_pass(
         for rb in batches:
             if not rb.num_rows:
                 continue
-            flat_idx, flat_val, lens = _flatten_rb(rb)
+            x = _flatten_rb(rb)
             q = _rb_q(rb, sum_w0)
-            w = _w_state(rb, q, flat_idx, flat_val, lens, wprog)
-            xlam = _x_dot(flat_idx, flat_val, lens, lam)
-            xdl = _x_dot(flat_idx, flat_val, lens, dlam)
+            w = _w_state(rb, q, x, wprog)
+            xlam = x.dot(lam)
+            xdl = x.dot(dlam)
             with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
                 cd = np.log(w / q) - xlam
                 dw = (xdl - cd) * w
@@ -450,9 +522,9 @@ def _step_pass(
             if blocked.any():
                 alpha_raw = min(alpha_raw, float(np.min(-w[blocked] / dwf[blocked])))
             dw_sq += float(dwf @ dwf)
-            xt_dw += _xt_v(flat_idx, flat_val, lens, dwf, k)
+            xt_dw += x.tdot(dwf, k)
             wdf = np.where(np.isfinite(wdual), wdual, 0.0)
-            xt_wdual += _xt_v(flat_idx, flat_val, lens, wdf, k)
+            xt_wdual += x.tdot(wdf, k)
             if len(wdf):
                 min_wdual = min(min_wdual, float(wdf.min()))
             if spec:
@@ -463,14 +535,14 @@ def _step_pass(
                 with np.errstate(divide="ignore", invalid="ignore"):
                     lr = np.log(r)
                     s_f_val += float(np.sum(w0 * (r * lr - r + 1.0)))
-                    s_cd = lr - _x_dot(flat_idx, flat_val, lens, spec_lam_new)
+                    s_cd = lr - x.dot(spec_lam_new)
                 s_bad = ~np.isfinite(s_cd)
                 s_nan_ct += float(s_bad.sum())
                 s_cdf = np.where(s_bad, 0.0, s_cd)
                 s_cd_sq += float(s_cdf @ s_cdf)
-                s_xt_w += _xt_v(flat_idx, flat_val, lens, w_new, k)
-                s_xt_wcd += _xt_v(flat_idx, flat_val, lens, w_new * s_cdf, k)
-                s_gram_add(flat_idx, flat_val, lens, w_new)
+                s_xt_w += x.tdot(w_new, k)
+                s_xt_wcd += x.tdot(w_new * s_cdf, k)
+                s_gram_add(x, w_new)
                 if len(w_new):
                     s_min_w = min(s_min_w, float(w_new.min()))
         sums = [dw_sq, nan_ct, xt_dw, xt_wdual]
@@ -489,8 +561,7 @@ def _compact_pass(wprog, sum_w0: float) -> Callable:
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            flat_idx, flat_val, lens = _flatten_rb(rb)
-            w = _w_state(rb, _rb_q(rb, sum_w0), flat_idx, flat_val, lens, wprog)
+            w = _w_state(rb, _rb_q(rb, sum_w0), _flatten_rb(rb), wprog)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(w, type=pa.float64())], ["wstar"]
             )
@@ -789,9 +860,8 @@ class SparkKernel:
         wprog = self._wprog
 
         def weight_of(rb: pa.RecordBatch) -> np.ndarray:
-            flat_idx, flat_val, lens = _flatten_rb(rb)
             q = _rb_q(rb, sum_w0)
-            return _w_state(rb, q, flat_idx, flat_val, lens, wprog) * sum_w0
+            return _w_state(rb, q, _flatten_rb(rb), wprog) * sum_w0
 
         return blob_plane.weights_df(
             self._spark, blob_plane.state_rows(self), self._schema, weight_of

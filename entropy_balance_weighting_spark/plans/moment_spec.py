@@ -29,9 +29,11 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 @dataclass(frozen=True)
@@ -465,18 +467,8 @@ def build_problem_tables(df: DataFrame, spec: MomentSpec) -> ProblemTables:
 
     long = long_moments(rows, spec)
     names = _moment_names(spec, combos)
-    spark = df.sparkSession
-    # single slice (see _packed_arrays): the dictionary is K driver rows,
-    # consumed via broadcast joins — one task materializes it, not a
-    # defaultParallelism wave of empty slices
-    moments = spark.createDataFrame(
-        spark.sparkContext.parallelize(list(enumerate(names)), 1),
-        T.StructType(
-            [
-                T.StructField("moment_id", T.IntegerType(), False),
-                T.StructField("moment_name", T.StringType(), False),
-            ]
-        ),
+    moments = local_relation(
+        df.sparkSession, list(enumerate(names)), _MOMENTS_SCHEMA
     )
     x_long_w0 = long.join(F.broadcast(moments), "moment_name").select(
         "row_id", "moment_id", "value", "w0"
@@ -503,6 +495,28 @@ def build_problem_tables(df: DataFrame, spec: MomentSpec) -> ProblemTables:
         weighted_sums=weighted_sums,
         packed_arrays=packed,
     )
+
+
+_MOMENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("moment_id", T.IntegerType(), False),
+        T.StructField("moment_name", T.StringType(), False),
+    ]
+)
+
+
+def local_relation(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-held rows (a K-sized dictionary, dim or target table) as a
+    ``LocalRelation``: an Arrow table with the explicit ``schema``.  Plans
+    that read it run no job and start no Python worker for it, where a
+    parallelized relation costs a job of its own."""
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 _PACK_COMBO_MAX = 200_000  # broadcast-size guard for the combo dim table
@@ -546,28 +560,33 @@ def _packed_arrays(
 
     Every prepared row emits a FIXED set of entries (numeric + intercept +
     one indicator per one-hot column + one per interaction).  Ungrouped
-    numeric-only specs take literal constant ids.  Grouped/one-hot specs
-    join a tiny driver-built dim table — one row per observed (group,
-    one-hot value) combination carrying that combination's precomputed
-    ``idx`` array — through a broadcast hash join (JVM-side, O(1) per row;
-    a K-sized ``create_map`` literal would be a linear scan per lookup).
+    numeric-only specs take literal constant ids, in id order.
+    Grouped/one-hot specs join a tiny driver-built dim table — one row per
+    observed (group, one-hot value) combination carrying that combination's
+    precomputed ``idx`` array — through a broadcast hash join (JVM-side,
+    O(1) per row; a K-sized ``create_map`` literal would be a linear scan
+    per lookup).
     Gated only by the combo count (broadcast size), so the projection path
     holds into the 10⁵-moment group-specific regime.
     """
     combo_src = [*spec.group, *spec.onehot]
     if not combo_src:
-        # static ids: every row emits the same moment set
+        # static ids: every row emits the same moment set, in id order, so
+        # idx folds to the literal [0..k) and the encode elides it
+        # (kernels.blob_plane.dense_idx)
         name_to_id = {nm: i for i, nm in enumerate(names)}
-        id_exprs = [
-            F.lit(name_to_id[nm]).cast("int")
-            for nm in _combo_entry_names(spec, {})
-        ]
-        val_exprs = _packed_val_exprs(spec)
+        entries = sorted(
+            zip(
+                (name_to_id[nm] for nm in _combo_entry_names(spec, {})),
+                _packed_val_exprs(spec),
+            ),
+            key=lambda e: e[0],
+        )
         return rows.select(
             "row_id",
             "w0",
-            F.array(*id_exprs).alias("idx"),
-            F.array(*val_exprs).alias("val"),
+            F.array(*[F.lit(i).cast("int") for i, _ in entries]).alias("idx"),
+            F.array(*[v for _, v in entries]).alias("val"),
         )
     if len(combos) > _PACK_COMBO_MAX:
         return None
@@ -586,12 +605,7 @@ def _packed_arrays(
         [T.StructField(f"__cmb_{c}", T.StringType(), True) for c in combo_src]
         + [T.StructField("idx", T.ArrayType(T.IntegerType(), False), False)]
     )
-    # single slice: the dim table is driver-built and broadcast — default
-    # parallelization would make its materialization a full-width task
-    # wave of mostly-empty slices (r13 optimization, guide §5.1)
-    dim = spark.createDataFrame(
-        spark.sparkContext.parallelize(dim_rows, 1), dim_schema
-    )
+    dim = local_relation(spark, dim_rows, dim_schema)
     cond = None
     for c in combo_src:
         eq = F.col(c).cast("string").eqNullSafe(F.col(f"__cmb_{c}"))
@@ -668,12 +682,8 @@ def vector_to_problem_tables(
     if counts["n"] != counts["nd"]:
         raise ValueError(f"row_key {row_key} is not unique")
 
-    spark = df.sparkSession
-    # single slice: K driver rows consumed via broadcast joins (see
-    # build_problem_tables) — avoid a defaultParallelism wave of empty slices
-    moments = spark.createDataFrame(
-        spark.sparkContext.parallelize([(j, names[j]) for j in range(k)], 1),
-        "moment_id int, moment_name string",
+    moments = local_relation(
+        df.sparkSession, list(enumerate(names)), _MOMENTS_SCHEMA
     )
     x_long_w0 = (
         rows.select("row_id", "w0", F.posexplode("__arr").alias("moment_id", "value"))
@@ -755,13 +765,15 @@ def targets_from_problem(
             for nm in pt.moment_names
             if nm in pt.weighted_sums
         ]
-        # single-slice local relation: the default createDataFrame
-        # parallelizes K rows across defaultParallelism empty slices, so
-        # every later action on the targets pays a full-width task wave
-        # for driver-held data (r13 optimization, guide §5.1)
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(data, 1),
-            "moment_name string, target double",
+        return local_relation(
+            spark,
+            data,
+            T.StructType(
+                [
+                    T.StructField("moment_name", T.StringType()),
+                    T.StructField("target", T.DoubleType()),
+                ]
+            ),
         )
     long_w = (
         pt.x_long_w0

@@ -72,7 +72,7 @@ def test_zip_combined_preserves_elision_metadata():
         )
     )
     assert combined.schema.metadata[DENSE_IDX_META] == str(k).encode()
-    fi, fv, lens = _flatten_rb(combined)
+    fi, fv, lens = _flatten_rb(combined).csr()
     np.testing.assert_array_equal(lens, [k] * n)
     np.testing.assert_array_equal(fi[:k], np.arange(k))
     assert combined.schema.get_field_index("ratio") >= 0
@@ -108,8 +108,7 @@ def test_compaction_blob_zips_with_elided_base_bit_for_bit():
     assert combined.schema.metadata[DENSE_IDX_META] == str(k).encode()
 
     def replay(rb, wprog):
-        fi, fv, lens = _flatten_rb(rb)
-        return _w_state(rb, _rb_q(rb, sum_w0), fi, fv, lens, wprog)
+        return _w_state(rb, _rb_q(rb, sum_w0), _flatten_rb(rb), wprog)
 
     np.testing.assert_array_equal(
         _rb_col(combined, "wstar"), replay(base, prog)
@@ -125,7 +124,7 @@ def _decoded_rows(rdd, schema):
     """(row_id, w0, idx, val) of every row a blob cache decodes to."""
     rows = []
     for rb in batches(rdd.collect(), schema):
-        flat_idx, flat_val, lens = _flatten_rb(rb)
+        flat_idx, flat_val, lens = _flatten_rb(rb).csr()
         ends = np.cumsum(lens)
         for i, (rid, w) in enumerate(
             zip(
@@ -192,6 +191,59 @@ def test_jvm_encode_roundtrip_non_dense_static_ids_kept(spark):
         assert kern._schema.get_field_index("idx") >= 0
         assert DENSE_IDX_META not in (kern._schema.metadata or {})
         assert _decoded_rows(kern._base, kern._schema) == _packed_rows(packed)
+    finally:
+        kern.cleanup()
+
+
+def test_static_spec_with_intercept_packs_ids_in_id_order(spark):
+    """The scored Newton shape (numeric columns plus an intercept, no
+    combos): ``_count`` sorts first, so the data layer emits its entries
+    in id order and ``idx`` folds to ``[0..k)``.  The base drops ``idx``,
+    every batch reads as a dense matrix, and it decodes to the packed
+    rows with each value under its own moment."""
+    import pandas as pd
+
+    from entropy_balance_weighting_spark.kernels.spark import (
+        DenseRows,
+        SparkKernel,
+    )
+    from entropy_balance_weighting_spark.plans import (
+        MomentSpec,
+        build_problem_tables,
+    )
+
+    rng = np.random.default_rng(7)
+    n = 200
+    pdf = pd.DataFrame(
+        {
+            "w": rng.uniform(0.5, 2.0, n),
+            "c1": rng.uniform(size=n),
+            "c2": rng.uniform(size=n),
+            "c3": rng.uniform(size=n),
+        }
+    )
+    pt = build_problem_tables(
+        spark.createDataFrame(pdf).repartition(2),
+        MomentSpec(weight_col="w", numeric=("c1", "c2", "c3"), intercept=True),
+    )
+    assert pt.moment_names == ["_count", "c1", "c2", "c3"]
+    assert blob_plane.dense_idx(pt.packed_arrays, pt.k)
+    kern = SparkKernel.from_problem(
+        None, None, pt.k, prepacked=pt.packed_arrays
+    )
+    try:
+        assert kern._schema.get_field_index("idx") == -1
+        assert kern._schema.metadata[DENSE_IDX_META] == str(pt.k).encode()
+        assert all(
+            isinstance(_flatten_rb(rb), DenseRows)
+            for rb in batches(kern._base.collect(), kern._schema)
+        )
+        rows = _decoded_rows(kern._base, kern._schema)
+        assert rows == _packed_rows(pt.packed_arrays)
+        assert {r[2] for r in rows} == {(0, 1, 2, 3)}
+        assert sorted(r[3] for r in rows) == sorted(
+            (1.0, *t) for t in pdf[["c1", "c2", "c3"]].itertuples(index=False)
+        )
     finally:
         kern.cleanup()
 
@@ -301,9 +353,8 @@ def test_warm_start_encodes_start_state(spark):
             rid, w0 = _rb_col(rb, "row_id"), _rb_col(rb, "w0")
             ratio = np.array([ratio_of(r) for r in rid])
             np.testing.assert_array_equal(_rb_col(rb, GUESS), ratio)
-            fi, fv, lens = _flatten_rb(rb)
             wstar = _w_state(
-                rb, _rb_q(rb, kern.sum_w0), fi, fv, lens, kern._wprog
+                rb, _rb_q(rb, kern.sum_w0), _flatten_rb(rb), kern._wprog
             )
             np.testing.assert_array_equal(wstar, (w0 / kern.sum_w0) * ratio)
             seen += rb.num_rows

@@ -305,3 +305,34 @@ def test_spread_width_is_size_derived_and_self_disabling(spark, monkeypatch, cap
     ]
     assert len(fallbacks) == 1, caplog.records
     assert fallbacks[0].levelno == logging.WARNING
+
+
+def test_local_relation_keeps_schema_through_broadcast_join(spark):
+    """Driver-held tables are Arrow local relations: no RDD under them,
+    and a dim table's nullable string keys and ``array<int>`` ids survive
+    a broadcast join (a null key matches null-safe)."""
+    from pyspark.sql import types as T
+
+    from entropy_balance_weighting_spark.plans.moment_spec import (
+        local_relation,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("__cmb_g", T.StringType(), True),
+            T.StructField("idx", T.ArrayType(T.IntegerType(), False), False),
+        ]
+    )
+    dim = local_relation(spark, [("a", [0, 1]), (None, [2, 3])], schema)
+    assert dim.schema == schema
+    assert dim._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+    rows = spark.createDataFrame([(1, "a"), (2, None)], "rid int, g string")
+    got = {
+        r["rid"]: list(r["idx"])
+        for r in rows.join(
+            F.broadcast(dim), F.col("g").eqNullSafe(F.col("__cmb_g"))
+        ).collect()
+    }
+    assert got == {1: [0, 1], 2: [2, 3]}
+    empty = local_relation(spark, [], schema)
+    assert empty.schema == schema and empty.count() == 0

@@ -39,6 +39,31 @@ def problem(spark):
     return pt, targets_from_problem(pt, perturb=0.02)
 
 
+@pytest.fixture(scope="module")
+def dense_problem(spark):
+    """A static-id problem (numeric columns plus an intercept): its base
+    is idx-elided, so every pass reads its batches as dense matrices."""
+    from entropy_balance_weighting_spark.kernels import blob_plane
+    from entropy_balance_weighting_spark.plans import (
+        MomentSpec,
+        build_problem_tables,
+    )
+    from entropy_balance_weighting_spark.plans.moment_spec import (
+        targets_from_problem,
+    )
+    from entropy_balance_weighting_spark.session import load_table
+
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    spec = MomentSpec(
+        weight_col="l_quantity",
+        numeric=("l_discount", "l_tax"),
+        intercept=True,
+    )
+    pt = build_problem_tables(li, spec)
+    assert blob_plane.dense_idx(pt.packed_arrays, pt.k)
+    return pt, targets_from_problem(pt, perturb=0.02)
+
+
 def _solve(spark, problem, speculate: bool):
     import entropy_balance_weighting_spark.kernels.spark as ks
     from entropy_balance_weighting_spark import entropy_balance
@@ -218,3 +243,17 @@ def test_rollback_clears_speculative_stash(spark, problem):
     kern.rollback()
     assert kern._spec is None
     kern.cleanup()
+
+
+def test_speculative_fusion_is_bit_identical_on_dense_rows(spark, dense_problem):
+    test_speculative_fusion_fires_and_is_bit_identical(spark, dense_problem)
+
+
+def test_compaction_keeps_speculation_live_on_dense_rows(
+    spark, dense_problem, monkeypatch
+):
+    test_compaction_keeps_speculation_live(spark, dense_problem, monkeypatch)
+
+
+def test_max_prog_is_value_neutral_on_dense_rows(spark, dense_problem):
+    test_max_prog_is_value_neutral(spark, dense_problem)
