@@ -9,8 +9,8 @@
   filter is a zero-shuffle map-side projection.
 
 The other modules here are library code that no registered query uses:
-the media codecs and probes (:mod:`functions.multimodal`,
-:mod:`functions.container_meta` and the ``*_codec`` modules; the PDF
-codec is already retired).  Their own tests pin them; they stay until
-later changes retire them one codec family at a time.
+the image and video codecs and probes (:mod:`functions.multimodal`,
+:mod:`functions.container_meta` and the ``*_codec`` modules; the PDF and
+audio codecs are already retired).  Their own tests pin them; they stay
+until later changes retire them one codec family at a time.
 """

@@ -1,4 +1,4 @@
-"""Multimodal column plumbing: treat image/audio/video payloads as opaque
+"""Multimodal column plumbing: treat image/video payloads as opaque
 ``binary`` columns with typed metadata, and run decode / feature-extract /
 resize / frame-sample as Arrow-batched ``mapInPandas`` stages.
 
@@ -8,13 +8,11 @@ pure numpy + stdlib: uncompressed BMP, 8-bit PNG (five filters, palette,
 Adam7 interlace), GIF87a/89a stills and animations
 (:mod:`functions.gif_codec`), baseline AND progressive JPEG
 (:mod:`functions.jpeg_codec`), strip TIFF (:mod:`functions.tiff_codec`),
-PCM + G.711 µ-law/A-law RIFF/WAVE, FLAC (:mod:`functions.flac_codec`),
 uncompressed-AVI video demux (:mod:`functions.avi_codec`), and EXIF
 APP1 metadata extract/strip (:mod:`functions.exif_codec`).  Derived
-media operators: nearest-neighbor image resize / audio resample, 64-bit
-image dHash and a volume-invariant audio energy fingerprint for
-near-dup bucketing.  Only codecs that genuinely need a media library
-(H.264, MP3, …) raise named ``NotImplementedError``s — swap in
+media operators: nearest-neighbor image resize and 64-bit image dHash
+for near-dup bucketing.  Only codecs that genuinely need a media library
+(H.264, …) raise named ``NotImplementedError``s — swap in
 Pillow/torchvision/ffmpeg decoders with the same signatures in
 production.  The deterministic fake decoder remains for exercising the
 plumbing with arbitrary payloads.
@@ -888,328 +886,6 @@ def probe_video_streams(
     ).mapInPandas(fn, VIDEO_PROBE_SCHEMA)
 
 
-# -- real WAV codec (pure struct/numpy — no media libraries needed) ---------
-#
-# RIFF/WAVE PCM is a chunked header + raw little-endian interleaved
-# samples, so the AUDIO decode path can be REAL in this environment too
-# (the third real codec after BMP and PNG): stdlib ``struct`` chunk walk +
-# one ``np.frombuffer`` reshape.  Compressed audio (MP3/AAC/Opus/...)
-# still needs a codec library and raises a named ``NotImplementedError``.
-
-_WAV_MAGIC = b"RIFF"
-
-
-# -- G.711 companding (µ-law / A-law), vectorized whole-array ----------------
-#
-# The ITU-T G.711 logarithmic codecs, 8 bits/sample — WAV format codes 7
-# (µ-law) and 6 (A-law), ubiquitous in telephony corpora.  Both directions
-# follow the classic public-domain reference implementation (Sun g711.c)
-# with the segment search vectorized as np.searchsorted and every other
-# step as elementwise numpy.
-
-_ULAW_SEG = np.array([0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF])
-_ALAW_SEG = np.array([0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF])
-_ULAW_BIAS = 0x84  # 132
-
-
-def ulaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 linear → µ-law code bytes (G.711), vectorized."""
-    pcm = np.asarray(samples, dtype=np.int32) >> 2  # 14-bit domain
-    mask = np.where(pcm < 0, 0x7F, 0xFF)
-    pcm = np.minimum(np.abs(pcm), 8159) + (_ULAW_BIAS >> 2)
-    seg = np.searchsorted(_ULAW_SEG, pcm)
-    # the clipped maximum (8159 + 33 = 8192) lands past the last segment
-    # boundary; G.711 maps it to the max-magnitude code
-    uval = np.where(
-        seg >= 8, 0x7F, (seg << 4) | ((pcm >> (seg + 1)) & 0x0F)
-    )
-    return (uval ^ mask).astype(np.uint8)
-
-
-def ulaw_decode(codes: np.ndarray) -> np.ndarray:
-    """µ-law code bytes → int16 linear (G.711), vectorized."""
-    u = (~np.asarray(codes)).astype(np.uint8).astype(np.int32)
-    t = (((u & 0x0F) << 3) + _ULAW_BIAS) << ((u >> 4) & 0x07)
-    # the biased expansion is already 16-bit scale (encode biased in the
-    # 14-bit domain); range ±32124
-    return np.where(u & 0x80, _ULAW_BIAS - t, t - _ULAW_BIAS).astype(np.int16)
-
-
-def alaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 linear → A-law code bytes (G.711), vectorized."""
-    pcm = np.asarray(samples, dtype=np.int32) >> 3  # 13-bit domain
-    mask = np.where(pcm >= 0, 0xD5, 0x55)
-    pcm = np.where(pcm >= 0, pcm, -pcm - 1)
-    seg = np.searchsorted(_ALAW_SEG, pcm)
-    shift = np.where(seg < 2, 1, seg)
-    aval = (seg << 4) | ((pcm >> shift) & 0x0F)
-    return (aval ^ mask).astype(np.uint8)
-
-
-def alaw_decode(codes: np.ndarray) -> np.ndarray:
-    """A-law code bytes → int16 linear (G.711), vectorized."""
-    a = (np.asarray(codes).astype(np.int32)) ^ 0x55
-    t = (a & 0x0F) << 4
-    seg = (a >> 4) & 0x07
-    base = np.where(seg == 0, t + 8, t + 0x108)
-    lin = np.where(seg <= 1, base, base << np.maximum(seg - 1, 0))
-    # sign bit SET means positive in A-law wire format; the expansion is
-    # already 16-bit scale (encode shifted into the 13-bit domain);
-    # range ±32256
-    return np.where(a & 0x80, lin, -lin).astype(np.int16)
-
-
-_WAV_CODECS = {
-    "pcm16": (1, 16),
-    "ulaw": (7, 8),
-    "alaw": (6, 8),
-}
-
-
-def encode_wav(
-    samples: np.ndarray, sample_rate: int = 16_000, *, fmt: str = "pcm16"
-) -> bytes:
-    """Encode an ``(N,)`` mono or ``(N, CH)`` multi-channel int16 array as
-    a RIFF/WAVE payload — PCM16 (default) or G.711 µ-law/A-law companded
-    (``fmt="ulaw"``/``"alaw"``, 8 bits/sample) — the fixture generator
-    for the real audio decode path (and a usable sink in its own
-    right)."""
-    import struct
-
-    if fmt not in _WAV_CODECS:
-        raise ValueError(f"fmt must be one of {sorted(_WAV_CODECS)}, got {fmt!r}")
-    audio_fmt, bits = _WAV_CODECS[fmt]
-    s = np.asarray(samples, dtype=np.int16)
-    if s.ndim == 1:
-        s = s[:, None]
-    if s.ndim != 2:
-        raise ValueError(f"expected (N,) or (N,CH) int16, got {s.shape}")
-    n, ch = s.shape
-    if fmt == "ulaw":
-        body = np.ascontiguousarray(ulaw_encode(s)).tobytes()
-    elif fmt == "alaw":
-        body = np.ascontiguousarray(alaw_encode(s)).tobytes()
-    else:
-        body = np.ascontiguousarray(s).tobytes()  # interleaved little-endian
-    width = bits // 8
-    fmt_chunk = struct.pack(
-        "<HHIIHH",
-        audio_fmt,
-        ch,
-        sample_rate,
-        sample_rate * ch * width,
-        ch * width,
-        bits,
-    )
-    data = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-        + b"data" + struct.pack("<I", len(body)) + body
-    )
-    return _WAV_MAGIC + struct.pack("<I", len(data)) + data
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """Decode a RIFF/WAVE payload — PCM (8-bit unsigned / 16-bit signed)
-    or G.711 companded (format 7 µ-law / 6 A-law) — into ``((N, CH)
-    int16 samples, sample_rate)``.  Pure struct/numpy: RIFF chunk walk +
-    one ``np.frombuffer`` reshape, companded bytes expanded by the
-    vectorized :func:`ulaw_decode`/:func:`alaw_decode` — no per-sample
-    Python.  8-bit PCM samples are widened to int16 as ``(v - 128) << 8``
-    (the standard unsigned-PCM8 → PCM16 mapping)."""
-    import struct
-
-    b = bytes(payload)
-    if b[:4] != _WAV_MAGIC or len(b) < 44 or b[8:12] != b"WAVE":
-        raise NotImplementedError(
-            "not a RIFF/WAVE payload; compressed audio formats require a "
-            "codec library (use fake_decode for tests)"
-        )
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(b):
-        ctype = b[pos : pos + 4]
-        (clen,) = struct.unpack_from("<I", b, pos + 4)
-        chunk = b[pos + 8 : pos + 8 + clen]
-        if ctype in (b"fmt ", b"data") and len(chunk) != clen:
-            raise ValueError(
-                f"malformed WAV payload: truncated {ctype!r} chunk "
-                f"({len(chunk)} of {clen} bytes)"
-            )
-        if ctype == b"fmt ":
-            fmt = chunk
-        elif ctype == b"data":
-            data = chunk
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if fmt is None or data is None or len(fmt) < 16:
-        raise ValueError("malformed WAV payload: missing fmt/data chunk")
-    audio_fmt, ch, rate, _, _, bits = struct.unpack_from("<HHIIHH", fmt)
-    if not (
-        (audio_fmt == 1 and bits in (8, 16))
-        or (audio_fmt in (6, 7) and bits == 8)
-    ):
-        raise NotImplementedError(
-            f"only 8/16-bit PCM and 8-bit G.711 ulaw/alaw WAV is supported "
-            f"(audio_format={audio_fmt}, bits={bits})"
-        )
-    if ch <= 0 or rate <= 0:
-        raise ValueError(f"malformed WAV payload: channels={ch}, rate={rate}")
-    width = bits // 8
-    frame = ch * width
-    n = len(data) // frame
-    data = data[: n * frame]
-    if audio_fmt == 7:
-        s = ulaw_decode(np.frombuffer(data, dtype=np.uint8).reshape(n, ch))
-    elif audio_fmt == 6:
-        s = alaw_decode(np.frombuffer(data, dtype=np.uint8).reshape(n, ch))
-    elif bits == 16:
-        s = np.frombuffer(data, dtype="<i2").reshape(n, ch).astype(np.int16)
-    else:
-        raw = np.frombuffer(data, dtype=np.uint8).reshape(n, ch)
-        s = ((raw.astype(np.int16) - 128) << 8).astype(np.int16)
-    return np.ascontiguousarray(s), int(rate)
-
-
-# Output contract of the audio feature-extraction stage
-AUDIO_FEATURE_SCHEMA = (
-    "doc_id long, n_bytes int, sample_rate int, n_channels int, "
-    "n_samples int, feature array<double>"
-)
-
-
-def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    """Magic-byte dispatch over the REAL audio decoders: RIFF/WAVE
-    (PCM + G.711 µ-law/A-law, :func:`decode_wav`) and FLAC
-    (``flac_codec.decode_flac`` — fixed/LPC subframes, Rice residuals);
-    other compressed formats name the gap."""
-    b = bytes(payload)
-    if b[:4] == _WAV_MAGIC:
-        return decode_wav(b)
-    if b[:4] == b"fLaC":
-        from entropy_balance_weighting_spark.functions.flac_codec import (
-            decode_flac,
-        )
-
-        return decode_flac(b)
-    raise NotImplementedError(
-        "unsupported audio format (real decoders: PCM/G.711 WAV, FLAC); "
-        "other formats require a codec library (use fake_decode for tests)"
-    )
-
-
-def decode_audio_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Decode a batch of audio payloads → (n_bytes, sample_rate,
-    n_channels, n_samples, feature).  REAL for PCM/G.711 RIFF/WAVE and
-    FLAC (pure stdlib/numpy — see :func:`decode_audio`); other
-    compressed formats raise ``NotImplementedError`` (swap in an
-    ffmpeg/soundfile decoder in production, same signature).
-
-    The feature vector is the decoded-sample summary
-    ``[mean, min, max, mean_square]`` computed in float64 from the actual
-    int16 samples; mean·N and mean_square·N reconstruct the EXACT integer
-    sample sum and energy (N·32767² ≪ 2⁵³), which is what makes the decode
-    relationally verifiable by an integer-arithmetic SQL oracle."""
-    n_bytes, rates, chans, counts, feats = [], [], [], [], []
-    for b in payloads:
-        s, rate = decode_audio(b)
-        sf = s.astype(np.float64)
-        n_bytes.append(len(bytes(b)))
-        rates.append(rate)
-        chans.append(s.shape[1])
-        counts.append(s.shape[0])
-        feats.append(
-            np.array([sf.mean(), sf.min(), sf.max(), (sf * sf).mean()])
-        )
-    return pd.DataFrame(
-        {
-            "n_bytes": pd.Series(n_bytes, dtype="int32"),
-            "sample_rate": pd.Series(rates, dtype="int32"),
-            "n_channels": pd.Series(chans, dtype="int32"),
-            "n_samples": pd.Series(counts, dtype="int32"),
-            "feature": feats,
-        }
-    )
-
-
-def extract_audio_features(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    decoder: Callable[[pd.Series], pd.DataFrame] = decode_audio_batch,
-) -> DataFrame:
-    """Arrow-batched audio feature extraction over an opaque binary
-    column — the audio sibling of :func:`extract_features`: one
-    ``mapInPandas`` pass, partitioning preserved, fixed
-    AUDIO_FEATURE_SCHEMA output contract."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            dec = decoder(pdf[payload_col])
-            out = pd.DataFrame({"doc_id": pdf[id_col].astype("int64")})
-            for c in (
-                "n_bytes", "sample_rate", "n_channels", "n_samples", "feature"
-            ):
-                out[c] = dec[c].values
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(fn, AUDIO_FEATURE_SCHEMA)
-
-
-RESAMPLED_SCHEMA = "doc_id long, n_samples int, payload binary"
-
-
-def resample_audio_batch(payloads: pd.Series, target_n: int) -> pd.Series:
-    """Resample a batch of audio payloads to exactly ``target_n`` frames —
-    nearest-neighbor frame pick (pure numpy fancy indexing, the audio
-    sibling of :func:`resize_image_batch`), re-encoded as PCM16 WAV at the
-    source rate."""
-    out = []
-    for b in payloads:
-        s, rate = decode_audio(b)
-        n0 = s.shape[0]
-        if n0 == 0:
-            raise ValueError("cannot resample an empty audio payload")
-        idx = (np.arange(target_n) * n0 // target_n).clip(0, n0 - 1)
-        # decode_audio may return int32 for >16-bit sources (e.g. 17-24-bit
-        # FLAC); a bare astype(int16) would silently WRAP those samples.
-        # Saturate instead — standard requantization-to-PCM16 behavior.
-        out.append(
-            encode_wav(
-                np.clip(s[idx], -32768, 32767).astype(np.int16), rate
-            )
-        )
-    return pd.Series(out)
-
-
-def resample_audio(
-    df: DataFrame,
-    target_n: int,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    resampler: Callable[[pd.Series, int], pd.Series] = resample_audio_batch,
-) -> DataFrame:
-    """Arrow-batched resample stage: one ``mapInPandas`` pass, partitioning
-    preserved, fixed RESAMPLED_SCHEMA output contract (every payload a
-    valid ``target_n``-frame PCM16 WAV)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_samples": np.full(len(pdf), target_n, dtype="int32"),
-                    "payload": resampler(pdf[payload_col], target_n).values,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fn, RESAMPLED_SCHEMA)
-
-
 # -- frame sampling --------------------------------------------------------
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame binary"
@@ -1447,61 +1123,6 @@ def video_band_signatures(
         .groupBy("doc_id", "band")
         .agg((F.sum("contrib") % mod).alias("sig"))
     )
-
-
-def audio_fingerprint(samples: np.ndarray, n_segments: int = 16) -> int:
-    """Energy-envelope fingerprint of an audio clip: split into
-    ``n_segments`` spans (sample ``i`` → span ``i·n_segments // n``),
-    sum of squares per span, one bit per adjacent-span comparison
-    (``n_segments - 1`` bits).  Exact-integer volume scaling multiplies
-    every span energy by the square of the factor, so scaled copies
-    collide — the audio sibling of :func:`dhash`, and every step is
-    plain arithmetic a SQL oracle can replicate."""
-    s = np.asarray(samples, dtype=np.int64).reshape(-1)
-    n = s.size
-    if n == 0:
-        return 0
-    seg = np.arange(n) * n_segments // n
-    energy = np.zeros(n_segments, dtype=np.int64)
-    np.add.at(energy, seg, s * s)
-    bits = (energy[1:] > energy[:-1]).astype(np.int64)
-    return int((bits << np.arange(n_segments - 1)).sum())
-
-
-FINGERPRINT_SCHEMA = "doc_id long, fingerprint long, n_samples int"
-
-
-def fingerprint_audio(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    n_segments: int = 16,
-) -> DataFrame:
-    """Fingerprint every audio payload (REAL decode via
-    :func:`decode_audio` magic dispatch — WAV or FLAC) →
-    (doc_id, fingerprint, n_samples).  Arrow-batched ``mapInPandas``;
-    downstream near-dup bucketing is an exact groupBy on the
-    fingerprint, the same scalable shape as :func:`dhash_images`."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            fps, counts = [], []
-            for b in pdf[payload_col]:
-                s, _rate = decode_audio(bytes(b))
-                fps.append(audio_fingerprint(s[:, 0], n_segments))
-                counts.append(s.shape[0])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "fingerprint": pd.Series(fps, dtype="int64"),
-                    "n_samples": pd.Series(counts, dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fn, FINGERPRINT_SCHEMA)
 
 
 def probe_image(payload: bytes) -> dict:

@@ -15,4 +15,12 @@ Two implementations with identical semantics:
   iteration's reductions.  The elastic
   and penalty solvers have the same local/distributed pair, and the three
   distributed kernels share one blob plane (:mod:`kernels.blob_plane`).
+
+Every reduction a solver reads comes back as a stats dataclass of
+:mod:`kernels.base`, whose fields each declare how they reduce (a sum, a
+K-vector, the Gram, a min, a max or a NaN count).  That declaration is
+the distributed payload's one layout: each distributed pass is a
+per-batch function returning its fields' contributions, run by one pass
+runner and one accumulator (``kernels.spark.reduce_pass``), and
+``kernels.base.unpack`` reads the reduced payload back.
 """

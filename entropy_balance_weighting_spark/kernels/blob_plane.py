@@ -23,9 +23,13 @@ back, and how pass payloads and weights leave them.
   (:func:`split_state` for elastic and penalty; Newton's compacted
   ``wstar``).  :func:`reduce_state` and :func:`commit_state` are the
   Newton and penalty kernels' shared bookkeeping.
-- **passes** — a pass yields one ``(sums, mins)`` payload per partition
-  (:func:`pack_payload`), after reading its batches; :func:`reduce` runs
-  it and reduces the payloads (:func:`reduce_payload`).  A commit pass
+- **passes** — a reduce pass yields one ``(sums, mins)`` float64 payload
+  per partition; :func:`reduce` runs it and reduces the payloads
+  (:func:`reduce_payload`).  A payload is laid out by the stats
+  dataclass the pass returns (``kernels.base.layout``): one accumulator
+  builds it on the executor from a per-batch function
+  (``kernels.spark.reduce_pass``) and ``kernels.base.unpack`` rebuilds
+  the dataclass on the driver.  A commit pass
   re-caches the state columns it yields as new blobs (:func:`transform`
   + :func:`commit`), truncating lineage every :data:`CKPT_EVERY` commits.
 - **validation** — the V1 bad-input check rides a kernel's first pass:
@@ -348,15 +352,6 @@ def release(sc, *rdds) -> None:
 
 
 # -- passes ------------------------------------------------------------------
-def pack_payload(sums, mins) -> tuple[bytes, bytes]:
-    """A pass's per-partition payload: the concatenated float64 ``sums``
-    (scalars and arrays, flattened) and the float64 ``mins``."""
-    sbuf = np.concatenate(
-        [np.atleast_1d(np.asarray(x, dtype=np.float64)).ravel() for x in sums]
-    )
-    return sbuf.tobytes(), np.asarray(mins, dtype=np.float64).tobytes()
-
-
 def payloads(rdd, pass_fn: Callable, schema: pa.Schema):
     """RDD of the ``(sums, mins)`` payloads ``pass_fn`` yields over each
     partition's record batches."""

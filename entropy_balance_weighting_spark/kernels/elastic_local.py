@@ -16,6 +16,7 @@ from entropy_balance_weighting_spark.kernels.base import (
     EStats,
     EStepStats,
     ftb_batch,
+    parse_bounds,
 )
 from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
@@ -34,10 +35,9 @@ class ElasticLocalKernel:
         self.n, self.k = self.x.shape
         self.block_structure = BlockStructure.single(self.k)  # dense Gram
         self.sum_w0 = float(np.sum(self.w0))
-        self.lb = max(float(bounds[0]), 0.0)  # ref clamps lb≥0 (ebw_routines.py:362)
-        ub = bounds[1]
+        self.lb, ub = parse_bounds(bounds)
         self.has_ub = ub is not None
-        self.ub = float(ub) if self.has_ub else 0.0
+        self.ub = ub if self.has_ub else 0.0
         self.ratio = (
             np.ones(self.n)
             if ratio_guess is None

@@ -47,7 +47,7 @@ Measured at N=5M, K=8 (solo box, r7): full iteration 4.5–5.5 s vs
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
 import pyarrow as pa
@@ -57,18 +57,21 @@ from entropy_balance_weighting_spark.kernels import blob_plane
 from entropy_balance_weighting_spark.kernels.base import (
     EStats,
     EStepStats,
+    Totals,
     ftb_batch,
+    parse_bounds,
+    unpack,
 )
-from entropy_balance_weighting_spark.kernels.blob_plane import pack_payload
 from entropy_balance_weighting_spark.kernels.spark import (
+    PayloadAcc,
     _flatten_rb,
     _rb_col,
     blocks_tuple,
-    make_gram_accum,
+    gram_big,
     pack_rows,
-    reduce_big,
+    reduce_pass,
 )
-from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
+from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
 # r9 narrow state: the bound slacks are NOT stored — the IP's own step
 # algebra maintains s_lo ≡ r − lb and s_hi ≡ ub − r exactly (ss_lo =
@@ -134,123 +137,87 @@ def _steps_arrays(pieces, x, dlam, mu_s, has_ub):
     return r_step, li_lo, li_hi, ss_lo, ss_hi
 
 
-class _EStatsAcc:
-    """Per-partition stats accumulator shared by the plain stats pass and
-    the fused commit+stats pass (``_ecommit_stats_pass``) — one body, no
-    math divergence between the two shapes."""
-
-    def __init__(self, k: int, blocks) -> None:
-        self.k = k
-        self.f_val = self.cd_sq = self.ci_sq = self.cs_sq = 0.0
-        self.alt_sq = self.nan_ct = 0.0
-        self.sl_sum = self.sl_sq = self.sl_cnt = 0.0
-        self.sl_min = np.inf
-        self.neg_lm_max = np.inf  # min(−λ) = −max(λ)
-        self.g1 = np.zeros(k)
-        self.rhs_leg = np.zeros(k)
-        self.rhs_mu_leg = np.zeros(k)
-        self.gram, self.gram_add = make_gram_accum(k, blocks)
-
-    def add(self, rb, x, lam, eta, mu_s, lb, ub, has_ub):
-        if not rb.num_rows:
-            # Zero-row batches contribute nothing; guarded HERE (not in
-            # each caller) so the plain and fused stats passes share one
-            # invariant — an empty batch would otherwise raise on the
-            # lm_lo.max()/sl.min() reductions below.
-            return
-        k = self.k
-        pieces = _pieces(rb, x, lam, eta, mu_s, lb, ub, has_ub)
-        (w0, r, s_lo, s_hi, lm_lo, lm_hi, lr, xlam, lm_net, cd,
-         ci_lo, ci_hi, cs_lo, cs_hi, ht, zterm) = pieces
-        bad = ~np.isfinite(cd) | ~np.isfinite(ht) | (ht <= 0)
-        cdf = np.where(bad, 0.0, cd)
-        lrf = np.where(np.isfinite(lr), lr, 0.0)
-        with np.errstate(over="ignore"):
-            alt = np.exp(eta * (xlam + lm_net / w0)) - r
-        # Overflowing alt residual -> alt_sq=inf, NOT an abort (the
-        # reference keeps iterating, ebw_routines.py:586-600); only
-        # Cd/ht non-finiteness counts toward nan_ct.
-        alt_bad = ~np.isfinite(alt)
-        self.nan_ct += float(bad.sum())
-        altf = np.where(alt_bad, 0.0, alt)
-        inv_ht = np.where(bad, 0.0, 1.0 / ht)
-        self.f_val += float(np.sum(w0 * (r * lrf - r + 1.0)))
-        self.cd_sq += float(cdf @ cdf)
-        self.ci_sq += float(ci_lo @ ci_lo) + (
+def _estats(rb, x, lam, eta, mu_s, lb, ub, has_ub) -> dict:
+    """One batch's :class:`EStats` contributions — shared by the plain
+    stats pass and the fused commit+stats pass
+    (``_ecommit_stats_pass``), so the two shapes cannot diverge."""
+    k = len(lam)
+    pieces = _pieces(rb, x, lam, eta, mu_s, lb, ub, has_ub)
+    (w0, r, s_lo, s_hi, lm_lo, lm_hi, lr, xlam, lm_net, cd,
+     ci_lo, ci_hi, cs_lo, cs_hi, ht, zterm) = pieces
+    bad = ~np.isfinite(cd) | ~np.isfinite(ht) | (ht <= 0)
+    cdf = np.where(bad, 0.0, cd)
+    lrf = np.where(np.isfinite(lr), lr, 0.0)
+    with np.errstate(over="ignore"):
+        alt = np.exp(eta * (xlam + lm_net / w0)) - r
+    # Overflowing alt residual -> alt_sq=inf, NOT an abort (the reference
+    # keeps iterating, ebw_routines.py:586-600); only Cd/ht non-finiteness
+    # counts toward has_nan.
+    alt_bad = ~np.isfinite(alt)
+    altf = np.where(alt_bad, 0.0, alt)
+    inv_ht = np.where(bad, 0.0, 1.0 / ht)
+    # μ_s decomposition legs + slack/multiplier stats of THIS state
+    # (post-commit when a lazy commit is pending — this scan applies it),
+    # so the driver updates μ_s/η with no separate pass
+    z1 = 1.0 / s_lo - (1.0 / s_hi if has_ub else 0.0)
+    sl = s_lo * lm_lo
+    lm_mx = float(lm_lo.max())
+    if has_ub:
+        sl = np.concatenate([sl, s_hi * lm_hi])
+        lm_mx = max(lm_mx, float(lm_hi.max()))
+    return {
+        "f_val": float(np.sum(w0 * (r * lrf - r + 1.0))),
+        "cd_sq": float(cdf @ cdf),
+        "ci_sq": float(ci_lo @ ci_lo) + (
             float(ci_hi @ ci_hi) if has_ub else 0.0
-        )
-        self.cs_sq += float(cs_lo @ cs_lo) + (
+        ),
+        "cs_sq": float(cs_lo @ cs_lo) + (
             float(cs_hi @ cs_hi) if has_ub else 0.0
-        )
-        self.alt_sq += np.inf if alt_bad.any() else float(altf @ altf)
-        # μ_s decomposition legs + slack/multiplier stats of THIS state
-        # (post-commit when a lazy commit is pending — this scan applies
-        # it), so the driver updates μ_s/η with no separate pass
-        z1 = 1.0 / s_lo - (1.0 / s_hi if has_ub else 0.0)
-        sl = s_lo * lm_lo
-        lm_mx = float(lm_lo.max())
-        if has_ub:
-            sl = np.concatenate([sl, s_hi * lm_hi])
-            lm_mx = max(lm_mx, float(lm_hi.max()))
-        self.sl_sum += float(np.sum(sl))
-        self.sl_sq += float(sl @ sl)
-        self.sl_cnt += float(len(sl))
-        self.sl_min = min(self.sl_min, float(sl.min()))
-        self.neg_lm_max = min(self.neg_lm_max, -lm_mx)
-        self.g1 += x.tdot(w0 * r, k)
-        self.rhs_leg += x.tdot(w0 * inv_ht * (cdf + zterm), k)
-        self.rhs_mu_leg += x.tdot(w0 * inv_ht * z1, k)
-        self.gram_add(x, w0**2 * inv_ht)
-
-    def payload(self) -> tuple[bytes, bytes]:
-        return pack_payload(
-            [self.f_val, self.cd_sq, self.ci_sq, self.cs_sq, self.alt_sq,
-             self.nan_ct, self.sl_sum, self.sl_sq, self.sl_cnt,
-             self.g1, self.rhs_leg, self.rhs_mu_leg, self.gram],
-            [self.sl_min, self.neg_lm_max],
-        )
+        ),
+        "alt_sq": np.inf if alt_bad.any() else float(altf @ altf),
+        "g1": x.tdot(w0 * r, k),
+        "rhs_leg": x.tdot(w0 * inv_ht * (cdf + zterm), k),
+        "rhs_mu_leg": x.tdot(w0 * inv_ht * z1, k),
+        "gram": w0**2 * inv_ht,
+        "sl_sum": float(np.sum(sl)),
+        "sl_sq": float(sl @ sl),
+        "sl_min": float(sl.min()),
+        "sl_cnt": float(len(sl)),
+        "lm_max": lm_mx,
+        "has_nan": float(bad.sum()),
+    }
 
 
 def _estats_pass(k, lam, eta, mu_s, lb, ub, has_ub, blocks) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        acc = _EStatsAcc(k, blocks)
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            acc.add(rb, _flatten_rb(rb), lam, eta, mu_s, lb, ub, has_ub)
-        yield acc.payload()
-
-    return fn
+    return reduce_pass(
+        lambda rb, x: _estats(rb, x, lam, eta, mu_s, lb, ub, has_ub),
+        k, blocks, EStats,
+    )
 
 
 def _estep_pass(k, lam, dlam, eta, mu_s, lb, ub, has_ub) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        rstep_sq = nan_ct = 0.0
-        xt_rstep = np.zeros(k)
-        ftb_s = np.inf
-        ftb_l = np.inf
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            x = _flatten_rb(rb)
-            pieces = _pieces(rb, x, lam, eta, mu_s, lb, ub, has_ub)
-            r_step, li_lo, li_hi, ss_lo, ss_hi = _steps_arrays(
-                pieces, x, dlam, mu_s, has_ub
-            )
-            s_lo, s_hi, lm_lo, lm_hi = pieces[2], pieces[3], pieces[4], pieces[5]
-            bad = ~np.isfinite(r_step)
-            nan_ct += float(bad.sum())
-            rsf = np.where(bad, 0.0, r_step)
-            rstep_sq += float(rsf @ rsf)
-            xt_rstep += x.tdot(rsf, k)
-            ftb_s = min(ftb_s, ftb_batch(s_lo, ss_lo))
-            ftb_l = min(ftb_l, ftb_batch(lm_lo, li_lo))
-            if has_ub:
-                ftb_s = min(ftb_s, ftb_batch(s_hi, ss_hi))
-                ftb_l = min(ftb_l, ftb_batch(lm_hi, li_hi))
-        yield pack_payload([rstep_sq, nan_ct, xt_rstep], [ftb_s, ftb_l])
+    def batch(rb, x):
+        pieces = _pieces(rb, x, lam, eta, mu_s, lb, ub, has_ub)
+        r_step, li_lo, li_hi, ss_lo, ss_hi = _steps_arrays(
+            pieces, x, dlam, mu_s, has_ub
+        )
+        s_lo, s_hi, lm_lo, lm_hi = pieces[2], pieces[3], pieces[4], pieces[5]
+        bad = ~np.isfinite(r_step)
+        rsf = np.where(bad, 0.0, r_step)
+        ftb_s = ftb_batch(s_lo, ss_lo)
+        ftb_l = ftb_batch(lm_lo, li_lo)
+        if has_ub:
+            ftb_s = min(ftb_s, ftb_batch(s_hi, ss_hi))
+            ftb_l = min(ftb_l, ftb_batch(lm_hi, li_hi))
+        return {
+            "rstep_sq": float(rsf @ rsf),
+            "xt_rstep": x.tdot(rsf, k),
+            "ftb_slack": ftb_s,
+            "ftb_dual": ftb_l,
+            "has_nan": float(bad.sum()),
+        }
 
-    return fn
+    return reduce_pass(batch, k, None, EStepStats)
 
 
 def _state_rb(arrays) -> pa.RecordBatch:
@@ -286,8 +253,11 @@ def _ecommit_stats_pass(
     by partitions × (3K+Σk_b²)·8 B on the grouped huge-K path (~1.6 GB at
     K=100k × 400 partitions, transient)."""
 
+    def stats(rb, x):
+        return _estats(rb, x, lam, eta, mu_s, lb, ub, has_ub)
+
     def fn(pair_iter):
-        acc = _EStatsAcc(k, blocks)
+        acc = PayloadAcc((EStats,), k, blocks)
         n_state = len(STATE_NAMES)
         held = None
         for rb in blob_plane.batches(pair_iter, schema):
@@ -315,7 +285,7 @@ def _ecommit_stats_pass(
                 [rb.column(i) for i in range(nb)] + list(st_rb.columns),
                 schema=pa.schema(fields, metadata=rb.schema.metadata),
             )
-            acc.add(rb2, x, lam, eta, mu_s, lb, ub, has_ub)
+            acc.feed(stats, rb2, x)
         if held is None:
             return  # empty partition: no batches, no payload
         yield (held, *acc.payload())
@@ -331,16 +301,9 @@ def _weights(rb: pa.RecordBatch) -> np.ndarray:
 
 def _g1_pass(k) -> Callable:
     """Xᵀ(w0∘r): the elastic init gap and the penalty final moments."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        g1 = np.zeros(k)
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            g1 += _flatten_rb(rb).tdot(_weights(rb), k)
-        yield pack_payload([g1], [np.inf])
-
-    return fn
+    return reduce_pass(
+        lambda rb, x: x.tdot(_weights(rb), k), k, None, Totals
+    )
 
 
 class ElasticSparkKernel:
@@ -390,9 +353,9 @@ class ElasticSparkKernel:
         both caches are counted here so the bounds error surfaces at
         construction."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
-        lb = max(float(bounds[0]), 0.0)
-        has_ub = bounds[1] is not None
-        ub = float(bounds[1]) if has_ub else 0.0
+        lb, ub_or_none = parse_bounds(bounds)
+        has_ub = ub_or_none is not None
+        ub = ub_or_none if has_ub else 0.0
 
         def state_of(ratio: np.ndarray) -> pa.RecordBatch:
             return _state_rb(
@@ -405,7 +368,7 @@ class ElasticSparkKernel:
 
         base_rdd, state_rdd, schema = blob_plane.split_state(
             df, k, state_of,
-            bounds=(lb, ub if has_ub else None),
+            bounds=(lb, ub_or_none),
             ratio_guess=ratio_guess,
         )
         bs = BlockStructure.from_groups(moment_groups) or BlockStructure.single(k)
@@ -441,16 +404,14 @@ class ElasticSparkKernel:
 
     def elastic_g1(self) -> np.ndarray:
         self._flush_pending_lazy()
-        sums, _ = self._reduce(_g1_pass(self.k))
-        return sums
+        payload = self._reduce(_g1_pass(self.k))
+        return unpack(payload, self.block_structure, Totals)[0].g1
 
     def elastic_stats(self, lam, eta, mu_s) -> EStats:
         k = self.k
-        big = reduce_big(
-            k, self.block_structure, self._base.getNumPartitions()
-        )
+        big = gram_big(self)
         if self._pending is None:
-            sums, mins = self._reduce(
+            payload = self._reduce(
                 _estats_pass(
                     k, lam, eta, mu_s, self.lb, self.ub, self.has_ub,
                     blocks_tuple(self.block_structure),
@@ -465,45 +426,17 @@ class ElasticSparkKernel:
             payloads = self._state.map(lambda t: (t[1], t[2])).filter(
                 lambda t: len(t[0]) > 0
             )
-            sums, mins = self._reduce(None, big=big, pairs=payloads)
-        (f_val, cd_sq, ci_sq, cs_sq, alt_sq, nan_ct,
-         sl_sum, sl_sq, sl_cnt) = sums[:9]
-        g1 = sums[9 : 9 + k]
-        rhs_leg = sums[9 + k : 9 + 2 * k]
-        rhs_mu_leg = sums[9 + 2 * k : 9 + 3 * k]
-        gram = BlockGram(self.block_structure, sums[9 + 3 * k :])
-        return EStats(
-            f_val=float(f_val),
-            cd_sq=float(cd_sq),
-            ci_sq=float(ci_sq),
-            cs_sq=float(cs_sq),
-            alt_sq=float(alt_sq),
-            g1=g1,
-            rhs_leg=rhs_leg,
-            rhs_mu_leg=rhs_mu_leg,
-            gram=gram,
-            sl_sum=float(sl_sum),
-            sl_sq=float(sl_sq),
-            sl_min=float(mins[0]),
-            sl_cnt=float(sl_cnt),
-            lm_max=float(-mins[1]),
-            has_nan=nan_ct > 0,
-        )
+            payload = self._reduce(None, big=big, pairs=payloads)
+        return unpack(payload, self.block_structure, EStats)[0]
 
     def elastic_step(self, lam, dlam, eta, mu_s) -> EStepStats:
         self._flush_pending_lazy()
-        sums, mins = self._reduce(
+        payload = self._reduce(
             _estep_pass(
                 self.k, lam, dlam, eta, mu_s, self.lb, self.ub, self.has_ub
             )
         )
-        return EStepStats(
-            rstep_sq=float(sums[0]),
-            xt_rstep=sums[2 : 2 + self.k],
-            ftb_slack=float(mins[0]),
-            ftb_dual=float(mins[1]),
-            has_nan=sums[1] > 0,
-        )
+        return unpack(payload, self.block_structure, EStepStats)[0]
 
     def _declare_commit(self, lam, eta, mu_s) -> None:
         """Swap in the pending commit as the fused commit+stats RDD (lazy,

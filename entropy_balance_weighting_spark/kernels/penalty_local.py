@@ -16,6 +16,7 @@ from entropy_balance_weighting_spark.kernels.base import (
     PBStepStats,
     PenaltyStats,
     ftb_batch,
+    parse_bounds,
 )
 from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
 
@@ -43,14 +44,13 @@ class PenaltyLocalKernel:
         )
         self.has_ub = False
         if bounds is not None:
-            lb = max(float(bounds[0]), 0.0)  # ref clamps lb≥0 (ebw_penalty.py:277)
-            ub = bounds[1]
+            lb, ub = parse_bounds(bounds)
             self.lb = lb
             self.has_ub = ub is not None
             self.s_lo = self.ratio - lb
             self.lm_lo = 1.0 / self.s_lo  # λ = μ/s with initial μ = 1.0
             if self.has_ub:
-                self.ub = float(ub)
+                self.ub = ub
                 self.s_hi = self.ub - self.ratio
             else:
                 self.s_hi = np.ones(self.n)  # inert

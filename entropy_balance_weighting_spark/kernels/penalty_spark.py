@@ -21,12 +21,16 @@ from pyspark.sql import DataFrame
 
 from entropy_balance_weighting_spark.kernels import blob_plane
 from entropy_balance_weighting_spark.kernels.base import (
+    InitGram,
     PBStats,
     PBStepStats,
     PenaltyStats,
+    PStepStats,
+    Totals,
     ftb_batch,
+    parse_bounds,
+    unpack,
 )
-from entropy_balance_weighting_spark.kernels.blob_plane import pack_payload
 from entropy_balance_weighting_spark.kernels.elastic_spark import (
     _g1_pass,
     _weights,
@@ -36,93 +40,70 @@ from entropy_balance_weighting_spark.kernels.spark import (
     _rb_col,
     _rb_with,
     blocks_tuple,
-    make_gram_accum,
+    gram_big,
     pack_rows,
-    reduce_big,
+    reduce_pass,
 )
-from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
+from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
 UNBOUNDED_STATE = ["ratio"]
 BOUNDED_STATE = ["ratio", "s_lo", "lm_lo", "s_hi", "lm_hi"]
 
 
 def _gram_init_pass(k: int, blocks) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        g2, g2_add = make_gram_accum(k, blocks)
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            g2_add(_flatten_rb(rb), _rb_col(rb, "w0") ** 2)
-        yield pack_payload([g2], [np.inf])
-
-    return fn
+    return reduce_pass(
+        lambda rb, x: _rb_col(rb, "w0") ** 2, k, blocks, InitGram
+    )
 
 
 # -- unbounded -------------------------------------------------------------
 def _pstats_pass(k: int, blocks) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        f_val = 0.0
-        s_ll = 0.0
-        nan_ct = 0.0
-        g1 = np.zeros(k)
-        g2v = np.zeros(k)
-        h = np.zeros(k)
-        gram, gram_add = make_gram_accum(k, blocks)
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            x = _flatten_rb(rb)
-            w0 = _rb_col(rb, "w0")
-            r = _rb_col(rb, "ratio")
-            with np.errstate(divide="ignore", invalid="ignore"):
-                lr = np.log(r)
-            bad = ~np.isfinite(lr)
-            nan_ct += float(bad.sum())
-            lrf = np.where(bad, 0.0, lr)
-            f_val += float(np.sum(w0 * (r * lrf - r + 1.0)))
-            s_ll += float(np.sum(w0**2 * lrf**2))
-            g1 += x.tdot(w0 * r, k)
-            g2v += x.tdot(w0 * r * lrf, k)
-            h += x.tdot(w0**2 * lrf, k)
-            gram_add(x, w0 * r)
-        yield pack_payload([f_val, s_ll, nan_ct, g1, g2v, h, gram], [np.inf])
+    def batch(rb, x):
+        w0 = _rb_col(rb, "w0")
+        r = _rb_col(rb, "ratio")
+        with np.errstate(divide="ignore", invalid="ignore"):
+            lr = np.log(r)
+        bad = ~np.isfinite(lr)
+        lrf = np.where(bad, 0.0, lr)
+        return {
+            "f_val": float(np.sum(w0 * (r * lrf - r + 1.0))),
+            "g1": x.tdot(w0 * r, k),
+            "g2v": x.tdot(w0 * r * lrf, k),
+            "h": x.tdot(w0**2 * lrf, k),
+            "s_ll": float(np.sum(w0**2 * lrf**2)),
+            "gram": w0 * r,
+            "has_nan": float(bad.sum()),
+        }
 
-    return fn
+    return reduce_pass(batch, k, blocks, PenaltyStats)
+
+
+def _p_step(rb, x, z):
+    """The batch's ratio r and its step p = −r·(log r + X·z)."""
+    r = _rb_col(rb, "ratio")
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return r, -r * (np.log(r) + x.dot(z))
 
 
 def _pcommit_pass(z: np.ndarray) -> Callable:
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            if not rb.num_rows:
-                yield rb
-                continue
-            r = _rb_col(rb, "ratio")
-            with np.errstate(divide="ignore", invalid="ignore"):
-                p = -r * (np.log(r) + _flatten_rb(rb).dot(z))
+            r, p = _p_step(rb, _flatten_rb(rb), z)
             yield _rb_with(rb, ratio=r + np.where(np.isfinite(p), p, 0.0))
 
     return fn
 
 
-def _pstep_sq_pass(z: np.ndarray) -> Callable:
+def _pstep_sq_pass(k: int, z: np.ndarray) -> Callable:
     """Σp² + NaN count for the step just about to be committed."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        p_sq = 0.0
-        nan_ct = 0.0
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            r = _rb_col(rb, "ratio")
-            with np.errstate(divide="ignore", invalid="ignore"):
-                p = -r * (np.log(r) + _flatten_rb(rb).dot(z))
-            bad = ~np.isfinite(p)
-            nan_ct += float(bad.sum())
-            pf = np.where(bad, 0.0, p)
-            p_sq += float(pf @ pf)
-        yield pack_payload([p_sq, nan_ct], [np.inf])
+    def batch(rb, x):
+        _, p = _p_step(rb, x, z)
+        bad = ~np.isfinite(p)
+        pf = np.where(bad, 0.0, p)
+        return {"p_sq": float(pf @ pf), "has_nan": float(bad.sum())}
 
-    return fn
+    return reduce_pass(batch, k, None, PStepStats)
 
 
 # -- bounded ---------------------------------------------------------------
@@ -141,51 +122,35 @@ def _bounded_pieces(rb: pa.RecordBatch, has_ub: bool):
 
 
 def _pbstats_pass(k: int, has_ub: bool, blocks) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        f_val = 0.0
-        sd0_sq = 0.0
-        s_sum = 0.0
-        s_sq = 0.0
-        nan_ct = 0.0
-        s_min = np.inf
-        g1 = np.zeros(k)
-        hd = np.zeros(k)
-        u1a = np.zeros(k)
-        u1b = np.zeros(k)
-        gb, gb_add = make_gram_accum(k, blocks)
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            x = _flatten_rb(rb)
-            w0, r, s_lo, lm_lo, s_hi, lm_hi, lr, inv_hb = _bounded_pieces(
-                rb, has_ub
-            )
-            d0 = w0 * lr - lm_lo + (lm_hi if has_ub else 0.0)
-            bad = ~np.isfinite(d0) | ~np.isfinite(inv_hb)
-            nan_ct += float(bad.sum())
-            d0 = np.where(bad, 0.0, d0)
-            inv_hb = np.where(bad, 0.0, inv_hb)
-            lrf = np.where(np.isfinite(lr), lr, 0.0)
-            f_val += float(np.sum(w0 * (r * lrf - r + 1.0)))
-            sd0_sq += float(d0 @ d0)
-            g1 += x.tdot(w0 * r, k)
-            hd += x.tdot(w0 * d0, k)
-            u1a += x.tdot(w0 * inv_hb * w0 * lrf, k)
-            sinv = 1.0 / s_lo - (1.0 / s_hi if has_ub else 0.0)
-            u1b += x.tdot(w0 * inv_hb * sinv, k)
-            gb_add(x, w0**2 * inv_hb)
-            sl = s_lo * lm_lo
-            if has_ub:
-                sl = np.concatenate([sl, s_hi * lm_hi])
-            s_sum += float(np.sum(sl))
-            s_sq += float(sl @ sl)
-            if len(sl):
-                s_min = min(s_min, float(sl.min()))
-        yield pack_payload(
-            [f_val, sd0_sq, s_sum, s_sq, nan_ct, g1, hd, u1a, u1b, gb], [s_min]
+    def batch(rb, x):
+        w0, r, s_lo, lm_lo, s_hi, lm_hi, lr, inv_hb = _bounded_pieces(
+            rb, has_ub
         )
+        d0 = w0 * lr - lm_lo + (lm_hi if has_ub else 0.0)
+        bad = ~np.isfinite(d0) | ~np.isfinite(inv_hb)
+        d0 = np.where(bad, 0.0, d0)
+        inv_hb = np.where(bad, 0.0, inv_hb)
+        lrf = np.where(np.isfinite(lr), lr, 0.0)
+        sinv = 1.0 / s_lo - (1.0 / s_hi if has_ub else 0.0)
+        sl = s_lo * lm_lo
+        if has_ub:
+            sl = np.concatenate([sl, s_hi * lm_hi])
+        return {
+            "f_val": float(np.sum(w0 * (r * lrf - r + 1.0))),
+            "g1": x.tdot(w0 * r, k),
+            "sd0_sq": float(d0 @ d0),
+            "hd": x.tdot(w0 * d0, k),
+            "gb": w0**2 * inv_hb,
+            "u1a": x.tdot(w0 * inv_hb * w0 * lrf, k),
+            "u1b": x.tdot(w0 * inv_hb * sinv, k),
+            "s_sum": float(np.sum(sl)),
+            "s_sq": float(sl @ sl),
+            "s_min": float(sl.min()),
+            "s_cnt": float(len(sl)),
+            "has_nan": float(bad.sum()),
+        }
 
-    return fn
+    return reduce_pass(batch, k, blocks, PBStats)
 
 
 def _pb_step_arrays(rb, x, z, mu, has_ub):
@@ -199,30 +164,26 @@ def _pb_step_arrays(rb, x, z, mu, has_ub):
     return p, dl_lo, dl_hi, s_lo, lm_lo, s_hi, lm_hi
 
 
-def _pbstep_pass(z: np.ndarray, mu: float, has_ub: bool) -> Callable:
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        p_sq = 0.0
-        nan_ct = 0.0
-        ftb_s = np.inf
-        ftb_l = np.inf
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            p, dl_lo, dl_hi, s_lo, lm_lo, s_hi, lm_hi = _pb_step_arrays(
-                rb, _flatten_rb(rb), z, mu, has_ub
-            )
-            bad = ~np.isfinite(p)
-            nan_ct += float(bad.sum())
-            pf = np.where(bad, 0.0, p)
-            p_sq += float(pf @ pf)
-            ftb_s = min(ftb_s, ftb_batch(s_lo, pf))
-            ftb_l = min(ftb_l, ftb_batch(lm_lo, dl_lo))
-            if has_ub:
-                ftb_s = min(ftb_s, ftb_batch(s_hi, -pf))
-                ftb_l = min(ftb_l, ftb_batch(lm_hi, dl_hi))
-        yield pack_payload([p_sq, nan_ct], [ftb_s, ftb_l])
+def _pbstep_pass(k: int, z: np.ndarray, mu: float, has_ub: bool) -> Callable:
+    def batch(rb, x):
+        p, dl_lo, dl_hi, s_lo, lm_lo, s_hi, lm_hi = _pb_step_arrays(
+            rb, x, z, mu, has_ub
+        )
+        bad = ~np.isfinite(p)
+        pf = np.where(bad, 0.0, p)
+        ftb_s = ftb_batch(s_lo, pf)
+        ftb_l = ftb_batch(lm_lo, dl_lo)
+        if has_ub:
+            ftb_s = min(ftb_s, ftb_batch(s_hi, -pf))
+            ftb_l = min(ftb_l, ftb_batch(lm_hi, dl_hi))
+        return {
+            "p_sq": float(pf @ pf),
+            "ftb_slack": ftb_s,
+            "ftb_dual": ftb_l,
+            "has_nan": float(bad.sum()),
+        }
 
-    return fn
+    return reduce_pass(batch, k, None, PBStepStats)
 
 
 def _pbcommit_pass(
@@ -230,9 +191,6 @@ def _pbcommit_pass(
 ) -> Callable:
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            if not rb.num_rows:
-                yield rb
-                continue
             p, dl_lo, dl_hi, s_lo, lm_lo, s_hi, lm_hi = _pb_step_arrays(
                 rb, _flatten_rb(rb), z, mu, has_ub
             )
@@ -292,9 +250,9 @@ class PenaltySparkKernel:
         at construction."""
         df, sum_w0, n = pack_rows(x_long, w0, known_sums, prepacked)
         bounded = bounds is not None
-        has_ub = bounded and bounds[1] is not None
-        lb = max(float(bounds[0]), 0.0) if bounded else 0.0
-        ub = float(bounds[1]) if has_ub else 0.0
+        lb, ub_or_none = parse_bounds(bounds) if bounded else (0.0, None)
+        has_ub = ub_or_none is not None
+        ub = ub_or_none if has_ub else 0.0
         names = BOUNDED_STATE if bounded else UNBOUNDED_STATE
 
         def state_of(ratio: np.ndarray) -> pa.RecordBatch:
@@ -315,7 +273,7 @@ class PenaltySparkKernel:
 
         base_rdd, state_rdd, schema = blob_plane.split_state(
             df, k, state_of,
-            bounds=(lb, ub if has_ub else None) if bounded else None,
+            bounds=(lb, ub_or_none) if bounded else None,
             ratio_guess=ratio_guess,
         )
         bs = BlockStructure.from_groups(moment_groups) or BlockStructure.single(k)
@@ -328,11 +286,7 @@ class PenaltySparkKernel:
     _reduce = blob_plane.reduce_state
     _commit = blob_plane.commit_state
 
-    @property
-    def _gram_big(self) -> bool:
-        return reduce_big(
-            self.k, self.block_structure, self._base.getNumPartitions()
-        )
+    _gram_big = property(gram_big)
 
     def defer_validation(self) -> None:
         """Arm the fused V1 check: the next pass (``penalty_init``, the
@@ -342,15 +296,13 @@ class PenaltySparkKernel:
 
     # -- shared ------------------------------------------------------------
     def penalty_init(self):
-        sums, _ = self._reduce(
-            _gram_init_pass(self.k, blocks_tuple(self.block_structure)),
-            big=self._gram_big,
-        )
-        return BlockGram(self.block_structure, sums)
+        blocks = blocks_tuple(self.block_structure)
+        payload = self._reduce(_gram_init_pass(self.k, blocks), big=self._gram_big)
+        return unpack(payload, self.block_structure, InitGram)[0].g2
 
     def moment_totals(self) -> np.ndarray:
-        sums, _ = self._reduce(_g1_pass(self.k))
-        return sums
+        payload = self._reduce(_g1_pass(self.k))
+        return unpack(payload, self.block_structure, Totals)[0].g1
 
     def new_weights(self) -> DataFrame:
         return blob_plane.weights_df(
@@ -364,68 +316,27 @@ class PenaltySparkKernel:
         self._prev = None
     # -- unbounded ---------------------------------------------------------
     def penalty_stats(self) -> PenaltyStats:
-        k = self.k
-        sums, _ = self._reduce(
-            _pstats_pass(k, blocks_tuple(self.block_structure)),
-            big=self._gram_big,
-        )
-        f_val, s_ll, nan_ct = sums[0], sums[1], sums[2]
-        g1 = sums[3 : 3 + k]
-        g2v = sums[3 + k : 3 + 2 * k]
-        h = sums[3 + 2 * k : 3 + 3 * k]
-        gram = BlockGram(self.block_structure, sums[3 + 3 * k :])
-        return PenaltyStats(
-            f_val=float(f_val),
-            g1=g1,
-            g2v=g2v,
-            h=h,
-            s_ll=float(s_ll),
-            gram=gram,
-            has_nan=nan_ct > 0,
-        )
+        blocks = blocks_tuple(self.block_structure)
+        payload = self._reduce(_pstats_pass(self.k, blocks), big=self._gram_big)
+        return unpack(payload, self.block_structure, PenaltyStats)[0]
 
     def penalty_commit(self, z: np.ndarray) -> tuple[float, bool]:
-        sums, _ = self._reduce(_pstep_sq_pass(z))
+        payload = self._reduce(_pstep_sq_pass(self.k, z))
+        st = unpack(payload, self.block_structure, PStepStats)[0]
         self._commit(_pcommit_pass(z), self._state_names)
-        return float(sums[0]), sums[1] > 0
+        return st.p_sq, st.has_nan
 
     # -- bounded -----------------------------------------------------------
     def pb_stats(self) -> PBStats:
-        k = self.k
-        sums, mins = self._reduce(
-            _pbstats_pass(k, self.has_ub, blocks_tuple(self.block_structure)),
-            big=self._gram_big,
+        blocks = blocks_tuple(self.block_structure)
+        payload = self._reduce(
+            _pbstats_pass(self.k, self.has_ub, blocks), big=self._gram_big
         )
-        f_val, sd0_sq, s_sum, s_sq, nan_ct = sums[:5]
-        off = 5
-        g1 = sums[off : off + k]
-        hd = sums[off + k : off + 2 * k]
-        u1a = sums[off + 2 * k : off + 3 * k]
-        u1b = sums[off + 3 * k : off + 4 * k]
-        gb = BlockGram(self.block_structure, sums[off + 4 * k :])
-        return PBStats(
-            f_val=float(f_val),
-            g1=g1,
-            sd0_sq=float(sd0_sq),
-            hd=hd,
-            gb=gb,
-            u1a=u1a,
-            u1b=u1b,
-            s_sum=float(s_sum),
-            s_sq=float(s_sq),
-            s_min=float(mins[0]),
-            s_cnt=float(self.n * (2 if self.has_ub else 1)),
-            has_nan=nan_ct > 0,
-        )
+        return unpack(payload, self.block_structure, PBStats)[0]
 
     def pb_step(self, z: np.ndarray, mu: float) -> PBStepStats:
-        sums, mins = self._reduce(_pbstep_pass(z, mu, self.has_ub))
-        return PBStepStats(
-            p_sq=float(sums[0]),
-            ftb_slack=float(mins[0]),
-            ftb_dual=float(mins[1]),
-            has_nan=sums[1] > 0,
-        )
+        payload = self._reduce(_pbstep_pass(self.k, z, mu, self.has_ub))
+        return unpack(payload, self.block_structure, PBStepStats)[0]
 
     def pb_commit(self, z: np.ndarray, mu: float, bp: float, bd: float) -> None:
         self._commit(

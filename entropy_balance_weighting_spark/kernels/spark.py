@@ -26,7 +26,16 @@ DataFrame — see ``kernels/blob_plane.py``,
 which holds the encode, cache, reduce and render plumbing all three
 distributed kernels share.  This module holds the batch math they share
 (the batch rows and their products, Gram accumulators, the reduce-topology
-gate) and the unbounded Newton kernel.
+gate), the one pass runner every reduce pass of the three kernels goes
+through, and the unbounded Newton kernel.
+
+A reduce pass is a per-batch function that returns its fields'
+contributions to a stats dataclass (``kernels.base``: each field declares
+how it reduces, so the class is its own payload layout).
+:func:`reduce_pass` skips empty batches, reads each batch's rows once and
+feeds the contributions to one :class:`PayloadAcc` per partition;
+``kernels.base.unpack`` rebuilds the dataclass on the driver.  No pass
+keeps its own accumulators or offsets.
 
 Why whole-pass batch jobs and not joins/explodes: the per-iteration
 primitives (segment dot products, Gram accumulation) are BLAS-shaped;
@@ -58,13 +67,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entropy_balance_weighting_spark.kernels import blob_plane
-from entropy_balance_weighting_spark.kernels.base import IterStats, StepStats
-from entropy_balance_weighting_spark.kernels.blob_plane import (
-    DENSE_IDX_META,
-    GUESS,
-    pack_payload,
+from entropy_balance_weighting_spark.kernels.base import (
+    GRAM,
+    MAX,
+    MIN,
+    IterStats,
+    StepStats,
+    layout,
+    unpack,
 )
-from entropy_balance_weighting_spark.solvers.linalg import BlockGram, BlockStructure
+from entropy_balance_weighting_spark.kernels.blob_plane import DENSE_IDX_META, GUESS
+from entropy_balance_weighting_spark.solvers.linalg import BlockStructure
 
 
 def _flatten_rb(rb: pa.RecordBatch) -> "DenseRows | CsrRows":
@@ -267,27 +280,79 @@ def _gram_accum_blocks(
         )
 
 
-def make_gram_accum(k: int, blocks):
-    """(buffer, add_fn) pair for a pass: ``add_fn(x, d)`` adds the batch
-    rows ``x``'s Xᵀ Diag(d) X — into a dense K×K scratch when ``blocks``
-    is None, else into the flat Σk_b² block accumulator.  Shared by every
-    kernel's stats pass so all three solvers get the large-K path."""
+def _gram_add(k: int, blocks):
+    """``add(x, d, out)``: ``out`` += the batch rows ``x``'s Xᵀ Diag(d) X,
+    ``out`` being the flat K² buffer of a dense Gram when ``blocks`` is
+    None, else the flat Σk_b² block buffer.  Every kernel's Gram goes
+    through it, so all three solvers get the large-K path."""
     if blocks is None:
-        buf = np.zeros((k, k))
+        return lambda x, d, out: x.gram(d, k, out.reshape(k, k))
+    block_of, local, sizes, flat_offsets, _ = blocks
+    return lambda x, d, out: _gram_accum_blocks(
+        *x.csr(), d, block_of, local, sizes, flat_offsets, out
+    )
 
-        def add(x, d):
-            x.gram(d, k, buf)
 
-    else:
-        block_of, local, sizes, flat_offsets, total_flat = blocks
-        buf = np.zeros(total_flat)
+class PayloadAcc:
+    """One partition's payload of the ``classes`` (``kernels.base.layout``)
+    on the executor.  Every sum starts at 0 and every min at +inf; each
+    non-empty batch then adds its contributions field by field, in batch
+    order — the accumulation order the bits depend on."""
 
-        def add(x, d):
-            _gram_accum_blocks(
-                *x.csr(), d, block_of, local, sizes, flat_offsets, buf
-            )
+    def __init__(self, classes, k: int, blocks) -> None:
+        gram_size = k * k if blocks is None else int(blocks[4])
+        self.slots, n_sums, n_mins = layout(classes, k, gram_size)
+        self.summed = np.zeros(n_sums)
+        self.least = [np.inf] * n_mins
+        self.gram_add = _gram_add(k, blocks)
 
-    return buf, add
+    def feed(self, batch_fn: Callable, rb: pa.RecordBatch, x=None) -> None:
+        """Add one batch: ``batch_fn(rb, x)`` returns each class's field
+        contributions (a dict by field name, or the bare value of a
+        one-field class; a tuple of those for several classes), ``x`` being
+        the batch's rows (:func:`_flatten_rb`, read here unless given).  A
+        GRAM contribution is the ``d`` of Xᵀ Diag(d) X.  An empty batch
+        adds nothing and is not read."""
+        if not rb.num_rows:
+            return
+        if x is None:
+            x = _flatten_rb(rb)
+        contribs = batch_fn(rb, x)
+        if len(self.slots) == 1:
+            contribs = (contribs,)
+        for part, c in zip(self.slots, contribs):
+            if not isinstance(c, dict):
+                c = {part[0][0]: c}
+            for name, kind, at in part:
+                v = c[name]
+                if kind == MIN:
+                    self.least[at] = min(self.least[at], v)
+                elif kind == MAX:
+                    self.least[at] = min(self.least[at], -v)
+                elif kind == GRAM:
+                    self.gram_add(x, v, self.summed[at])
+                else:
+                    self.summed[at] += v
+
+    def payload(self) -> tuple[bytes, bytes]:
+        return self.summed.tobytes(), np.asarray(self.least, np.float64).tobytes()
+
+
+def reduce_pass(batch_fn: Callable, k: int, blocks, *classes) -> Callable:
+    """A reduce pass: one :class:`PayloadAcc` of ``classes`` per partition,
+    fed every batch through ``batch_fn``; ``fn.classes`` names the payload
+    for :func:`kernels.base.unpack`.  ``blocks``: None → the dense K×K
+    Gram; else the (block_of, local, sizes, flat_offsets, total_flat)
+    arrays → the flat Σk_b² per-block accumulation (the huge-K path)."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
+        acc = PayloadAcc(classes, k, blocks)
+        for rb in batches:
+            acc.feed(batch_fn, rb)
+        yield acc.payload()
+
+    fn.classes = classes
+    return fn
 
 
 _TREE_REDUCE_BYTES = 8 << 20  # payloads past this merge executor-side
@@ -319,6 +384,11 @@ def reduce_big(k: int, block_structure, n_parts: int) -> bool:
         per_part > _TREE_REDUCE_BYTES
         or per_part * max(n_parts, 1) > _COLLECT_BUDGET_BYTES
     )
+
+
+def gram_big(kern) -> bool:
+    """:func:`reduce_big` for a distributed kernel's Gram-carrying passes."""
+    return reduce_big(kern.k, kern.block_structure, kern._base.getNumPartitions())
 
 
 def blocks_tuple(block_structure: BlockStructure):
@@ -353,15 +423,16 @@ def pack_rows(
     ``known_sums=(Σw0, n)`` skips the aggregation job when the data layer
     already computed them at build time."""
     if known_sums is not None:
-        sum_w0, n = float(known_sums[0]), int(known_sums[1])
+        total, count = known_sums
+        sum_w0, n = float(total), int(count)
     elif prepacked is not None:
-        sums = prepacked.agg(
+        agg = prepacked.agg(
             F.sum("w0").alias("s"), F.count(F.lit(1)).alias("n")
         ).first()
-        sum_w0, n = float(sums["s"]), int(sums["n"])
+        sum_w0, n = float(agg["s"]), int(agg["n"])
     else:
-        sums = w0.agg(F.sum("w0").alias("s"), F.count(F.lit(1)).alias("n")).first()
-        sum_w0, n = float(sums["s"]), int(sums["n"])
+        agg = w0.agg(F.sum("w0").alias("s"), F.count(F.lit(1)).alias("n")).first()
+        sum_w0, n = float(agg["s"]), int(agg["n"])
     if prepacked is not None:
         return prepacked.select("row_id", "w0", "idx", "val"), sum_w0, n
     packed_x = (
@@ -415,6 +486,27 @@ def _w_state(rb, q, x, wprog):
     return w
 
 
+def _iter_stats(rb, x, q, w, lam, k: int) -> dict:
+    """One batch's :class:`IterStats` contributions at the weights ``w``."""
+    w0 = _rb_col(rb, "w0")
+    r = w / q
+    with np.errstate(divide="ignore", invalid="ignore"):
+        lr = np.log(r)
+        f_val = float(np.sum(w0 * (r * lr - r + 1.0)))
+        cd = lr - x.dot(lam)
+    bad = ~np.isfinite(cd)
+    cdf = np.where(bad, 0.0, cd)
+    return {
+        "f_val": f_val,
+        "xt_w": x.tdot(w, k),
+        "cd_sq": float(cdf @ cdf),
+        "xt_wcd": x.tdot(w * cdf, k),
+        "gram": w,
+        "min_w": float(w.min()),
+        "has_nan": float(bad.sum()),
+    }
+
+
 def _stats_pass(
     k: int,
     lam: np.ndarray,
@@ -422,44 +514,14 @@ def _stats_pass(
     wprog=None,
     sum_w0: float = 1.0,
 ) -> Callable:
-    """``blocks``: None → dense K×K Gram scratch; else the
-    (block_of, local, sizes, flat_offsets, total_flat) arrays → flat Σk_b²
-    per-block accumulation (the huge-K path)."""
+    """:class:`IterStats` of the weight program ``wprog`` (``blocks``: see
+    :func:`reduce_pass`)."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        f_val = 0.0
-        cd_sq = 0.0
-        nan_ct = 0.0
-        xt_w = np.zeros(k)
-        xt_wcd = np.zeros(k)
-        gram, gram_add = make_gram_accum(k, blocks)
-        min_w = np.inf
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            x = _flatten_rb(rb)
-            w0 = _rb_col(rb, "w0")
-            q = _rb_q(rb, sum_w0)
-            w = _w_state(rb, q, x, wprog)
-            r = w / q
-            with np.errstate(divide="ignore", invalid="ignore"):
-                lr = np.log(r)
-                f_val += float(np.sum(w0 * (r * lr - r + 1.0)))
-                cd = lr - x.dot(lam)
-            bad = ~np.isfinite(cd)
-            nan_ct += float(bad.sum())
-            cdf = np.where(bad, 0.0, cd)
-            cd_sq += float(cdf @ cdf)
-            xt_w += x.tdot(w, k)
-            xt_wcd += x.tdot(w * cdf, k)
-            gram_add(x, w)
-            if len(w):
-                min_w = min(min_w, float(w.min()))
-        yield pack_payload(
-            [f_val, cd_sq, nan_ct, xt_w, xt_wcd, gram], [min_w]
-        )
+    def batch(rb, x):
+        q = _rb_q(rb, sum_w0)
+        return _iter_stats(rb, x, q, _w_state(rb, q, x, wprog), lam, k)
 
-    return fn
+    return reduce_pass(batch, k, blocks, IterStats)
 
 
 def _step_pass(
@@ -471,8 +533,9 @@ def _step_pass(
     spec_lam_new: np.ndarray | None = None,
     blocks=None,
 ) -> Callable:
-    """Step reductions (A2/A6), optionally fused with SPECULATIVE stats of
-    the α=1 primal candidate (r13 optimization, guide §1.2 "remove passes").
+    """Step reductions (A2/A6), optionally followed in the same payload by
+    the SPECULATIVE :class:`IterStats` of the α=1 primal candidate (r13
+    optimization, guide §1.2 "remove passes").
 
     Measured on both unbounded bench problems (sf0.1): every commit is
     ``primal`` with ``alpha == 1.0`` exactly (the fraction-to-boundary
@@ -482,77 +545,44 @@ def _step_pass(
     skips that stats job entirely when the driver indeed commits primal at
     α=1.  Bit-exactness: ``w_new = w + dw`` with the RAW ``dw`` equals the
     ``_w_state`` lin-replay at α=1 (multiplying by 1.0 is an IEEE
-    identity), and every speculative accumulator below mirrors
-    ``_stats_pass`` expression by expression, so a hit returns the same
+    identity), and the candidate's stats are :func:`_stats_pass`'s own
+    per-batch function, accumulated the same way, so a hit returns the same
     bits the real pass would — iteration counts and weights cannot drift.
     """
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[bytes, bytes]]:
-        dw_sq = 0.0
-        nan_ct = 0.0
-        xt_dw = np.zeros(k)
-        xt_wdual = np.zeros(k)
-        alpha_raw = np.inf
-        min_wdual = np.inf
-        spec = spec_lam_new is not None
-        if spec:
-            s_f_val = 0.0
-            s_cd_sq = 0.0
-            s_nan_ct = 0.0
-            s_xt_w = np.zeros(k)
-            s_xt_wcd = np.zeros(k)
-            s_gram, s_gram_add = make_gram_accum(k, blocks)
-            s_min_w = np.inf
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            x = _flatten_rb(rb)
-            q = _rb_q(rb, sum_w0)
-            w = _w_state(rb, q, x, wprog)
-            xlam = x.dot(lam)
-            xdl = x.dot(dlam)
-            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-                cd = np.log(w / q) - xlam
-                dw = (xdl - cd) * w
-                wdual = q * np.exp(xlam + xdl)
-            bad = ~np.isfinite(dw) | ~np.isfinite(wdual)
-            nan_ct += float(bad.sum())
-            dwf = np.where(np.isfinite(dw), dw, 0.0)
-            blocked = dwf < 0
-            if blocked.any():
-                alpha_raw = min(alpha_raw, float(np.min(-w[blocked] / dwf[blocked])))
-            dw_sq += float(dwf @ dwf)
-            xt_dw += x.tdot(dwf, k)
-            wdf = np.where(np.isfinite(wdual), wdual, 0.0)
-            xt_wdual += x.tdot(wdf, k)
-            if len(wdf):
-                min_wdual = min(min_wdual, float(wdf.min()))
-            if spec:
-                # α=1 primal candidate, exactly as the lin-replay renders it
-                w_new = w + dw
-                w0 = _rb_col(rb, "w0")
-                r = w_new / q
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    lr = np.log(r)
-                    s_f_val += float(np.sum(w0 * (r * lr - r + 1.0)))
-                    s_cd = lr - x.dot(spec_lam_new)
-                s_bad = ~np.isfinite(s_cd)
-                s_nan_ct += float(s_bad.sum())
-                s_cdf = np.where(s_bad, 0.0, s_cd)
-                s_cd_sq += float(s_cdf @ s_cdf)
-                s_xt_w += x.tdot(w_new, k)
-                s_xt_wcd += x.tdot(w_new * s_cdf, k)
-                s_gram_add(x, w_new)
-                if len(w_new):
-                    s_min_w = min(s_min_w, float(w_new.min()))
-        sums = [dw_sq, nan_ct, xt_dw, xt_wdual]
-        mins = [alpha_raw, min_wdual]
-        if spec:
-            sums += [s_f_val, s_cd_sq, s_nan_ct, s_xt_w, s_xt_wcd, s_gram]
-            mins += [s_min_w]
-        yield pack_payload(sums, mins)
+    def batch(rb, x):
+        q = _rb_q(rb, sum_w0)
+        w = _w_state(rb, q, x, wprog)
+        xlam = x.dot(lam)
+        xdl = x.dot(dlam)
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+            cd = np.log(w / q) - xlam
+            dw = (xdl - cd) * w
+            wdual = q * np.exp(xlam + xdl)
+        bad = ~np.isfinite(dw) | ~np.isfinite(wdual)
+        dwf = np.where(np.isfinite(dw), dw, 0.0)
+        wdf = np.where(np.isfinite(wdual), wdual, 0.0)
+        blocked = dwf < 0
+        step = {
+            "alpha_raw": (
+                float(np.min(-w[blocked] / dwf[blocked]))
+                if blocked.any()
+                else np.inf
+            ),
+            "xt_dw": x.tdot(dwf, k),
+            "dw_sq": float(dwf @ dwf),
+            "xt_wdual": x.tdot(wdf, k),
+            "min_wdual": float(wdf.min()),
+            "has_nan": float(bad.sum()),
+        }
+        if spec_lam_new is None:
+            return step
+        # α=1 primal candidate, exactly as the lin-replay renders it
+        return step, _iter_stats(rb, x, q, w + dw, spec_lam_new, k)
 
-    return fn
+    if spec_lam_new is None:
+        return reduce_pass(batch, k, blocks, StepStats)
+    return reduce_pass(batch, k, blocks, StepStats, IterStats)
 
 
 def _compact_pass(wprog, sum_w0: float) -> Callable:
@@ -685,11 +715,7 @@ class SparkKernel:
             )
 
     # -- passes ------------------------------------------------------------
-    @property
-    def _gram_big(self) -> bool:
-        return reduce_big(
-            self.k, self.block_structure, self._base.getNumPartitions()
-        )
+    _gram_big = property(gram_big)
 
     def defer_validation(self) -> None:
         """Arm the fused V1 check: the next pass (the first ``stats``)
@@ -698,7 +724,6 @@ class SparkKernel:
         self._validate_first_pass = True
 
     def stats(self, lam: np.ndarray) -> IterStats:
-        k = self.k
         if (
             not self._validate_first_pass
             and self._spec is not None
@@ -712,77 +737,36 @@ class SparkKernel:
             self.spec_hits += 1
             return out
         self._spec = None
-        sums, mins = self._reduce(
-            _stats_pass(
-                k,
-                lam,
-                blocks_tuple(self.block_structure),
-                self._wprog,
-                self.sum_w0,
-            ),
-            big=self._gram_big,
+        fn = _stats_pass(
+            self.k, lam, blocks_tuple(self.block_structure), self._wprog,
+            self.sum_w0,
         )
-        f_val, cd_sq, nan_ct = sums[0], sums[1], sums[2]
-        xt_w = sums[3 : 3 + k]
-        xt_wcd = sums[3 + k : 3 + 2 * k]
-        gram = BlockGram(self.block_structure, sums[3 + 2 * k :])
-        return IterStats(
-            f_val=float(f_val),
-            xt_w=xt_w,
-            cd_sq=float(cd_sq),
-            xt_wcd=xt_wcd,
-            gram=gram,
-            min_w=float(mins[0]),
-            has_nan=nan_ct > 0,
-        )
+        payload = self._reduce(fn, big=self._gram_big)
+        return unpack(payload, self.block_structure, IterStats)[0]
 
     def step_stats(self, lam: np.ndarray, dlam: np.ndarray) -> StepStats:
-        k = self.k
         speculate = self._SPECULATE and self._spec_misses < 2
         lam_new = np.asarray(lam + dlam, dtype=np.float64) if speculate else None
-        sums, mins = self._reduce(
-            _step_pass(
-                k,
-                lam,
-                dlam,
-                self._wprog,
-                self.sum_w0,
-                spec_lam_new=lam_new,
-                blocks=blocks_tuple(self.block_structure) if speculate else None,
-            ),
-            # the speculative payload carries a gram: use the same reduce
-            # topology the stats pass uses so a hit's merge order is
-            # identical to what the real stats pass would have produced
-            big=self._gram_big if speculate else False,
+        blocks = blocks_tuple(self.block_structure) if speculate else None
+        fn = _step_pass(
+            self.k, lam, dlam, self._wprog, self.sum_w0,
+            spec_lam_new=lam_new, blocks=blocks,
         )
+        # the speculative payload carries a gram: use the same reduce
+        # topology the stats pass uses so a hit's merge order is identical
+        # to what the real stats pass would have produced
+        payload = self._reduce(fn, big=self._gram_big if speculate else False)
+        step, *spec = unpack(payload, self.block_structure, *fn.classes)
         self._spec = None
         if speculate:
-            off = 2 + 2 * k
             self._spec = {
                 "lam": np.asarray(lam, dtype=np.float64).copy(),
                 "dlam": np.asarray(dlam, dtype=np.float64).copy(),
                 "lam_new": lam_new,
                 "committed": False,
-                "stats": IterStats(
-                    f_val=float(sums[off]),
-                    xt_w=sums[off + 3 : off + 3 + k],
-                    cd_sq=float(sums[off + 1]),
-                    xt_wcd=sums[off + 3 + k : off + 3 + 2 * k],
-                    gram=BlockGram(
-                        self.block_structure, sums[off + 3 + 2 * k :]
-                    ),
-                    min_w=float(mins[2]),
-                    has_nan=sums[off + 2] > 0,
-                ),
+                "stats": spec[0],
             }
-        return StepStats(
-            alpha_raw=float(mins[0]),
-            xt_dw=sums[2 : 2 + k],
-            dw_sq=float(sums[0]),
-            xt_wdual=sums[2 + k : 2 + 2 * k],
-            min_wdual=float(mins[1]),
-            has_nan=sums[1] > 0,
-        )
+        return step
 
     def commit(self, choice: str, lam: np.ndarray, dlam: np.ndarray, alpha: float) -> None:
         """Advance the iterate — a driver-side program update; the packed

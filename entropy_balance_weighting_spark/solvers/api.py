@@ -24,6 +24,8 @@ from __future__ import annotations
 from typing import Any
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from entropy_balance_weighting_spark.plans.moment_spec import ProblemTables
 from entropy_balance_weighting_spark.results import EntropyBalanceResults
@@ -79,25 +81,27 @@ def _moments_vector(pt: ProblemTables, m: Any) -> np.ndarray:
         if len(m) != pt.k:
             raise ValueError(f"moments length {len(m)} != K {pt.k}")
         return np.asarray(m, dtype=np.float64)
-    cols = set(m.columns)
-    if "moment_id" not in cols:
-        # K-bounded by contract: collect the targets and key them against
-        # the driver-held dictionary instead of a broadcast join — the
-        # join materialized TWO parallelized relations (2 jobs × default-
-        # parallelism empty slices) to pair K rows with K names (r13
-        # optimization, guide §5.1).  Unknown names are dropped either
-        # way (the join was inner), and missing ids raise below as before.
-        name_to_id = {nm: i for i, nm in enumerate(pt.moment_names)}
-        rows = [
-            {"moment_id": name_to_id[r["moment_name"]], "target": r["target"]}
-            for r in m.select("moment_name", "target").collect()
-            if r["moment_name"] in name_to_id
-        ]
+    key = "moment_id" if "moment_id" in m.columns else "moment_name"
+    # K rows, usually a local relation: ``collect`` reads one with no Spark
+    # job, where ``toArrow`` runs one per solve.  Names are keyed against
+    # the driver-held dictionary in one Arrow ``index_in``; names the
+    # dictionary lacks are dropped, and missing ids raise below.
+    keys, vals = list(zip(*m.select(key, "target").collect())) or [(), ()]
+    if key == "moment_id":
+        ids = pa.array(keys, pa.int64())
     else:
-        rows = m.select("moment_id", "target").collect()
+        ids = pc.index_in(
+            pa.array(keys, pa.string()),
+            value_set=pa.array(pt.moment_names, pa.string()),
+        )
+    known = pc.is_valid(ids)
+    ids = pc.filter(ids, known).to_numpy().astype(np.int64)
+    vals = np.asarray(vals, dtype=np.float64)[known.to_numpy(zero_copy_only=False)]
+    # a moment named more than once keeps its last row's target
+    _, last = np.unique(ids[::-1], return_index=True)
+    keep = len(ids) - 1 - last
     out = np.full(pt.k, np.nan)
-    for r in rows:
-        out[r["moment_id"]] = float(r["target"])
+    out[ids[keep]] = vals[keep]
     if np.any(np.isnan(out)):
         missing = [pt.moment_names[i] for i in np.where(np.isnan(out))[0][:5]]
         raise ValueError(f"targets missing for moments: {missing}")

@@ -16,10 +16,6 @@ from entropy_balance_weighting_spark.functions.avi_codec import (
     decode_avi_frames,
     encode_avi,
 )
-from entropy_balance_weighting_spark.functions.flac_codec import (
-    decode_flac,
-    encode_flac,
-)
 from entropy_balance_weighting_spark.functions.gif_codec import (
     decode_gif,
     decode_gif_frames,
@@ -142,37 +138,6 @@ def test_fuzz_tiff_roundtrip(data):
     )
     want = px if not gray else np.repeat(px[:, :, None], 3, axis=2)
     np.testing.assert_array_equal(out, want)
-
-
-@settings(max_examples=_MAX_EXAMPLES, deadline=None)
-@given(st.data())
-def test_fuzz_flac_roundtrip(data):
-    n = data.draw(st.integers(1, 600))
-    ch = data.draw(st.integers(1, 2))
-    bs = data.draw(st.sampled_from([16, 64, 256]))
-    raw = data.draw(st.binary(min_size=2 * n * ch, max_size=2 * n * ch))
-    s = np.frombuffer(raw, dtype="<i2").reshape(n, ch)
-    out, rate = decode_flac(encode_flac(s, 8000, block_size=bs))
-    assert rate == 8000
-    np.testing.assert_array_equal(out, s)
-
-
-@settings(max_examples=_MAX_EXAMPLES, deadline=None)
-@given(st.data())
-def test_fuzz_g711_wav_roundtrip(data):
-    n = data.draw(st.integers(1, 400))
-    fmt = data.draw(st.sampled_from(["pcm16", "ulaw", "alaw"]))
-    raw = data.draw(st.binary(min_size=2 * n, max_size=2 * n))
-    s = np.frombuffer(raw, dtype="<i2").reshape(n, 1)
-    out, _ = mm.decode_wav(mm.encode_wav(s, 8000, fmt=fmt))
-    if fmt == "pcm16":
-        np.testing.assert_array_equal(out, s)
-    else:
-        kernel = {"ulaw": (mm.ulaw_encode, mm.ulaw_decode),
-                  "alaw": (mm.alaw_encode, mm.alaw_decode)}[fmt]
-        np.testing.assert_array_equal(out, kernel[1](kernel[0](s)))
-        # companding error bound holds for arbitrary inputs
-        assert np.abs(out.astype(int) - s.astype(int)).max() <= 644
 
 
 @settings(max_examples=_MAX_EXAMPLES, deadline=None)
